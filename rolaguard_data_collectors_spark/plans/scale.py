@@ -156,6 +156,12 @@ def write_partitioned(
     df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
 
 
+# Floor of the shuffle width detect_skew measures fair share against:
+# a key over 2/8 = a quarter of the rows is skewed even when the
+# session's shuffle is narrower.
+SKEW_MIN_PARTITIONS = 8
+
+
 def detect_skew(df, key: str, top: int = 10, counters: int = 500):
     """Pre-join skew diagnosis: the share of rows held by each of the
     hottest join keys, computed with the bounded-memory heavy-hitter
@@ -163,18 +169,25 @@ def detect_skew(df, key: str, top: int = 10, counters: int = 500):
     it is safe to run on the 100 TB fact table you are ABOUT to join,
     unlike a full groupBy on the key). Returns (key, freq, rank,
     share, skewed) where ``skewed`` flags keys holding more than
-    2x a fair partition's share under the session's shuffle
-    partitioning — the keys to route through salted_join (or AQE's
-    skew-join splitting)."""
+    2x a fair partition's share of a join's shuffle — the keys to route
+    through salted_join (or AQE's skew-join splitting).
+
+    The fair share is taken over the shuffle width the join would use
+    (AQE's initial partition number, else
+    ``spark.sql.shuffle.partitions``), floored at
+    ``SKEW_MIN_PARTITIONS``: on a narrow shuffle 2x the fair share
+    reaches a half or the whole table, which no key could exceed, so a
+    key holding half the rows would go unflagged."""
     from pyspark.sql import functions as F
 
     from ..llm.text import heavy_hitters
 
     spark = df.sparkSession
     n = df.count()
-    from ..catalog import compute_parallelism
-
-    n_part = compute_parallelism(spark)
+    width = spark.conf.get(
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum", None
+    ) or spark.conf.get("spark.sql.shuffle.partitions")
+    n_part = max(int(width), SKEW_MIN_PARTITIONS)
     # strict=False: the diagnosis cares about HEAVY keys, and any key
     # with share > 1/(counters+1) is a guaranteed MG survivor — far
     # below the 2x-fair-share skew threshold this flags. The tail of
@@ -185,7 +198,7 @@ def detect_skew(df, key: str, top: int = 10, counters: int = 500):
         df.select(F.col(key).cast("string").alias("k")), "k", k=top,
         counters=counters, strict=False,
     )
-    fair = 1.0 / max(n_part, 1)
+    fair = 1.0 / n_part
     return hh.select(
         F.col("k").alias(key),
         "freq",

@@ -35,7 +35,7 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
-from .transports import make_transport
+from .transports import make_transport, parse_capture_line
 
 # The raw pre-normalization record every source emits.
 RAW_MESSAGE_SCHEMA = T.StructType(
@@ -87,7 +87,15 @@ class _ReplaySlice(InputPartition):
 class LorawanReplayStreamReader(DataSourceStreamReader):
     """Offset = {file path: lines consumed}. latestOffset advances each
     file by at most ``batchSize`` lines per micro-batch (rate limiting,
-    like Kafka's maxOffsetsPerTrigger)."""
+    like Kafka's maxOffsetsPerTrigger).
+
+    ``batchSize`` caps EVERY trigger, ``Trigger.AvailableNow``
+    included: PySpark 4.1's Python stream reader has no admission
+    control, so an availableNow run takes one ``latestOffset()`` — at
+    most ``batchSize`` lines per file — as its end and stops there. A
+    caller that must drain a larger backlog restarts the query on its
+    checkpoint until every file is covered (each restart resumes where
+    the last one committed), or sets ``batchSize`` above the backlog."""
 
     def __init__(self, options: dict):
         self.path = options.get("path")
@@ -192,40 +200,14 @@ class LorawanReplayStreamReader(DataSourceStreamReader):
                     break
                 if idx >= partition.start:
                     # A torn/garbage capture line (writer crash
-                    # mid-append) must not kill the task — and with it
-                    # the whole query — on every replay of this slice.
-                    # Emit it as a topic-less raw body: the normalize
-                    # routes drop it (no matching topic/route), the
-                    # same fate the reference gives an unparseable
-                    # frame, while offsets stay line-accurate.
-                    try:
-                        rec = json.loads(line)
-                        if not isinstance(rec, dict):
-                            rec = {"topic": None, "value": line}
-                    except ValueError:
-                        rec = {"topic": None, "value": line}
-                    # Dict-shaped garbage must degrade field-by-field,
-                    # not raise in the task (round-9 fix: {"ts": "x"}
-                    # or a non-string topic recreated the replay-poison
-                    # crash loop the dict guard above was meant to end).
-                    try:
-                        ts = int(rec.get("ts") or 0)
-                    except (TypeError, ValueError):
-                        ts = 0
-                    topic = rec.get("topic", "")
-                    value = rec.get("value", "")
-                    if not (topic is None or isinstance(topic, str)) or not (
-                        value is None or isinstance(value, str)
-                    ):
-                        # Non-string payload fields: drop to the
-                        # topic-less fallback (normalize routes discard
-                        # it) instead of failing Arrow conversion.
-                        topic, value = None, line
+                    # mid-append) degrades to a topic-less row while
+                    # offsets stay line-accurate.
+                    m = parse_capture_line(line)
                     yield (
                         idx,
-                        ts,
-                        topic,
-                        value,
+                        m.ts,
+                        m.topic,
+                        m.value,
                         partition.collector_id,
                         partition.org_id,
                     )

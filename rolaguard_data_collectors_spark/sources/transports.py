@@ -26,7 +26,6 @@ no network.
 
 from __future__ import annotations
 
-import itertools
 import json
 import os
 import queue
@@ -39,8 +38,8 @@ from dataclasses import dataclass, field
 class RawMessage:
     """One raw transport message, pre-normalization."""
 
-    topic: str
-    value: str
+    topic: str | None  # None: unparseable line, dropped by normalize
+    value: str | None
     ts: int  # arrival epoch seconds
 
 
@@ -77,33 +76,64 @@ class Transport:
         raise NotImplementedError
 
 
+def parse_capture_line(line: str) -> RawMessage:
+    """One complete capture line -> RawMessage. A garbage line (a torn
+    write left behind by a crashed writer, a non-object, non-string
+    fields) must not kill the reading task — and with it the query —
+    on every replay: it degrades to a topic-less raw body, which the
+    normalize routes drop, the same fate the reference gives an
+    unparseable frame. A ``ts`` that is not an int reads as 0."""
+    try:
+        rec = json.loads(line)
+    except ValueError:
+        rec = None
+    if not isinstance(rec, dict):
+        return RawMessage(topic=None, value=line, ts=0)
+    try:
+        ts = int(rec.get("ts") or 0)
+    except (TypeError, ValueError):
+        ts = 0
+    topic, value = rec.get("topic", ""), rec.get("value", "")
+    if not (topic is None or isinstance(topic, str)) or not (
+        value is None or isinstance(value, str)
+    ):
+        # Non-string payload fields would fail Arrow conversion.
+        return RawMessage(topic=None, value=line, ts=ts)
+    return RawMessage(topic=topic, value=value, ts=ts)
+
+
 class ReplayTransport(Transport):
     """Replays a JSONL capture file (one object per line:
     ``{"topic": ..., "value": ..., "ts": ...}``). The deterministic
-    stand-in for a broker connection in tests/bench."""
+    stand-in for a broker connection in tests/bench; it also tails a
+    file that is still being appended to, handing over only
+    newline-terminated lines, as a broker hands over whole messages."""
 
     def __init__(self, path: str):
         self.path = path
         self._fh = None
+        self._partial = b""
 
     def connect(self) -> None:
-        self._fh = open(self.path, encoding="utf-8")
+        self._fh = open(self.path, "rb")
+        self._partial = b""
 
     def poll(self, max_records: int) -> list[RawMessage]:
         assert self._fh is not None, "connect() first"
         out = []
-        for line in itertools.islice(self._fh, max_records):
-            line = line.strip()
+        while len(out) < max_records:
+            line = self._fh.readline()
             if not line:
-                continue
-            rec = json.loads(line)
-            out.append(
-                RawMessage(
-                    topic=rec.get("topic", ""),
-                    value=rec.get("value", ""),
-                    ts=int(rec.get("ts", 0)),
-                )
-            )
+                break
+            if not line.endswith(b"\n"):
+                # the writer is still mid-line: hold the fragment until
+                # its newline arrives
+                self._partial += line
+                break
+            line, self._partial = self._partial + line, b""
+            text = line.decode("utf-8", errors="replace").strip()
+            if text:
+                out.append(parse_capture_line(text))
         return out
 
     def close(self) -> None:

@@ -11,15 +11,18 @@ than the reference, whose publisher silently drops messages while its
 channel is closed (Publisher.py:113-114, a bug we do not replicate).
 
 Scale note: ``foreachBatch`` hands the whole micro-batch DataFrame to
-the writer; per-partition producers (``df.foreachPartition``) fan the
-publish out across executors, so sink throughput scales with
-partitions, not with a single driver-side connection like the
-reference's one-publisher-thread-per-collector design.
+the writer, and each epoch's envelopes are written by Spark's own text
+writer, one part file per partition, from the JVM tasks that computed
+them. No envelope crosses into a Python worker and nothing is
+collected to the driver, so publish throughput scales with partitions,
+not with a single driver-side connection like the reference's
+one-publisher-thread-per-collector design. A broker sink would use
+Spark's JVM connector the same way (the Kafka sink writes from its
+tasks).
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
@@ -56,35 +59,6 @@ def to_envelope_json(packets: DataFrame) -> DataFrame:
     )
 
 
-def _publish_partition(epoch_dir: str):
-    """Executor-side publish body: each partition writes its envelopes
-    to its own file under the epoch directory, via temp-file + atomic
-    rename so a retried partition task simply overwrites its output
-    (idempotent). In production this same closure holds the broker
-    producer (RabbitMQ/Kafka) — one connection per partition, publish
-    throughput scales with partitions, never through the driver."""
-
-    def publish(rows) -> None:
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        tmp = os.path.join(epoch_dir, f".part-{pid:05d}.tmp")
-        final = os.path.join(epoch_dir, f"part-{pid:05d}")
-        with open(tmp, "w", encoding="utf-8") as fh:
-            for r in rows:
-                # NULL envelope -> JSON null line (round-8 fuzz): the
-                # serializer never emits one (to_json over a non-null
-                # struct), but a NULL from a custom caller must neither
-                # poison the epoch with a crash-retry loop nor silently
-                # drop a row the commit accounting saw.
-                env = r["envelope"]
-                fh.write(("null" if env is None else env) + "\n")
-        os.replace(tmp, final)  # atomic on POSIX
-
-    return publish
-
-
 class QueueFileSink:
     """File-backed stand-in for the RabbitMQ ``collectors_queue``: one
     JSON line per envelope, exactly-once across query restarts AND
@@ -93,12 +67,15 @@ class QueueFileSink:
     Epoch protocol (the standard idempotent-sink recipe for
     non-transactional targets):
 
-    1. executors write per-partition envelope files under
-       ``<out>.epochs/epoch=N/`` (``foreachPartition``, temp+rename —
-       distributed, nothing is collected to the driver);
+    1. Spark's text writer writes one ``part-NNNNN-*`` file per
+       partition under ``<out>.epochs/epoch=N/`` (a NULL envelope
+       becomes a JSON ``null`` line). A retried task cannot leave a
+       duplicate: Spark's file commit protocol stages task output
+       under ``_temporary`` and moves only committed tasks' files into
+       place;
     2. the driver truncates the queue file back to the last COMMITTED
        end offset (discarding any torn bytes from a crash mid-append),
-       appends the partition files, fsyncs;
+       appends the part files in name (= partition) order, fsyncs;
     3. the commit log records ``epoch,end_offset`` — an epoch is
        replayed unless its commit record exists, and step 2 makes the
        replay idempotent, closing the crash window between the data
@@ -164,13 +141,16 @@ class QueueFileSink:
         # Clear any scratch left by a CRASHED attempt of this epoch
         # before republishing (round-8 fuzz): a replay may run with a
         # different partitioning (AQE re-plan after restart), and a
-        # stale part file beyond the new partition count would
-        # otherwise be appended alongside the fresh ones — duplicated
-        # rows inside an "exactly-once" epoch. Overwrite-idempotence
-        # only covers same-numbered partitions.
+        # stale part file (each write names its files with a fresh job
+        # id) would otherwise be appended alongside the fresh ones —
+        # duplicated rows inside an "exactly-once" epoch.
         shutil.rmtree(epoch_dir, ignore_errors=True)
-        os.makedirs(epoch_dir, exist_ok=True)
-        batch_df.select("envelope").foreachPartition(_publish_partition(epoch_dir))
+        # NULL envelope -> JSON null line (round-8 fuzz): the serializer
+        # never emits one, but a NULL from a custom caller must neither
+        # poison the epoch nor silently drop a row.
+        batch_df.select(F.coalesce("envelope", F.lit("null"))).write.mode(
+            "overwrite"
+        ).text(epoch_dir)
 
         base = max(commits.values(), default=0)
         # ensure the queue file exists, then recover + append atomically
@@ -180,7 +160,7 @@ class QueueFileSink:
             fh.truncate(base)  # drop torn bytes from any crashed epoch
             fh.seek(base)
             for name in sorted(os.listdir(epoch_dir)):
-                if name.startswith("part-"):
+                if name.startswith("part-"):  # not _SUCCESS, .crc, _temporary
                     with open(os.path.join(epoch_dir, name), "rb") as pf:
                         shutil.copyfileobj(pf, fh)
             fh.flush()

@@ -110,6 +110,85 @@ def test_live_source_fake_transport(spark):
     assert (rows["c"], rows["mn"], rows["mx"], rows["cid"]) == (40, 0, 39, 7)
 
 
+def test_replay_transport_holds_torn_tail_and_degrades_garbage(tmp_path):
+    """The live file tail hands over only newline-terminated lines: a
+    last line still being written waits for its newline instead of
+    failing to parse, and a complete line that does not parse degrades
+    to a topic-less row (as the ``lorawan_replay`` reader does)."""
+    from rolaguard_data_collectors_spark.sources.transports import ReplayTransport
+
+    path = tmp_path / "generic_mqtt_collector_1.jsonl"
+    good = '{"topic": "gateway/1/rx", "value": "{}", "ts": 5}\n'
+    with open(path, "w", encoding="utf-8") as fh:
+        fh.write(good)
+        fh.write('{"topic": "gateway/1/rx", "val')  # torn last line
+    t = ReplayTransport(str(path))
+    t.connect()
+    try:
+        got = t.poll(100)
+        assert [(m.topic, m.value, m.ts) for m in got] == [("gateway/1/rx", "{}", 5)]
+        assert t.poll(100) == []  # still torn: held back, no crash
+        with open(path, "a", encoding="utf-8") as fh:
+            fh.write('ue": "{\\"a\\": 1}", "ts": 6}\n')
+            fh.write("not json at all\n")
+            fh.write('{"topic": "gateway/1/rx", "value": "{}", "ts": "x"}\n')
+            fh.write('{"topic": 7, "value": "{}", "ts": 8}\n')
+        got = t.poll(100)
+    finally:
+        t.close()
+    assert [(m.topic, m.value, m.ts) for m in got] == [
+        ("gateway/1/rx", '{"a": 1}', 6),
+        (None, "not json at all", 0),
+        ("gateway/1/rx", "{}", 0),
+        (None, '{"topic": 7, "value": "{}", "ts": 8}', 8),
+    ]
+
+
+def test_live_replay_query_survives_torn_tail_line(spark, tmp_path):
+    """A live ``replay`` query whose capture ends in a half-written
+    line keeps running and delivers that line once it is complete
+    (it used to die with ``JSONDecodeError: Unterminated string``)."""
+    import time
+
+    register_sources(spark)
+    path = tmp_path / "generic_mqtt_collector_1.jsonl"
+    with open(path, "w", encoding="utf-8") as fh:
+        fh.write('{"topic": "gateway/1/rx", "value": "{}", "ts": 0}\n')
+        fh.write('{"topic": "gateway/1/rx", "val')  # torn last line
+    q = (
+        spark.readStream.format("lorawan_live")
+        .option("transport", "replay")
+        .option("path", str(path))
+        .load()
+        .writeStream.format("memory")
+        .queryName("live_torn_tail")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .start()
+    )
+
+    def rows():
+        return spark.sql(
+            "select seq, topic, value from live_torn_tail order by seq"
+        ).collect()
+
+    try:
+        q.processAllAvailable()
+        assert [r.value for r in rows()] == ["{}"]
+        with open(path, "a", encoding="utf-8") as fh:
+            fh.write('ue": "{}", "ts": 1}\n')
+        deadline = time.time() + 60
+        while time.time() < deadline and len(rows()) < 2:
+            q.processAllAvailable()
+            time.sleep(0.2)
+        assert q.exception() is None
+        assert [(r.seq, r.topic) for r in rows()] == [
+            (0, "gateway/1/rx"),
+            (1, "gateway/1/rx"),
+        ]
+    finally:
+        q.stop()
+
+
 # --- normalize pipelines --------------------------------------------------
 
 # A real UnconfirmedDataUp frame (devAddr=017fc1c4, fCnt=17, fPort=93,
@@ -838,7 +917,9 @@ def test_queue_sink_stale_parts_from_crashed_attempt(spark, tmp_path):
     files but BEFORE the commit may replay with a DIFFERENT
     partitioning (AQE re-plan after restart). Stale higher-numbered
     part files must not be appended next to the fresh ones — the
-    replay clears the epoch scratch before republishing."""
+    replay clears the epoch scratch before republishing — and neither
+    may the text writer's own ``_temporary/`` task output or its
+    ``_SUCCESS`` marker."""
     import json as _json
 
     out = str(tmp_path / "queue.jsonl")
@@ -851,6 +932,14 @@ def test_queue_sink_stale_parts_from_crashed_attempt(spark, tmp_path):
             fh.write('{"stale": %d}\n' % pid)
     with open(os.path.join(epoch_dir, ".part-00009.tmp"), "w") as fh:
         fh.write('{"torn": true}')
+    # ... and the writer's own leftovers: an uncommitted task's output
+    # under _temporary/ and a _SUCCESS marker.
+    task_dir = os.path.join(epoch_dir, "_temporary", "0", "_temporary", "attempt_0")
+    os.makedirs(task_dir)
+    with open(os.path.join(task_dir, "part-00000-x.txt"), "w") as fh:
+        fh.write('{"uncommitted": true}\n')
+    with open(os.path.join(epoch_dir, "_SUCCESS"), "w") as fh:
+        fh.write('{"success": true}\n')
     # the replay runs with 2 partitions
     df = spark.createDataFrame(
         [(1, _json.dumps({"i": i})) for i in range(6)],
@@ -860,6 +949,44 @@ def test_queue_sink_stale_parts_from_crashed_attempt(spark, tmp_path):
     with open(out) as fh:
         got = sorted(_json.loads(line).get("i", -1) for line in fh)
     assert got == list(range(6)), got  # no stale/torn rows, no drops
+
+
+def test_queue_sink_multi_partition_epoch_lands_in_partition_order(spark, tmp_path):
+    """The part files of one epoch are appended in partition order, so
+    the queue holds the batch exactly as ``collect()`` returns it —
+    not merely the same multiset."""
+    out = str(tmp_path / "queue.jsonl")
+    sink = QueueFileSink(out)
+    # a permutation of 0..39 spread over 8 partitions: partition order
+    # is neither the value order nor the order of the file names' ids
+    df = spark.range(0, 40, numPartitions=8).select(
+        F.lit(1).cast("long").alias("collector_id"),
+        F.to_json(F.struct(((F.col("id") * 7) % 40).alias("i"))).alias("envelope"),
+    )
+    assert df.rdd.getNumPartitions() == 8
+    sink(df, epoch_id=0)
+    with open(out, encoding="utf-8") as fh:
+        lines = [line.rstrip("\n") for line in fh]
+    assert lines == [r["envelope"] for r in df.collect()]
+    assert lines != sorted(lines)
+
+
+def test_queue_sink_zero_row_epoch_commits_and_next_epoch_appends(spark, tmp_path):
+    """An empty micro-batch appends nothing but still records its
+    commit (so it is never replayed), and the next epoch appends right
+    after the previous data."""
+    out = str(tmp_path / "queue.jsonl")
+    sink = QueueFileSink(out)
+    schema = "collector_id long, envelope string"
+    sink(spark.createDataFrame([(1, '{"i":0}')], schema), epoch_id=0)
+    end0 = os.path.getsize(out)
+    sink(spark.createDataFrame([], schema), epoch_id=1)
+    assert os.path.getsize(out) == end0
+    assert sink._commits() == {0: end0, 1: end0}
+    sink(spark.createDataFrame([(1, '{"i":2}')], schema), epoch_id=2)
+    with open(out, encoding="utf-8") as fh:
+        assert fh.read() == '{"i":0}\n{"i":2}\n'
+    assert os.listdir(out + ".epochs") == []
 
 
 def test_replay_source_survives_torn_lines_and_corrupt_cursor(spark, tmp_path):
