@@ -137,9 +137,6 @@ def main() -> None:
     # from passes 2-3, which paid no build). Driver-side memos keyed
     # per session (seed codebooks, history blooms) are persisted lake
     # artifacts by design and stay warm, as in every prior round.
-    # ``queries``/``value`` are the fresh-build numbers; the r13
-    # reused-handle methodology is published once more this transition
-    # round as ``queries_warm_reuse`` (see below).
     timings: dict[str, float] = {}
     for _pass in range(3):
         for name, spec in specs.items():
@@ -158,26 +155,6 @@ def main() -> None:
     timings = {
         n: (round(t, 2) if t >= 0 else -1.0) for n, t in timings.items()
     }
-
-    # Transition-round twin (one round only, VERDICT r13 item 2): the
-    # r13-and-earlier reused-handle min — build once, materialize
-    # twice, min — so BENCH_r14 is comparable against BENCH_r13 per
-    # query while the headline moves to fresh builds.
-    warm_reuse: dict[str, float] = {}
-    for name, spec in specs.items():
-        if timings.get(name, 0) < 0:
-            continue
-        try:
-            df = spec.build(spark, sf_dir)
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            warm_reuse[name] = round(best, 2)
-        except Exception as exc:
-            warm_reuse[name] = -1.0
-            print(f"bench: warm-reuse {name} FAILED: {exc}", file=sys.stderr)
 
     # DuckDB oracle wall-times over the same parquet at the same SF —
     # the single-node baseline each Spark time is judged against
@@ -280,11 +257,6 @@ def main() -> None:
         json.dumps(
             {
                 "queries": timings,
-                # Transition-round twin (r13 methodology: one build,
-                # min of 2 reused-handle materializations) — published
-                # this round only so BENCH_r13/BENCH_r14 stay
-                # per-query comparable across the fresh-build switch.
-                "queries_warm_reuse": warm_reuse,
                 "oracle_queries": duck,
                 "metric": "total_query_wall",
                 "unit": "sec",

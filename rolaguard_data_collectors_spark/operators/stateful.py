@@ -5,8 +5,8 @@ Python dicts (prev_packet buffer, devices_map, last gateway location,
 verification counters, status-change dedup). Each op is re-expressed
 here as deterministic window/aggregate plans over the ``events``
 table ordered by (ts, event_id) — the batch shadow the DuckDB oracle
-can check. The streaming layer (streaming/) implements the same
-semantics with transformWithStateInPandas over an unbounded stream;
+can check. The streaming layer (streaming/stateful.py) implements the
+same semantics with applyInPandasWithState over an unbounded stream;
 these column-level definitions are the spec both must satisfy.
 
 Role mapping (events -> packet stream):
@@ -15,7 +15,7 @@ Role mapping (events -> packet stream):
 
 Scale note: every query partitions by a key (user_id) before any
 window sort — at 100 TB this is one hash shuffle on the state key,
-the same layout transformWithStateInPandas needs, and skew on a hot
+the same layout applyInPandasWithState needs, and skew on a hot
 device is bounded by per-key data, not table size.
 """
 

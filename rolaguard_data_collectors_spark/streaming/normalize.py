@@ -91,81 +91,45 @@ def _decoded(data_col: Column, fields: tuple[str, ...] | None = None):
     return decode_phypayload_for(fields)(data_col, F.lit(None), F.lit(None))
 
 
-# Batch decode strategy. "memo": one narrow pass, per-Arrow-batch
-# frame memo inside the UDF (lorawan_udfs.py) — repeated frames cost a
-# dict probe after the first decode in each batch. "distinct": global
-# dropDuplicates on the frame column, decode once per distinct frame,
-# AQE-broadcast the parsed side back (never an unconditional
-# broadcast() — at 100 TB the distinct-frame set can exceed the
-# driver).
-#
-# Measured A/B at sf0.1, noop-write, best-of-2 (round 4): memo wins on
-# every pipeline (mqtt 2.32 vs 3.21 s, chirpstack 3.39 vs 4.30,
-# ttn_v2 2.06 vs 3.22, ttn_v3 2.43 vs 2.87) because the distinct side
-# re-scans the source and re-runs the JSON chain that derives the
-# frame column — on this corpus that reparse costs more than the
-# crypto it saves.
-#
-# Round-5 keyed A/B at the multi-gateway fan-out regime (1M rows,
-# duplicates spread ACROSS partitions, session keys attached so every
-# decode pays CMAC+decrypt; min-of-3, local[32]): memo wins at EVERY
-# duplication factor — 1x: 2.9 vs 6.6 s, 10x (the rx_info fan-out
-# ratio, LoraServerIOCollector.py:368-399): 2.2 vs 4.1 s, 1000x: 1.6
-# vs 3.1 s. The distinct path's dropDuplicates + join-back shuffles
-# of the FULL row set cost more than the ~20us/frame crypto they
-# save; its crossover needs a per-frame decode far heavier than
-# LoRaWAN's (e.g. multi-KB payload decrypt). The knob stays (the plan
-# shape is proven by its own plan test and is the right one for such
-# heavy decoders), but "memo" is the measured winner across the whole
-# regime this engine targets.
-DECODE_STRATEGY = "memo"
+# Batch and stream decode the same way: one narrow pass, with a
+# per-Arrow-batch frame memo inside the UDF (lorawan_udfs.py), so a
+# repeated frame costs a dict probe after its first decode in each
+# batch. A dropDuplicates + join-back alternative (decode each
+# distinct frame once) lost at every duplication factor measured:
+# sf0.1 noop-write, best-of-2 (round 4): mqtt 2.32 vs 3.21 s,
+# chirpstack 3.39 vs 4.30, ttn_v2 2.06 vs 3.22, ttn_v3 2.43 vs 2.87;
+# 1M rows with session keys at local[32], min-of-3 (round 5): 1x 2.9
+# vs 6.6 s, 10x 2.2 vs 4.1 s, 1000x 1.6 vs 3.1 s. Its re-scan and
+# full-row shuffles cost more than the ~20us/frame crypto they save.
 
 
-def _attach_parsed(
-    df: DataFrame,
-    strategy: str | None = None,
-    fields: tuple[str, ...] | None = None,
-) -> DataFrame:
-    """Attach the decode struct ``_p`` for the ``data`` column.
-
-    Streaming always uses the per-row UDF (a stream can't
-    dropDuplicates-and-join its own derivative inside a microbatch;
-    the per-batch memo is the within-batch equivalent). Batch
-    dispatches on ``strategy`` / ``DECODE_STRATEGY`` — see the A/B
-    note above. Null ``data`` (off-route rows) yields a null struct on
-    both paths (a null join key never matches; the UDF returns nulls
-    for null input)."""
-    strategy = strategy or DECODE_STRATEGY
-    if df.isStreaming or strategy == "memo":
-        # No-key pruned decode -> pure Catalyst expressions
-        # (optimization round 14, guide §4.1): when every requested
-        # field is a byte slice (no FRMPayload decrypt, no MIC, no
-        # MAC-command JSON), the parse runs inside whole-stage codegen
-        # and the ArrowEvalPython crossing disappears from the plan —
-        # value-identical to the UDF by the lorawan_sql exactness
-        # contract (fuzz-pinned in tests/test_decode_expr.py).
-        # Measured at sf0.1: the four crossings cost 0.48 s of the
-        # 1.20 s staged-union materialization, all Arrow serialization
-        # (an all-NULL-input crossing measured the same 1.0 s).
-        if fields is not None and set(fields) <= EXPR_SAFE_FIELDS:
-            # The decoded-frame hex is staged as its OWN column first:
-            # SimplifyExtractValueOps flattens the _p struct into its
-            # consumers (one copy per field), but CollapseProject keeps
-            # a non-cheap alias referenced more than once, so the
-            # canonicalize+decode chain behind ``_ph`` evaluates once
-            # per row and each field copy is a conv/substr over the
-            # attribute (see decoded_frame_hex: the unstaged form
-            # carried 40 unbase64 nodes and ran slower than the UDF).
-            staged = df.withColumn("_ph", decoded_frame_hex(F.col("data")))
-            return staged.withColumn(
-                "_p", decode_fields_from_hex(F.col("_ph"), tuple(fields))
-            ).drop("_ph")
-        return df.withColumn("_p", _decoded(F.col("data"), fields))
-    frames = df.select("data").where(F.col("data").isNotNull()).dropDuplicates()
-    decoded = frames.select("data", _decoded(F.col("data"), fields).alias("_p"))
-    # Reselect the original column order: the using-join moves the join
-    # key first, and the two strategies must emit identical schemas.
-    return df.join(decoded, on="data", how="left").select(*df.columns, "_p")
+def _attach_parsed(df: DataFrame, fields: tuple[str, ...] | None = None) -> DataFrame:
+    """Attach the decode struct ``_p`` for the ``data`` column. Null
+    ``data`` (off-route rows) yields a null struct."""
+    # No-key pruned decode -> pure Catalyst expressions (optimization
+    # round 14, guide §4.1): when every requested field is a byte
+    # slice (no FRMPayload decrypt, no MIC, no MAC-command JSON), the
+    # parse runs inside whole-stage codegen and the ArrowEvalPython
+    # crossing disappears from the plan — value-identical to the UDF
+    # by the lorawan_sql exactness contract (fuzz-pinned in
+    # tests/test_decode_expr.py). Measured at sf0.1: the four
+    # crossings cost 0.48 s of the 1.20 s staged-union
+    # materialization, all Arrow serialization (an all-NULL-input
+    # crossing measured the same 1.0 s).
+    if fields is not None and set(fields) <= EXPR_SAFE_FIELDS:
+        # The decoded-frame hex is staged as its OWN column first:
+        # SimplifyExtractValueOps flattens the _p struct into its
+        # consumers (one copy per field), but CollapseProject keeps a
+        # non-cheap alias referenced more than once, so the
+        # canonicalize+decode chain behind ``_ph`` evaluates once per
+        # row and each field copy is a conv/substr over the attribute
+        # (see decoded_frame_hex: the unstaged form carried 40
+        # unbase64 nodes and ran slower than the UDF).
+        staged = df.withColumn("_ph", decoded_frame_hex(F.col("data")))
+        return staged.withColumn(
+            "_p", decode_fields_from_hex(F.col("_ph"), tuple(fields))
+        ).drop("_ph")
+    return df.withColumn("_p", _decoded(F.col("data"), fields))
 
 
 _PARSE_FIELDS = [

@@ -1,8 +1,8 @@
 """Streaming stateful operators (SURVEY.md §2A ops 34-38) — the real
 ``applyInPandasWithState`` implementations whose column-level semantics
 are pinned by the oracle-checked batch shadows in
-``operators/stateful.py``. ``tests/test_streaming_stateful.py`` feeds
-the same events data through both and asserts equality.
+``operators/stateful.py``. ``tests/test_streaming.py`` feeds the
+same events data through both and asserts equality.
 
 Arrival order: the reference processes messages in connection arrival
 order; micro-batches deliver a group's rows unordered, so every

@@ -220,64 +220,3 @@ def test_location_attach_and_reset(spark, tmp_path):
     assert by_seq[2]["latitude"] == 44.5 and by_seq[2]["longitude"] == 11.3
     assert by_seq[3]["latitude"] is None  # attach-then-reset
     assert all(r["gateway"] == "a1b2" for r in rows)
-
-
-def test_stream_stream_correlation_join(spark, tmp_path):
-    """Op 34's watermark-join formulation: gateway LEFT OUTER app on
-    (collector, f_count) within the join window; unmatched gateway
-    rows emit with null enrichment after the watermark closes them."""
-    from rolaguard_data_collectors_spark.streaming.join import (
-        correlate_gateway_app_join,
-    )
-
-    gw_msg = json.dumps(
-        {"phyPayload": DATA_UP_B64,
-         "rxInfo": {"rssi": -60.0, "mac": "aabbccddeeff0011"}}
-    )
-    app_match = json.dumps(
-        {"fCnt": 17, "applicationName": "app-x", "deviceName": "dev-x",
-         "devEUI": "b827eb891cf50003",
-         "rxInfo": [{"name": "gw-east",
-                     "location": {"latitude": 1.5, "longitude": 2.5, "altitude": 9.0}}]}
-    )
-    app_other = json.dumps({"fCnt": 999, "applicationName": "app-y",
-                            "deviceName": "dev-y", "devEUI": "b827eb891cf50003",
-                            "rxInfo": []})
-    records = [
-        ("gateway/aabb/rx", gw_msg),                               # t+0: joins
-        ("application/1/device/x/rx", app_match),                  # t+1: match (fCnt 17)
-        ("gateway/aabb/rx", gw_msg),                               # t+2: no app match
-        ("application/1/device/x/rx", app_other),                  # t+3: fCnt 999
-    ]
-    # flush records far in the future on BOTH sides: the global
-    # watermark is min(gw side, app side), so each needs to advance
-    flush = [("application/1/device/x/rx", app_other),
-             ("gateway/aabb/rx", gw_msg)]
-    d = tmp_path / "joinfeed"
-    d.mkdir()
-    with open(d / "collector_1.jsonl", "w") as fh:
-        for i, (topic, value) in enumerate(records):
-            fh.write(json.dumps({"topic": topic, "value": value,
-                                 "ts": 1700000000 + i}) + "\n")
-        for topic, value in flush:
-            fh.write(json.dumps({"topic": topic, "value": value,
-                                 "ts": 1700009000}) + "\n")
-    register_sources(spark)
-    raw = (
-        spark.readStream.format("lorawan_replay")
-        .option("path", str(d))
-        .option("batchSize", 2)
-        .load()
-    )
-    out = correlate_gateway_app_join(normalize_chirpstack(raw))
-    q = (out.writeStream.format("memory").queryName("ssj")
-         .outputMode("append").start())
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(120)
-    rows = {r["gw_seq"]: r.asDict()
-            for r in spark.sql("select * from ssj").collect()}
-    assert rows[0]["merged"] is True
-    assert rows[0]["app_name"] == "app-x" and rows[0]["latitude"] == 1.5
-    assert rows[0]["f_count"] == 17 and rows[0]["dev_addr"] == "017fc1c4"
-    assert rows[2]["merged"] is False and rows[2]["app_name"] is None

@@ -158,8 +158,8 @@ def _full_builders():
 
 
 def test_decode_pipelines_default_memo_single_scan(spark, sf_dir):
-    """Default batch decode strategy is the measured winner (see
-    normalize.DECODE_STRATEGY A/B note): ONE narrow pass over events -
+    """The batch decode is the measured winner (see the A/B note above
+    normalize._attach_parsed): ONE narrow pass over events -
     single scan, no join/exchange introduced for the decode. Round 8:
     asserted on the FULL per-source builders (the components of the
     staged union — the registered queries are routed slices, tested
@@ -211,31 +211,6 @@ def test_staged_pipeline_union_and_slices(spark, sf_dir):
         assert "FileScan parquet" not in plan, f"{name} re-scans\n{plan}"
         assert "ArrowEvalPython" not in plan, f"{name} re-decodes\n{plan}"
         assert "ExistingRDD" in plan or "LocalTableScan" in plan, plan
-
-
-def test_decode_distinct_strategy_plan(spark, sf_dir):
-    """The opt-in distinct-frame strategy (dup-heavy traffic where
-    crypto dominates reparse) must keep its scale shape: two scans
-    (main + pruned distinct side), the decode UDF above the
-    deduplicating HashAggregate, and a left join bringing the struct
-    back."""
-    from rolaguard_data_collectors_spark.streaming import normalize as nz
-
-    old = nz.DECODE_STRATEGY
-    nz.DECODE_STRATEGY = "distinct"
-    try:
-        plan = _df_plan(_full_builders()["mqtt"](spark, sf_dir), spark)
-    finally:
-        nz.DECODE_STRATEGY = old
-    assert plan.count("FileScan parquet") == 2, plan
-    assert "Join LeftOuter" in plan or "HashJoin" in plan, plan
-    decode_segs = [
-        seg for seg in plan.split("ArrowEvalPython")[1:]
-        if "decode_phypayload" in seg.splitlines()[0]
-    ]
-    assert decode_segs, plan
-    for seg in decode_segs:
-        assert "HashAggregate" in seg, plan
 
 
 @pytest.mark.parametrize(

@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 import os
 
+import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
@@ -523,6 +524,116 @@ def test_verification_gate_stream_final_state(spark, sf_dir, events_stream_feed)
     cols = ["user_id", "total_packets", "verified_packets", "verified"]
     want = _rows_set(batch_shadows.verification_gate(spark, sf_dir), cols)
     assert _rows_set(final, cols) == want
+
+
+# --- in-process drive of the GroupState bodies ---------------------------
+#
+# The engine tests above cannot reach op 37's timeout branch: the
+# ProcessingTimeTimeout timer never fires inside a finite test. These
+# call the ``_*_fn`` bodies directly with a fake GroupState, one key at
+# a time, the key's rows split into chunks so state round-trips
+# between calls the way it does between micro-batches.
+
+
+class _FakeGroupState:
+    def __init__(self):
+        self._value = None
+        self.hasTimedOut = False
+        self.timeouts = []
+
+    @property
+    def exists(self):
+        return self._value is not None
+
+    @property
+    def get(self):
+        return self._value
+
+    def update(self, value):
+        self._value = tuple(value)
+
+    def remove(self):
+        self._value = None
+
+    def setTimeoutDuration(self, ms):
+        self.timeouts.append(ms)
+
+
+def _events_by_key(spark, sf_dir):
+    """(user_id, rows) per key of the prepared events feed."""
+    events = live.prepare_events_stream(load_table(spark, sf_dir, "events")).toPandas()
+    return list(events.groupby("user_id", sort=True))
+
+
+def _drive_chunks(fn, key, rows, state, n_chunks):
+    """Call ``fn`` once per chunk of one key's rows; the frames it yields."""
+    n = max(1, min(n_chunks, len(rows)))
+    out = []
+    for i in range(n):
+        chunk = rows.iloc[len(rows) * i // n : len(rows) * (i + 1) // n]
+        out.extend(o for o in fn((key,), iter([chunk]), state) if len(o))
+    return out
+
+
+def _norm(v, kind):
+    """The engine Arrow-casts outputs to the declared schema; the direct
+    call does not, so both sides compare by the shadow's Spark type."""
+    if v is None or v is pd.NA or (isinstance(v, float) and pd.isna(v)):
+        return None
+    return {"bigint": int, "int": int, "double": float, "boolean": bool}.get(kind, str)(v)
+
+
+@pytest.mark.parametrize(
+    "fn,shadow_fn,cols",
+    [
+        (live._prev_packet_fn, batch_shadows.prev_packet_correlation,
+         ["event_id", "user_id", "f_count", "gw_value", "merged"]),
+        (live._device_map_fn, batch_shadows.device_map_enrich,
+         ["event_id", "user_id", "dev_registration"]),
+        (live._location_fn, batch_shadows.location_propagation,
+         ["event_id", "user_id", "latitude"]),
+        (live._status_fn, batch_shadows.status_change_detection,
+         ["event_id", "user_id", "status", "prev_status"]),
+    ],
+)
+def test_group_state_fn_chunked_matches_batch_shadow(spark, sf_dir, fn, shadow_fn, cols):
+    shadow = shadow_fn(spark, sf_dir)
+    kinds = {f.name: f.dataType.simpleString() for f in shadow.schema.fields}
+    got = set()
+    for uid, rows in _events_by_key(spark, sf_dir):
+        for out in _drive_chunks(fn, uid, rows, _FakeGroupState(), n_chunks=4):
+            got |= {tuple(_norm(r[c], kinds[c]) for c in cols)
+                    for r in out.to_dict("records")}
+    want = {tuple(_norm(r[c], kinds[c]) for c in cols) for r in shadow.collect()}
+    assert got == want
+
+
+def test_verify_fn_chunked_counters_and_timeout(spark, sf_dir):
+    """Op 37: chunked calls end on the batch shadow's counters, every
+    call arms the 600 s timer, and a timed-out call emits exactly one
+    FAILED_VERIFY row and removes the key's state."""
+    want = {r["user_id"]: r for r in batch_shadows.verification_gate(spark, sf_dir).collect()}
+    finals = {}
+    for uid, rows in _events_by_key(spark, sf_dir):
+        state = _FakeGroupState()
+        outs = _drive_chunks(live._verify_fn, uid, rows, state, n_chunks=3)
+        final = outs[-1].iloc[-1]
+        finals[uid] = (int(final["total_packets"]), int(final["verified_packets"]),
+                       bool(final["verified"]))
+        assert not final["timed_out"]
+        assert state.timeouts == [live.VERIFY_TIMEOUT_MS] * len(outs)
+
+        state.hasTimedOut = True
+        expired = list(live._verify_fn((uid,), iter([]), state))
+        assert len(expired) == 1 and len(expired[0]) == 1
+        row = expired[0].iloc[0]
+        assert bool(row["timed_out"]) and not bool(row["verified"])
+        assert (int(row["total_packets"]), int(row["verified_packets"])) == finals[uid][:2]
+        assert not state.exists
+    assert finals == {
+        uid: (w["total_packets"], w["verified_packets"], w["verified"])
+        for uid, w in want.items()
+    }
 
 
 def test_event_time_windows_stream(spark, sf_dir, events_stream_feed):
@@ -1135,27 +1246,6 @@ def test_collector_manager_test_probe(spark, tmp_path):
     assert [(e.status, e.type) for e in mgr.status_events] == [("TEST", "SUCCESS")]
 
 
-def test_attach_parsed_streaming_ignores_distinct_strategy(spark):
-    """A readStream frame must take the per-row memo path even when
-    the batch DECODE_STRATEGY is 'distinct' — a stream can't
-    dropDuplicates-and-join its own derivative inside a microbatch."""
-    from rolaguard_data_collectors_spark.streaming import normalize as nz
-
-    sdf = (
-        spark.readStream.format("rate").load()
-        .selectExpr("CAST(value AS STRING) AS data")
-    )
-    old = nz.DECODE_STRATEGY
-    nz.DECODE_STRATEGY = "distinct"
-    try:
-        out = nz._attach_parsed(sdf)
-    finally:
-        nz.DECODE_STRATEGY = old
-    assert out.isStreaming
-    plan = out._jdf.queryExecution().analyzed().toString()
-    assert "Deduplicate" not in plan and "Join" not in plan
-
-
 # --- round 7: adversarial-corpus stream == batch-shadow equivalence -------
 #
 # The same hand-adversarial events shapes the oracle fuzz uses
@@ -1206,8 +1296,6 @@ def adv_events_env(spark, tmp_path_factory):
     """(parquet_dir, feed_dir) for the adversarial corpus: parquet for
     the batch shadows, a (ts, event_id)-ordered JSONL feed for the
     replay-source stream."""
-    import pandas as pd
-
     base = pd.Timestamp("2024-01-01 00:00:00")
     d = tmp_path_factory.mktemp("adv_events")
     pq_dir, feed_dir = d / "pq", d / "feed"
