@@ -1,5 +1,6 @@
-"""Append-only commit-log write shared by the exactly-once sinks
-(QueueFileSink, CascadeMaintenanceSink, IvfAppendSink).
+"""Append-only commit-log write shared by the exactly-once sinks that
+publish to plain files (QueueFileSink, the incremental-dedup sink);
+the snapshot-table sinks record epochs in their manifests instead.
 
 The one subtle failure mode of a newline-framed log (round-9 review
 find): a commit that crashes MID-WRITE leaves the file ending without

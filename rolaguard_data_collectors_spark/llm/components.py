@@ -312,15 +312,15 @@ def incremental_components(prev_labels: DataFrame, new_edges: DataFrame,
 # --- the ledger as a maintained lake artifact (round 10) ------------------
 #
 # persist_near_dup_ledger writes the converged labels and the bucket
-# anchors as HASH-BUCKET-PARTITIONED parquet tables; NearDupLedgerSink
-# (and the one-shot ledger_append) then keep both current per doc
-# batch with exactly-once stage/marker/swap/commit epochs — the
-# clustering twin of IvfAppendSink/CascadeMaintenanceSink. Partition
-# choices are the scale design:
+# anchors as HASH-BUCKET-PARTITIONED sub-tables of one snapshot table;
+# NearDupLedgerSink (and the one-shot ledger_append) then keep both
+# current per doc batch with exactly-once stage/marker/commit epochs —
+# the clustering twin of IvfAppendSink/CascadeMaintenanceSink.
+# Partition choices are the scale design:
 #
 #   labels/_cb=H(cluster_id)%NB   — members of one component co-locate,
 #       so "rewrite the components an epoch re-labels" is a
-#       PartitionFilters-pruned read + a per-touched-bucket swap,
+#       manifest-pruned read + a per-touched-bucket replace,
 #       O(affected), never O(ledger).
 #   bucket_mins/_bb=H(band,bucket)%NB — same for the anchors an epoch's
 #       (band, bucket) keys touch.
@@ -342,12 +342,12 @@ def incremental_components(prev_labels: DataFrame, new_edges: DataFrame,
 # doomed doc shares is fully contained in its component's member set —
 # the rebuild subgraph is the affected components' OWN assignment rows
 # and nothing else — and members co-locate in the labels table's
-# cluster-hash buckets, so reading them is a PartitionFilters scan.
+# cluster-hash buckets, so reading them is a bucket-pruned scan.
 # ``ledger_retract`` / ``NearDupLedgerSink(mode='retract')`` stage the
 # post-state of every touched bucket of all three tables (labels,
 # anchors, assignments — anchors recomputed as the min over the
-# surviving members of each touched (band, bucket)) and swap under the
-# lease; re-appending a fully-retracted doc_id is then legal (the
+# surviving members of each touched (band, bucket)) and commit under
+# the lease; re-appending a fully-retracted doc_id is then legal (the
 # append/retract round-trip is tested bit-exact). Mutation = retract
 # then append.
 
@@ -371,72 +371,59 @@ def batch_band_assignments(spark: SparkSession, docs: DataFrame) -> DataFrame:
 
 
 def persist_near_dup_ledger(spark: SparkSession, sf_dir: str, path: str,
-                            n_buckets: int = LEDGER_BUCKETS,
-                            layout: str = "hive") -> None:
+                            n_buckets: int = LEDGER_BUCKETS) -> None:
     """Build the ledger artifact from a corpus: converged labels +
     bucket anchors + the per-doc assignments (the source of truth a
     retraction re-solves from), all hash-bucket-partitioned (see
-    module notes).
-
-    ``layout="snapshot"`` initializes the root as a ``SnapshotStore``
-    (snapshots.py) instead of a hive table family: the SAME append /
-    retract / sink entry points then publish manifest VERSIONS rather
-    than swapping bucket dirs in place — reader snapshot isolation and
-    one ATOMIC commit across all three tables (a hive epoch briefly
-    exposes labels updated but anchors not)."""
+    module notes), as one snapshot table (snapshots.py): the append /
+    retract / sink entry points publish manifest VERSIONS — reader
+    snapshot isolation and one ATOMIC commit across all three tables."""
     import json as _json
 
     from ..snapshots import SnapshotStore
     from ..tablelock import TableLock
 
+    if SnapshotStore.has_committed_content(path):
+        # fail BEFORE any mutation — see persist_cascade: a re-build
+        # would rewrite _meta.json (n_buckets!) under a live table and
+        # rmtree the shared scratch leaselessly. An empty version-0
+        # root (crash between create() and the init commit) has
+        # nothing committed: re-init is safe and rewrites _meta.json
+        # consistently with THIS build.
+        raise ValueError(
+            f"{path} is already a snapshot ledger; maintain it "
+            "with ledger_append/ledger_retract"
+        )
     assign = _band_assignments_staged(spark, sf_dir)
     labels = connected_components(candidate_edges(spark, sf_dir, assign=assign))
-    staged = {
-        "labels": (labels.withColumn("_cb", _cb("cluster_id", n_buckets)),
-                   "_cb"),
-        "bucket_mins": (bucket_mins(assign).withColumn("_bb", _bb(n_buckets)),
-                        "_bb"),
-        "assign": (assign.withColumn("_ab", _cb("doc_id", n_buckets)), "_ab"),
-    }
-    if layout == "snapshot":
-        if SnapshotStore.has_committed_content(path):
-            # fail BEFORE any mutation — see persist_cascade: a
-            # re-build would rewrite _meta.json (n_buckets!) under a
-            # live table and rmtree the shared scratch leaselessly.
-            # An empty version-0 root (crash between create() and the
-            # init commit) has nothing committed: re-init is safe and
-            # rewrites _meta.json consistently with THIS build.
-            raise ValueError(
-                f"{path} is already a snapshot ledger; maintain it "
-                "with ledger_append/ledger_retract"
-            )
-        edir = os.path.join(path, "_stage_tmp")
-        shutil.rmtree(edir, ignore_errors=True)
-        for table, (df, col) in staged.items():
-            _write_staged_bucketed(df, edir, table, col, snapshot=True)
-        with open(os.path.join(path, "_meta.json"), "w",
-                  encoding="utf-8") as fh:
-            _json.dump({"n_buckets": n_buckets}, fh)
-        # create AFTER staging succeeded — a failed build must not
-        # leave a poisoned empty snapshot root (see persist_cascade).
-        # create_or_resume runs INSIDE the lease (ADVICE r11): two
-        # first-builders racing outside it could both see the empty v0
-        # root, both resume, and the lock would then merely SERIALIZE
-        # two init commits — the loser silently replacing the winner
-        # as v2. Under the lease the loser re-reads after the winner's
-        # commit and fails loudly on committed content.
-        with TableLock(path, owner="persist_near_dup_ledger"):
-            store = SnapshotStore.create_or_resume(path)
-            store.commit_staged(edir, op="init")
-        return
-    if layout != "hive":
-        raise ValueError(f"unknown ledger layout {layout!r}")
-    for table, (df, col) in staged.items():
-        df.write.mode("overwrite").partitionBy(col).parquet(
-            os.path.join(path, table)
-        )
-    with open(os.path.join(path, "_meta.json"), "w", encoding="utf-8") as fh:
+    edir = os.path.join(path, "_stage_tmp")
+    shutil.rmtree(edir, ignore_errors=True)
+    _write_staged_bucketed(
+        labels.withColumn("_cb", _cb("cluster_id", n_buckets)),
+        edir, "labels", "_cb",
+    )
+    _write_staged_bucketed(
+        bucket_mins(assign).withColumn("_bb", _bb(n_buckets)),
+        edir, "bucket_mins", "_bb",
+    )
+    _write_staged_bucketed(
+        assign.withColumn("_ab", _cb("doc_id", n_buckets)),
+        edir, "assign", "_ab",
+    )
+    with open(os.path.join(path, "_meta.json"), "w",
+              encoding="utf-8") as fh:
         _json.dump({"n_buckets": n_buckets}, fh)
+    # create AFTER staging succeeded — a failed build must not leave a
+    # poisoned empty snapshot root (see persist_cascade).
+    # create_or_resume runs INSIDE the lease (ADVICE r11): two
+    # first-builders racing outside it could both see the empty v0
+    # root, both resume, and the lock would then merely SERIALIZE two
+    # init commits — the loser silently replacing the winner as v2.
+    # Under the lease the loser re-reads after the winner's commit and
+    # fails loudly on committed content.
+    with TableLock(path, owner="persist_near_dup_ledger"):
+        store = SnapshotStore.create_or_resume(path)
+        store.commit_staged(edir, op="init")
 
 
 def _band_assignments_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -447,58 +434,32 @@ def _band_assignments_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=False)
 
 
-_LEDGER_SCHEMAS = {
-    "labels": ("_cb=", "doc_id long, cluster_id long, _cb int"),
-    "bucket_mins": ("_bb=", "band int, bucket string, min_doc long, _bb int"),
-    "assign": ("_ab=", "band int, bucket string, doc_id long, _ab int"),
-}
-
-
 def _read_bucketed(spark: SparkSession, path: str, table: str,
                    buckets: "list[int] | None" = None) -> DataFrame:
-    """Read a ledger table, tolerating a table a retraction has fully
-    emptied (partition-less directory: schema inference would fail —
-    the cascade layer's round-9 lesson). Returns a typed empty frame
-    so downstream joins/appends keep working on a drained ledger.
-
-    On a SNAPSHOT-layout ledger the read resolves the current manifest
-    (pinned immutable dirs; drained tables come back typed from the
-    recorded schema) and ``buckets`` prunes AT THE MANIFEST — callers
-    keep their ``_cb/_bb/_ab`` isin filters, which the hive layout
-    needs for PartitionFilters pruning and which cost nothing on the
-    already-pruned snapshot read (the bucket columns live in-file
-    there)."""
+    """Read a ledger table at its current version. ``buckets`` prunes AT
+    THE MANIFEST (only those buckets' pinned dirs are listed); a table
+    a retraction has fully emptied comes back as a typed empty frame
+    from the recorded schema, so downstream joins/appends keep working
+    on a drained ledger. Callers keep their ``_cb/_bb/_ab`` isin
+    filters as row guards (the bucket columns live in-file)."""
     from ..snapshots import SnapshotStore
 
-    if SnapshotStore.is_snapshot(path):
-        days = None if buckets is None else [str(b) for b in buckets]
-        return SnapshotStore(path).read(spark, table, days=days)
-    prefix, schema = _LEDGER_SCHEMAS[table]
-    root = os.path.join(path, table)
-    if not os.path.isdir(root) or not any(
-        d.startswith(prefix) for d in os.listdir(root)
-    ):
-        return spark.createDataFrame([], schema)
-    return spark.read.parquet(root)
+    days = None if buckets is None else [str(b) for b in buckets]
+    return SnapshotStore(path).read(spark, table, days=days)
 
 
 def _write_staged_bucketed(df: DataFrame, edir: str, table: str,
-                           part_col: str, snapshot: bool) -> None:
-    """One distributed write of a bucket-keyed staged table. Hive
-    layout partitions by the bucket column itself (live-table shape,
-    column stripped into dirnames). Snapshot layout partitions by a
-    STRING duplicate ``_dp`` so the files keep the int bucket column —
-    manifest reads then need no partition-dir type inference — and
-    records the file schema for typed drained-table reads."""
+                           part_col: str) -> None:
+    """One distributed write of a bucket-keyed staged table,
+    partitioned by a STRING duplicate ``_dp`` so the files keep the int
+    bucket column — manifest reads then need no partition-dir type
+    inference — and records the file schema for typed drained-table
+    reads."""
     import json as _json
 
-    dest = os.path.join(edir, table)
-    if not snapshot:
-        df.write.mode("overwrite").partitionBy(part_col).parquet(dest)
-        return
     df.withColumn("_dp", F.col(part_col).cast("string")).write.mode(
         "overwrite"
-    ).partitionBy("_dp").parquet(dest)
+    ).partitionBy("_dp").parquet(os.path.join(edir, table))
     spath = os.path.join(edir, "_SCHEMAS.json")
     cur: dict = {}
     if os.path.exists(spath):
@@ -531,21 +492,15 @@ def _ledger_meta(path: str) -> int:
 def _ledger_stage(spark: SparkSession, path: str, batch_docs: DataFrame,
                   edir: str) -> None:
     """Compute the POST-state of every ledger bucket the batch touches,
-    into ``edir/labels/_cb=K`` and ``edir/bucket_mins/_bb=K``. Work is
-    O(batch + affected components + touched buckets) except the one
-    documented endpoint-label probe."""
-    from ..snapshots import SnapshotStore
-
-    snapshot = SnapshotStore.is_snapshot(path)
-    if snapshot:
-        # finish any crashed commit BEFORE the live reads (caller
-        # holds the lease): staging against pre-pending state and
-        # committing on top would drop the pending version's rows
-        SnapshotStore(path).recover()
+    into ``edir/<table>/_dp=K``. Work is O(batch + affected components
+    + touched buckets) except the one documented endpoint-label probe.
+    The caller holds the lease and has finished any crashed commit
+    (staging against pre-pending state and committing on top would
+    drop the pending version's rows)."""
     nb = _ledger_meta(path)
     new_assign = batch_band_assignments(spark, batch_docs).localCheckpoint()
     if not new_assign.head(1):
-        return  # empty/NULL-text batch: nothing staged, nothing swapped
+        return  # empty/NULL-text batch: nothing staged
 
     # ---- anchors (bucket_mins) ------------------------------------------
     touched_bb = sorted(
@@ -556,12 +511,12 @@ def _ledger_stage(spark: SparkSession, path: str, batch_docs: DataFrame,
         _read_bucketed(spark, path, "bucket_mins", buckets=touched_bb)
         .where(F.col("_bb").isin(touched_bb))
         .drop("_bb")
-        .localCheckpoint()  # the swap must not re-read a swapped dir
+        .localCheckpoint()  # read once: the stage below re-reads nothing
     )
     merged_mins = merge_bucket_mins(old_mins_t, new_assign).withColumn(
         "_bb", _bb(nb)
     )
-    _write_staged_bucketed(merged_mins, edir, "bucket_mins", "_bb", snapshot)
+    _write_staged_bucketed(merged_mins, edir, "bucket_mins", "_bb")
 
     # ---- assignments (the retraction path's source of truth) -------------
     touched_ab = sorted(
@@ -577,7 +532,7 @@ def _ledger_stage(spark: SparkSession, path: str, batch_docs: DataFrame,
     _write_staged_bucketed(
         old_assign_t.unionByName(new_assign.select("band", "bucket", "doc_id"))
         .withColumn("_ab", _cb("doc_id", nb)),
-        edir, "assign", "_ab", snapshot,
+        edir, "assign", "_ab",
     )
 
     # ---- labels -----------------------------------------------------------
@@ -644,7 +599,7 @@ def _ledger_stage(spark: SparkSession, path: str, batch_docs: DataFrame,
     )
     changed = changed_members.unionByName(fresh).localCheckpoint()
     if not changed.head(1):
-        return  # batch linked nothing new: mins staged above still swap
+        return  # batch linked nothing new: mins staged above still commit
     touched_cb = sorted(
         {r["c"] for r in changed.select(_cb("cluster_id", nb).alias("c"))
          .distinct().collect()} | set(affected_cb)
@@ -657,116 +612,43 @@ def _ledger_stage(spark: SparkSession, path: str, batch_docs: DataFrame,
         .unionByName(changed)
         .withColumn("_cb", _cb("cluster_id", nb))
     )
-    _write_staged_bucketed(post, edir, "labels", "_cb", snapshot)
+    _write_staged_bucketed(post, edir, "labels", "_cb")
     # A touched bucket whose rows ALL moved to other buckets gets no
-    # staged directory — without a manifest the swap would leave its
-    # stale live rows in place NEXT TO their re-labelled copies
-    # (round-10 find: duplicate doc_ids; same emptied-partition gap the
-    # cascade retraction closes with _DROPPED). Record exactly the
-    # emptied buckets; the swap deletes them, idempotently.
-    _write_dropped_manifest(edir, "labels", "_cb=", touched_cb, snapshot)
+    # staged directory — unless it is dropped, the commit would keep
+    # its stale live rows NEXT TO their re-labelled copies (round-10
+    # find: duplicate doc_ids; same emptied-partition gap the cascade
+    # retraction closes with _DROPPED). Record exactly the emptied
+    # buckets.
+    _write_dropped(edir, "labels", touched_cb)
 
 
-def _write_dropped_manifest(edir: str, table: str, prefix: str,
-                            touched: "list[int]",
-                            snapshot: bool = False) -> None:
-    """Record the touched buckets of ``table`` that ended with NO
-    staged directory (every row left them): ``_ledger_swap`` deletes
-    those live dirs (hive), or the manifest build drops their entries
-    (snapshot — staged dirs there are named ``_dp=<bucket>``). Lives
-    in the scratch, so it survives replays and vanishes with the
-    scratch only after the swap/commit completed."""
+def _write_dropped(edir: str, table: str, touched: "list[int]") -> None:
+    """Add the touched buckets of ``table`` that ended with NO staged
+    directory (every row left them) to the stage's ``_DROPPED``
+    ``{table: [keys]}`` list, which the commit drops from the manifest.
+    Lives in the scratch, so it survives replays of a staged epoch."""
+    import json as _json
+
     from ..snapshots import STAGE_PART_PREFIX
 
-    if snapshot:
-        prefix = STAGE_PART_PREFIX
     tdir = os.path.join(edir, table)
     staged = {
-        int(d.split("=", 1)[1])
+        d[len(STAGE_PART_PREFIX):]
         for d in (os.listdir(tdir) if os.path.isdir(tdir) else [])
-        if d.startswith(prefix)
+        if d.startswith(STAGE_PART_PREFIX)
     }
-    emptied = sorted(set(touched) - staged)
-    if emptied:
-        import json as _json
-
-        os.makedirs(edir, exist_ok=True)
-        with open(os.path.join(edir, f"_DROPPED_{table}"), "w",
-                  encoding="utf-8") as fh:
-            _json.dump(emptied, fh)
-
-
-_LEDGER_TABLES = (("labels", "_cb="), ("bucket_mins", "_bb="),
-                  ("assign", "_ab="))
-
-
-def _ledger_swap(edir: str, path: str) -> None:
-    """Move each staged bucket dir over its live counterpart —
-    idempotent across replays, same contract as the cascade swap. A
-    ``_DROPPED_<table>`` manifest (touched buckets the epoch emptied —
-    every row re-labelled away, or deleted by a retraction) deletes
-    those live dirs; rmtree is idempotent, and the manifests live in
-    the scratch so they vanish with it only after the swap completed."""
-    import json as _json
-
-    for table, prefix in _LEDGER_TABLES:
-        dropped = os.path.join(edir, f"_DROPPED_{table}")
-        if os.path.exists(dropped):
-            with open(dropped, encoding="utf-8") as fh:
-                for k in _json.load(fh):
-                    shutil.rmtree(
-                        os.path.join(path, table, f"{prefix}{k}"),
-                        ignore_errors=True,
-                    )
-        gdir = os.path.join(edir, table)
-        if not os.path.isdir(gdir):
-            continue
-        live = os.path.join(path, table)
-        os.makedirs(live, exist_ok=True)
-        for part in os.listdir(gdir):
-            if not part.startswith(prefix):
-                continue
-            target = os.path.join(live, part)
-            shutil.rmtree(target, ignore_errors=True)
-            os.rename(os.path.join(gdir, part), target)
-
-
-def _ledger_publish(edir: str, path: str, op: str,
-                    epoch: "int | None" = None,
-                    direction: "str | None" = None) -> None:
-    """Make a staged ledger scratch live: hive swaps bucket dirs in
-    place; snapshot publishes ONE version atomic across all three
-    tables (labels/anchors/assign can never be observed half-updated),
-    translating the per-table ``_DROPPED_<table>`` manifests into the
-    store's dict drop form. An empty-batch sink epoch on a snapshot
-    ledger still commits a metadata-only version so the epoch is
-    recorded in the same atomic flip."""
-    import json as _json
-
-    from ..snapshots import SnapshotStore
-
-    if not SnapshotStore.is_snapshot(path):
-        _ledger_swap(edir, path)
+    emptied = sorted(str(k) for k in touched if str(k) not in staged)
+    if not emptied:
         return
-    staged = os.path.isdir(edir) and any(
-        os.path.isdir(os.path.join(edir, t)) for t, _ in _LEDGER_TABLES
-    )
-    drops: dict[str, list[str]] = {}
-    for table, _pfx in _LEDGER_TABLES:
-        f = os.path.join(edir, f"_DROPPED_{table}")
-        if os.path.exists(f):
-            with open(f, encoding="utf-8") as fh:
-                drops[table] = [str(k) for k in _json.load(fh)]
-    if drops:
-        with open(os.path.join(edir, "_DROPPED"), "w",
-                  encoding="utf-8") as fh:
-            _json.dump(drops, fh)
-        staged = True
-    if staged or epoch is not None:
-        SnapshotStore(path).commit_staged(
-            edir if staged else None, op=op, epoch=epoch,
-            direction=direction,
-        )
+    os.makedirs(edir, exist_ok=True)
+    dpath = os.path.join(edir, "_DROPPED")
+    drops: dict = {}
+    if os.path.exists(dpath):
+        with open(dpath, encoding="utf-8") as fh:
+            drops = _json.load(fh)
+    drops[table] = emptied
+    with open(dpath, "w", encoding="utf-8") as fh:
+        _json.dump(drops, fh)
 
 
 def _ledger_retract_stage(spark: SparkSession, path: str,
@@ -775,14 +657,10 @@ def _ledger_retract_stage(spark: SparkSession, path: str,
     re-solve the affected components from the surviving assignment
     rows, recompute the touched buckets' anchors, drop the doomed
     docs' assignment rows. See the module notes for why each read is
-    a PartitionFilters scan (except the one documented label probe)."""
+    bucket-pruned (except the one documented label probe); lease and
+    recovery as in ``_ledger_stage``."""
     from pyspark.sql import Window
 
-    from ..snapshots import SnapshotStore
-
-    snapshot = SnapshotStore.is_snapshot(path)
-    if snapshot:
-        SnapshotStore(path).recover()  # see _ledger_stage
     nb = _ledger_meta(path)
     doomed_ids = doomed.select("doc_id").distinct().localCheckpoint()
     if not doomed_ids.head(1):
@@ -866,8 +744,8 @@ def _ledger_retract_stage(spark: SparkSession, path: str,
             .unionByName(new_labels)
             .withColumn("_cb", _cb("cluster_id", nb))
         )
-        _write_staged_bucketed(post, edir, "labels", "_cb", snapshot)
-        _write_dropped_manifest(edir, "labels", "_cb=", touched_cb, snapshot)
+        _write_staged_bucketed(post, edir, "labels", "_cb")
+        _write_dropped(edir, "labels", touched_cb)
     else:
         surviving = None  # only singleton-bucket docs retracted
 
@@ -899,9 +777,8 @@ def _ledger_retract_stage(spark: SparkSession, path: str,
             .unionByName(new_mins)
             .withColumn("_bb", _bb(nb))
         )
-        _write_staged_bucketed(mins_post, edir, "bucket_mins", "_bb", snapshot)
-        _write_dropped_manifest(edir, "bucket_mins", "_bb=", touched_bb,
-                                snapshot)
+        _write_staged_bucketed(mins_post, edir, "bucket_mins", "_bb")
+        _write_dropped(edir, "bucket_mins", touched_bb)
 
         # ---- assignments: drop the doomed rows ---------------------------
         assign_post = (
@@ -911,54 +788,59 @@ def _ledger_retract_stage(spark: SparkSession, path: str,
             .join(F.broadcast(doomed_ids), "doc_id", "left_anti")
             .withColumn("_ab", _cb("doc_id", nb))
         )
-        _write_staged_bucketed(assign_post, edir, "assign", "_ab", snapshot)
-        _write_dropped_manifest(edir, "assign", "_ab=", touched_ab, snapshot)
+        _write_staged_bucketed(assign_post, edir, "assign", "_ab")
+        _write_dropped(edir, "assign", touched_ab)
+
+
+def _ledger_once(spark: SparkSession, path: str, batch: DataFrame,
+                 op: str) -> None:
+    """The one-shot ledger maintenance behind ``ledger_append`` /
+    ``ledger_retract``: stage under the table lease, publish ONE version
+    atomic across labels, anchors and assignments."""
+    from ..snapshots import SnapshotStore
+    from ..tablelock import TableLock
+
+    store = SnapshotStore.open(path, f"ledger_{op}")
+    stage = _ledger_retract_stage if op == "retract" else _ledger_stage
+    with TableLock(path, owner=f"ledger_{op}") as lk:
+        store.recover()
+        edir = os.path.join(path, "_stage_tmp")
+        shutil.rmtree(edir, ignore_errors=True)
+        stage(spark, path, batch, edir)
+        lk.refresh()  # the distributed stage may have consumed the lease
+        store.commit_if_staged(edir, op=op)
+        shutil.rmtree(edir, ignore_errors=True)
 
 
 def ledger_retract(spark: SparkSession, path: str,
                    doomed: DataFrame) -> None:
     """Row-level DELETE for the near-dup ledger: remove docs (GDPR
     erasure, corpus pruning) by re-solving exactly their components
-    from the surviving assignment rows — stage-then-swap under the
+    from the surviving assignment rows — stage-then-commit under the
     table lease, O(affected components + touched buckets). Retract of
     ids the ledger never saw is a no-op; append(B) after retract(B)
     restores the exact pre-retract state (tests/test_components.py)."""
-    from ..tablelock import TableLock
-
-    with TableLock(path, owner="ledger_retract") as lk:
-        edir = os.path.join(path, "_stage_tmp")
-        shutil.rmtree(edir, ignore_errors=True)
-        _ledger_retract_stage(spark, path, doomed, edir)
-        lk.refresh()  # the distributed stage may have consumed the lease
-        _ledger_publish(edir, path, op="retract")
-        shutil.rmtree(edir, ignore_errors=True)
+    _ledger_once(spark, path, doomed, "retract")
 
 
 def ledger_append(spark: SparkSession, path: str,
                   batch_docs: DataFrame) -> None:
     """One-shot batch merge of new docs into the persisted ledger —
-    stage-then-swap under the table lease; incremental labels proven
+    stage-then-commit under the table lease; incremental labels proven
     equal to the full fixpoint over the merged corpus
     (tests/test_components.py)."""
-    from ..tablelock import TableLock
-
-    with TableLock(path, owner="ledger_append") as lk:
-        edir = os.path.join(path, "_stage_tmp")
-        shutil.rmtree(edir, ignore_errors=True)
-        _ledger_stage(spark, path, batch_docs, edir)
-        lk.refresh()  # the distributed stage may have consumed the lease
-        _ledger_publish(edir, path, op="append")
-        shutil.rmtree(edir, ignore_errors=True)
+    _ledger_once(spark, path, batch_docs, "append")
 
 
 class NearDupLedgerSink:
     """foreachBatch target: EXACTLY-ONCE maintenance of the near-dup
     ledger from a stream of (doc_id, text) batches — the clustering
-    twin of CascadeMaintenanceSink, same stage/marker/swap/commit
-    protocol, same crash-window contract, same single-writer lease.
-    ``mode='retract'`` runs the stream as row-level deletes (batches
-    of doc_id rows), with its own commit log/scratch so the two
-    directions' epoch counters never mask each other."""
+    twin of CascadeMaintenanceSink, same skip/stage/commit protocol,
+    same crash-window contract, same single-writer lease: the epoch
+    record rides the manifest's atomic flip. ``mode='retract'`` runs
+    the stream as row-level deletes (batches of doc_id rows), with its
+    own epoch direction and scratch so the two directions' epoch
+    counters never mask each other."""
 
     def __init__(self, path: str, mode: str = "append"):
         if mode not in ("append", "retract"):
@@ -966,74 +848,31 @@ class NearDupLedgerSink:
         self.path = path
         self.mode = mode
         suffix = "_retract" if mode == "retract" else ""
-        self.commit_path = os.path.join(path, "_commits" + suffix)
         self.epoch_root = os.path.join(path, "_epochs" + suffix)
 
-    def _commits(self) -> "set[int]":
-        done: set[int] = set()
-        if not os.path.exists(self.commit_path):
-            return done
-        with open(self.commit_path, encoding="utf-8") as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                try:
-                    done.add(int(line))
-                except ValueError:
-                    continue  # torn write: uncommitted (monotone epochs)
-        return done
-
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        from ..commitlog import append_commit_line
-        from ..snapshots import SnapshotStore
+        from ..snapshots import SnapshotStore, stage_epoch_once
         from ..tablelock import TableLock
 
         epoch = int(epoch_id)
+        store = SnapshotStore.open(self.path, "NearDupLedgerSink")
+        stage = (_ledger_retract_stage if self.mode == "retract"
+                 else _ledger_stage)
         with TableLock(self.path, owner="NearDupLedgerSink") as lk:
-            store = (
-                SnapshotStore(self.path)
-                if SnapshotStore.is_snapshot(self.path)
-                else None
+            # finish a pending commit (possibly THIS epoch's) so the
+            # committed check below can catch it
+            store.recover()
+            if store.epoch_replay_check(self.mode, epoch):
+                return
+            edir, _ = stage_epoch_once(
+                self.epoch_root, epoch,
+                lambda d: stage(batch_df.sparkSession, self.path,
+                                batch_df, d),
             )
-            if store is not None:
-                # finish a pending commit (possibly THIS epoch's) so
-                # the committed check below can catch it; the epoch
-                # record rides the manifest's atomic flip
-                store.recover()
-                if store.epoch_replay_check(self.mode, epoch):
-                    return
-            elif epoch in self._commits():
-                return
-            os.makedirs(self.epoch_root, exist_ok=True)
-            edir = os.path.join(self.epoch_root, f"epoch={epoch}")
-            for d in os.listdir(self.epoch_root):  # stale crashed attempts
-                if d != f"epoch={epoch}":
-                    shutil.rmtree(os.path.join(self.epoch_root, d),
-                                  ignore_errors=True)
-            marker = os.path.join(edir, "_STAGED")
-            if not os.path.exists(marker):
-                shutil.rmtree(edir, ignore_errors=True)
-                stage = (_ledger_retract_stage if self.mode == "retract"
-                         else _ledger_stage)
-                stage(batch_df.sparkSession, self.path, batch_df, edir)
-                os.makedirs(edir, exist_ok=True)
-                tmp = marker + ".tmp"
-                with open(tmp, "w", encoding="utf-8") as fh:
-                    fh.write("staged\n")
-                os.replace(tmp, marker)
             lk.refresh()  # the distributed stage may have consumed the lease
-            if store is not None:
-                _ledger_publish(edir, self.path, op=self.mode,
-                                epoch=epoch, direction=self.mode)
-                shutil.rmtree(edir, ignore_errors=True)  # metadata-only case
-                return
-            self._swap(edir)
-            append_commit_line(self.commit_path, str(epoch))
-            shutil.rmtree(edir, ignore_errors=True)
-
-    def _swap(self, edir: str) -> None:
-        _ledger_swap(edir, self.path)
+            store.commit_if_staged(edir, op=self.mode, epoch=epoch,
+                                   direction=self.mode)
+            shutil.rmtree(edir, ignore_errors=True)  # metadata-only case
 
 
 def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

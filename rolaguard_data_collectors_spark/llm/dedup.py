@@ -238,27 +238,26 @@ def ngram_jaccard_dedup(spark: SparkSession, sf_dir: str,
     # docs that appear in a (doc, rep) edge ever reach the exact
     # verify, so the corpus is semi-joined down to those ids BEFORE
     # tokenization — the former shape tokenized and shuffled the WHOLE
-    # corpus into both join sides to keep |cand| rows. The id frames
-    # broadcast (they are bounded by the candidate count, one row per
-    # bucketed non-rep doc); at a scale where the drop-candidate set
-    # outgrows a broadcast, the same two semi-joins degrade gracefully
-    # to Spark's runtime bloom-filter / shuffled semi-join — still
-    # moving only matching documents' token arrays, never the corpus.
+    # corpus into both join sides to keep |cand| rows. The id frames are
+    # O(corpus) on duplicate-heavy data (one row per bucketed non-rep
+    # doc), so the join strategy is left to AQE: it broadcasts them
+    # while they fit (tests/test_plans.py pins that at the fixture
+    # scale), and where the drop-candidate set outgrows a broadcast the
+    # same two semi-joins run as shuffled semi-joins — still moving
+    # only matching documents' token arrays, never the corpus.
     # Inner-join equivalence: ta rows that survive the verify join all
     # have doc_id in cand.doc_id; tb rows likewise in cand.rep_id —
     # a semi-join on exactly those key sets drops no output row.
     docs = load_table(spark, sf_dir, "documents")
     ta = (
-        docs.join(F.broadcast(cand.select("doc_id")), "doc_id", "left_semi")
+        docs.join(cand.select("doc_id"), "doc_id", "left_semi")
         .select(
             "doc_id", F.array_distinct(F.split("text", " ")).alias("toks_doc")
         )
     )
     tb = (
         docs.join(
-            F.broadcast(cand.select(F.col("rep_id").alias("doc_id"))),
-            "doc_id",
-            "left_semi",
+            cand.select(F.col("rep_id").alias("doc_id")), "doc_id", "left_semi"
         )
         .select(
             F.col("doc_id").alias("rep_id"),

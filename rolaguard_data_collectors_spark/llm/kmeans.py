@@ -35,7 +35,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..commitlog import append_commit_line
 from ..portable_sql import hex32, hex32_spark
 from ..tablelock import TableLock
 
@@ -135,40 +134,60 @@ TOMBSTONE_SCHEMA = "vec_id long, cluster int"
 
 def _postings_frame(spark: SparkSession, path: str,
                     clusters: "list[int] | None" = None) -> DataFrame:
-    """The postings scan, layout-aware: hive reads the partitioned
-    directory (callers' ``cluster`` isin filters become
-    PartitionFilters); snapshot resolves the manifest and ``clusters``
-    prunes the pinned dir list before Spark lists a file (the cluster
-    column lives in-file there, so the same isin filters still apply
-    as row guards)."""
+    """The postings scan at the index's current version: ``clusters``
+    prunes the pinned dir list in the manifest before Spark lists a
+    file."""
     from ..snapshots import SnapshotStore
 
-    if SnapshotStore.is_snapshot(path):
-        days = None if clusters is None else [str(int(c)) for c in clusters]
-        return SnapshotStore(path).read(spark, "postings", days=days)
-    return spark.read.parquet(path + "/postings")
+    days = None if clusters is None else [str(int(c)) for c in clusters]
+    return SnapshotStore(path).read(spark, "postings", days=days)
+
+
+def _write_cells(df: DataFrame, dest: str) -> None:
+    """Stage (vec_id, payload, cluster) rows one dir per cell, under
+    the snapshot store's ``_dp=<cell>`` carrier (the files keep the int
+    ``cluster`` column)."""
+    df.withColumn("_dp", F.col("cluster").cast("string")).write.mode(
+        "overwrite"
+    ).partitionBy("_dp").parquet(dest)
 
 
 def persist_ivf_index(spark: SparkSession, sf_dir: str, path: str,
                       k: int = 8, iters: int = 5,
-                      quantize: bool = False,
-                      layout: str = "hive") -> list[list[float]]:
+                      quantize: bool = False) -> list[list[float]]:
     """Train and WRITE the IVF index as a lake artifact:
 
     - ``<path>/centroids.parquet``: the k x dim codebook;
-    - ``<path>/postings/cluster=N/``: per-cluster posting lists
-      (vec_id, embedding), partitioned by cluster;
+    - a snapshot table (snapshots.py) at ``<path>`` whose ``postings``
+      sub-table holds the per-cluster posting lists (vec_id, embedding,
+      cluster), one partition per cluster, plus an empty
+      ``tombstones`` sub-table for row-level deletes;
     - with ``quantize=True``: postings carry int8-range codes instead
       of float vectors plus ``<path>/scales.parquet`` (the per-dim
       max|x| codebook) — the IVF-PQ-lite shape, 4x fewer bytes per
       probed vector.
 
-    The directory layout IS the index: ``partitionBy(cluster)`` turns
-    an n_probe search into a PartitionFilter scan of n_probe
-    directories — the reader never opens the other k - n_probe
-    partitions (proven in tests/test_kmeans.py). This is the same
-    write-time lever as plans/scale.write_partitioned, applied to
-    ANN."""
+    The partitioning IS the index: an n_probe search lists only the
+    n_probe cells' directories from the manifest — the reader never
+    opens the other k - n_probe partitions (proven in
+    tests/test_kmeans.py). Append epochs become ADD-mode commits (no
+    whole-cell rewrite), tombstone applies one atomic rewrite+drain
+    commit, and probing readers are never disturbed by either. The
+    frozen codebook (centroids/scales) stays a plain root file — it
+    only changes at retrain, which rebuilds the index wholesale."""
+    import json as _json
+
+    from ..snapshots import SnapshotStore
+
+    if SnapshotStore.has_committed_content(path):
+        # fail BEFORE any mutation — see persist_cascade: the leaseless
+        # scratch rmtree below could otherwise delete a concurrent
+        # append's staged epoch mid-commit. An empty version-0 root
+        # (crashed init) is safe to re-init.
+        raise ValueError(
+            f"{path} is already a snapshot IVF index; maintain it "
+            "with ivf_index_append/ivf_index_delete"
+        )
     centroids = kmeans_fit(spark, sf_dir, k, iters)[0]
     spark.createDataFrame(
         [(i, c) for i, c in enumerate(centroids)],
@@ -187,57 +206,27 @@ def persist_ivf_index(spark: SparkSession, sf_dir: str, path: str,
         )
     else:
         payload = assigned.select("vec_id", "v", "cluster")
-    if layout == "snapshot":
-        # Snapshot-versioned index (snapshots.py): append epochs become
-        # ADD-mode commits (no whole-cell rewrite), tombstone applies
-        # become one atomic rewrite+drain commit, and probing readers
-        # are never disturbed by either. The frozen codebook
-        # (centroids/scales) stays a plain root file — it only changes
-        # at retrain, which rebuilds the index wholesale.
-        import json as _json
+    edir = os.path.join(path, "_stage_tmp")
+    shutil.rmtree(edir, ignore_errors=True)
+    _write_cells(payload, os.path.join(edir, "postings"))
+    from pyspark.sql.types import StructType, _parse_datatype_string
 
-        from ..snapshots import SnapshotStore
-
-        if SnapshotStore.has_committed_content(path):
-            # fail BEFORE any mutation — see persist_cascade: the
-            # leaseless scratch rmtree below could otherwise delete a
-            # concurrent append's staged epoch mid-commit. An empty
-            # version-0 root (crashed init) is safe to re-init.
-            raise ValueError(
-                f"{path} is already a snapshot IVF index; maintain it "
-                "with ivf_index_append/ivf_index_delete"
-            )
-        edir = os.path.join(path, "_stage_tmp")
-        shutil.rmtree(edir, ignore_errors=True)
-        payload.withColumn(
-            "_dp", F.col("cluster").cast("string")
-        ).write.mode("overwrite").partitionBy("_dp").parquet(
-            os.path.join(edir, "postings")
-        )
-        from pyspark.sql.types import StructType, _parse_datatype_string
-
-        schemas = {
-            "postings": payload.schema.json(),
-            "tombstones": StructType.fromDDL(TOMBSTONE_SCHEMA).json()
-            if hasattr(StructType, "fromDDL")
-            else _parse_datatype_string(TOMBSTONE_SCHEMA).json(),
-        }
-        with open(os.path.join(edir, "_SCHEMAS.json"), "w",
-                  encoding="utf-8") as fh:
-            _json.dump(schemas, fh)
-        # create AFTER staging succeeded — a failed build must not
-        # leave a poisoned empty snapshot root (see persist_cascade).
-        # create_or_resume INSIDE the lease: see persist_near_dup_ledger
-        # (two racing first-builders must not both resume the empty v0).
-        with TableLock(path, owner="persist_ivf_index"):
-            store = SnapshotStore.create_or_resume(path)
-            store.commit_staged(edir, op="init")
-        return centroids
-    if layout != "hive":
-        raise ValueError(f"unknown IVF layout {layout!r}")
-    payload.write.mode("overwrite").partitionBy("cluster").parquet(
-        path + "/postings"
-    )
+    schemas = {
+        "postings": payload.schema.json(),
+        "tombstones": StructType.fromDDL(TOMBSTONE_SCHEMA).json()
+        if hasattr(StructType, "fromDDL")
+        else _parse_datatype_string(TOMBSTONE_SCHEMA).json(),
+    }
+    with open(os.path.join(edir, "_SCHEMAS.json"), "w",
+              encoding="utf-8") as fh:
+        _json.dump(schemas, fh)
+    # create AFTER staging succeeded — a failed build must not leave a
+    # poisoned empty snapshot root (see persist_cascade).
+    # create_or_resume INSIDE the lease: see persist_near_dup_ledger
+    # (two racing first-builders must not both resume the empty v0).
+    with TableLock(path, owner="persist_ivf_index"):
+        store = SnapshotStore.create_or_resume(path)
+        store.commit_staged(edir, op="init")
     return centroids
 
 
@@ -246,11 +235,10 @@ def ivf_index_append(spark: SparkSession, path: str,
     """Incremental IVF index maintenance — the lake append that keeps
     a persisted index current without retraining or rewriting it:
     route each new (vec_id, v) row to its nearest PERSISTED centroid
-    and append it to that cell's ``postings/cluster=N/`` directory
-    (``partitionBy`` append writes new files only into the touched
-    directories; untouched cells keep their exact files). Returns the
-    touched cluster ids, sorted — the input a changed-cells-only
-    sweep (`semantic_dedup_from_index(clusters=...)`,
+    and commit the routed rows as an ADD-mode version (each touched
+    cell's partition gains one new dir; untouched cells keep their
+    exact dirs). Returns the touched cluster ids, sorted — the input a
+    changed-cells-only sweep (`semantic_dedup_from_index(clusters=...)`,
     tests/test_kmeans.py) runs on next.
 
     The codebook collect is k x dim floats (bounded at any corpus
@@ -266,23 +254,20 @@ def ivf_index_append(spark: SparkSession, path: str,
     are part of the frozen codebook until a retrain, exactly like the
     centroids), so appended codes are bit-identical to what the
     original builder would have produced for the same vectors."""
+    from ..snapshots import SnapshotStore
+
+    store = SnapshotStore.open(path, "ivf_index_append")
     # Touched cells collected from the SAME materialization the write
     # will use: stage it so routing can't diverge between the two.
     # Routing runs outside the lease (read-only over the frozen
-    # codebook); only the live-postings append holds it.
-    from ..snapshots import SnapshotStore
-
+    # codebook); only the commit holds it.
     assigned = _route_for_index(spark, path, new_vectors).localCheckpoint()
     touched = sorted(
         r["cluster"] for r in assigned.select("cluster").distinct().collect()
     )
     with TableLock(path, owner="ivf_index_append") as lk:
-        store = (
-            SnapshotStore(path) if SnapshotStore.is_snapshot(path) else None
-        )
-        if store is not None:
-            store.recover()  # a pending DELETE commit's tombstones
-            # must be visible to the guard below
+        store.recover()  # a pending DELETE commit's tombstones must be
+        # visible to the guard below
         # guard INSIDE the lease (round-10 review find): checked before
         # the lock, a concurrent ivf_index_delete could tombstone one
         # of these ids in the guard-to-lock window and this append
@@ -290,22 +275,13 @@ def ivf_index_append(spark: SparkSession, path: str,
         # physically deletes — the exact silent loss the guard exists
         # to turn into a named error
         _guard_tombstoned_ids(spark, path, assigned)
-        if store is not None:
-            if touched:
-                edir = os.path.join(path, "_stage_tmp")
-                shutil.rmtree(edir, ignore_errors=True)
-                assigned.withColumn(
-                    "_dp", F.col("cluster").cast("string")
-                ).write.mode("overwrite").partitionBy("_dp").parquet(
-                    os.path.join(edir, "postings")
-                )
-                lk.refresh()  # staged write may have consumed the lease
-                store.commit_staged(edir, op="append", mode="add",
-                                    extra={"cells": touched})
-        else:
-            assigned.write.mode("append").partitionBy("cluster").parquet(
-                path + "/postings"
-            )
+        if touched:
+            edir = os.path.join(path, "_stage_tmp")
+            shutil.rmtree(edir, ignore_errors=True)
+            _write_cells(assigned, os.path.join(edir, "postings"))
+            lk.refresh()  # staged write may have consumed the lease
+            store.commit_staged(edir, op="append", mode="add",
+                                extra={"cells": touched})
     return touched
 
 
@@ -369,126 +345,71 @@ def _route_for_index(spark: SparkSession, path: str,
 class IvfAppendSink:
     """foreachBatch target: EXACTLY-ONCE streaming appends into a
     persisted IVF index. A bare ``ivf_index_append`` is not idempotent
-    (replaying a micro-batch duplicates postings), so the sink uses
-    the repo's stage/marker/move/commit recipe, in its append-only
-    variant (cf. CascadeMaintenanceSink's swap variant):
+    (replaying a micro-batch duplicates postings), so each epoch runs
+    under the table lease as skip/stage/commit
+    (cf. CascadeMaintenanceSink):
 
-    1. STAGE the routed batch as parquet under
-       ``<path>/_epochs/epoch=N/cluster=C/`` and write a ``_STAGED``
-       marker recording the touched cells (temp+rename);
-    2. MOVE each staged part file into its live posting directory
-       under an epoch-prefixed name — idempotent: a replay after a
-       crash mid-move moves only the files still in scratch;
-    3. COMMIT ``epoch,c1|c2|...,end`` to ``<path>/_commits`` (fsync,
-       terminator-framed — see committed()), then
-       clear the scratch. Committed epochs are skipped on replay; the
-       commit log doubles as the changed-cells feed a downstream
-       incremental dedup sweep consumes (``committed()``).
+    1. SKIP if the manifest's ``epoch_high`` for this direction covers
+       the epoch (after finishing any crashed commit);
+    2. STAGE the routed batch under ``<path>/_epochs/epoch=N/`` with a
+       ``_STAGED`` marker recording the touched cells
+       (``snapshots.stage_epoch_once``);
+    3. COMMIT it as an ADD-mode version carrying the epoch record and
+       its cell list in the same atomic flip — the manifests double as
+       the changed-cells feed a downstream incremental dedup sweep
+       consumes (``committed()``).
 
     ``IvfDeleteSink`` runs the SAME protocol with the tombstone
     sidecar as the target — the streaming half of the row-level
-    delete (class attrs pick the target/logs; ``_route`` picks the
-    cell-location step)."""
+    delete (class attrs pick the target/direction; ``_route`` picks
+    the cell-location step)."""
 
     TARGET = "postings"
-    COMMIT_FILE = "_commits"
     EPOCH_DIR = "_epochs"
     OWNER = "IvfAppendSink"
     DIRECTION = "append"
 
     def __init__(self, path: str):
         self.path = path
-        self.commit_path = os.path.join(path, self.COMMIT_FILE)
         self.epoch_root = os.path.join(path, self.EPOCH_DIR)
 
     def _route(self, batch_df: DataFrame) -> DataFrame:
         return _route_for_index(batch_df.sparkSession, self.path, batch_df)
 
     def committed(self) -> dict[int, list[int]]:
-        """epoch -> touched cluster ids, from the commit log. Records
-        carry a trailing ``,end`` terminator: unlike the cascade log's
-        bare monotone epochs, a TORN record here could otherwise parse
-        as a valid entry with a truncated cell list ('7,1|2|3' torn at
-        '7,1|2') and corrupt the changed-cells feed a downstream
-        incremental dedup sweep consumes (round-9 review fix). A line
-        without the terminator is treated as uncommitted — safe: the
-        commit is written only after the move completed, the scratch
-        (with its marker) is cleared only after the commit, so the
-        replay re-moves nothing and re-commits the full record.
-
-        On a SNAPSHOT-layout index the epoch records ride the
-        manifests (epoch + extra.cells, per direction), written in the
-        same atomic flip that published the epoch's data — no torn-log
-        class of failure exists there; vacuumed manifests age out of
-        the feed the way a truncated log would."""
+        """epoch -> touched cluster ids of this direction, read from the
+        retained manifests (epoch + extra.cells), written in the same
+        atomic flip that published each epoch's data. Vacuumed
+        manifests age out of the feed; replay protection does NOT
+        depend on this walk (it rides ``epoch_high``)."""
         from ..snapshots import SnapshotStore, SnapshotVacuumedError
 
-        if SnapshotStore.is_snapshot(self.path):
-            store = SnapshotStore(self.path)
-            out: dict[int, list[int]] = {}
-            for v in range(store.current_version(), 0, -1):
-                try:
-                    m = store.manifest(v)
-                except SnapshotVacuumedError:
-                    break
-                if (m.get("direction") == self.DIRECTION
-                        and m.get("epoch") is not None):
-                    out[int(m["epoch"])] = [
-                        int(c) for c in (m.get("extra") or {}).get("cells", [])
-                    ]
-            return out
-        done: dict[int, list[int]] = {}
-        if not os.path.exists(self.commit_path):
-            return done
-        with open(self.commit_path, encoding="utf-8") as fh:
-            for line in fh:
-                parts = line.strip().split(",")
-                if len(parts) != 3 or parts[2] != "end":
-                    continue  # torn/garbled: treated as uncommitted
-                try:
-                    done[int(parts[0])] = (
-                        [int(c) for c in parts[1].split("|")]
-                        if parts[1] else []
-                    )
-                except ValueError:
-                    continue
-        return done
-
-    def _move(self, edir: str, epoch: int) -> None:
-        for d in os.listdir(edir):
-            if not d.startswith("cluster="):
-                continue
-            live = os.path.join(self.path, self.TARGET, d)
-            os.makedirs(live, exist_ok=True)
-            src = os.path.join(edir, d)
-            for fn in os.listdir(src):
-                if not fn.startswith("part-"):
-                    continue
-                os.rename(
-                    os.path.join(src, fn),
-                    os.path.join(live, f"epoch{epoch}-{fn}"),
-                )
+        store = SnapshotStore(self.path)
+        out: dict[int, list[int]] = {}
+        for v in range(store.current_version(), 0, -1):
+            try:
+                m = store.manifest(v)
+            except SnapshotVacuumedError:
+                break
+            if (m.get("direction") == self.DIRECTION
+                    and m.get("epoch") is not None):
+                out[int(m["epoch"])] = [
+                    int(c) for c in (m.get("extra") or {}).get("cells", [])
+                ]
+        return out
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
+        from ..snapshots import SnapshotStore, stage_epoch_once
+
+        epoch = int(epoch_id)
+        spark = batch_df.sparkSession
+        store = SnapshotStore.open(self.path, self.OWNER)
         # Per-epoch single-writer lease (round-10 verdict item #1):
-        # serializes this epoch against compact_partitions /
-        # expire_partitions (both lock the index root via lock_root=)
-        # so a maintenance swap cannot delete posting files this epoch
-        # commits, and the stale-scratch sweep below cannot rmtree
-        # another lease-holder's in-flight stage.
+        # serializes this epoch against every other writer of the
+        # index (one-shot appends/deletes, tombstone applies,
+        # compaction) so the stale-scratch sweep cannot rmtree another
+        # lease-holder's in-flight stage.
         with TableLock(self.path, owner=self.OWNER) as lk:
-            self._epoch_locked(batch_df, int(epoch_id), lk)
-
-    def _epoch_locked(self, batch_df: DataFrame, epoch: int,
-                      lk: "TableLock | None" = None) -> None:
-        from ..snapshots import SnapshotStore
-
-        store = (
-            SnapshotStore(self.path)
-            if SnapshotStore.is_snapshot(self.path)
-            else None
-        )
-        if store is not None:
             store.recover()  # the pending commit may BE this epoch
             # Exactly-once check via epoch_high (carried forward by
             # EVERY commit, immune to vacuum) — committed()'s manifest
@@ -498,92 +419,46 @@ class IvfAppendSink:
             # have let the replay double-append).
             if store.epoch_replay_check(self.DIRECTION, epoch):
                 return
-        elif epoch in self.committed():
-            return
-        os.makedirs(self.epoch_root, exist_ok=True)
-        edir = os.path.join(self.epoch_root, f"epoch={epoch}")
-        for d in os.listdir(self.epoch_root):  # stale crashed attempts
-            if d != f"epoch={epoch}":
-                shutil.rmtree(os.path.join(self.epoch_root, d),
-                              ignore_errors=True)
-        marker = os.path.join(edir, "_STAGED")
-        if not os.path.exists(marker):
-            shutil.rmtree(edir, ignore_errors=True)
-            routed = self._route(batch_df).localCheckpoint()
-            touched = sorted(
-                r["cluster"]
-                for r in routed.select("cluster").distinct().collect()
-            )
-            if touched:
-                if store is not None:
-                    routed.withColumn(
-                        "_dp", F.col("cluster").cast("string")
-                    ).write.mode("overwrite").partitionBy("_dp").parquet(
-                        os.path.join(edir, self.TARGET)
-                    )
-                else:
-                    routed.write.mode("overwrite").partitionBy(
-                        "cluster"
-                    ).parquet(edir)
-            os.makedirs(edir, exist_ok=True)
-            tmp = marker + ".tmp"
-            with open(tmp, "w", encoding="utf-8") as fh:
-                fh.write("|".join(str(c) for c in touched) + "\n")
-            os.replace(tmp, marker)
-        with open(marker, encoding="utf-8") as fh:
-            cells_s = fh.read().strip()
-        staged_root = (
-            os.path.join(edir, self.TARGET) if store is not None else edir
-        )
-        part_prefix = "_dp=" if store is not None else "cluster="
-        staged_rows = os.path.isdir(staged_root) and any(
-            d.startswith(part_prefix)
-            and any(
-                f.startswith("part-")
-                for f in os.listdir(os.path.join(staged_root, d))
-            )
-            for d in os.listdir(staged_root)
-        )
-        if self.TARGET == "postings" and cells_s and staged_rows:
-            # id-reuse guard on the STAGED rows (works on replays too,
-            # where the routed frame is not recomputed): a tombstoned
-            # vec_id must not enter the live postings — raising leaves
-            # the epoch staged; after apply_ivf_tombstones drains the
-            # sidecar, the stream restart replays this epoch cleanly.
-            # A replay whose MOVE already completed has an empty
-            # scratch (marker only) — nothing left to guard: the rows
-            # are live and only the commit record is missing.
-            _guard_tombstoned_ids(
-                batch_df.sparkSession, self.path,
-                batch_df.sparkSession.read.parquet(staged_root),
-            )
-        if lk is not None:
+
+            def stage(edir: str) -> str:
+                routed = self._route(batch_df).localCheckpoint()
+                touched = sorted(
+                    r["cluster"]
+                    for r in routed.select("cluster").distinct().collect()
+                )
+                if touched:
+                    _write_cells(routed, os.path.join(edir, self.TARGET))
+                return "|".join(str(c) for c in touched)
+
+            edir, cells_s = stage_epoch_once(self.epoch_root, epoch, stage)
+            staged = os.path.join(edir, self.TARGET)
+            if self.TARGET == "postings" and os.path.isdir(staged):
+                # id-reuse guard on the STAGED rows (works on replays
+                # too, where the routed frame is not recomputed): a
+                # tombstoned vec_id must not enter the live postings —
+                # raising leaves the epoch staged; after
+                # apply_ivf_tombstones drains the sidecar, the stream
+                # restart replays this epoch cleanly.
+                _guard_tombstoned_ids(spark, self.path,
+                                      spark.read.parquet(staged))
             lk.refresh()  # the distributed stage may have consumed the lease
-        if store is not None:
-            cells = (
-                [int(c) for c in cells_s.split("|")] if cells_s else []
-            )
-            store.commit_staged(
-                edir if staged_rows else None, op=self.DIRECTION,
-                epoch=epoch, direction=self.DIRECTION, mode="add",
-                extra={"cells": cells},
+            store.commit_if_staged(
+                edir, op=self.DIRECTION, epoch=epoch,
+                direction=self.DIRECTION, mode="add",
+                extra={"cells": [int(c) for c in cells_s.split("|") if c]},
             )
             shutil.rmtree(edir, ignore_errors=True)  # metadata-only case
-            return
-        self._move(edir, epoch)
-        append_commit_line(self.commit_path, f"{epoch},{cells_s},end")
-        shutil.rmtree(edir, ignore_errors=True)
 
 
 def ivf_index_delete(spark: SparkSession, path: str,
                      doomed: DataFrame) -> list[int]:
     """Row-level DELETE for a persisted IVF index (round-10 verdict
-    item #2): append (vec_id) tombstones under
-    ``<path>/tombstones/cluster=N/`` — the sidecar every reader
-    anti-joins (``read_ivf_postings``) and compaction physically
-    merges (``apply_ivf_tombstones``). Removing a vector never
-    rewrites a posting file at delete time: O(batch) work, the same
-    lake-delete shape as Delta/Iceberg delete files.
+    item #2): commit (vec_id, cluster) tombstones into the index's
+    ``tombstones`` sub-table — the sidecar every reader anti-joins
+    (``read_ivf_postings``) and compaction physically merges
+    (``apply_ivf_tombstones``). Removing a vector never rewrites a
+    posting file at delete time: O(batch) work, the same lake-delete
+    shape as Delta/Iceberg delete files.
 
     Cell location: if ``doomed`` carries the embedding column ``v``,
     each row routes to its nearest FROZEN centroid — by construction
@@ -598,29 +473,20 @@ def ivf_index_delete(spark: SparkSession, path: str,
     epochs: ``IvfDeleteSink``."""
     from ..snapshots import SnapshotStore
 
+    store = SnapshotStore.open(path, "ivf_index_delete")
     located = _locate_cells(spark, path, doomed).localCheckpoint()
     touched = sorted(
         r["cluster"] for r in located.select("cluster").distinct().collect()
     )
     with TableLock(path, owner="ivf_index_delete") as lk:
-        if SnapshotStore.is_snapshot(path):
-            store = SnapshotStore(path)
-            store.recover()
-            if touched:
-                edir = os.path.join(path, "_stage_tmp")
-                shutil.rmtree(edir, ignore_errors=True)
-                located.withColumn(
-                    "_dp", F.col("cluster").cast("string")
-                ).write.mode("overwrite").partitionBy("_dp").parquet(
-                    os.path.join(edir, "tombstones")
-                )
-                lk.refresh()  # staged write may have consumed the lease
-                store.commit_staged(edir, op="delete", mode="add",
-                                    extra={"cells": touched})
-        else:
-            located.write.mode("append").partitionBy("cluster").parquet(
-                path + "/tombstones"
-            )
+        store.recover()
+        if touched:
+            edir = os.path.join(path, "_stage_tmp")
+            shutil.rmtree(edir, ignore_errors=True)
+            _write_cells(located, os.path.join(edir, "tombstones"))
+            lk.refresh()  # staged write may have consumed the lease
+            store.commit_staged(edir, op="delete", mode="add",
+                                extra={"cells": touched})
     return touched
 
 
@@ -650,19 +516,17 @@ def _locate_cells(spark: SparkSession, path: str,
 class IvfDeleteSink(IvfAppendSink):
     """foreachBatch target: EXACTLY-ONCE streaming row-level deletes —
     the tombstone-writing twin of ``IvfAppendSink`` on the identical
-    stage/marker/move/commit protocol, targeting the tombstone sidecar
+    skip/stage/commit protocol, targeting the tombstone sidecar
     instead of the postings (duplicate tombstones would even be
-    HARMLESS to readers — the anti-join is idempotent — but the commit
-    log keeps replayed epochs from accreting duplicate sidecar files
-    and keeps the changed-cells feed exact). Shares the table lease
-    with the append sink and the maintenance ops, so a delete epoch
-    can never interleave a compaction's stage/swap window. Its
-    ``committed()`` log is separate (``_commits_delete``): a delete
-    stream and an append stream are independent queries with
-    independent epoch counters."""
+    HARMLESS to readers — the anti-join is idempotent — but the epoch
+    record keeps replayed epochs from accreting duplicate sidecar
+    dirs and keeps the changed-cells feed exact). Shares the table
+    lease with the append sink and the maintenance ops. Its epochs
+    ride their own direction (``delete``): a delete stream and an
+    append stream are independent queries with independent epoch
+    counters."""
 
     TARGET = "tombstones"
-    COMMIT_FILE = "_commits_delete"
     EPOCH_DIR = "_epochs_delete"
     OWNER = "IvfDeleteSink"
     DIRECTION = "delete"
@@ -671,40 +535,32 @@ class IvfDeleteSink(IvfAppendSink):
         return _locate_cells(batch_df.sparkSession, self.path, batch_df)
 
 
-def _tombstones(spark: SparkSession, path: str) -> DataFrame | None:
-    """The tombstone sidecar as a frame, or None when the index has
-    none. Content check, not isdir (an applied-then-emptied sidecar
-    root must not wedge the reader on schema inference)."""
+def _tombstones(spark: SparkSession, path: str,
+                clusters: "list[int] | None" = None) -> DataFrame | None:
+    """The tombstone sidecar (pruned to ``clusters`` in the manifest)
+    as a frame, or None when it holds no entries."""
     from ..snapshots import SnapshotStore
 
-    if SnapshotStore.is_snapshot(path):
-        store = SnapshotStore(path)
-        if not store.table_days("tombstones"):
-            return None
-        return store.read(spark, "tombstones")
-    tdir = path + "/tombstones"
-    if not os.path.isdir(tdir) or not any(
-        d.startswith("cluster=") for d in os.listdir(tdir)
-    ):
+    store = SnapshotStore(path)
+    cells = store.table_days("tombstones")
+    if clusters is not None:
+        want = {str(int(c)) for c in clusters}
+        cells = [c for c in cells if c in want]
+    if not cells:
         return None
-    return spark.read.parquet(tdir)
+    return store.read(spark, "tombstones", days=cells)
 
 
 def read_ivf_postings(spark: SparkSession, path: str,
                       clusters: "list[int] | None" = None) -> DataFrame:
     """THE read path for a maintained index: the postings scan minus
     tombstoned rows. ``clusters`` prunes BOTH scans to the probed
-    cells (PartitionFilters); the anti-join side is the tombstone list
-    — small by the lake contract (compaction drains it) — and
-    broadcast, so reads cost one broadcast-hash anti-join over the
-    pruned postings, never a shuffle."""
+    cells in the manifest; the anti-join side is the tombstone list —
+    small by the lake contract (compaction drains it) — and broadcast,
+    so reads cost one broadcast-hash anti-join over the pruned
+    postings, never a shuffle."""
     posts = _postings_frame(spark, path, clusters=clusters)
-    tomb = _tombstones(spark, path)
-    if clusters is not None:
-        cl = [int(c) for c in clusters]
-        posts = posts.where(F.col("cluster").isin(cl))
-        if tomb is not None:
-            tomb = tomb.where(F.col("cluster").isin(cl))
+    tomb = _tombstones(spark, path, clusters=clusters)
     if tomb is not None:
         posts = posts.join(
             F.broadcast(tomb.select("vec_id")), "vec_id", "left_anti"
@@ -715,101 +571,24 @@ def read_ivf_postings(spark: SparkSession, path: str,
 def apply_ivf_tombstones(spark: SparkSession, path: str,
                          target_files: int = 1) -> list[int]:
     """Physically drop tombstoned rows — the compaction half of the
-    delete: rewrite ONLY cells that have tombstones (anti-joined,
-    coalesced to ``target_files``), swap them in, then clear those
-    cells' sidecars. Untouched cells keep their exact files. Returns
-    the rewritten cells, sorted.
-
-    Crash windows, same stage/marker/swap recipe as
-    ``compact_partitions``: before the ``_SWAP`` marker -> live index
-    untouched, tombstones intact, readers still anti-join (a delete is
-    never lost by crashing compaction); mid-swap -> the marker (which
-    records the cell list) lets the next call FINISH the swap from the
-    surviving scratch and clear the recorded sidecars; between swap
-    and sidecar-clear -> re-running anti-joins rows that are already
-    gone (a no-op rewrite) and completes the clear. All under the
-    index's single-writer lease, so a live IvfAppendSink epoch can
-    never land between the stage-read and the swap."""
-    from ..snapshots import SnapshotStore
-
-    if SnapshotStore.is_snapshot(path):
-        return _apply_tombstones_snapshot(spark, path, target_files)
-    scratch = os.path.join(path, "_tombstone_tmp")
-    marker = os.path.join(scratch, "_SWAP")
-    posts_root = os.path.join(path, "postings")
-    tomb_root = os.path.join(path, "tombstones")
-
-    def _finish_swap(cells: "list[int]") -> None:
-        for d in sorted(os.listdir(scratch)):
-            if not d.startswith("cluster="):
-                continue
-            live = os.path.join(posts_root, d)
-            shutil.rmtree(live, ignore_errors=True)
-            os.rename(os.path.join(scratch, d), live)
-        for c in cells:
-            shutil.rmtree(os.path.join(tomb_root, f"cluster={c}"),
-                          ignore_errors=True)
-        shutil.rmtree(scratch, ignore_errors=True)
-
-    with TableLock(path, owner="apply_ivf_tombstones") as lk:
-        if os.path.exists(marker):
-            with open(marker, encoding="utf-8") as fh:
-                cells = [int(c) for c in fh.read().split() if c]
-            _finish_swap(cells)  # crashed mid-swap: scratch is truth
-        shutil.rmtree(scratch, ignore_errors=True)
-
-        cells = sorted(
-            int(d.split("=", 1)[1])
-            for d in (os.listdir(tomb_root) if os.path.isdir(tomb_root)
-                      else [])
-            if d.startswith("cluster=")
-        )
-        for c in cells:
-            live = os.path.join(posts_root, f"cluster={c}")
-            if not os.path.isdir(live):
-                # tombstones for ids routed to a never-populated cell
-                # (delete-by-vector of absent ids): nothing to rewrite,
-                # the sidecar alone is drained by _finish_swap
-                continue
-            tomb = spark.read.parquet(
-                os.path.join(tomb_root, f"cluster={c}")
-            ).select("vec_id")
-            spark.read.parquet(live).join(
-                F.broadcast(tomb), "vec_id", "left_anti"
-            ).coalesce(target_files).write.mode("overwrite").parquet(
-                os.path.join(scratch, f"cluster={c}")
-            )
-        if cells:
-            # the per-cell distributed rewrites may have consumed the
-            # lease — re-extend (raises on lost exclusivity) before
-            # the destructive swap, same as compact_partitions
-            lk.refresh()
-            os.makedirs(scratch, exist_ok=True)
-            tmp = marker + ".tmp"
-            with open(tmp, "w", encoding="utf-8") as fh:
-                fh.write(" ".join(str(c) for c in cells) + "\n")
-            os.replace(tmp, marker)
-            _finish_swap(cells)
-    return cells
-
-
-def _apply_tombstones_snapshot(spark: SparkSession, path: str,
-                               target_files: int) -> list[int]:
-    """``apply_ivf_tombstones`` on a snapshot-layout index: stage the
-    anti-joined rewrite of every tombstoned cell, then commit ONE
-    version that replaces those postings cells AND drops their
-    tombstone entries — the rewrite and the sidecar drain are ATOMIC
-    here (the hive recipe has a crash window between swap and
-    sidecar-clear that its marker protocol papers over), and probing
+    delete: stage the anti-joined rewrite (coalesced to
+    ``target_files``) of every tombstoned cell, then commit ONE version
+    that replaces those postings cells AND drops their tombstone
+    entries — the rewrite and the sidecar drain are ATOMIC, and probing
     readers pinned on the previous version keep their exact files
-    until vacuum. A cell whose rewrite empties entirely is dropped
-    from the postings table rather than committed as a fileless dir."""
+    until vacuum. Untouched cells keep their exact dirs. A cell whose
+    rewrite empties entirely is dropped from the postings table rather
+    than committed as a fileless dir. Returns the rewritten cells,
+    sorted. Runs under the index's single-writer lease, so a live
+    IvfAppendSink epoch can never land between the stage-read and the
+    commit; a crash before the commit leaves index and tombstones
+    untouched (a delete is never lost by crashing compaction)."""
     import json as _json
 
     from ..snapshots import SnapshotStore
 
+    store = SnapshotStore.open(path, "apply_ivf_tombstones")
     with TableLock(path, owner="apply_ivf_tombstones") as lk:
-        store = SnapshotStore(path)
         store.recover()
         cells = sorted(int(c) for c in store.table_days("tombstones"))
         if not cells:
@@ -856,7 +635,7 @@ def ivf_index_topk(spark: SparkSession, path: str, query: list[float],
                    exclude_vec_id: int | None = None) -> DataFrame:
     """Search a persisted IVF index: rank the codebook driver-side
     (k x dim floats), then scan ONLY the n_probe nearest posting
-    partitions (PartitionFilters at the reader). Float postings score
+    partitions (pruned in the index manifest). Float postings score
     exact cosine (matches ``ivf_topk`` over the same centroids
     exactly); quantized postings score the rescaled integer dot
     (matches ``similarity.cosine_topk_int8``'s ranking at
@@ -1008,10 +787,8 @@ def _semantic_survivors(assigned: DataFrame, threshold: float,
     is the same "materialize the assignment before fan-out" step
     persist_ivf_index performs. semantic_dedup_from_index passes
     stage=False: its assignment IS that persisted layout already — a
-    cheap partition-pruned parquet scan whose re-read costs less than a
-    checkpoint write, and checkpointing would erase the
-    PartitionFilters pruning the per-cell sweep contract is proven
-    by (tests/test_kmeans.py)."""
+    cheap manifest-pruned parquet scan whose re-read costs less than a
+    checkpoint write."""
     if stage:
         assigned = assigned.localCheckpoint(eager=False)
     pairs = _semantic_candidate_pairs(assigned, cluster_cap)
@@ -1034,10 +811,10 @@ def semantic_dedup_from_index(spark: SparkSession, path: str,
     """SemDeDup over a PERSISTED IVF index (persist_ivf_index, float
     postings) — the 100 TB shape the in-memory variant's docstring
     promises: the k-means assignment already EXISTS as the
-    ``postings/cluster=N/`` directory layout, so the dedup never
-    recomputes it, and ``clusters`` restricts the run to a subset of
-    coarse cells as a pure PartitionFilters scan (the reader never
-    opens the other directories — proven in tests/test_kmeans.py).
+    per-cell postings partitions, so the dedup never recomputes it,
+    and ``clusters`` restricts the run to a subset of coarse cells as
+    a manifest-pruned scan (the reader never opens the other cells'
+    directories — proven in tests/test_kmeans.py).
     Because blocking is cluster-local, a per-cell run returns exactly
     the full run's rows for those cells, which is what makes
     cell-at-a-time (or changed-cells-only) dedup sweeps over a lake

@@ -41,9 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..commitlog import append_commit_line
 from ..registry import QuerySpec
-from ..snapshots import SnapshotStore
+from ..snapshots import SnapshotStore, stage_epoch_once
 from ..tablelock import TableLock
 
 # One quantization of the input, shared by every grain and mirrored in
@@ -122,11 +121,9 @@ def maintained_cascade_path(spark: SparkSession, sf_dir: str) -> str:
         import tempfile
 
         path = tempfile.mkdtemp(prefix="cascade_grains_")
-        # The driver-visible artifact uses the SNAPSHOT layout (round
-        # 10, snapshots.py): the time_windows legs then read pinned
-        # manifest-resolved files — the layout a concurrent-maintenance
-        # deployment would actually serve queries from.
-        persist_cascade(spark, sf_dir, path, layout="snapshot")
+        # the time_windows legs read pinned manifest-resolved files —
+        # the layout a concurrent-maintenance deployment serves from
+        persist_cascade(spark, sf_dir, path)
         _CASCADE_ARTIFACT_CACHE[sf_dir] = path
     return path
 
@@ -140,7 +137,7 @@ def maintained_cascade_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Row-identical to the in-memory cascade by construction —
     ``persist_cascade`` writes exactly ``cascade_grains``'s frames and
     decimal sums round-trip parquet bit-exactly — so the DuckDB oracle
-    is unchanged. Day-filtered readers prune to PartitionFilters scans
+    is unchanged. Day-filtered readers prune at the manifest
     (tests/test_cascade.py)."""
     path = maintained_cascade_path(spark, sf_dir)
     return (
@@ -152,20 +149,21 @@ def maintained_cascade_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- persisted continuous-aggregate maintenance (round 9) ----------------
 #
-# The operational flow behind cascade_rollup: each grain lives as a
-# parquet table partitioned by DAY, and a micro-batch append rewrites
-# ONLY the day partitions it touches — merge the batch's minute
-# partials into the touched minute partitions, then re-derive the same
-# days' hour and day partitions from the UPDATED minute/hour tables.
-# Day-partition locality holds at every grain because UTC date_trunc
-# windows never span a day boundary. Decimal sums make the incremental
-# result BIT-IDENTICAL to a full recompute (no float reassociation
-# drift across merge generations) — proven in tests/test_cascade.py,
-# along with untouched partitions keeping their exact files.
+# The operational flow behind cascade_rollup: the three grains live as
+# sub-tables of ONE snapshot table (snapshots.py) partitioned by DAY,
+# and a micro-batch append rewrites ONLY the day partitions it touches
+# — merge the batch's minute partials into the touched minute
+# partitions, then re-derive the same days' hour and day partitions
+# from the UPDATED minute/hour stage — and publishes them as one
+# version, atomic across all three grains. Day-partition locality
+# holds at every grain because UTC date_trunc windows never span a day
+# boundary. Decimal sums make the incremental result BIT-IDENTICAL to a
+# full recompute (no float reassociation drift across merge
+# generations) — proven in tests/test_cascade.py, along with untouched
+# partitions keeping their exact data dirs.
 
 # Partition column: day of window_start; NULL-timestamp buckets get an
-# explicit sentinel so they live in a normal readable partition rather
-# than Hive's default-partition spelling.
+# explicit sentinel so they live in a normal readable partition.
 _NULL_DAY = "__null__"
 
 
@@ -179,97 +177,73 @@ def _with_day(df: DataFrame) -> DataFrame:
     )
 
 
-def persist_cascade(spark: SparkSession, sf_dir: str, path: str,
-                    layout: str = "hive") -> None:
-    """Write the three grain tables as day-partitioned parquet — the
-    lake artifact cascade_append maintains.
-
-    ``layout="hive"`` is the classic ``<path>/<grain>/_d=<day>/``
-    table the partition-swap maintenance mutates in place.
-    ``layout="snapshot"`` initializes a ``SnapshotStore`` root instead
-    (manifest + version pointer): the SAME maintenance entry points
-    (``cascade_append``/``cascade_retract``/``CascadeMaintenanceSink``)
-    detect the layout and publish versions rather than swapping, which
-    buys reader snapshot isolation, atomic cross-grain commits and
-    time travel (see snapshots.py). One build, one choice, zero
-    divergent writer code paths."""
-    if layout == "snapshot":
-        if SnapshotStore.has_committed_content(path):
-            # fail BEFORE any mutation (round-10 review find: the
-            # create-after-staging reorder must not trade away the
-            # double-init guard — a re-build against a live table
-            # would overwrite root metadata and rmtree the shared
-            # scratch without the lease before create() raised). An
-            # EMPTY version-0 root (crash between create() and the
-            # init commit) has no committed content and is safe to
-            # re-init — create_or_resume below picks it up.
-            raise ValueError(
-                f"{path} is already a snapshot cascade table; "
-                "maintain it with cascade_append/cascade_retract"
-            )
-        edir = os.path.join(path, "_stage_tmp")
-        shutil.rmtree(edir, ignore_errors=True)
-        schemas: dict[str, str] = {}
-        for grain, df in cascade_grains(spark, sf_dir).items():
-            staged = _with_day(df)
-            schemas[grain] = staged.schema.json()
-            _write_staged_partitions(staged, os.path.join(edir, grain), True)
-        with open(os.path.join(edir, "_SCHEMAS.json"), "w",
-                  encoding="utf-8") as fh:
-            json.dump(schemas, fh)
-        # create AFTER the staging job succeeded (round-10 review
-        # find): a version pointer written first turns a failed build
-        # into a poisoned root — readers see an empty snapshot table,
-        # and a retry hits 'already a snapshot table'
-        # create_or_resume INSIDE the lease (ADVICE r11): two racing
-        # first-builders outside it could both resume the empty v0 and
-        # the lock would only serialize two init commits — the second
-        # silently replacing the first as v2.
-        with TableLock(path, owner="persist_cascade"):
-            store = SnapshotStore.create_or_resume(path)
-            store.commit_staged(edir, op="init")
-        return
-    if layout != "hive":
-        raise ValueError(f"unknown cascade layout {layout!r}")
-    for grain, df in cascade_grains(spark, sf_dir).items():
-        _with_day(df).write.mode("overwrite").partitionBy("_d").parquet(
-            f"{path}/{grain}"
+def persist_cascade(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """Write the three grain tables as one day-partitioned snapshot
+    table (snapshots.py) — the lake artifact ``cascade_append`` /
+    ``cascade_retract`` / ``CascadeMaintenanceSink`` maintain by
+    publishing versions: reader snapshot isolation, atomic cross-grain
+    commits and time travel."""
+    if SnapshotStore.has_committed_content(path):
+        # fail BEFORE any mutation (round-10 review find): a re-build
+        # against a live table would otherwise rmtree the shared
+        # scratch without the lease before create() raised. An EMPTY
+        # version-0 root (crash between create() and the init commit)
+        # has no committed content and is safe to re-init —
+        # create_or_resume below picks it up.
+        raise ValueError(
+            f"{path} is already a snapshot cascade table; "
+            "maintain it with cascade_append/cascade_retract"
         )
+    edir = os.path.join(path, "_stage_tmp")
+    shutil.rmtree(edir, ignore_errors=True)
+    schemas: dict[str, str] = {}
+    for grain, df in cascade_grains(spark, sf_dir).items():
+        staged = _with_day(df)
+        schemas[grain] = staged.schema.json()
+        _write_staged_partitions(staged, os.path.join(edir, grain))
+    with open(os.path.join(edir, "_SCHEMAS.json"), "w",
+              encoding="utf-8") as fh:
+        json.dump(schemas, fh)
+    # create AFTER the staging job succeeded (round-10 review find): a
+    # version pointer written first turns a failed build into a
+    # poisoned root — readers see an empty snapshot table, and a retry
+    # hits 'already a snapshot table'. create_or_resume INSIDE the
+    # lease (ADVICE r11): two racing first-builders outside it could
+    # both resume the empty v0 and the lock would only serialize two
+    # init commits — the second silently replacing the first as v2.
+    with TableLock(path, owner="persist_cascade"):
+        store = SnapshotStore.create_or_resume(path)
+        store.commit_staged(edir, op="init")
 
 
-def _write_staged_partitions(df: DataFrame, dest: str,
-                             snapshot: bool) -> None:
-    """One distributed write of a day-keyed frame. Hive layout
-    partitions by ``_d`` itself (dirnames carry the day; files drop the
-    column — the live-table shape). Snapshot layout partitions by a
+def _write_staged_partitions(df: DataFrame, dest: str) -> None:
+    """One distributed write of a day-keyed frame, partitioned by a
     DUPLICATE ``_dp`` so the files KEEP ``_d`` as a normal string
-    column: manifest reads then need no partition-dir inference (the
-    round-10 `_d`-typed-as-DATE trap can't re-enter) and per-day dirs
-    stay self-describing wherever the manifest points at them."""
-    if snapshot:
-        df.withColumn("_dp", F.col("_d")).write.mode("overwrite").partitionBy(
-            "_dp"
-        ).parquet(dest)
-    else:
-        df.write.mode("overwrite").partitionBy("_d").parquet(dest)
+    column: manifest reads need no partition-dir type inference and
+    per-day dirs stay self-describing wherever the manifest points at
+    them."""
+    df.withColumn("_dp", F.col("_d")).write.mode("overwrite").partitionBy(
+        "_dp"
+    ).parquet(dest)
 
 
 def read_grain(spark: SparkSession, path: str, grain: str) -> DataFrame:
-    if SnapshotStore.is_snapshot(path):
-        return SnapshotStore(path).read(spark, grain).drop("_d")
-    return spark.read.parquet(f"{path}/{grain}").drop("_d")
+    return SnapshotStore(path).read(spark, grain).drop("_d")
 
 
 def _stage_batch(spark: SparkSession, batch_df: DataFrame, edir: str,
-                 live_root: str, negate: bool = False) -> list[str]:
+                 store: SnapshotStore, negate: bool = False) -> list[str]:
     """Compute the complete POST-state of every day partition the
     batch touches, at all three grains, into ``edir``: minute merged
     from the LIVE minute table + the batch partials, hour re-derived
     from the STAGED minute, day from the staged hour. Returns the
     touched day keys, sorted. O(batch) + O(touched days), never
-    O(table): the live read is a PartitionFilters scan of the touched
-    directories only (verified against the plan), and the one eager
-    checkpoint is bounded by the batch's minute-group count.
+    O(table): the live read lists only the touched days' pinned dirs
+    (manifest pruning), and the one eager checkpoint is bounded by the
+    batch's minute-group count. The caller holds the lease and has
+    finished any crashed commit (``store.recover()``): staging against
+    the pre-pending state would silently drop the pending version's
+    rows for every day both commits touch.
 
     ``negate=True`` is the RETRACTION path (round-10 verdict item #2):
     the batch's partials enter the merge with negated count and sum —
@@ -280,16 +254,8 @@ def _stage_batch(spark: SparkSession, batch_df: DataFrame, edir: str,
     group driven NEGATIVE (or zeroed with a nonzero residual sum)
     means the caller retracted events that were never added — raised,
     never written. Days whose minute partition empties entirely are
-    recorded in ``<edir>/_DROPPED`` for ``_swap_staged`` to delete at
-    every grain."""
-    snapshot = SnapshotStore.is_snapshot(live_root)
-    store = SnapshotStore(live_root) if snapshot else None
-    if snapshot:
-        # Finish any crashed commit BEFORE the live read (all callers
-        # hold the table lease here): staging against the pre-pending
-        # state and then committing on top would silently drop the
-        # pending version's rows for every day both commits touch.
-        store.recover()
+    recorded in ``<edir>/_DROPPED``, which the commit drops from every
+    grain."""
     ev = batch_df.select("ts", "event_type", "value")
     sign = -1 if negate else 1
     batch_minute = _with_day(
@@ -306,40 +272,14 @@ def _stage_batch(spark: SparkSession, batch_df: DataFrame, edir: str,
     )
     if not touched:
         return touched
-    live_minute = os.path.join(live_root, "minute")
+    # Manifest-pruned live read: only the touched days' pinned dirs are
+    # even listed, `_d` arrives as a real string column from the files;
+    # the existence check is pure manifest metadata — zero jobs.
     merged = batch_minute
-    if snapshot:
-        # Manifest-pruned live read: only the touched days' pinned
-        # dirs are even listed, `_d` arrives as a real string column
-        # from the files (no partition-dir inference at all); the
-        # existence check is pure manifest metadata — zero jobs.
-        live_days = set(store.table_days("minute")) & set(touched)
-        if live_days:
-            merged = store.read(
-                spark, "minute", days=sorted(live_days)
-            ).unionByName(batch_minute)
-        has_live = True  # handled above; skip the hive branch
-    else:
-        # content check, not isdir (round-9 review fix):
-        # expire_partitions can legitimately empty the table, leaving
-        # a partition-less directory that spark.read.parquet cannot
-        # infer a schema from — which would wedge every replay of the
-        # next epoch.
-        has_live = os.path.isdir(live_minute) and any(
-            x.startswith("_d=") for x in os.listdir(live_minute)
-        )
-    if has_live and not snapshot:
-        # Pin the partition column back to STRING: partition-type
-        # inference reads `_d` as DATE whenever no sentinel partition
-        # exists, which silently types the merged `_d` as DATE — the
-        # survivors/touched set comparison below then never matches
-        # (date vs str) and a retraction would mark EVERY touched day
-        # dropped (round-10 find, caught by the retract tests).
-        merged = (
-            spark.read.parquet(live_minute)
-            .withColumn("_d", F.col("_d").cast("string"))
-            .where(F.col("_d").isin(touched))
-            .unionByName(batch_minute)
+    live_days = sorted(set(store.table_days("minute")) & set(touched))
+    if live_days:
+        merged = store.read(spark, "minute", days=live_days).unionByName(
+            batch_minute
         )
     merged = merged.groupBy("window_start", "event_type", "_d").agg(
         F.sum("n_events").alias("n_events"), F.sum("_sv").alias("_sv")
@@ -375,106 +315,56 @@ def _stage_batch(spark: SparkSession, batch_df: DataFrame, edir: str,
             # derivation cannot even infer a schema from)
             return touched
     schemas = {"minute": merged.schema.json()}
-    _write_staged_partitions(merged, os.path.join(edir, "minute"), snapshot)
+    _write_staged_partitions(merged, os.path.join(edir, "minute"))
     for src, dst, trunc in (("minute", "hour", "hour"), ("hour", "day", "day")):
         upd = (
             spark.read.parquet(os.path.join(edir, src))
             .groupBy(
                 F.date_trunc(trunc, "window_start").alias("window_start"),
                 "event_type",
-                F.col("_d").cast("string").alias("_d"),
+                "_d",
             )
             .agg(F.sum("n_events").alias("n_events"),
                  F.sum("_sv").alias("_sv"))
         )
         schemas[dst] = upd.schema.json()
-        _write_staged_partitions(upd, os.path.join(edir, dst), snapshot)
-    if snapshot:
-        # typed-empty reads of a drained table come from these
-        with open(os.path.join(edir, "_SCHEMAS.json"), "w",
-                  encoding="utf-8") as fh:
-            json.dump(schemas, fh)
+        _write_staged_partitions(upd, os.path.join(edir, dst))
+    # typed-empty reads of a drained table come from these
+    with open(os.path.join(edir, "_SCHEMAS.json"), "w",
+              encoding="utf-8") as fh:
+        json.dump(schemas, fh)
     return touched
 
 
-def _swap_staged(edir: str, live_root: str,
-                 grains: tuple[str, ...] = ("minute", "hour", "day")) -> None:
-    """Move each staged ``_d=`` directory over its live counterpart.
-    Idempotent: re-running after a crash mid-swap finishes the
-    partitions still present in the scratch (already-swapped ones are
-    gone from it), and the staged content is the correct post-state
-    regardless of which swaps already happened.
-
-    A ``_DROPPED`` file in the scratch (written by a retraction whose
-    batch emptied whole days) lists day keys whose live partitions are
-    DELETED at every grain — rmtree is idempotent across replays, and
-    the file lives in the scratch, so it vanishes with the scratch
-    only after the swap completed."""
-    dropped_file = os.path.join(edir, "_DROPPED")
-    if os.path.exists(dropped_file):
-        with open(dropped_file, encoding="utf-8") as fh:
-            for day in json.load(fh):
-                for grain in grains:
-                    shutil.rmtree(
-                        os.path.join(live_root, grain, f"_d={day}"),
-                        ignore_errors=True,
-                    )
-    for grain in grains:
-        gdir = os.path.join(edir, grain)
-        if not os.path.isdir(gdir):
-            continue
-        live = os.path.join(live_root, grain)
-        os.makedirs(live, exist_ok=True)
-        for part in os.listdir(gdir):
-            if not part.startswith("_d="):
-                continue
-            target = os.path.join(live, part)
-            shutil.rmtree(target, ignore_errors=True)
-            os.rename(os.path.join(gdir, part), target)
-
-
-def _publish_staged(edir: str, live_root: str, op: str,
-                    touched: list[str],
-                    epoch: int | None = None,
-                    direction: str | None = None) -> None:
-    """Make a staged scratch live, by whichever protocol the table
-    uses: hive layout swaps partition dirs in place (rmtree+rename,
-    idempotent replay); snapshot layout publishes a new VERSION —
-    atomic across all three grains, invisible to pinned readers, and
-    (for sink epochs) carrying the epoch record in the same atomic
-    manifest flip. An empty batch on a snapshot table with an epoch
-    still commits a metadata-only version so the epoch is recorded."""
-    if SnapshotStore.is_snapshot(live_root):
-        if touched or epoch is not None:
-            SnapshotStore(live_root).commit_staged(
-                edir if touched else None, op=op,
-                epoch=epoch, direction=direction,
-            )
-        return
-    _swap_staged(edir, live_root)
+def _merge_once(spark: SparkSession, path: str, events: DataFrame,
+                negate: bool) -> list[str]:
+    """The one-shot merge behind ``cascade_append``/``cascade_retract``:
+    stage the touched days' post-state under the table lease, publish
+    it as one version. The stage READS the live minute table, so even
+    the stage must exclude concurrent merges (two unserialized merges
+    would each stage pre-state missing the other's rows)."""
+    op = "retract" if negate else "append"
+    store = SnapshotStore.open(path, f"cascade_{op}")
+    with TableLock(path, owner=f"cascade_{op}") as lk:
+        store.recover()
+        edir = os.path.join(path, "_stage_tmp")
+        shutil.rmtree(edir, ignore_errors=True)
+        touched = _stage_batch(spark, events, edir, store, negate=negate)
+        lk.refresh()  # the distributed stage may have consumed the lease
+        store.commit_if_staged(edir, op=op)
+        shutil.rmtree(edir, ignore_errors=True)
+    return touched
 
 
 def cascade_append(spark: SparkSession, path: str,
                    new_events: DataFrame) -> list[str]:
     """Merge a micro-batch of events into the persisted cascade —
     the one-shot batch-backfill flow (for exactly-once streaming
-    maintenance use CascadeMaintenanceSink, which adds the epoch
-    commit log on the same stage/swap). Stages the touched partitions'
-    post-state into a scratch dir first, then swaps — a crash before
-    the swap leaves the live tables untouched; untouched partitions
-    keep their exact files. Returns the touched day keys, sorted.
-    Holds the table's single-writer lease throughout: the stage READS
-    the live minute table, so even the stage must exclude concurrent
-    merges (two unserialized merges would each stage pre-state missing
-    the other's rows and the second swap would erase the first)."""
-    with TableLock(path, owner="cascade_append") as lk:
-        edir = os.path.join(path, "_stage_tmp")
-        shutil.rmtree(edir, ignore_errors=True)
-        touched = _stage_batch(spark, new_events, edir, path)
-        lk.refresh()  # the distributed stage may have consumed the lease
-        _publish_staged(edir, path, op="append", touched=touched)
-        shutil.rmtree(edir, ignore_errors=True)
-    return touched
+    maintenance use CascadeMaintenanceSink, which records the epoch in
+    the same commit). A crash before the commit leaves the live table
+    untouched; untouched partitions keep their exact data dirs.
+    Returns the touched day keys, sorted."""
+    return _merge_once(spark, path, new_events, negate=False)
 
 
 def cascade_retract(spark: SparkSession, path: str,
@@ -484,166 +374,72 @@ def cascade_retract(spark: SparkSession, path: str,
     corrections, GDPR erasure — by merging their NEGATED minute
     partials into the touched day partitions and re-deriving those
     days' hour/day grains, the exact inverse of ``cascade_append`` on
-    the same stage/swap machinery. Decimal arithmetic makes the result
-    bit-identical to a full recompute over the surviving events
+    the same stage/commit machinery. Decimal arithmetic makes the
+    result bit-identical to a full recompute over the surviving events
     (tests/test_cascade.py proves equality after interleaved
     append+retract); fully-cancelled groups vanish and fully-emptied
-    day partitions are dropped at every grain, so the artifact never
-    accretes ghost rows. Raises (staging nothing) if the batch
-    retracts events that were never added. O(batch + touched days),
-    never O(table); crash-safe exactly like append (stage under
-    scratch, swap, idempotent replay) and serialized by the table's
-    single-writer lease."""
-    with TableLock(path, owner="cascade_retract") as lk:
-        edir = os.path.join(path, "_stage_tmp")
-        shutil.rmtree(edir, ignore_errors=True)
-        touched = _stage_batch(spark, events, edir, path, negate=True)
-        lk.refresh()  # the distributed stage may have consumed the lease
-        _publish_staged(edir, path, op="retract", touched=touched)
-        shutil.rmtree(edir, ignore_errors=True)
-    return touched
+    days are dropped at every grain in the same version, so the
+    artifact never accretes ghost rows. Raises (staging nothing) if
+    the batch retracts events that were never added. O(batch + touched
+    days), never O(table)."""
+    return _merge_once(spark, path, events, negate=True)
 
 
 class CascadeMaintenanceSink:
     """foreachBatch target: EXACTLY-ONCE continuous-aggregate
-    maintenance over the persisted grain tables, on plain parquet.
+    maintenance over the persisted grain tables.
 
     cascade_append's merge is not idempotent (replaying a micro-batch
     double-counts), and Structured Streaming replays the last epoch
-    after any restart — so the sink uses a stage/swap/commit protocol
-    (the merge-sink analogue of QueueFileSink's truncate-to-offset):
+    after any restart — so each epoch runs under the table lease as:
 
-    1. STAGE: compute the complete POST-state of every touched day
-       partition at all three grains into ``<path>/_epochs/epoch=N/``
-       — minute merged from the LIVE minute table + the batch, hour
-       re-derived from the STAGED minute, day from the staged hour —
-       then publish a ``_STAGED`` marker (temp+rename). The live
-       tables are never read after the marker exists, and never
-       written before it does.
-    2. SWAP: move each staged ``_d=`` directory over its live
-       counterpart (rmtree+rename per partition). Idempotent: a
-       replay after a crash mid-swap finishes the remaining staged
-       partitions (already-swapped ones are simply gone from scratch).
-    3. COMMIT: append the epoch id to ``<path>/_commits`` (fsync),
-       then clear the scratch. A committed epoch is skipped on
-       replay; a torn commit line parses as absent and the epoch
-       re-swaps idempotently.
+    1. SKIP if the manifest's ``epoch_high`` for this direction already
+       covers the epoch (after finishing any crashed commit, which may
+       BE this epoch).
+    2. STAGE the complete post-state of every touched day partition at
+       all three grains into ``<path>/_epochs/epoch=N/`` and publish a
+       ``_STAGED`` marker (``snapshots.stage_epoch_once``).
+    3. COMMIT the stage as one version that carries the epoch record in
+       the same atomic pointer flip.
 
-    Crash-window audit: before the marker -> live untouched, replay
-    recomputes the stage from live; mid-swap -> marker present, replay
-    redoes the swap from the surviving staged partitions (their
-    content is the correct post-state regardless of which swaps
-    already happened); between commit and scratch-clear -> epoch
-    skipped, stale scratch cleared at the next epoch's entry (the
-    round-8 queue-sink lesson)."""
-
-    GRAINS = ("minute", "hour", "day")
+    Crash-window audit: before the marker -> replay re-stages from the
+    untouched live table; marker present -> replay commits the staged
+    post-state; data renamed in but manifest or pointer missing ->
+    ``recover()`` finishes the commit and the epoch is skipped. An
+    empty epoch still commits a metadata-only version so it is
+    recorded."""
 
     def __init__(self, path: str, negate: bool = False):
         # negate=True is the exactly-once RETRACTION sink: a stream of
         # correction/erasure events subtracts from the grain tables
-        # through the identical stage/marker/swap/commit protocol (the
-        # negation lives entirely in _stage_batch), so every crash
-        # window proven for the append sink holds for deletes too.
+        # through the identical protocol (the negation lives entirely
+        # in _stage_batch). An append stream and a retraction stream
+        # on the same table are different streaming queries with
+        # independent epoch counters: each keeps its own epoch_high
+        # direction and its own scratch.
         self.path = path
         self.negate = negate
-        # Separate commit log + scratch per direction: an append stream
-        # and a retraction stream on the same table are different
-        # streaming queries with independent epoch counters — sharing
-        # one log would let append epoch N silently mask retract epoch
-        # N. The table lease already serializes their epochs.
+        self.direction = "retract" if negate else "append"
         suffix = "_retract" if negate else ""
-        self.commit_path = os.path.join(path, "_commits" + suffix)
         self.epoch_root = os.path.join(path, "_epochs" + suffix)
 
-    def _commits(self) -> set[int]:
-        done: set[int] = set()
-        if not os.path.exists(self.commit_path):
-            return done
-        with open(self.commit_path, encoding="utf-8") as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                try:
-                    done.add(int(line))
-                except ValueError:
-                    continue  # torn write: treat as uncommitted
-        return done
-
-    def _stage(self, spark: SparkSession, batch_df: DataFrame,
-               edir: str) -> None:
-        _stage_batch(spark, batch_df, edir, self.path, negate=self.negate)
-
-    def _swap(self, edir: str) -> None:
-        _swap_staged(edir, self.path, self.GRAINS)
-
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        # Per-epoch single-writer lease (round-10 verdict item #1):
-        # excludes compact_partitions/expire_partitions over the grain
-        # tables (callers pass lock_root=<cascade path>) and any
-        # concurrent batch cascade_append on the same table.
+        epoch = int(epoch_id)
+        store = SnapshotStore.open(self.path, "CascadeMaintenanceSink")
         with TableLock(self.path, owner="CascadeMaintenanceSink") as lk:
-            self._epoch_locked(batch_df, int(epoch_id), lk)
-
-    def _epoch_locked(self, batch_df: DataFrame, epoch: int,
-                      lk: "TableLock | None" = None) -> None:
-        direction = "retract" if self.negate else "append"
-        store = (
-            SnapshotStore(self.path)
-            if SnapshotStore.is_snapshot(self.path)
-            else None
-        )
-        if store is not None:
-            # The pending commit (if any) may BE this epoch: finish it
-            # first so the committed check below can catch it. Epoch
-            # records ride the manifest (epoch_high per direction) —
-            # committed exactly when the data became visible, in one
-            # atomic pointer flip; no separate commit-log ordering.
             store.recover()
-            if store.epoch_replay_check(direction, epoch):
+            if store.epoch_replay_check(self.direction, epoch):
                 return
-        elif epoch in self._commits():
-            return
-        os.makedirs(self.epoch_root, exist_ok=True)
-        edir = os.path.join(self.epoch_root, f"epoch={epoch}")
-        for d in os.listdir(self.epoch_root):  # stale crashed attempts
-            if d != f"epoch={epoch}":
-                shutil.rmtree(os.path.join(self.epoch_root, d),
-                              ignore_errors=True)
-        marker = os.path.join(edir, "_STAGED")
-        if not os.path.exists(marker):
-            shutil.rmtree(edir, ignore_errors=True)
-            self._stage(batch_df.sparkSession, batch_df, edir)
-            os.makedirs(edir, exist_ok=True)
-            tmp = marker + ".tmp"
-            with open(tmp, "w", encoding="utf-8") as fh:
-                fh.write("staged\n")
-            os.replace(tmp, marker)
-        if lk is not None:
+
+            def stage(edir: str) -> None:
+                _stage_batch(batch_df.sparkSession, batch_df, edir, store,
+                             negate=self.negate)
+
+            edir, _ = stage_epoch_once(self.epoch_root, epoch, stage)
             lk.refresh()  # the distributed stage may have consumed the lease
-        if store is not None:
-            # A retraction that empties EVERY touched day stages only
-            # the _DROPPED list — that file IS content (round-10
-            # review find: committing metadata-only here would record
-            # the epoch while silently losing the day drops forever).
-            staged = any(
-                os.path.isdir(os.path.join(edir, g)) for g in self.GRAINS
-            ) or os.path.exists(os.path.join(edir, "_DROPPED"))
-            store.commit_staged(edir if staged else None, op=direction,
-                                epoch=epoch, direction=direction)
+            store.commit_if_staged(edir, op=self.direction, epoch=epoch,
+                                   direction=self.direction)
             shutil.rmtree(edir, ignore_errors=True)  # metadata-only case
-            return
-        self._swap(edir)
-        # torn-previous-line self-healing append (see commitlog.py):
-        # a bare append after a torn commit would concatenate epochs
-        # ('7' + '8\n' -> '78\n') and later silently SKIP real epoch 78.
-        # A torn line that parses as a bare int is safe to accept as
-        # committed: epochs are monotone, the commit is written only
-        # after the swap completed, and any torn prefix of epoch N
-        # parses as some already-committed earlier epoch.
-        append_commit_line(self.commit_path, str(epoch))
-        shutil.rmtree(edir, ignore_errors=True)
 
 
 def start_cascade_maintenance(events: DataFrame, path: str,

@@ -2,15 +2,11 @@
 manifest/version-pointer trick (the published core of Iceberg/Delta:
 commits write NEW immutable files and atomically flip a pointer; see
 the Iceberg spec's snapshot/manifest model and the Delta Lake VLDB'20
-paper) that closes the one contract the single-writer lease
-(``tablelock.py``) deliberately left open: READER snapshot isolation.
-
-Why the hive layout can't give it: the rmtree+rename partition swap
-used by the cascade/IVF/ledger maintenance is atomic per PARTITION,
-not per table — a reader whose scan started before a swap can hit a
-vanished file mid-scan, and there is no moment at which a multi-grain
-table (minute/hour/day) is consistent ACROSS grains during a swap.
-Here, a commit never deletes anything a reader can see:
+paper). It is the ONE layout of every maintained artifact (cascade
+grains, near-dup ledger, IVF index): the single-writer lease
+(``tablelock.py``) serializes mutators, and this layer gives readers
+snapshot isolation on top. A commit never deletes anything a reader
+can see:
 
     <root>/_VERSION                   current version {"version": N}
                                       (os.replace flip = the commit point)
@@ -28,27 +24,31 @@ shape, whose stages compute complete post-states) and ``add`` (the
 staged dir is APPENDED to the partition's list — the IVF posting
 shape, where an epoch contributes new rows and must not pay a
 whole-cell rewrite). Readers resolve the pointer ONCE, then scan a pinned list of
-immutable directories: no swap can yank files out from under them,
+immutable directories: no commit can yank files out from under them,
 any historical version is readable until vacuumed (time travel), and
 a multi-table commit (all three cascade grains, or a retraction that
-drops a day at every grain) is ATOMIC — properties the hive layout
-cannot express. Partition pruning moves where Iceberg put it: the
-manifest (``read(days=...)`` lists only the requested days'
+drops a day at every grain) is ATOMIC. Partition pruning happens in
+the manifest (``read(days=...)`` lists only the requested days'
 directories — zero directory listing, zero footer reads for skipped
 partitions).
 
-Write protocol (caller holds the table's single-writer lease, the
-same ``TableLock`` every hive-layout writer takes):
+Write protocol (caller holds the table's single-writer lease):
 
     1. stage the touched partitions' complete post-state under a
        scratch dir: ``<edir>/<table>/_dp=<day>/*.parquet`` (files keep
        all data columns; the ``_dp=`` dirname is only a carrier), plus
        ``_SCHEMAS.json`` (Spark schema per staged table — typed empty
-       reads), optional ``_DROPPED`` (days to remove from EVERY table).
+       reads), optional ``_DROPPED`` (keys to remove: a list drops them
+       from EVERY table, a ``{table: [keys]}`` dict per table).
     2. ``commit_staged``: write ``_COMMIT_META`` into the scratch,
        ``os.rename(edir, data/vN)`` — one atomic publish of all data —
        then build manifest vN from manifest v(N-1) + the renamed dir,
        write it (temp+rename), and flip ``_VERSION`` (os.replace).
+
+Every maintenance entry point first opens its root with
+``SnapshotStore.open``, which raises ``NotASnapshotRootError`` for a
+path that is not a snapshot table — a mistyped or unbuilt path fails
+loudly instead of growing a new table tree.
 
 Every crash window re-enters through ``recover()``: a data dir
 without its manifest rebuilds it (the build is a pure function of the
@@ -57,8 +57,8 @@ travel inside it), a manifest without the pointer flip gets flipped.
 Exactly-once streaming epochs ride the manifest itself: ``epoch_high``
 (per direction) is carried forward and bumped by each commit, so "is
 this epoch committed" is answered by the SAME atomic write that
-published the epoch's data — no ordering hazard between a data swap
-and a separate commit-log append (epoch ids are monotone per
+published the epoch's data — no ordering hazard between publishing
+the data and recording the epoch (epoch ids are monotone per
 direction under Structured Streaming's replay contract, which replays
 only the last epoch).
 
@@ -109,6 +109,11 @@ class SnapshotVacuumedError(SnapshotError):
     """The requested historical version's manifest was vacuumed."""
 
 
+class NotASnapshotRootError(ValueError):
+    """A maintenance entry point was handed a path that holds no
+    snapshot table (see ``SnapshotStore.open``)."""
+
+
 def _fsync_dir(path: str) -> None:
     """fsync a DIRECTORY so a just-renamed/created entry survives power
     loss — file fsync alone does not make the rename durable (the
@@ -132,6 +137,34 @@ def _atomic_write(path: str, payload: str) -> None:
     LOCAL-ONLY scratch/commit-meta files that ride inside data dirs;
     adapter-routed metadata goes through self._store directly."""
     LOCAL_STORE.put_atomic(path, payload)
+
+
+def stage_epoch_once(epoch_root: str, epoch: int, stage) -> tuple[str, str]:
+    """The streaming sinks' stage step: ``stage(edir)`` computes epoch
+    ``epoch``'s post-state into ``<epoch_root>/epoch=N`` ONCE, then a
+    ``_STAGED`` marker (temp+rename) records its returned text. A
+    replay after a crash between marker and commit reuses the staged
+    scratch instead of re-staging; stale scratch of any OTHER epoch (a
+    crashed attempt) is cleared first. Caller holds the lease and has
+    already checked the epoch is uncommitted. Returns (edir, marker
+    text)."""
+    os.makedirs(epoch_root, exist_ok=True)
+    name = f"epoch={epoch}"
+    for d in os.listdir(epoch_root):
+        if d != name:
+            shutil.rmtree(os.path.join(epoch_root, d), ignore_errors=True)
+    edir = os.path.join(epoch_root, name)
+    marker = os.path.join(edir, "_STAGED")
+    if not os.path.exists(marker):
+        shutil.rmtree(edir, ignore_errors=True)
+        text = stage(edir) or ""
+        os.makedirs(edir, exist_ok=True)
+        tmp = marker + ".tmp"
+        with open(tmp, "w", encoding="utf-8") as fh:
+            fh.write(text + "\n")
+        os.replace(tmp, marker)
+    with open(marker, encoding="utf-8") as fh:
+        return edir, fh.read().strip()
 
 
 class SnapshotStore:
@@ -162,6 +195,22 @@ class SnapshotStore:
         return store.read(
             os.path.join(root, SnapshotStore.VERSION_FILE)
         ) is not None
+
+    @classmethod
+    def open(cls, root: str, op: str) -> "SnapshotStore":
+        """The root check every maintenance entry point makes BEFORE it
+        takes the lease or writes anything: ``root`` must already be a
+        snapshot table — built by ``persist_cascade`` /
+        ``persist_near_dup_ledger`` / ``persist_ivf_index``, or born
+        empty with ``SnapshotStore.create``."""
+        if not cls.is_snapshot(root):
+            raise NotASnapshotRootError(
+                f"{op}: {root} is not a snapshot table root (no "
+                f"{cls.VERSION_FILE}); build it with persist_cascade / "
+                "persist_near_dup_ledger / persist_ivf_index, or start "
+                "an empty one with SnapshotStore.create"
+            )
+        return cls(root)
 
     @classmethod
     def create(cls, root: str, adapter=None) -> "SnapshotStore":
@@ -461,6 +510,30 @@ class SnapshotStore:
         self._finish(n)
         return n
 
+    def commit_if_staged(self, edir: str, op: str,
+                         epoch: int | None = None,
+                         direction: str | None = None,
+                         **kw) -> int | None:
+        """``commit_staged`` for a maintenance stage that may have
+        staged nothing. Content is any table dir or a ``_DROPPED``
+        list — a retraction that empties every touched partition
+        stages ONLY the drop list, and committing that metadata-only
+        would record the epoch while losing the drops. A streaming
+        epoch with nothing staged still commits a metadata-only
+        version so the epoch is recorded (else a restart replays it
+        forever); a one-shot call with nothing staged commits nothing
+        and returns None."""
+        staged = os.path.isdir(edir) and any(
+            name == _DROPPED
+            or (not name.startswith("_")
+                and os.path.isdir(os.path.join(edir, name)))
+            for name in os.listdir(edir)
+        )
+        if not staged and epoch is None:
+            return None
+        return self.commit_staged(edir if staged else None, op=op,
+                                  epoch=epoch, direction=direction, **kw)
+
     # -- read --------------------------------------------------------------
     def read(self, spark, table: str, version: int | None = None,
              days: "list[str] | None" = None):
@@ -580,8 +653,7 @@ class SnapshotStore:
         """Rewrite every (table, day) partition whose current data dir
         holds more than ``max_files`` parquet files into
         ``target_files`` files, as ONE new version. Readers of any
-        pinned version are untouched (old dirs live until vacuum) —
-        the hive-layout epoch-fence dance is unnecessary here because
+        pinned version are untouched (old dirs live until vacuum):
         compaction never deletes what it read.
 
         ``cluster_by=(xcol, ycol)`` Z-orders each rewritten partition

@@ -24,8 +24,8 @@ Scope: METADATA only. Bulk table data (parquet files/dirs) is written
 by Spark and published by the manifest — on an object store the staged
 objects are simply written under their final ``data/vN/`` keys and the
 manifest commit makes them visible, so no data rename is needed
-either; the local layout keeps the scratch-dir rename as an
-optimization.
+either; on a local filesystem the commit renames the staged scratch
+dir into place instead.
 """
 
 from __future__ import annotations

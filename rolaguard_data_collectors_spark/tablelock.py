@@ -1,17 +1,19 @@
 """Single-writer lease for a maintained table root — the concurrency
-contract shared by the exactly-once append sinks (IvfAppendSink,
-CascadeMaintenanceSink, the one-shot ``ivf_index_append`` /
-``cascade_append``) and the lake maintenance ops (``compact_partitions``,
-``expire_partitions``).
+contract shared by every mutator of a snapshot table (snapshots.py):
+the exactly-once sinks (CascadeMaintenanceSink, NearDupLedgerSink,
+IvfAppendSink/IvfDeleteSink), the one-shot maintenance calls
+(``cascade_append``, ``ledger_append``, ``ivf_index_append``, ...) and
+the store's own maintenance (``SnapshotStore.compact`` / ``expire`` /
+``vacuum`` / ``rollback``).
 
-Why it exists (round-10 verdict item #1): every one of those writers is
-crash-safe IN ISOLATION, but compaction's stage-read -> rmtree+rename
-swap assumes nothing else touches the live partition in between — a
-sink epoch committed into that window would be silently deleted by the
-swap while the sink's commit log says it is durable. The fix is the
-standard one: all mutating operations on a table root serialize through
-one lease file, ``<root>/_LOCK`` (the underscore prefix keeps Spark's
-partition discovery from reading it as data).
+Why it exists (round-10 verdict item #1): every one of those writers
+stages a post-state from what it READ of the live table and then
+commits it — two unserialized writers would each stage a pre-state
+missing the other's rows, and the second commit would silently erase
+the first. The fix is the standard one: all mutating operations on a
+table root serialize through one lease file, ``<root>/_LOCK`` (the
+underscore prefix keeps Spark's partition discovery from reading it as
+data).
 
 Semantics:
 
@@ -29,21 +31,10 @@ Semantics:
   ``lease_seconds`` to the operation, generously.
 - Locks do NOT nest/re-enter: one ``TableLock`` instance, one acquire.
 
-Lock-root discipline: the lock must live at the root BOTH parties
-agree on. The sinks lock the table path they maintain; maintenance ops
-called on a SUBDIRECTORY of a maintained table (e.g. compaction over
-``<index>/postings``) must pass ``lock_root=<index>`` so they contend
-with the sink rather than locking a root nobody else looks at.
-
-Scope note — WRITERS only. A concurrent READER whose scan started
-before a swap can still hit a vanished file mid-scan (rmtree+rename is
-atomic per partition, not per table-snapshot); it fails cleanly and
-retries — it can never read a half-written partition, because staged
-content is complete before any live directory is touched. Reader
-snapshot isolation proper needs a manifest/version-pointer layout
-(Iceberg/Delta's core trick) where swaps write new files and flip a
-pointer; the lease keeps that evolution open (a manifest writer would
-take the same lock).
+Scope note — WRITERS only. Readers never lock: they resolve the
+snapshot table's version pointer once and scan a pinned list of
+immutable directories, so no commit can pull files out from under
+them.
 """
 
 from __future__ import annotations
@@ -192,7 +183,7 @@ class TableLock:
     def refresh(self) -> None:
         """Extend the lease (holder only). Phase boundaries of long
         operations call this so a slow distributed stage can't outlive
-        its lease mid-swap. If the lease already expired and another
+        its lease mid-commit. If the lease already expired and another
         writer took over, refresh RAISES instead of clobbering the new
         holder's lock — a compare-and-swap on the exact payload we last
         wrote (true CAS on conditional-put stores; on the local

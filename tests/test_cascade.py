@@ -45,6 +45,41 @@ def test_cascade_single_scan(spark):
     assert plan.count("FileScan parquet") <= 1, plan
 
 
+def _grain_snap(spark, path):
+    from rolaguard_data_collectors_spark.operators.cascade import read_grain
+
+    return {
+        g: {
+            (r["window_start"], r["event_type"]): (r["n_events"], r["_sv"])
+            for r in read_grain(spark, path, g).collect()
+        }
+        for g in ("minute", "hour", "day")
+    }
+
+
+def _assert_equals_recompute(spark, path, sf_dir):
+    """Every grain of the maintained table equals ``cascade_grains``
+    recomputed from the events under ``sf_dir``."""
+    from rolaguard_data_collectors_spark.operators.cascade import (
+        cascade_grains,
+    )
+
+    got = _grain_snap(spark, path)
+    for grain, df in cascade_grains(spark, sf_dir).items():
+        want = {
+            (r["window_start"], r["event_type"]): (r["n_events"], r["_sv"])
+            for r in df.collect()
+        }
+        assert got[grain] == want, grain
+
+
+def _events_dir(tmp_path, name, df):
+    d = str(tmp_path / name)
+    os.makedirs(d)
+    df.toPandas().to_parquet(os.path.join(d, "events.parquet"), index=False)
+    return d
+
+
 def test_cascade_append_equals_full_recompute(spark, sf_dir, tmp_path):
     """Round 9: the persisted continuous-aggregate maintenance flow —
     build the day-partitioned grain tables from a history slice, merge
@@ -52,17 +87,15 @@ def test_cascade_append_equals_full_recompute(spark, sf_dir, tmp_path):
     (a) every grain table now equals a FULL recompute over
     history+batch, bit-identical (the decimal sums make merge
     generations exact), and (b) untouched day partitions kept their
-    exact files (the rewrite is O(touched days), never O(table))."""
-    import pandas as pd
+    exact data dirs (the rewrite is O(touched days), never O(table))."""
     from pyspark.sql import functions as F
 
     from rolaguard_data_collectors_spark.catalog import load_table
     from rolaguard_data_collectors_spark.operators.cascade import (
         cascade_append,
-        cascade_grains,
         persist_cascade,
-        read_grain,
     )
+    from rolaguard_data_collectors_spark.snapshots import SnapshotStore
 
     ev = load_table(spark, sf_dir, "events")
     # batch = a subset of events from exactly two calendar days
@@ -76,16 +109,15 @@ def test_cascade_append_equals_full_recompute(spark, sf_dir, tmp_path):
         .collect()
     ]
     is_batch = F.to_date("ts").isin(days) & (F.col("event_id") % 3 == 0)
-    hist_dir = str(tmp_path / "hist")
-    os.makedirs(hist_dir)
-    ev.where(~F.coalesce(is_batch, F.lit(False))).toPandas().to_parquet(
-        os.path.join(hist_dir, "events.parquet"), index=False
+    hist_dir = _events_dir(
+        tmp_path, "hist", ev.where(~F.coalesce(is_batch, F.lit(False)))
     )
     batch = ev.where(is_batch)
     assert batch.count() > 0
 
     path = str(tmp_path / "casc")
     persist_cascade(spark, hist_dir, path)
+    store = SnapshotStore(path)
     untouched_day = (
         ev.select(F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("d"))
         .where(F.col("d").isNotNull() & ~F.col("d").isin([str(d) for d in days]))
@@ -94,211 +126,121 @@ def test_cascade_append_equals_full_recompute(spark, sf_dir, tmp_path):
         .limit(1)
         .collect()[0]["d"]
     )
-    before_files = sorted(os.listdir(f"{path}/minute/_d={untouched_day}"))
+    before_dirs = store.manifest()["tables"]["minute"][untouched_day]
 
     touched = cascade_append(spark, path, batch)
     assert touched == [str(d) for d in days]
-    assert sorted(os.listdir(f"{path}/minute/_d={untouched_day}")) == before_files
-
-    full = cascade_grains(spark, sf_dir)
-    for grain in ("minute", "hour", "day"):
-        got = {
-            (r["window_start"], r["event_type"]): (r["n_events"], r["_sv"])
-            for r in read_grain(spark, path, grain).collect()
-        }
-        want = {
-            (r["window_start"], r["event_type"]): (r["n_events"], r["_sv"])
-            for r in full[grain].collect()
-        }
-        assert got == want, grain
+    assert store.manifest()["tables"]["minute"][untouched_day] == before_dirs
+    _assert_equals_recompute(spark, path, sf_dir)
 
 
-def test_cascade_sink_exactly_once_and_crash_replay(spark, sf_dir, tmp_path):
-    """Round 9: the stage/swap/commit protocol that makes the
+def test_cascade_sink_exactly_once_and_crash_replay(spark, sf_dir, tmp_path,
+                                                    monkeypatch):
+    """Round 9: the stage/commit protocol that makes the
     non-idempotent grain merge exactly-once under foreachBatch replay.
     (a) replaying a COMMITTED epoch is a no-op (no double merge);
-    (b) a crash between stage and swap replays by swapping the staged
-    post-state without recomputing from the (still untouched) live
-    tables; (c) stale scratch from another epoch's crashed attempt is
-    cleared; final tables equal a full recompute over both batches."""
+    (b) a crash between stage and commit replays by committing the
+    staged post-state without recomputing from the (still untouched)
+    live table; (c) stale scratch from another epoch's crashed attempt
+    is cleared; final tables equal a full recompute over both batches."""
     from pyspark.sql import functions as F
 
     from rolaguard_data_collectors_spark.catalog import load_table
     from rolaguard_data_collectors_spark.operators.cascade import (
         CascadeMaintenanceSink,
-        cascade_grains,
-        read_grain,
     )
+    from rolaguard_data_collectors_spark.snapshots import SnapshotStore
 
     path = str(tmp_path / "casc_sink")
+    SnapshotStore.create(path)
     sink = CascadeMaintenanceSink(path)
     ev = load_table(spark, sf_dir, "events")
     b0 = ev.where(F.col("event_id") % 2 == 0)
     b1 = ev.where(F.col("event_id") % 2 != 0)
 
-    def snap():
-        return {
-            g: {
-                (r["window_start"], r["event_type"]): (r["n_events"], r["_sv"])
-                for r in read_grain(spark, path, g).collect()
-            }
-            for g in ("minute", "hour", "day")
-        }
-
     sink(b0, 0)
-    s0 = snap()
+    s0 = _grain_snap(spark, path)
     sink(b0, 0)  # Spark restart replays the last epoch
-    assert snap() == s0
+    assert _grain_snap(spark, path) == s0
 
-    class CrashMidSwap(Exception):
+    class CrashBeforeCommit(Exception):
         pass
 
-    def dying_swap(self, edir):
-        raise CrashMidSwap()
+    def dying_commit(self, *a, **k):
+        raise CrashBeforeCommit()
 
-    orig_swap = CascadeMaintenanceSink._swap
-    CascadeMaintenanceSink._swap = dying_swap
-    try:
-        with pytest.raises(CrashMidSwap):
+    with monkeypatch.context() as m:
+        m.setattr(SnapshotStore, "commit_staged", dying_commit)
+        with pytest.raises(CrashBeforeCommit):
             sink(b1, 1)
-    finally:
-        CascadeMaintenanceSink._swap = orig_swap
-    assert snap() == s0  # live tables untouched by the crashed attempt
+    assert _grain_snap(spark, path) == s0  # live untouched by the crash
+    assert os.path.exists(os.path.join(path, "_epochs", "epoch=1", "_STAGED"))
     # a crashed attempt of some OTHER epoch left junk scratch behind
     os.makedirs(os.path.join(path, "_epochs", "epoch=99"), exist_ok=True)
-    sink(b1, 1)  # replay: marker present -> swap staged state, commit
+    sink(b1, 1)  # replay: marker present -> commit the staged state
     assert not os.path.isdir(os.path.join(path, "_epochs", "epoch=99"))
     assert not os.path.isdir(os.path.join(path, "_epochs", "epoch=1"))
-
-    full = cascade_grains(spark, sf_dir)
-    got = snap()
-    for g in ("minute", "hour", "day"):
-        want = {
-            (r["window_start"], r["event_type"]): (r["n_events"], r["_sv"])
-            for r in full[g].collect()
-        }
-        assert got[g] == want, g
+    _assert_equals_recompute(spark, path, sf_dir)
 
 
-def test_cascade_sink_remaining_crash_windows(spark, sf_dir, tmp_path):
-    """Round 9: the two crash points the first protocol test doesn't
-    hit — mid-swap (some partitions already live, the rest still in
-    scratch) and after-swap-before-commit (scratch drained, commit
-    line missing). Both must replay to the exact full-recompute state."""
+def test_cascade_sink_remaining_crash_windows(spark, sf_dir, tmp_path,
+                                              monkeypatch):
+    """Round 9: the two commit crash points after the stage — data
+    renamed in but no manifest, and manifest written but the version
+    pointer not flipped. Both must replay to the exact full-recompute
+    state, with the epoch applied exactly once."""
+    import json
+
     from pyspark.sql import functions as F
 
     from rolaguard_data_collectors_spark.catalog import load_table
     from rolaguard_data_collectors_spark.operators.cascade import (
         CascadeMaintenanceSink,
-        _swap_staged,
-        cascade_grains,
-        read_grain,
     )
+    from rolaguard_data_collectors_spark.snapshots import SnapshotStore
 
     class Boom(Exception):
         pass
 
-    class CrashMidSwap(CascadeMaintenanceSink):
-        def _swap(self, edir):
-            _swap_staged(edir, self.path, ("minute",))  # one grain only
-            raise Boom()
+    def crash_before_manifest(self, n):
+        raise Boom()
 
-    class CrashAfterSwap(CascadeMaintenanceSink):
-        def _swap(self, edir):
-            super()._swap(edir)
-            raise Boom()
+    def crash_before_flip(self, n):
+        self._store.put_atomic(self._manifest_path(n),
+                               json.dumps(self._build_manifest(n)))
+        raise Boom()
 
     path = str(tmp_path / "casc_crash")
+    SnapshotStore.create(path)
     ev = load_table(spark, sf_dir, "events")
     batches = [ev.where(F.col("event_id") % 3 == i) for i in range(3)]
 
     CascadeMaintenanceSink(path)(batches[0], 0)
-    with pytest.raises(Boom):
-        CrashMidSwap(path)(batches[1], 1)
-    CascadeMaintenanceSink(path)(batches[1], 1)  # replay finishes the swap
-    with pytest.raises(Boom):
-        CrashAfterSwap(path)(batches[2], 2)
-    CascadeMaintenanceSink(path)(batches[2], 2)  # replay only commits
-
-    full = cascade_grains(spark, sf_dir)
-    for g in ("minute", "hour", "day"):
-        got = {
-            (r["window_start"], r["event_type"]): (r["n_events"], r["_sv"])
-            for r in read_grain(spark, path, g).collect()
-        }
-        want = {
-            (r["window_start"], r["event_type"]): (r["n_events"], r["_sv"])
-            for r in full[g].collect()
-        }
-        assert got == want, g
-
-
-def test_cascade_commit_log_torn_tail_heals(spark, sf_dir, tmp_path):
-    """Round-9 review fix: a commit line torn at its newline must stay
-    ISOLATED when the next epoch appends — a bare append would fuse
-    '0' + '1' into a spurious committed epoch 01 and later epoch 1...
-    (worse: real future epochs get skipped unmerged). The torn bare-int
-    line itself parses as committed, which is safe: the cascade commit
-    is written only after the swap completed."""
-    from pyspark.sql import functions as F
-
-    from rolaguard_data_collectors_spark.catalog import load_table
-    from rolaguard_data_collectors_spark.operators.cascade import (
-        CascadeMaintenanceSink,
-        cascade_grains,
-        read_grain,
-    )
-
-    path = str(tmp_path / "casc_torn")
-    sink = CascadeMaintenanceSink(path)
-    ev = load_table(spark, sf_dir, "events")
-    sink(ev.where(F.col("event_id") % 2 == 0), 0)
-    with open(sink.commit_path) as fh:
-        content = fh.read()
-    with open(sink.commit_path, "w") as fh:
-        fh.write(content.rstrip("\n"))  # torn tail: no newline
-    sink(ev.where(F.col("event_id") % 2 == 0), 0)  # replay: skipped
-    sink(ev.where(F.col("event_id") % 2 != 0), 1)
-    assert set(sink._commits()) == {0, 1}
-    full = cascade_grains(spark, sf_dir)
-    for g in ("minute", "hour", "day"):
-        got = {
-            (r["window_start"], r["event_type"]): (r["n_events"], r["_sv"])
-            for r in read_grain(spark, path, g).collect()
-        }
-        want = {
-            (r["window_start"], r["event_type"]): (r["n_events"], r["_sv"])
-            for r in full[g].collect()
-        }
-        assert got == want, g
-
-
-def _grain_snap(spark, path):
-    from rolaguard_data_collectors_spark.operators.cascade import read_grain
-
-    return {
-        g: {
-            (r["window_start"], r["event_type"]): (r["n_events"], r["_sv"])
-            for r in read_grain(spark, path, g).collect()
-        }
-        for g in ("minute", "hour", "day")
-    }
+    for epoch, crash in ((1, crash_before_manifest), (2, crash_before_flip)):
+        with monkeypatch.context() as m:
+            m.setattr(SnapshotStore, "_finish", crash)
+            with pytest.raises(Boom):
+                CascadeMaintenanceSink(path)(batches[epoch], epoch)
+        assert not SnapshotStore(path).epoch_committed("append", epoch)
+        CascadeMaintenanceSink(path)(batches[epoch], epoch)  # recover+skip
+        assert SnapshotStore(path).epoch_committed("append", epoch)
+    _assert_equals_recompute(spark, path, sf_dir)
 
 
 def test_cascade_retract_equals_full_recompute(spark, sf_dir, tmp_path):
     """Round-10 verdict item #2: retracting a batch from the
     maintained cascade equals a FULL recompute over the surviving
-    events, bit-identical (decimal sums), with fully-emptied day
-    partitions physically dropped at every grain and untouched
-    partitions keeping their exact files."""
+    events, bit-identical (decimal sums), with fully-emptied days
+    dropped at every grain and untouched partitions keeping their
+    exact data dirs."""
     from pyspark.sql import functions as F
 
     from rolaguard_data_collectors_spark.catalog import load_table
     from rolaguard_data_collectors_spark.operators.cascade import (
-        cascade_grains,
         cascade_retract,
         persist_cascade,
     )
+    from rolaguard_data_collectors_spark.snapshots import SnapshotStore
 
     ev = load_table(spark, sf_dir, "events")
     days = [
@@ -319,6 +261,7 @@ def test_cascade_retract_equals_full_recompute(spark, sf_dir, tmp_path):
 
     path = str(tmp_path / "casc")
     persist_cascade(spark, sf_dir, path)
+    store = SnapshotStore(path)
     untouched_day = (
         ev.select(
             F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("d")
@@ -329,27 +272,18 @@ def test_cascade_retract_equals_full_recompute(spark, sf_dir, tmp_path):
         .limit(1)
         .collect()[0]["d"]
     )
-    before_files = sorted(os.listdir(f"{path}/minute/_d={untouched_day}"))
+    before_dirs = store.manifest()["tables"]["minute"][untouched_day]
 
     touched = cascade_retract(spark, path, batch)
     assert touched == [str(d) for d in days]
-    assert sorted(os.listdir(f"{path}/minute/_d={untouched_day}")) == before_files
+    assert store.manifest()["tables"]["minute"][untouched_day] == before_dirs
     for g in ("minute", "hour", "day"):
-        assert not os.path.isdir(f"{path}/{g}/_d={days[0]}"), g  # emptied
+        assert str(days[0]) not in store.table_days(g), g  # emptied
 
-    surv_dir = str(tmp_path / "surv")
-    os.makedirs(surv_dir)
-    ev.where(~F.coalesce(is_batch, F.lit(False))).toPandas().to_parquet(
-        os.path.join(surv_dir, "events.parquet"), index=False
+    surv_dir = _events_dir(
+        tmp_path, "surv", ev.where(~F.coalesce(is_batch, F.lit(False)))
     )
-    full = cascade_grains(spark, surv_dir)
-    got = _grain_snap(spark, path)
-    for g in ("minute", "hour", "day"):
-        want = {
-            (r["window_start"], r["event_type"]): (r["n_events"], r["_sv"])
-            for r in full[g].collect()
-        }
-        assert got[g] == want, g
+    _assert_equals_recompute(spark, path, surv_dir)
 
 
 def test_cascade_append_then_retract_roundtrips(spark, sf_dir, tmp_path):
@@ -367,12 +301,8 @@ def test_cascade_append_then_retract_roundtrips(spark, sf_dir, tmp_path):
     ev = load_table(spark, sf_dir, "events")
     path = str(tmp_path / "casc_rt")
     batch = ev.where(F.col("event_id") % 5 == 0)
-    base = ev.where(F.col("event_id") % 5 != 0)
-    base_dir = str(tmp_path / "base")
-    os.makedirs(base_dir)
-    base.toPandas().to_parquet(
-        os.path.join(base_dir, "events.parquet"), index=False
-    )
+    base_dir = _events_dir(tmp_path, "base",
+                           ev.where(F.col("event_id") % 5 != 0))
     persist_cascade(spark, base_dir, path)
     before = _grain_snap(spark, path)
     cascade_append(spark, path, batch)
@@ -391,11 +321,13 @@ def test_cascade_retract_rejects_never_added(spark, sf_dir, tmp_path):
         cascade_retract,
         persist_cascade,
     )
+    from rolaguard_data_collectors_spark.snapshots import SnapshotStore
 
     ev = load_table(spark, sf_dir, "events")
     path = str(tmp_path / "casc_bad")
     persist_cascade(spark, sf_dir, path)
     before = _grain_snap(spark, path)
+    version = SnapshotStore(path).current_version()
     # a real minute group, retracted TWICE over (count would go negative)
     one = ev.where(F.col("ts").isNotNull()).limit(1)
     with pytest.raises(ValueError, match="never added"):
@@ -403,67 +335,62 @@ def test_cascade_retract_rejects_never_added(spark, sf_dir, tmp_path):
                         .unionByName(one).crossJoin(spark.range(50))
                         .select("ts", "event_type", "value"))
     assert _grain_snap(spark, path) == before
+    assert SnapshotStore(path).current_version() == version
     assert not os.path.isdir(os.path.join(path, "_stage_tmp"))
 
 
 def test_cascade_retract_sink_exactly_once_and_crash_replay(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, tmp_path, monkeypatch
 ):
     """The retraction STREAM (CascadeMaintenanceSink(negate=True)):
-    separate commit log from the append sink (epoch 0 on both must not
-    collide), committed-epoch replay is a no-op, and a crash mid-swap
-    replays to the exact surviving-events recompute."""
+    its epochs are a separate direction from the append sink's (epoch
+    0 on both must not collide), committed-epoch replay is a no-op,
+    and a crash mid-commit replays to the exact surviving-events
+    recompute."""
     from pyspark.sql import functions as F
 
     from rolaguard_data_collectors_spark.catalog import load_table
     from rolaguard_data_collectors_spark.operators.cascade import (
         CascadeMaintenanceSink,
-        _swap_staged,
-        cascade_grains,
     )
+    from rolaguard_data_collectors_spark.snapshots import SnapshotStore
 
     class Boom(Exception):
         pass
 
-    class CrashMidSwap(CascadeMaintenanceSink):
-        def _swap(self, edir):
-            _swap_staged(edir, self.path, ("minute",))
-            raise Boom()
+    def dying_finish(self, n):
+        raise Boom()
 
     path = str(tmp_path / "casc_rsink")
+    SnapshotStore.create(path)
     ev = load_table(spark, sf_dir, "events")
     batch = ev.where(F.col("event_id") % 4 == 0)
 
     CascadeMaintenanceSink(path)(ev, 0)  # append stream, epoch 0
-    with pytest.raises(Boom):
-        CrashMidSwap(path, negate=True)(batch, 0)  # retract stream, epoch 0
     retract = CascadeMaintenanceSink(path, negate=True)
-    retract(batch, 0)  # replay finishes the swap
+    with monkeypatch.context() as m:
+        m.setattr(SnapshotStore, "_finish", dying_finish)
+        with pytest.raises(Boom):
+            retract(batch, 0)  # retract stream, epoch 0
+    retract(batch, 0)  # replay finishes the commit
+    store = SnapshotStore(path)
+    assert store.epoch_committed("retract", 0)
+    assert store.epoch_committed("append", 0)
     after = _grain_snap(spark, path)
     retract(batch, 0)  # committed epoch: no double retraction
     assert _grain_snap(spark, path) == after
 
-    surv_dir = str(tmp_path / "surv")
-    os.makedirs(surv_dir)
-    ev.where(F.col("event_id") % 4 != 0).toPandas().to_parquet(
-        os.path.join(surv_dir, "events.parquet"), index=False
-    )
-    full = cascade_grains(spark, surv_dir)
-    for g in ("minute", "hour", "day"):
-        want = {
-            (r["window_start"], r["event_type"]): (r["n_events"], r["_sv"])
-            for r in full[g].collect()
-        }
-        assert after[g] == want, g
+    surv_dir = _events_dir(tmp_path, "surv",
+                           ev.where(F.col("event_id") % 4 != 0))
+    _assert_equals_recompute(spark, path, surv_dir)
 
 
 def test_maintained_rollup_matches_recompute_and_prunes(spark, sf_dir):
     """Round-10 verdict item #5: the minute/hour/day legs served from
     the PERSISTED grain tables (the maintained artifact) are
     row-identical to the in-memory cascade — and a day-filtered read
-    of the artifact prunes at the MANIFEST (the artifact uses the
-    snapshot layout since round 10: pruning selects pinned dirs before
-    Spark ever lists a file)."""
+    of the artifact prunes at the MANIFEST: pruning selects pinned
+    dirs before Spark ever lists a file."""
     from rolaguard_data_collectors_spark.operators.cascade import (
         cascade_rollup,
         maintained_cascade_path,
@@ -496,21 +423,22 @@ def test_maintained_rollup_matches_recompute_and_prunes(spark, sf_dir):
 def test_cascade_sink_null_timestamp_partition(spark, tmp_path):
     """NULL-timestamp events flow through the maintenance sink into
     the explicit __null__ day partition and merge across epochs like
-    any other bucket (the sentinel keeps them out of Hive's default-
-    partition spelling)."""
+    any other bucket."""
     from rolaguard_data_collectors_spark.operators.cascade import (
         _NULL_DAY,
         CascadeMaintenanceSink,
         read_grain,
     )
+    from rolaguard_data_collectors_spark.snapshots import SnapshotStore
 
     path = str(tmp_path / "casc_null")
+    store = SnapshotStore.create(path)
     sink = CascadeMaintenanceSink(path)
     schema = "ts timestamp, event_type string, value double"
     t = datetime.datetime(2023, 7, 1, 10, 0, 30)
     sink(spark.createDataFrame([(t, "click", 1.0), (None, "x", 2.0)], schema), 0)
     sink(spark.createDataFrame([(None, "x", 3.5), (None, None, 1.0)], schema), 1)
-    assert os.path.isdir(os.path.join(path, "day", f"_d={_NULL_DAY}"))
+    assert _NULL_DAY in store.table_days("day")
     got = {
         (r["window_start"], r["event_type"]): (r["n_events"], float(r["_sv"]))
         for r in read_grain(spark, path, "day").collect()

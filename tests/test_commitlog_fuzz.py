@@ -1,22 +1,16 @@
-"""Exhaustive truncation fuzz over the three epoch commit-log parsers
-(QueueFileSink, IvfAppendSink/IvfDeleteSink, CascadeMaintenanceSink /
-NearDupLedgerSink): for EVERY byte-truncation point of a valid log —
+"""Exhaustive truncation fuzz over the QueueFileSink epoch commit-log
+parser (the snapshot-table sinks record epochs in their manifests and
+keep no log): for EVERY byte-truncation point of a valid log —
 the complete space of single-crash torn states — the parse must yield
 a SUBSET of the true records with exactly their true values. Losing a
 commit is safe (the epoch replays idempotently); inventing one, or
-recovering one with a wrong offset/cell-list, is the data-loss class
+recovering one with a wrong offset, is the data-loss class
 the round-9 terminator work closed. Mixed legacy+new queue logs are
 fuzzed the same way."""
 
 from __future__ import annotations
 
-import os
-
 from rolaguard_data_collectors_spark.commitlog import append_commit_line
-from rolaguard_data_collectors_spark.llm.kmeans import IvfAppendSink
-from rolaguard_data_collectors_spark.operators.cascade import (
-    CascadeMaintenanceSink,
-)
 from rolaguard_data_collectors_spark.streaming.sink import QueueFileSink
 
 
@@ -53,37 +47,3 @@ def test_queue_sink_mixed_legacy_log_parse_never_invents(tmp_path):
         # Legacy records are only accepted newline-complete, so a torn
         # legacy tail ('1,22' of '1,2221') must vanish, not mis-parse.
         assert set(got.items()) <= set(truth.items()), (k, got)
-
-
-def test_ivf_sink_commit_parse_never_invents(tmp_path):
-    path = str(tmp_path / "ivf")
-    os.makedirs(path)
-    sink = IvfAppendSink(path)
-    truth = {0: [1, 2, 3], 1: [], 2: [10, 250], 3: [7]}
-    for e, cells in truth.items():
-        append_commit_line(
-            sink.commit_path, f"{e},{'|'.join(str(c) for c in cells)},end"
-        )
-    blob = open(sink.commit_path, "rb").read()
-    for k in _truncations(sink.commit_path, blob):
-        got = sink.committed()
-        for e, cells in got.items():
-            assert e in truth and cells == truth[e], (k, got)
-
-
-def test_cascade_sink_commit_parse_stays_within_committed(tmp_path):
-    """The cascade log is bare monotone ints, so a torn NUMERIC prefix
-    ('1' of '12') may legitimately parse — but with sequential epoch
-    numbering it always names an ALREADY-COMMITTED earlier epoch,
-    which is safe to treat as committed. The fuzz pins exactly that:
-    every parsed epoch is a true committed epoch."""
-    path = str(tmp_path / "casc")
-    os.makedirs(path)
-    sink = CascadeMaintenanceSink(path)
-    truth = list(range(13))  # multi-digit tail exercises prefix tears
-    for e in truth:
-        append_commit_line(sink.commit_path, str(e))
-    blob = open(sink.commit_path, "rb").read()
-    for k in _truncations(sink.commit_path, blob):
-        got = sink._commits()
-        assert got <= set(truth), (k, got)

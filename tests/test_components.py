@@ -325,13 +325,12 @@ def test_ledger_append_matches_full_rebuild(spark, sf_dir, tmp_path):
     assert got_mins == want_mins
 
 
-def test_ledger_sink_exactly_once_and_crash_replay(spark, sf_dir, tmp_path):
+def test_ledger_sink_exactly_once_and_crash_replay(spark, sf_dir, tmp_path,
+                                                  monkeypatch):
     """NearDupLedgerSink: committed-epoch replay is a no-op; a crash
-    MID-SWAP (one staged bucket moved, the rest still in scratch)
+    MID-COMMIT (staged data renamed in, manifest never written)
     replays to the exact full-rebuild state; two epochs of batches end
     at the merged-corpus fixpoint."""
-    import os
-
     import pytest
     from pyspark.sql import functions as F
 
@@ -340,6 +339,7 @@ def test_ledger_sink_exactly_once_and_crash_replay(spark, sf_dir, tmp_path):
         persist_near_dup_ledger,
         read_ledger_labels,
     )
+    from rolaguard_data_collectors_spark.snapshots import SnapshotStore
 
     old_dir, new = _split_docs(spark, sf_dir, tmp_path)
     path = str(tmp_path / "ledger_sink")
@@ -362,24 +362,21 @@ def test_ledger_sink_exactly_once_and_crash_replay(spark, sf_dir, tmp_path):
     class Boom(Exception):
         pass
 
-    class CrashMidSwap(NearDupLedgerSink):
-        def _swap(self, edir):
-            gdir = os.path.join(edir, "labels")
-            staged = sorted(
-                d for d in os.listdir(gdir) if d.startswith("_cb=")
-            )
-            if staged:  # move ONE bucket, then die
-                live = os.path.join(self.path, "labels", staged[0])
-                import shutil as _sh
+    def dying_finish(self, n):
+        raise Boom()
 
-                _sh.rmtree(live, ignore_errors=True)
-                os.rename(os.path.join(gdir, staged[0]), live)
-            raise Boom()
-
-    with pytest.raises(Boom):
-        CrashMidSwap(path)(b1, 1)
-    sink(b1, 1)  # replay finishes the swap from the surviving scratch
-    assert sink._commits() == {0, 1}
+    with monkeypatch.context() as m:
+        m.setattr(SnapshotStore, "_finish", dying_finish)
+        with pytest.raises(Boom):
+            sink(b1, 1)
+    assert sorted(
+        (r.doc_id, r.cluster_id)
+        for r in read_ledger_labels(spark, path).collect()
+    ) == snap0  # the crashed commit is invisible
+    sink(b1, 1)  # replay recovers the pending commit and skips
+    store = SnapshotStore(path)
+    assert store.epoch_committed("append", 0)
+    assert store.epoch_committed("append", 1)
 
     want_labels, _ = _full_ledger_truth(spark, sf_dir)
     rows = read_ledger_labels(spark, path).collect()
@@ -517,11 +514,11 @@ def test_ledger_retract_roundtrip_component_and_unknown(
 
 
 def test_ledger_retract_sink_exactly_once_and_crash_replay(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, tmp_path, monkeypatch
 ):
-    """The retraction STREAM: separate commit log from the append
-    sink, committed-epoch replay no-op, crash mid-swap replays to the
-    full-rebuild state."""
+    """The retraction STREAM: its epochs are a separate direction from
+    the append sink's, committed-epoch replay is a no-op, and a crash
+    between stage and commit replays to the full-rebuild state."""
     import os
 
     import pytest
@@ -532,6 +529,7 @@ def test_ledger_retract_sink_exactly_once_and_crash_replay(
         NearDupLedgerSink,
         persist_near_dup_ledger,
     )
+    from rolaguard_data_collectors_spark.snapshots import SnapshotStore
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     path = str(tmp_path / "ledger_rsink")
@@ -541,30 +539,25 @@ def test_ledger_retract_sink_exactly_once_and_crash_replay(
     class Boom(Exception):
         pass
 
-    class CrashMidSwap(NearDupLedgerSink):
-        def _swap(self, edir):
-            gdir = os.path.join(edir, "labels")
-            staged = sorted(
-                d for d in (os.listdir(gdir) if os.path.isdir(gdir) else [])
-                if d.startswith("_cb=")
-            )
-            if staged:
-                import shutil as _sh
+    def dying_commit(self, *a, **k):
+        raise Boom()
 
-                live = os.path.join(self.path, "labels", staged[0])
-                _sh.rmtree(live, ignore_errors=True)
-                os.rename(os.path.join(gdir, staged[0]), live)
-            raise Boom()
-
-    with pytest.raises(Boom):
-        CrashMidSwap(path, mode="retract")(doomed, 0)
     sink = NearDupLedgerSink(path, mode="retract")
-    sink(doomed, 0)  # replay finishes the swap
+    with monkeypatch.context() as m:
+        m.setattr(SnapshotStore, "commit_staged", dying_commit)
+        with pytest.raises(Boom):
+            sink(doomed, 0)
+    assert os.path.exists(
+        os.path.join(path, "_epochs_retract", "epoch=0", "_STAGED")
+    )
+    sink(doomed, 0)  # replay commits the staged post-state
     after = _ledger_snapshot(spark, path)
     sink(doomed, 0)  # committed: no double retraction
     assert _ledger_snapshot(spark, path) == after
-    # append-direction log untouched by retract epochs
-    assert NearDupLedgerSink(path)._commits() == set()
+    # the append direction is untouched by retract epochs
+    store = SnapshotStore(path)
+    assert store.epoch_committed("retract", 0)
+    assert not store.epoch_committed("append", 0)
 
     surv_dir = str(tmp_path / "surv")
     os.makedirs(surv_dir)
@@ -572,27 +565,17 @@ def test_ledger_retract_sink_exactly_once_and_crash_replay(
         os.path.join(surv_dir, "documents.parquet"), index=False
     )
     truth = str(tmp_path / "truth")
-    from rolaguard_data_collectors_spark.llm.components import (
-        persist_near_dup_ledger as persist2,
-    )
-
-    persist2(spark, surv_dir, truth, n_buckets=8)
+    persist_near_dup_ledger(spark, surv_dir, truth, n_buckets=8)
     assert after == _ledger_snapshot(spark, truth)
 
 
-import pytest as _pytest
-
-
-@_pytest.mark.parametrize("layout", ["hive", "snapshot"])
-def test_ledger_random_op_sequence_matches_rebuild(spark, sf_dir, tmp_path,
-                                                   layout):
+def test_ledger_random_op_sequence_matches_rebuild(spark, sf_dir, tmp_path):
     """Seeded random interleaving of appends and retractions (with
     re-appends of previously retracted docs and a sprinkling of
     unknown ids): after every sequence the ledger must equal a fresh
     build over exactly the currently-present docs — the maintained
-    artifact can never drift from its declarative definition. Runs on
-    BOTH layouts: the snapshot leg additionally proves version-commit
-    publishing never drifts under arbitrary op interleavings."""
+    artifact, and its version-commit publishing, can never drift from
+    its declarative definition."""
     import os
     import random
 
@@ -617,8 +600,7 @@ def test_ledger_random_op_sequence_matches_rebuild(spark, sf_dir, tmp_path,
         os.path.join(start_dir, "documents.parquet"), index=False
     )
     path = str(tmp_path / "ledger")
-    persist_near_dup_ledger(spark, start_dir, path, n_buckets=8,
-                            layout=layout)
+    persist_near_dup_ledger(spark, start_dir, path, n_buckets=8)
 
     for step in range(6):
         if (rng.random() < 0.5 and absent) or not present:

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from rolaguard_data_collectors_spark.llm.kmeans import (
     IvfAppendSink,
     _emb,
+    _postings_frame,
     _route_for_index,
     apply_ivf_tombstones,
     ivf_index_append,
@@ -20,6 +21,7 @@ from rolaguard_data_collectors_spark.llm.kmeans import (
     persist_ivf_index,
     read_ivf_postings,
 )
+from rolaguard_data_collectors_spark.snapshots import SnapshotStore
 
 K = 4
 
@@ -36,7 +38,7 @@ def _build(spark, sf_dir, path, quantize=False):
 
 def _rows(spark, path, reader=True):
     src = (read_ivf_postings(spark, path) if reader
-           else spark.read.parquet(path + "/postings"))
+           else _postings_frame(spark, path))
     payload = "v" if "v" in src.columns else "codes"
     return sorted(
         (r["vec_id"], r["cluster"], tuple(r[payload])) for r in src.collect()
@@ -68,32 +70,25 @@ def test_delete_reader_excludes_then_apply_drops(spark, sf_dir, tmp_path):
     ]
     assert not ({v for v, _ in top_before_apply} & doomed_ids)
 
-    untouched = [
-        d for d in os.listdir(path + "/postings")
-        if d.startswith("cluster=") and int(d.split("=")[1]) not in touched
-    ]
-    before_files = {
-        d: sorted(os.listdir(os.path.join(path, "postings", d)))
-        for d in untouched
+    store = SnapshotStore(path)
+    before_dirs = {
+        c: rels for c, rels in store.manifest()["tables"]["postings"].items()
+        if int(c) not in touched
     }
     applied = apply_ivf_tombstones(spark, path)
     assert applied == touched
     assert _rows(spark, path, reader=False) == want  # physically gone
     assert _rows(spark, path) == want
-    assert not any(
-        d.startswith("cluster=")
-        for d in (os.listdir(path + "/tombstones")
-                  if os.path.isdir(path + "/tombstones") else [])
-    )
-    for d in untouched:  # untouched cells keep their exact files
-        assert sorted(os.listdir(os.path.join(path, "postings", d))) == \
-            before_files[d], d
+    assert store.table_days("tombstones") == []
+    posts = store.manifest()["tables"]["postings"]
+    for c, rels in before_dirs.items():  # untouched cells keep their dirs
+        assert posts[c] == rels, c
     top_after = [
         (r["vec_id"], r["cosine"])
         for r in ivf_index_topk(spark, path, list(q), top_k=8, n_probe=K).collect()
     ]
     assert top_after == top_before_apply
-    assert not os.path.exists(os.path.join(path, "_tombstone_tmp"))
+    assert not os.path.exists(os.path.join(path, "_stage_tmp"))
 
 
 def test_delete_by_ids_only_locates_cells(spark, sf_dir, tmp_path):
@@ -134,10 +129,8 @@ def test_delete_quantized_index(spark, sf_dir, tmp_path):
 def test_delete_absent_ids_by_vector_then_apply(spark, sf_dir, tmp_path):
     """Routed deletes of ids that were never appended write ghost
     tombstones; readers ignore them and apply drains them — including
-    when a touched cell has no live posting directory at all (the
-    codebook owns the cell but no vector ever routed there)."""
-    import shutil
-
+    when a touched cell has no live postings partition at all (the
+    codebook owns the cell but no vector is left there)."""
     path = str(tmp_path / "ivf")
     emb = _build(spark, sf_dir, path)
     ghost = emb.limit(3).select(
@@ -145,20 +138,15 @@ def test_delete_absent_ids_by_vector_then_apply(spark, sf_dir, tmp_path):
     )
     touched = ivf_index_delete(spark, path, ghost)
     assert touched
-    # empty one touched cell's live dir entirely
-    shutil.rmtree(
-        os.path.join(path, "postings", f"cluster={touched[0]}"),
-        ignore_errors=True,
-    )
+    # retire one touched cell's postings partition entirely
+    store = SnapshotStore(path)
+    keep = set(store.table_days("postings")) - {str(touched[0])}
+    store.expire(keep=keep, tables=["postings"])
     expect = [r for r in _rows(spark, path)]  # ghosts match nothing
     applied = apply_ivf_tombstones(spark, path)
     assert set(applied) == set(touched)
     assert _rows(spark, path, reader=False) == expect  # content unchanged
-    assert not any(
-        d.startswith("cluster=")
-        for d in (os.listdir(path + "/tombstones")
-                  if os.path.isdir(path + "/tombstones") else [])
-    )  # ghost sidecars drained
+    assert store.table_days("tombstones") == []  # ghost sidecars drained
 
 
 def test_append_delete_equals_frozen_codebook_rebuild(spark, sf_dir, tmp_path):
@@ -188,13 +176,14 @@ def test_append_delete_equals_frozen_codebook_rebuild(spark, sf_dir, tmp_path):
     assert _rows(spark, path, reader=False) == want
 
 
-def test_apply_crash_windows(spark, sf_dir, tmp_path):
-    """(a) crash BEFORE the marker: live index + tombstones untouched,
-    the delete is never lost; (b) crash MID-SWAP: the marker lets the
-    next apply finish from the surviving scratch and drain the
-    sidecars; (c) crash AFTER swap, BEFORE sidecar clear: replay
-    anti-joins already-gone rows (no-op) and completes the clear."""
-    import shutil
+def test_apply_crash_windows(spark, sf_dir, tmp_path, monkeypatch):
+    """(a) crash while staging, BEFORE the commit: live index and
+    tombstones untouched, the delete is never lost and the next apply
+    completes it; (b) crash after the rewrite was renamed in, before
+    its manifest: invisible until the next writer's recover() finishes
+    the commit, which rewrote the cells AND drained the sidecar
+    atomically — the follow-up apply finds nothing left to do."""
+    import json
 
     path = str(tmp_path / "ivf")
     emb = _build(spark, sf_dir, path)
@@ -202,64 +191,66 @@ def test_apply_crash_windows(spark, sf_dir, tmp_path):
     doomed = emb.where(F.col("vec_id") % 9 == 1).select("vec_id", "v")
     doomed_ids = {r["vec_id"] for r in doomed.collect()}
     want = [r for r in before if r[0] not in doomed_ids]
-    ivf_index_delete(spark, path, doomed)
+    touched = ivf_index_delete(spark, path, doomed)
+    store = SnapshotStore(path)
+    version = store.current_version()
+    raw_before = _rows(spark, path, reader=False)
 
-    scratch = os.path.join(path, "_tombstone_tmp")
-    # (a) staged but no marker yet -> dropped on entry, nothing lost
-    os.makedirs(os.path.join(scratch, "cluster=0"), exist_ok=True)
+    class Boom(Exception):
+        pass
+
+    def dying_commit(self, *a, **k):
+        raise Boom()
+
+    # (a) the rewrite is staged, the commit never happens
+    with monkeypatch.context() as m:
+        m.setattr(SnapshotStore, "commit_staged", dying_commit)
+        with pytest.raises(Boom):
+            apply_ivf_tombstones(spark, path)
+    assert store.current_version() == version
+    assert _rows(spark, path, reader=False) == raw_before  # not rewritten
     assert _rows(spark, path) == want  # reader still anti-joins
+    assert sorted(int(c) for c in store.table_days("tombstones")) == touched
 
-    # (b) construct mid-swap: stage one tombstoned cell for real, write
-    # the marker, delete the live cell dir (crash after its rmtree)
-    shutil.rmtree(scratch, ignore_errors=True)
-    cell = sorted(
-        int(d.split("=")[1]) for d in os.listdir(path + "/tombstones")
-        if d.startswith("cluster=")
-    )[0]
-    live = os.path.join(path, "postings", f"cluster={cell}")
-    tomb = spark.read.parquet(
-        os.path.join(path, "tombstones", f"cluster={cell}")
-    ).select("vec_id")
-    spark.read.parquet(live).join(
-        F.broadcast(tomb), "vec_id", "left_anti"
-    ).coalesce(1).write.parquet(os.path.join(scratch, f"cluster={cell}"))
-    with open(os.path.join(scratch, "_SWAP"), "w") as fh:
-        fh.write(f"{cell}\n")
-    shutil.rmtree(live)  # crash was here
-    applied = apply_ivf_tombstones(spark, path)
-    assert _rows(spark, path, reader=False) == want
-    assert set(applied) >= set()  # remaining cells applied in the same call
-    assert not any(
-        d.startswith("cluster=")
-        for d in (os.listdir(path + "/tombstones")
-                  if os.path.isdir(path + "/tombstones") else [])
-    )
+    # (b) crash between the data rename and the manifest write
+    def crash_before_flip(self, n):
+        self._store.put_atomic(self._manifest_path(n),
+                               json.dumps(self._build_manifest(n)))
+        raise Boom()
 
-    # (c) swap done, sidecar clear lost: re-create a stale tombstone for
-    # rows that are already gone — replay must be a clean no-op rewrite
-    spark.createDataFrame(
-        [(i,) for i in sorted(doomed_ids)], "vec_id long"
-    ).withColumn("cluster", F.lit(cell)).write.mode("append").partitionBy(
-        "cluster"
-    ).parquet(path + "/tombstones")
-    apply_ivf_tombstones(spark, path)
+    with monkeypatch.context() as m:
+        m.setattr(SnapshotStore, "_finish", crash_before_flip)
+        with pytest.raises(Boom):
+            apply_ivf_tombstones(spark, path)
+    assert SnapshotStore(path).current_version() == version
+    assert _rows(spark, path) == want
+    assert apply_ivf_tombstones(spark, path) == []  # recovered, drained
+    assert SnapshotStore(path).current_version() == version + 1
     assert _rows(spark, path, reader=False) == want
-    assert not os.path.exists(scratch)
+    assert SnapshotStore(path).table_days("tombstones") == []
 
 
 def test_reader_prunes_probed_cells_with_tombstones(spark, sf_dir, tmp_path):
     """The tombstone anti-join must not cost the reader its partition
-    pruning: a clusters= read scans only the probed cells on BOTH the
-    postings and the tombstone side (PartitionFilters in the plan), and
-    the anti-join side is broadcast."""
+    pruning: a clusters= read opens only the probed cells' files on
+    BOTH the postings and the tombstone side (pruned in the manifest),
+    and the anti-join side is broadcast."""
+    import re
+
     path = str(tmp_path / "ivf")
     emb = _build(spark, sf_dir, path)
-    ivf_index_delete(spark, path, emb.limit(5).select("vec_id", "v"))
-    probed = [0, 1]
+    touched = ivf_index_delete(spark, path, emb.select("vec_id", "v"))
+    probed = touched[:2]
+    assert len(probed) == 2 < K
     df = read_ivf_postings(spark, path, clusters=probed)
+    scanned = {
+        (m.group(1), int(m.group(2)))
+        for m in (re.search(r"/(postings|tombstones)/_dp=(\d+)/", f)
+                  for f in df.inputFiles())
+    }
+    assert {t for t, _ in scanned} == {"postings", "tombstones"}
+    assert {c for _, c in scanned} == set(probed)  # both scans pruned
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("PartitionFilters: [") >= 2, plan  # both scans pruned
-    assert "cluster" in plan
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
     got = {r["cluster"] for r in df.select("cluster").distinct().collect()}
     assert got <= set(probed)
@@ -295,12 +286,12 @@ def test_reappending_tombstoned_id_raises_until_applied(
 
 
 def test_streaming_delete_sink_exactly_once_and_crash_replay(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, tmp_path, monkeypatch
 ):
     """IvfDeleteSink: a replayed committed epoch adds no duplicate
-    sidecar files; a crash mid-move replays to the same tombstone set;
-    the commit log is separate from the append sink's; readers and
-    apply see exactly the streamed deletes."""
+    sidecar dirs; a crash mid-commit replays to the same tombstone set;
+    its epochs are a separate direction from the append sink's;
+    readers and apply see exactly the streamed deletes."""
     from rolaguard_data_collectors_spark.llm.kmeans import IvfDeleteSink
 
     path = str(tmp_path / "ivf")
@@ -309,52 +300,35 @@ def test_streaming_delete_sink_exactly_once_and_crash_replay(
     doomed = emb.where(F.col("vec_id") % 9 == 1).select("vec_id", "v")
     doomed_ids = {r["vec_id"] for r in doomed.collect()}
     want = [r for r in before if r[0] not in doomed_ids]
+    store = SnapshotStore(path)
 
     sink = IvfDeleteSink(path)
     sink(doomed, 0)
     assert 0 in sink.committed() and sink.committed()[0]
-
-    def sidecar_files():
-        troot = os.path.join(path, "tombstones")
-        return sorted(
-            os.path.join(d, f)
-            for d in os.listdir(troot) if d.startswith("cluster=")
-            for f in os.listdir(os.path.join(troot, d))
-            if f.startswith("epoch")
-        )
-
-    files0 = sidecar_files()
-    sink(doomed, 0)  # restart replay: committed -> no new files
-    assert sidecar_files() == files0
+    sidecar0 = store.manifest()["tables"]["tombstones"]
+    sink(doomed, 0)  # restart replay: committed -> no new version
+    assert store.manifest()["tables"]["tombstones"] == sidecar0
     assert _rows(spark, path) == want
 
-    # crash mid-move on the NEXT epoch: first cell moved, rest staged
+    # crash mid-commit on the NEXT epoch: data renamed in, no manifest
     class Boom(Exception):
         pass
 
-    orig_move = IvfDeleteSink._move
-    calls = {"n": 0}
-
-    def dying_move(self, edir, epoch):
-        orig_move(self, edir, epoch)
+    def dying_finish(self, n):
         raise Boom()
 
-    IvfDeleteSink._move = dying_move
     doomed2 = emb.where(F.col("vec_id") % 9 == 4).select("vec_id", "v")
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(SnapshotStore, "_finish", dying_finish)
         with pytest.raises(Boom):
             sink(doomed2, 1)
-    finally:
-        IvfDeleteSink._move = orig_move
     assert 1 not in sink.committed()
-    sink(doomed2, 1)  # replay finishes from the surviving scratch
+    sink(doomed2, 1)  # replay recovers the pending commit
     assert 1 in sink.committed()
     doomed2_ids = {r["vec_id"] for r in doomed2.collect()}
     want2 = [r for r in before if r[0] not in doomed_ids | doomed2_ids]
     assert _rows(spark, path) == want2
-    # the append sink's log is untouched by delete epochs
-    from rolaguard_data_collectors_spark.llm.kmeans import IvfAppendSink
-
+    # the append sink's feed is untouched by delete epochs
     assert 1 not in IvfAppendSink(path).committed()
     applied = apply_ivf_tombstones(spark, path)
     assert applied

@@ -5,11 +5,12 @@ brute-force query."""
 
 from __future__ import annotations
 
-import os
+import re
 
 import pytest
 
 from rolaguard_data_collectors_spark.llm.kmeans import (
+    _postings_frame,
     assign_clusters,
     ivf_topk,
     kmeans_fit,
@@ -21,6 +22,15 @@ from rolaguard_data_collectors_spark.llm.similarity import (
 
 K = 6
 ITERS = 4
+
+
+def _scanned_cells(df) -> set[int]:
+    """The posting cells whose files a frame's scans open."""
+    files = df.inputFiles()
+    assert files
+    return {
+        int(re.search(r"/postings/_dp=(\d+)/", f).group(1)) for f in files
+    }
 
 
 def test_inertia_monotone_and_deterministic(spark, sf_dir):
@@ -67,7 +77,7 @@ def test_ivf_pruned_probe_is_subset_of_probed_clusters(spark, sf_dir):
 def test_persisted_index_matches_inplan_ivf(spark, sf_dir, tmp_path):
     """The persisted index must return exactly what the in-plan IVF
     returns for the same centroids/probes, and the probe scan must
-    prune partitions at the reader (PartitionFilters on cluster)."""
+    open only the n_probe cells' files (pruned in the manifest)."""
     from pyspark.sql import functions as F
 
     from rolaguard_data_collectors_spark.llm.kmeans import (
@@ -89,15 +99,7 @@ def test_persisted_index_matches_inplan_ivf(spark, sf_dir, tmp_path):
     ]
     assert got == want and got
 
-    plan = got_df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    assert "PartitionFilters" in plan
-    pf_lines = [l for l in plan.splitlines()
-                if "PartitionFilters" in l and "cluster" in l]
-    assert pf_lines, plan
+    assert len(_scanned_cells(got_df)) == 2 < K
 
     # n_probe = k through the index == brute force
     full = [
@@ -145,8 +147,8 @@ def test_semantic_dedup_from_index_matches_and_prunes(spark, sf_dir, tmp_path):
     100 TB shape the in-memory variant's docstring promises. Full-index
     survivors must equal semantic_dedup over the same codebook
     recomputed in-plan; a run restricted to one coarse cell must (a)
-    scan ONLY that cell's posting directory (PartitionFilters on
-    cluster) and (b) return exactly the full run's rows for that cell
+    scan ONLY that cell's posting directory (pruned in the manifest)
+    and (b) return exactly the full run's rows for that cell
     (blocking is cluster-local, so cell-at-a-time sweeps are correct)."""
     from rolaguard_data_collectors_spark.llm.kmeans import (
         persist_ivf_index,
@@ -166,14 +168,7 @@ def test_semantic_dedup_from_index_matches_and_prunes(spark, sf_dir, tmp_path):
     cell = want[0][1]
     cell_df = semantic_dedup_from_index(spark, path, threshold=0.4,
                                         clusters=[cell])
-    plan = cell_df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    pf_lines = [l for l in plan.splitlines()
-                if "PartitionFilters" in l and "cluster" in l]
-    assert pf_lines, plan
+    assert _scanned_cells(cell_df) == {cell}
     cell_rows = sorted((r.vec_id, r.cluster) for r in cell_df.collect())
     assert cell_rows == [t for t in want if t[1] == cell]
 
@@ -204,7 +199,7 @@ def test_ivf_index_append_quantized_codes_match_builder(spark, sf_dir, tmp_path)
     persist_ivf_index(spark, sf_dir, qpath, k=K, iters=1, quantize=True)
     base = {
         (r["cluster"], r["vec_id"]): list(r["codes"])
-        for r in spark.read.parquet(qpath + "/postings").collect()
+        for r in _postings_frame(spark, qpath).collect()
     }
     emb = _emb(spark, sf_dir)
     shift = 1_000_000
@@ -214,7 +209,7 @@ def test_ivf_index_append_quantized_codes_match_builder(spark, sf_dir, tmp_path)
     )
     after = {
         (r["cluster"], r["vec_id"]): list(r["codes"])
-        for r in spark.read.parquet(qpath + "/postings").collect()
+        for r in _postings_frame(spark, qpath).collect()
     }
     appended = {k: v for k, v in after.items() if k[1] >= shift}
     assert len(appended) == len(base) and len(after) == 2 * len(base)
@@ -222,9 +217,7 @@ def test_ivf_index_append_quantized_codes_match_builder(spark, sf_dir, tmp_path)
         assert base[(cluster, vid - shift)] == codes, (cluster, vid)
 
 
-@pytest.mark.parametrize("layout", ["hive", "snapshot"])
-def test_semantic_dedup_incremental_cell_sweep(spark, sf_dir, tmp_path,
-                                               layout):
+def test_semantic_dedup_incremental_cell_sweep(spark, sf_dir, tmp_path):
     """Round 9: the changed-cells-only maintenance flow a 100 TB lake
     index actually runs, end to end through the operators: route new
     vectors into the persisted index with ivf_index_append (an exact
@@ -233,10 +226,9 @@ def test_semantic_dedup_incremental_cell_sweep(spark, sf_dir, tmp_path,
     touched, and assert the union with the untouched cells' PREVIOUS
     survivors equals a full re-run over the updated index —
     cluster-local blocking makes the incremental sweep exact, not
-    approximate. Runs on BOTH index layouts: the snapshot leg proves
-    the whole incremental loop (add-mode append commit -> touched
-    cells -> manifest-pruned per-cell re-dedup) on the versioned
-    store."""
+    approximate: the whole incremental loop (add-mode append commit ->
+    touched cells -> manifest-pruned per-cell re-dedup) on the
+    versioned store."""
     from pyspark.sql import functions as F
 
     from rolaguard_data_collectors_spark.llm.kmeans import (
@@ -247,7 +239,7 @@ def test_semantic_dedup_incremental_cell_sweep(spark, sf_dir, tmp_path,
     )
 
     path = str(tmp_path / "ivf_inc")
-    persist_ivf_index(spark, sf_dir, path, k=K, iters=2, layout=layout)
+    persist_ivf_index(spark, sf_dir, path, k=K, iters=2)
     before = {
         (r.vec_id, r.cluster)
         for r in semantic_dedup_from_index(spark, path).collect()
@@ -294,13 +286,14 @@ def test_semantic_dedup_incremental_cell_sweep(spark, sf_dir, tmp_path,
     assert {v for v, _ in changed if v < 0} == {-i - 1 for i in seed_ids}
 
 
-def test_ivf_append_sink_exactly_once(spark, sf_dir, tmp_path):
+def test_ivf_append_sink_exactly_once(spark, sf_dir, tmp_path, monkeypatch):
     """Round 9: streaming appends into the persisted index must be
     exactly-once under foreachBatch replay — a replayed committed
-    epoch adds nothing, a crash between stage and move leaves the live
-    postings untouched and the replay lands the rows exactly once, and
-    the commit log doubles as the changed-cells feed."""
-    import pytest
+    epoch adds nothing, a crash between stage and commit leaves the
+    live postings untouched and the replay lands the rows exactly
+    once, and the epoch records double as the changed-cells feed."""
+    import os
+
     from pyspark.sql import functions as F
 
     from rolaguard_data_collectors_spark.llm.kmeans import (
@@ -309,10 +302,11 @@ def test_ivf_append_sink_exactly_once(spark, sf_dir, tmp_path):
         _route_for_index,
         persist_ivf_index,
     )
+    from rolaguard_data_collectors_spark.snapshots import SnapshotStore
 
     path = str(tmp_path / "ivf_sink")
     persist_ivf_index(spark, sf_dir, path, k=K, iters=1)
-    base_n = spark.read.parquet(path + "/postings").count()
+    base_n = _postings_frame(spark, path).count()
     emb = _emb(spark, sf_dir)
     SH = 10_000_000
     b0 = emb.where(F.col("vec_id") % 10 == 0).select(
@@ -324,7 +318,7 @@ def test_ivf_append_sink_exactly_once(spark, sf_dir, tmp_path):
     sink = IvfAppendSink(path)
 
     def n_posts():
-        return spark.read.parquet(path + "/postings").count()
+        return _postings_frame(spark, path).count()
 
     sink(b0, 0)
     n1 = n_posts()
@@ -332,21 +326,18 @@ def test_ivf_append_sink_exactly_once(spark, sf_dir, tmp_path):
     sink(b0, 0)  # Spark restart replays the committed epoch
     assert n_posts() == n1
 
-    class CrashMidMove(Exception):
+    class CrashBeforeCommit(Exception):
         pass
 
-    def dying_move(self, edir, epoch):
-        raise CrashMidMove()
+    def dying_commit(self, *a, **k):
+        raise CrashBeforeCommit()
 
-    orig_move = IvfAppendSink._move
-    IvfAppendSink._move = dying_move
-    try:
-        with pytest.raises(CrashMidMove):
+    with monkeypatch.context() as m:
+        m.setattr(SnapshotStore, "commit_staged", dying_commit)
+        with pytest.raises(CrashBeforeCommit):
             sink(b1, 1)
-    finally:
-        IvfAppendSink._move = orig_move
     assert n_posts() == n1  # live untouched by the crashed attempt
-    sink(b1, 1)  # replay: marker present -> move staged files, commit
+    sink(b1, 1)  # replay: marker present -> commit the staged rows
     assert n_posts() == n1 + b1.count()
     assert not os.path.isdir(os.path.join(path, "_epochs", "epoch=1"))
 
@@ -360,27 +351,26 @@ def test_ivf_append_sink_exactly_once(spark, sf_dir, tmp_path):
     # the appended rows are readable and correctly celled
     got = {
         r["vec_id"] % SH
-        for r in spark.read.parquet(path + "/postings")
+        for r in _postings_frame(spark, path)
         .where(F.col("vec_id") >= 2 * SH).collect()
     }
     assert got == {r["vec_id"] for r in emb.where(F.col("vec_id") % 10 == 1).collect()}
 
 
 def test_ivf_sink_crash_during_commit(spark, sf_dir, tmp_path, monkeypatch):
-    """Round-9 review fix: a crash DURING the commit write leaves a
-    torn record without the ',end' terminator — which must parse as
-    uncommitted (a prefix-parse would hand the changed-cells feed a
-    truncated cell list). The scratch + marker still exist at that
-    point (cleared only after commit), so the replay re-moves nothing,
-    re-commits the FULL record, and no posting row is duplicated."""
-    import pytest
+    """A crash DURING the commit — staged rows renamed into the data
+    dir, manifest never written — must stay invisible: no rows, no
+    epoch record in the changed-cells feed. The replay finishes the
+    pending commit, skips the now-committed epoch, and no posting row
+    is duplicated."""
     from pyspark.sql import functions as F
 
     from rolaguard_data_collectors_spark.llm import kmeans as KM
+    from rolaguard_data_collectors_spark.snapshots import SnapshotStore
 
     path = str(tmp_path / "ivf_torn")
     KM.persist_ivf_index(spark, sf_dir, path, k=K, iters=1)
-    base_n = spark.read.parquet(path + "/postings").count()
+    base_n = _postings_frame(spark, path).count()
     b0 = KM._emb(spark, sf_dir).where(F.col("vec_id") % 10 == 3).select(
         (F.col("vec_id") + 10_000_000).alias("vec_id"), "v"
     )
@@ -389,22 +379,17 @@ def test_ivf_sink_crash_during_commit(spark, sf_dir, tmp_path, monkeypatch):
     class TornCommit(Exception):
         pass
 
-    real_append = KM.append_commit_line
-
-    def torn_append(p, line):
-        with open(p, "a", encoding="utf-8") as fh:
-            fh.write(line[: len(line) // 2])  # torn mid-record, no \n
+    def dying_finish(self, n):
         raise TornCommit()
 
-    monkeypatch.setattr(KM, "append_commit_line", torn_append)
-    with pytest.raises(TornCommit):
-        sink(b0, 0)
-    monkeypatch.setattr(KM, "append_commit_line", real_append)
-    assert sink.committed() == {}  # torn record rejected
-    n_after_crash = spark.read.parquet(path + "/postings").count()
-    assert n_after_crash == base_n + b0.count()  # move had completed
-    sink(b0, 0)  # replay: marker present, nothing to move, commit heals
-    assert spark.read.parquet(path + "/postings").count() == n_after_crash
+    with monkeypatch.context() as m:
+        m.setattr(SnapshotStore, "_finish", dying_finish)
+        with pytest.raises(TornCommit):
+            sink(b0, 0)
+    assert sink.committed() == {}  # pending commit not in the feed
+    assert _postings_frame(spark, path).count() == base_n
+    sink(b0, 0)  # replay: recover() finishes the commit, epoch skipped
+    assert _postings_frame(spark, path).count() == base_n + b0.count()
     want_cells = sorted(
         r["cluster"]
         for r in KM._route_for_index(spark, path, b0)

@@ -110,20 +110,20 @@ def test_scan_prunes_row_groups_on_zordered_layout(spark, sf_dir, tmp_path):
 
 
 def test_compact_partitions_content_identical(spark, sf_dir, tmp_path):
-    """Round 9: small-files compaction over an append-accumulated IVF
-    posting table — rewritten partitions end at target_files files
-    with content identical row-for-row; partitions under the threshold
-    keep their exact files; scratch is gone afterwards."""
+    """Round 9: small-files compaction (``SnapshotStore.compact``) over
+    an append-accumulated IVF posting table — rewritten partitions end
+    at target_files files with content identical row-for-row, in one
+    new version; partitions under the threshold keep their exact data
+    dirs; the compaction scratch is gone afterwards."""
     import os
-
-    from pyspark.sql import functions as F
 
     from rolaguard_data_collectors_spark.llm.kmeans import (
         _emb,
+        _postings_frame,
         ivf_index_append,
         persist_ivf_index,
     )
-    from rolaguard_data_collectors_spark.plans.scale import compact_partitions
+    from rolaguard_data_collectors_spark.snapshots import SnapshotStore
 
     path = str(tmp_path / "ivf_c")
     persist_ivf_index(spark, sf_dir, path, k=6, iters=1)
@@ -135,110 +135,36 @@ def test_compact_partitions_content_identical(spark, sf_dir, tmp_path):
                 (F.col("vec_id") + (i + 1) * 10_000_000).alias("vec_id"), "v"
             ),
         )
-    posts = path + "/postings"
+    store = SnapshotStore(path)
 
     def snapshot():
         return sorted(
             (r["vec_id"], r["cluster"], tuple(r["v"]))
-            for r in spark.read.parquet(posts).collect()
+            for r in _postings_frame(spark, path).collect()
         )
 
-    def files_of(d):
-        return sorted(
-            f for f in os.listdir(os.path.join(posts, d))
-            if f.startswith(("part-", "epoch"))
+    def n_files(rels):
+        return sum(
+            1 for rel in rels
+            for f in os.listdir(os.path.join(path, rel))
+            if f.endswith(".parquet")
         )
 
     before = snapshot()
-    parts = [d for d in os.listdir(posts) if d.startswith("cluster=")]
-    before_files = {d: files_of(d) for d in parts}
+    before_dirs = dict(store.manifest()["tables"]["postings"])
+    version = store.current_version()
     MAXF = 3
-    compacted = compact_partitions(spark, posts, max_files=MAXF, target_files=1)
-    assert compacted, before_files  # the appends created small files
+    compacted = store.compact(spark, max_files=MAXF, target_files=1,
+                              tables=["postings"])
+    assert compacted, before_dirs  # the appends created small files
+    assert store.current_version() == version + 1
     assert snapshot() == before
-    assert not os.path.exists(os.path.join(posts, "_compact_tmp"))
-    for d in parts:
-        if d in compacted:
-            assert len(files_of(d)) == 1, d
-            assert len(before_files[d]) > MAXF
+    assert not os.path.exists(os.path.join(path, "_stage_compact"))
+    after_dirs = store.manifest()["tables"]["postings"]
+    done = {cell for _, cell in compacted}
+    for cell, rels in before_dirs.items():
+        if cell in done:
+            assert n_files(after_dirs[cell]) == 1, cell
+            assert n_files(rels) > MAXF
         else:
-            assert files_of(d) == before_files[d], d
-
-
-def test_expire_partitions_day_retention(spark, sf_dir, tmp_path):
-    """Retention drops whole day directories below the cutoff, keeps
-    the NULL-sentinel partition, and the surviving table equals the
-    same grains filtered to the kept days."""
-    import datetime
-    import os
-
-    import pandas as pd
-
-    from rolaguard_data_collectors_spark.operators.cascade import (
-        _NULL_DAY,
-        CascadeMaintenanceSink,
-        read_grain,
-    )
-    from rolaguard_data_collectors_spark.plans.scale import expire_partitions
-
-    # three days + a NULL-ts bucket through the maintenance sink
-    t0 = datetime.datetime(2024, 3, 1, 12, 0, 0)
-    rows = [(t0 + datetime.timedelta(days=d), "click", 1.0 + d) for d in range(3)]
-    rows.append((None, "x", 9.0))
-    path = str(tmp_path / "casc_ret")
-    sink = CascadeMaintenanceSink(path)
-    sink(spark.createDataFrame(rows, "ts timestamp, event_type string, value double"), 0)
-
-    droot = os.path.join(path, "day")
-    dropped = expire_partitions(droot, before="2024-03-02")
-    assert dropped == ["_d=2024-03-01"]
-    left = {r["window_start"] for r in read_grain(spark, path, "day").collect()}
-    assert left == {None, datetime.datetime(2024, 3, 2), datetime.datetime(2024, 3, 3)}
-    # keep= allow-list form, sentinel listed explicitly
-    dropped2 = expire_partitions(droot, keep={"2024-03-03", _NULL_DAY})
-    assert dropped2 == ["_d=2024-03-02"]
-    left2 = {r["window_start"] for r in read_grain(spark, path, "day").collect()}
-    assert left2 == {None, datetime.datetime(2024, 3, 3)}
-
-
-def test_compact_partitions_recovers_from_crash_mid_swap(spark, tmp_path):
-    """Round-9 review fix: a compaction killed between rmtree(live) and
-    rename left the partition's ONLY copy in scratch, and a re-run used
-    to delete that scratch on entry — data loss. With the _SWAP marker,
-    a re-run first FINISHES the interrupted swap from the surviving
-    scratch, then proceeds to compact normally."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from rolaguard_data_collectors_spark.plans.scale import compact_partitions
-
-    root = str(tmp_path / "tbl")
-    df = spark.range(600).select(
-        (F.col("id") % 2).cast("string").alias("_d"), F.col("id").alias("x")
-    )
-    # 6 files per partition
-    df.repartition(6).write.partitionBy("_d").parquet(root)
-
-    def rows():
-        return sorted(r["x"] for r in spark.read.parquet(root).collect())
-
-    before = rows()
-    # construct the crashed state for _d=0: staged copy + marker, live gone
-    scratch = os.path.join(root, "_compact_tmp")
-    spark.read.parquet(os.path.join(root, "_d=0")).coalesce(1).write.parquet(
-        os.path.join(scratch, "_d=0")
-    )
-    with open(os.path.join(scratch, "_SWAP"), "w") as fh:
-        fh.write("staged\n")
-    shutil.rmtree(os.path.join(root, "_d=0"))  # crash was here
-
-    compacted = compact_partitions(spark, root, max_files=3, target_files=1)
-    assert rows() == before  # nothing lost
-    assert "_d=0" in compacted and "_d=1" in compacted
-    for d in ("_d=0", "_d=1"):
-        n = sum(1 for f in os.listdir(os.path.join(root, d))
-                if f.startswith("part-"))
-        assert n == 1, d
-    assert not os.path.exists(scratch)
+            assert after_dirs[cell] == rels, cell

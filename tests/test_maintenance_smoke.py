@@ -77,7 +77,7 @@ def test_cross_family_maintenance_smoke(spark, sf_dir, tmp_path):
         os.path.join(base_dir, "events.parquet"), index=False
     )
     cpath = str(tmp_path / "cascade")
-    persist_cascade(spark, base_dir, cpath, layout="snapshot")
+    persist_cascade(spark, base_dir, cpath)
     cstore = SnapshotStore(cpath)
     cascade_append(spark, cpath, extra_a)
     cstore.vacuum(keep_last=KEEP_LAST)  # the vacuum boundary
@@ -108,7 +108,7 @@ def test_cross_family_maintenance_smoke(spark, sf_dir, tmp_path):
         "vec_id", F.col("embedding").alias("v")
     )
     ipath = str(tmp_path / "ivf")
-    persist_ivf_index(spark, sf_dir, ipath, k=4, iters=1, layout="snapshot")
+    persist_ivf_index(spark, sf_dir, ipath, k=4, iters=1)
     istore = SnapshotStore(ipath)
     live = {r.vec_id for r in emb.select("vec_id").collect()}
     batch = emb.limit(20).select((F.col("vec_id") + 10_000_000).alias("vec_id"), "v")
@@ -141,8 +141,7 @@ def test_cross_family_maintenance_smoke(spark, sf_dir, tmp_path):
         os.path.join(start_dir, "documents.parquet"), index=False
     )
     lpath = str(tmp_path / "ledger")
-    persist_near_dup_ledger(spark, start_dir, lpath, n_buckets=4,
-                            layout="snapshot")
+    persist_near_dup_ledger(spark, start_dir, lpath, n_buckets=4)
     lstore = SnapshotStore(lpath)
     ledger_append(spark, lpath,
                   docs.where(F.col("doc_id").isin(sorted(extra))))

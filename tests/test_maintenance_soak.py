@@ -64,6 +64,7 @@ def test_cascade_soak(spark, sf_dir, tmp_path):
     from rolaguard_data_collectors_spark.catalog import load_table
     from rolaguard_data_collectors_spark.operators.cascade import (
         cascade_append,
+        cascade_grains,
         cascade_retract,
         persist_cascade,
         read_grain,
@@ -84,7 +85,7 @@ def test_cascade_soak(spark, sf_dir, tmp_path):
     base.toPandas().to_parquet(os.path.join(base_dir, "events.parquet"),
                                index=False)
     path = str(tmp_path / "cascade")
-    persist_cascade(spark, base_dir, path, layout="snapshot")
+    persist_cascade(spark, base_dir, path)
     store = SnapshotStore(path)
 
     rng = random.Random(11)
@@ -113,26 +114,25 @@ def test_cascade_soak(spark, sf_dir, tmp_path):
     print(f"\ncascade soak: {n} epochs in {dt:.1f}s "
           f"({dt/n*1000:.0f} ms/epoch), end state {state}")
 
-    # end-state equality vs a fresh declarative build over survivors
+    # end-state equality vs a recompute over the surviving events
     surv_ids = sorted(x for i in present for x in chunks[i])
     truth_dir = str(tmp_path / "truth")
     os.makedirs(truth_dir)
     base.unionByName(ev.where(F.col("event_id").isin(surv_ids))).toPandas(
     ).to_parquet(os.path.join(truth_dir, "events.parquet"), index=False)
-    truth = str(tmp_path / "cascade_truth")
-    persist_cascade(spark, truth_dir, truth, layout="hive")
-
-    def snap(p):
-        return {
-            g: sorted(
-                (str(r["window_start"]), r["event_type"],
-                 str(r["n_events"]), str(r["_sv"]))
-                for r in read_grain(spark, p, g).collect()
-            )
-            for g in ("minute", "hour", "day")
-        }
-
-    assert snap(path) == snap(truth), "cascade drifted from declarative build"
+    full = cascade_grains(spark, truth_dir)
+    for g in ("minute", "hour", "day"):
+        got = sorted(
+            (str(r["window_start"]), r["event_type"],
+             str(r["n_events"]), str(r["_sv"]))
+            for r in read_grain(spark, path, g).collect()
+        )
+        want = sorted(
+            (str(r["window_start"]), r["event_type"],
+             str(r["n_events"]), str(r["_sv"]))
+            for r in full[g].collect()
+        )
+        assert got == want, f"cascade {g} drifted from the recompute"
 
 
 def test_ivf_soak(spark, sf_dir, tmp_path):
@@ -152,7 +152,7 @@ def test_ivf_soak(spark, sf_dir, tmp_path):
     ).localCheckpoint()
     base_ids = {r.vec_id for r in emb.select("vec_id").collect()}
     path = str(tmp_path / "ivf")
-    persist_ivf_index(spark, sf_dir, path, k=8, iters=1, layout="snapshot")
+    persist_ivf_index(spark, sf_dir, path, k=8, iters=1)
     store = SnapshotStore(path)
 
     rng = random.Random(13)
@@ -220,8 +220,7 @@ def test_ledger_soak(spark, sf_dir, tmp_path):
         os.path.join(start_dir, "documents.parquet"), index=False
     )
     path = str(tmp_path / "ledger")
-    persist_near_dup_ledger(spark, start_dir, path, n_buckets=8,
-                            layout="snapshot")
+    persist_near_dup_ledger(spark, start_dir, path, n_buckets=8)
     store = SnapshotStore(path)
 
     t0 = time.monotonic()

@@ -463,3 +463,22 @@ def test_time_windows_range_leg_is_bucket_equi_join(spark, sf_dir):
         if ("HashJoin" in ln or "SortMergeJoin" in ln) and "_bucket" in ln
     ]
     assert join_lines, plan
+
+
+def test_ngram_dedup_candidate_semi_joins_broadcast_by_aqe(spark, sf_dir):
+    """ngram_jaccard_dedup semi-joins the corpus to its candidate ids
+    before tokenization. Those id frames are O(corpus) on
+    duplicate-heavy data, so they carry no broadcast hint and AQE picks
+    the strategy from runtime sizes: at the fixture scale both
+    semi-joins must still land as BroadcastHashJoin in the FINAL
+    adaptive plan (executed, not just compiled)."""
+    from rolaguard_data_collectors_spark.llm.dedup import ngram_jaccard_dedup
+
+    df = ngram_jaccard_dedup(spark, sf_dir)
+    df.collect()
+    root = df._jdf.queryExecution().executedPlan()
+    assert root.nodeName() == "AdaptiveSparkPlan", root.nodeName()
+    final = root.executedPlan().toString()
+    semis = [ln for ln in final.splitlines() if "LeftSemi" in ln]
+    assert len(semis) == 2, final
+    assert all("BroadcastHashJoin" in ln for ln in semis), final

@@ -1,8 +1,8 @@
 """Snapshot-versioned table layout (snapshots.py): the manifest +
-version-pointer commit protocol that gives the maintained cascade
-tables reader snapshot isolation, atomic cross-grain commits, time
-travel, metadata-only retention, and vacuum — with the SAME writer
-entry points (persist/append/retract/sink) as the hive layout.
+version-pointer commit protocol that gives every maintained artifact
+(cascade grains, near-dup ledger, IVF index) reader snapshot isolation,
+atomic cross-table commits, time travel, metadata-only retention, and
+vacuum.
 
 Reference parity note: the reference keeps no durable state at all
 (`auditing/datacollectors/BaseCollector.py:20-25` mutable dicts);
@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -43,55 +42,55 @@ def _snap(spark, path):
     }
 
 
-def test_snapshot_layout_equals_hive_through_append_and_retract(
-    spark, sf_dir, tmp_path
-):
-    """The same persist/append/retract sequence on both layouts lands
-    bit-identical grain content at every step — the snapshot layout is
-    a pure layout change, not a semantics change."""
-    ev = load_table(spark, sf_dir, "events")
-    hive = str(tmp_path / "hive")
-    snap = str(tmp_path / "snap")
-    base = ev.where(F.col("event_id") % 3 != 0)
-    batch = ev.where(F.col("event_id") % 3 == 0)
-    base_dir = str(tmp_path / "base")
-    os.makedirs(base_dir)
-    base.toPandas().to_parquet(
-        os.path.join(base_dir, "events.parquet"), index=False
-    )
-
-    persist_cascade(spark, base_dir, hive)
-    persist_cascade(spark, base_dir, snap, layout="snapshot")
-    assert _snap(spark, hive) == _snap(spark, snap)
-
-    cascade_append(spark, hive, batch)
-    cascade_append(spark, snap, batch)
-    assert _snap(spark, hive) == _snap(spark, snap)
-    # full-recompute ground truth
-    full = cascade_grains(spark, sf_dir)
-    got = _snap(spark, snap)
-    for g in ("minute", "hour", "day"):
+def _assert_equals_recompute(spark, path, sf_dir):
+    """Every grain of the maintained table equals ``cascade_grains``
+    recomputed from the events under ``sf_dir``."""
+    got = _snap(spark, path)
+    for g, df in cascade_grains(spark, sf_dir).items():
         want = {
             (r["window_start"], r["event_type"]): (r["n_events"], r["_sv"])
-            for r in full[g].collect()
+            for r in df.collect()
         }
         assert got[g] == want, g
 
-    cascade_retract(spark, hive, batch)
+
+def _events_dir(tmp_path, name, df):
+    d = str(tmp_path / name)
+    os.makedirs(d)
+    df.toPandas().to_parquet(os.path.join(d, "events.parquet"), index=False)
+    return d
+
+
+def test_snapshot_cascade_append_retract_equals_recompute(
+    spark, sf_dir, tmp_path
+):
+    """persist/append/retract on the snapshot table land bit-identical
+    grain content to a recompute over the events present at each step,
+    one version per operation."""
+    ev = load_table(spark, sf_dir, "events")
+    snap = str(tmp_path / "snap")
+    base_dir = _events_dir(tmp_path, "base",
+                           ev.where(F.col("event_id") % 3 != 0))
+    batch = ev.where(F.col("event_id") % 3 == 0)
+
+    persist_cascade(spark, base_dir, snap)
+    _assert_equals_recompute(spark, snap, base_dir)
+    cascade_append(spark, snap, batch)
+    _assert_equals_recompute(spark, snap, sf_dir)
     cascade_retract(spark, snap, batch)
-    assert _snap(spark, hive) == _snap(spark, snap)
+    _assert_equals_recompute(spark, snap, base_dir)
     # three commits: init, append, retract
     assert SnapshotStore(snap).current_version() == 3
 
 
 def test_snapshot_reader_isolation_and_time_travel(spark, sf_dir, tmp_path):
-    """The property the hive layout cannot give: a reader pinned
+    """The property an in-place partition swap cannot give: a reader pinned
     BEFORE a commit still scans its exact snapshot afterwards (no
     vanished files mid-scan), any historical version stays readable
     until vacuumed, and a vacuumed version raises a NAMED error."""
     ev = load_table(spark, sf_dir, "events")
     path = str(tmp_path / "snap")
-    persist_cascade(spark, sf_dir, path, layout="snapshot")
+    persist_cascade(spark, sf_dir, path)
     store = SnapshotStore(path)
     v1 = store.current_version()
 
@@ -129,7 +128,7 @@ def test_snapshot_manifest_pruning_reads_only_requested_days(
     ONLY those days' pinned directories — the scan's inputFiles all
     live under them (zero listing of the other 29 days)."""
     path = str(tmp_path / "snap")
-    persist_cascade(spark, sf_dir, path, layout="snapshot")
+    persist_cascade(spark, sf_dir, path)
     store = SnapshotStore(path)
     days = [d for d in store.table_days("minute") if d != "__null__"]
     pick = days[:2]
@@ -145,7 +144,7 @@ def test_snapshot_manifest_pruning_reads_only_requested_days(
 def test_snapshot_sink_exactly_once_and_all_crash_windows(
     spark, sf_dir, tmp_path
 ):
-    """Every commit crash window on the snapshot layout replays to the
+    """Every commit crash window on the snapshot table replays to the
     exact full recompute: (a) staged but not committed (marker
     present), (b) data renamed in but manifest missing, (c) manifest
     written but pointer not flipped, (d) committed-epoch replay no-op.
@@ -225,7 +224,7 @@ def test_snapshot_sink_exactly_once_and_all_crash_windows(
 
 def test_snapshot_empty_batch_epoch_commits_metadata_only(spark, tmp_path):
     """An empty micro-batch must still RECORD its epoch (else restart
-    replays it forever) — on the snapshot layout that is a
+    replays it forever) — on the snapshot table that is a
     metadata-only version: epoch_high bumps, no table entries change."""
     path = str(tmp_path / "snap_empty")
     SnapshotStore.create(path)
@@ -244,11 +243,11 @@ def test_snapshot_empty_batch_epoch_commits_metadata_only(spark, tmp_path):
 def test_snapshot_retract_whole_day_drops_atomically(spark, sf_dir, tmp_path):
     """Retracting ALL of a day's events removes that day from EVERY
     grain in ONE version — the cross-grain atomicity the per-partition
-    hive swap cannot express — while a pre-retract pinned version
+    per-partition swap cannot express — while a pre-retract pinned version
     still serves the dropped day until vacuum."""
     ev = load_table(spark, sf_dir, "events")
     path = str(tmp_path / "snap_drop")
-    persist_cascade(spark, sf_dir, path, layout="snapshot")
+    persist_cascade(spark, sf_dir, path)
     store = SnapshotStore(path)
     v1 = store.current_version()
     day = next(d for d in store.table_days("day") if d != "__null__")
@@ -273,7 +272,7 @@ def test_snapshot_expire_is_metadata_only_then_vacuum_reclaims(
     (O(partitions) pointer work — no data IO at 100 TB); the bytes
     stay on disk for pinned readers until vacuum retires them."""
     path = str(tmp_path / "snap_exp")
-    persist_cascade(spark, sf_dir, path, layout="snapshot")
+    persist_cascade(spark, sf_dir, path)
     store = SnapshotStore(path)
     days = store.table_days("day")
     cutoff = days[2]
@@ -367,7 +366,7 @@ def test_snapshot_pending_commit_recovery_before_stage_read(
     base.toPandas().to_parquet(
         os.path.join(base_dir, "events.parquet"), index=False
     )
-    persist_cascade(spark, base_dir, path, layout="snapshot")
+    persist_cascade(spark, base_dir, path)
 
     class Boom(Exception):
         pass
@@ -396,17 +395,14 @@ def test_snapshot_pending_commit_recovery_before_stage_read(
         assert got[g] == want, g
 
 
-@pytest.mark.parametrize("layout", ["hive", "snapshot"])
-def test_retract_that_empties_every_touched_day(spark, sf_dir, tmp_path,
-                                                layout):
-    """Edge found while building the snapshot layer, latent in BOTH
-    layouts: a retraction whose batch cancels EVERY touched day leaves
-    nothing to stage — the old code wrote an empty minute parquet dir
-    and the hour derivation died on schema inference. The stage is now
-    just the drop list."""
+def test_retract_that_empties_every_touched_day(spark, sf_dir, tmp_path):
+    """Edge found while building the snapshot layer: a retraction whose
+    batch cancels EVERY touched day leaves nothing to stage — the old
+    code wrote an empty minute parquet dir and the hour derivation died
+    on schema inference. The stage is now just the drop list."""
     ev = load_table(spark, sf_dir, "events")
-    path = str(tmp_path / f"full_{layout}")
-    persist_cascade(spark, sf_dir, path, layout=layout)
+    path = str(tmp_path / "full")
+    persist_cascade(spark, sf_dir, path)
     day = next(
         d for d in sorted(
             r["d"] for r in ev.select(
@@ -429,26 +425,6 @@ def test_retract_that_empties_every_touched_day(spark, sf_dir, tmp_path,
         ), g
         # surviving groups bit-identical
         assert all(after[g][k] == before[g][k] for k in after[g]), g
-
-
-def test_hive_maintenance_ops_reject_snapshot_roots(spark, sf_dir, tmp_path):
-    """compact_partitions/expire_partitions walk hive ``col=`` dirs —
-    on a snapshot root they'd silently no-op; they must instead raise
-    and name the snapshot-native replacement."""
-    from rolaguard_data_collectors_spark.plans.scale import (
-        compact_partitions,
-        expire_partitions,
-    )
-
-    path = str(tmp_path / "snap_guard")
-    persist_cascade(spark, sf_dir, path, layout="snapshot")
-    with pytest.raises(ValueError, match="snapshot-layout"):
-        compact_partitions(spark, path)
-    with pytest.raises(ValueError, match="snapshot-layout"):
-        expire_partitions(os.path.join(path, "day"), before="2100-01-01")
-    with pytest.raises(ValueError, match="snapshot-layout"):
-        compact_partitions(spark, os.path.join(path, "postings"),
-                           lock_root=path)
 
 
 def test_snapshot_retract_sink_whole_day_drop_is_committed(
@@ -502,8 +478,7 @@ def test_snapshot_ivf_sink_replay_safe_past_vacuum_horizon(
         os.path.join(base_dir, "embeddings.parquet"), index=False
     )
     path = str(tmp_path / "snap_vh")
-    persist_ivf_index(spark, base_dir, path, k=4, iters=2,
-                      layout="snapshot")
+    persist_ivf_index(spark, base_dir, path, k=4, iters=2)
     sink = IvfAppendSink(path)
     newv = emb.where(F.col("vec_id") % 3 == 0)
     b_epoch = newv.where(F.col("vec_id") % 5 == 0).limit(20)
@@ -562,7 +537,7 @@ def test_snapshot_vacuum_reclaims_dead_versions_fully(spark, sf_dir,
     version's dirs must actually disappear from disk."""
     ev = load_table(spark, sf_dir, "events")
     path = str(tmp_path / "snap_vac")
-    persist_cascade(spark, sf_dir, path, layout="snapshot")
+    persist_cascade(spark, sf_dir, path)
     store = SnapshotStore(path)
     cascade_append(spark, path, ev.limit(50))
     store.compact(spark, max_files=0, target_files=1)  # rewrites all
@@ -585,7 +560,7 @@ def test_snapshot_failed_build_does_not_poison_root(spark, sf_dir,
                                                     tmp_path):
     """Round-10 review find: the version pointer is created only AFTER
     the staging job succeeded — a failed build leaves no snapshot
-    root, and the retry simply works (the hive layout's semantics)."""
+    root, and the retry simply works."""
     import rolaguard_data_collectors_spark.operators.cascade as C
 
     path = str(tmp_path / "snap_poison")
@@ -601,11 +576,11 @@ def test_snapshot_failed_build_does_not_poison_root(spark, sf_dir,
     C.cascade_grains = dying
     try:
         with pytest.raises(Boom):
-            persist_cascade(spark, sf_dir, path, layout="snapshot")
+            persist_cascade(spark, sf_dir, path)
     finally:
         C.cascade_grains = orig
     assert not SnapshotStore.is_snapshot(path)
-    persist_cascade(spark, sf_dir, path, layout="snapshot")  # retry works
+    persist_cascade(spark, sf_dir, path)  # retry works
     assert SnapshotStore(path).current_version() == 1
 
 
@@ -631,21 +606,19 @@ def test_snapshot_persist_rebuild_fails_fast_without_mutation(
     )
 
     lpath = str(tmp_path / "led")
-    persist_near_dup_ledger(spark, sf_dir, lpath, n_buckets=8,
-                            layout="snapshot")
+    persist_near_dup_ledger(spark, sf_dir, lpath, n_buckets=8)
     with open(os.path.join(lpath, "_meta.json")) as fh:
         meta_before = json.load(fh)
     with pytest.raises(ValueError, match="already a snapshot ledger"):
-        persist_near_dup_ledger(spark, sf_dir, lpath, n_buckets=4,
-                                layout="snapshot")
+            persist_near_dup_ledger(spark, sf_dir, lpath, n_buckets=4)
     with open(os.path.join(lpath, "_meta.json")) as fh:
         assert json.load(fh) == meta_before  # n_buckets NOT rewritten
 
     cpath = str(tmp_path / "casc")
-    persist_cascade(spark, sf_dir, cpath, layout="snapshot")
+    persist_cascade(spark, sf_dir, cpath)
     before = _snap(spark, cpath)
     with pytest.raises(ValueError, match="already a snapshot cascade"):
-        persist_cascade(spark, sf_dir, cpath, layout="snapshot")
+        persist_cascade(spark, sf_dir, cpath)
     assert _snap(spark, cpath) == before
 
 
@@ -657,7 +630,7 @@ def test_snapshot_rollback_detects_cross_process_vacuum(
     commit a manifest pointing at deleted dirs."""
     ev = load_table(spark, sf_dir, "events")
     path = str(tmp_path / "snap_xv")
-    persist_cascade(spark, sf_dir, path, layout="snapshot")
+    persist_cascade(spark, sf_dir, path)
     store = SnapshotStore(path)
     v1 = store.current_version()
     store.manifest(v1)  # warm this instance's cache
@@ -729,12 +702,11 @@ def _ledger_state(spark, path):
 def test_snapshot_ledger_parity_roundtrip_and_atomic_commits(
     spark, sf_dir, tmp_path
 ):
-    """The near-dup ledger on the snapshot layout (round 10, second
-    maintained artifact ported): init/append/retract land bit-identical
-    to the hive layout, append equals the full rebuild over the merged
-    corpus, retract+append round-trips, and each epoch is ONE version —
-    labels, anchors and assignments commit atomically (the hive swap
-    exposes them table-by-table)."""
+    """The near-dup ledger on the snapshot table: append equals the full
+    rebuild over the merged corpus, retract equals the full rebuild
+    over the surviving corpus, retract+append round-trips, and each
+    epoch is ONE version — labels, anchors and assignments commit
+    atomically."""
     from rolaguard_data_collectors_spark.llm.components import (
         ledger_append,
         ledger_retract,
@@ -749,17 +721,12 @@ def test_snapshot_ledger_parity_roundtrip_and_atomic_commits(
     old.toPandas().to_parquet(
         os.path.join(old_dir, "documents.parquet"), index=False
     )
-    hive = str(tmp_path / "hive")
     snap = str(tmp_path / "snap")
-    persist_near_dup_ledger(spark, old_dir, hive, n_buckets=8)
-    persist_near_dup_ledger(spark, old_dir, snap, n_buckets=8,
-                            layout="snapshot")
-    assert _ledger_state(spark, hive) == _ledger_state(spark, snap)
+    persist_near_dup_ledger(spark, old_dir, snap, n_buckets=8)
+    old_truth = _ledger_state(spark, snap)
 
     store = SnapshotStore(snap)
-    ledger_append(spark, hive, new)
     ledger_append(spark, snap, new)
-    assert _ledger_state(spark, hive) == _ledger_state(spark, snap)
     assert store.current_version() == 2  # ONE atomic version per epoch
 
     # full-rebuild equality over the merged corpus
@@ -769,9 +736,8 @@ def test_snapshot_ledger_parity_roundtrip_and_atomic_commits(
 
     before = _ledger_state(spark, snap)
     ledger_retract(spark, snap, new.select("doc_id"))
-    old_truth = str(tmp_path / "old_truth")
-    persist_near_dup_ledger(spark, old_dir, old_truth, n_buckets=8)
-    assert _ledger_state(spark, snap) == _ledger_state(spark, old_truth)
+    assert store.current_version() == 3
+    assert _ledger_state(spark, snap) == old_truth
     ledger_append(spark, snap, new)
     assert _ledger_state(spark, snap) == before
 
@@ -798,8 +764,7 @@ def test_snapshot_ledger_sink_exactly_once_crash_and_pinned_reader(
         os.path.join(old_dir, "documents.parquet"), index=False
     )
     path = str(tmp_path / "snap_sink")
-    persist_near_dup_ledger(spark, old_dir, path, n_buckets=8,
-                            layout="snapshot")
+    persist_near_dup_ledger(spark, old_dir, path, n_buckets=8)
     store = SnapshotStore(path)
     sink = NearDupLedgerSink(path)
     b0 = new.where(F.col("doc_id") % 8 == 0)
@@ -991,9 +956,8 @@ def test_snapshot_history_and_rollback(spark, sf_dir, tmp_path):
 
 
 def test_snapshot_cascade_random_op_sequence_parity(spark, sf_dir, tmp_path):
-    """Seeded random interleaving of cascade appends and retractions
-    applied IDENTICALLY to a hive and a snapshot table: the two stay
-    bit-identical after every step, and both end equal to the direct
+    """Seeded random interleaving of cascade appends and retractions:
+    after every step the table is bit-identical to the direct
     recompute over the currently-present events."""
     import random
 
@@ -1008,46 +972,30 @@ def test_snapshot_cascade_random_op_sequence_parity(spark, sf_dir, tmp_path):
     present = set(rng.sample(ids, len(ids) // 2))
     absent = set(ids) - present
 
-    start_dir = str(tmp_path / "start")
-    os.makedirs(start_dir)
-    ev.where(F.col("event_id").isin(sorted(present))).toPandas().to_parquet(
-        os.path.join(start_dir, "events.parquet"), index=False
+    start_dir = _events_dir(
+        tmp_path, "start", ev.where(F.col("event_id").isin(sorted(present)))
     )
-    hive = str(tmp_path / "hive")
     snap = str(tmp_path / "snap")
-    persist_cascade(spark, start_dir, hive)
-    persist_cascade(spark, start_dir, snap, layout="snapshot")
+    persist_cascade(spark, start_dir, snap)
 
-    for _step in range(5):
+    for step in range(5):
         if (rng.random() < 0.5 and absent) or not present:
             batch = set(rng.sample(sorted(absent), min(300, len(absent))))
-            bdf = ev.where(F.col("event_id").isin(sorted(batch)))
-            cascade_append(spark, hive, bdf)
-            cascade_append(spark, snap, bdf)
+            cascade_append(spark, snap,
+                           ev.where(F.col("event_id").isin(sorted(batch))))
             present |= batch
             absent -= batch
         else:
             batch = set(rng.sample(sorted(present), min(300, len(present))))
-            bdf = ev.where(F.col("event_id").isin(sorted(batch)))
-            cascade_retract(spark, hive, bdf)
-            cascade_retract(spark, snap, bdf)
+            cascade_retract(spark, snap,
+                            ev.where(F.col("event_id").isin(sorted(batch))))
             present -= batch
             absent |= batch
-        assert _snap(spark, hive) == _snap(spark, snap), _step
-
-    truth_dir = str(tmp_path / "truth")
-    os.makedirs(truth_dir)
-    ev.where(F.col("event_id").isin(sorted(present))).toPandas().to_parquet(
-        os.path.join(truth_dir, "events.parquet"), index=False
-    )
-    full = cascade_grains(spark, truth_dir)
-    got = _snap(spark, snap)
-    for g in ("minute", "hour", "day"):
-        want = {
-            (r["window_start"], r["event_type"]): (r["n_events"], r["_sv"])
-            for r in full[g].collect()
-        }
-        assert got[g] == want, g
+        truth_dir = _events_dir(
+            tmp_path, f"truth{step}",
+            ev.where(F.col("event_id").isin(sorted(present))),
+        )
+        _assert_equals_recompute(spark, snap, truth_dir)
 
 
 def _ivf_emb(spark, sf_dir):
@@ -1069,21 +1017,24 @@ def _ivf_posts(spark, path):
 def test_snapshot_ivf_parity_atomic_apply_and_pinned_reader(
     spark, sf_dir, tmp_path
 ):
-    """The IVF index on the snapshot layout (third maintained artifact
-    ported; ADD-mode commits): init/append/delete/apply land identical
-    to the hive layout, an append epoch never rewrites a cell (its
-    staged dir is APPENDED to the manifest entry), apply_ivf_tombstones
-    rewrites tombstoned cells and drains their sidecars in ONE atomic
-    commit (the hive recipe's swap-then-clear window does not exist),
-    and a reader pinned pre-apply keeps its exact files."""
+    """The IVF index on the snapshot table (ADD-mode commits): after
+    init/append/delete/apply the postings equal a frozen-codebook
+    rebuild — the live vectors routed against the persisted centroids —
+    an append epoch never rewrites a cell (its staged dir is APPENDED
+    to the manifest entry), apply_ivf_tombstones rewrites tombstoned
+    cells and drains their sidecars in ONE atomic commit, and a reader
+    pinned pre-apply keeps its exact files."""
     from rolaguard_data_collectors_spark.llm.kmeans import (
+        _emb,
+        _postings_frame,
+        _route_for_index,
         apply_ivf_tombstones,
         ivf_index_append,
         ivf_index_delete,
         persist_ivf_index,
     )
 
-    emb = _ivf_emb(spark, sf_dir)
+    emb = _emb(spark, sf_dir)
     base_dir = str(tmp_path / "base")
     os.makedirs(base_dir)
     load_table(spark, sf_dir, "embeddings").where(
@@ -1092,46 +1043,58 @@ def test_snapshot_ivf_parity_atomic_apply_and_pinned_reader(
         os.path.join(base_dir, "embeddings.parquet"), index=False
     )
     newv = emb.where(F.col("vec_id") % 3 == 0)
-    hive = str(tmp_path / "hive")
     snap = str(tmp_path / "snap")
-    c1 = persist_ivf_index(spark, base_dir, hive, k=4, iters=2)
-    c2 = persist_ivf_index(spark, base_dir, snap, k=4, iters=2,
-                           layout="snapshot")
-    assert c1 == c2
-    assert _ivf_posts(spark, hive) == _ivf_posts(spark, snap)
+    persist_ivf_index(spark, base_dir, snap, k=4, iters=2)
+
+    def rebuild(ids):
+        """(vec_id, cluster) of the frozen-codebook rebuild over ids."""
+        return sorted(
+            (r["vec_id"], r["cluster"])
+            for r in _route_for_index(
+                spark, snap, emb.where(F.col("vec_id").isin(sorted(ids)))
+            ).select("vec_id", "cluster").collect()
+        )
+
+    live = {v for v, _ in _ivf_posts(spark, snap)}
+    assert _ivf_posts(spark, snap) == rebuild(live)
 
     store = SnapshotStore(snap)
-    assert ivf_index_append(spark, hive, newv) == ivf_index_append(
-        spark, snap, newv
+    new_ids = {r["vec_id"] for r in newv.select("vec_id").collect()}
+    assert ivf_index_append(spark, snap, newv) == sorted(
+        {c for _, c in rebuild(new_ids)}
     )
-    assert _ivf_posts(spark, hive) == _ivf_posts(spark, snap)
+    live |= new_ids
+    assert _ivf_posts(spark, snap) == rebuild(live)
     # ADD-mode: the appended cells' manifest entries now hold TWO dirs
     m = store.manifest()
     assert any(len(rels) == 2 for rels in m["tables"]["postings"].values())
 
     doomed = newv.select("vec_id").limit(7)
-    assert ivf_index_delete(spark, hive, doomed) == ivf_index_delete(
-        spark, snap, doomed
-    )
-    assert _ivf_posts(spark, hive) == _ivf_posts(spark, snap)
+    doomed_ids = {r["vec_id"] for r in doomed.collect()}
+    ivf_index_delete(spark, snap, doomed)
+    live -= doomed_ids
+    assert _ivf_posts(spark, snap) == rebuild(live)
 
     v = store.current_version()
     pinned = store.read(spark, "postings", version=v)
     pn = pinned.count()
-    n_before = len(_ivf_posts(spark, snap))
-    assert apply_ivf_tombstones(spark, hive) == apply_ivf_tombstones(
-        spark, snap
+    assert apply_ivf_tombstones(spark, snap)
+    assert _ivf_posts(spark, snap) == rebuild(live)
+    # physically gone, not just hidden by the reader's anti-join
+    raw = sorted(
+        (r["vec_id"], r["cluster"])
+        for r in _postings_frame(spark, snap).collect()
     )
-    assert _ivf_posts(spark, hive) == _ivf_posts(spark, snap)
-    assert len(_ivf_posts(spark, snap)) == n_before
+    assert raw == rebuild(live)
     # atomic drain: ONE commit rewrote the cells and emptied the sidecar
+    assert store.current_version() == v + 1
     assert store.table_days("tombstones") == []
     assert pinned.count() == pn  # pre-apply reader undisturbed
-    # id-reuse is legal again after apply, both layouts
-    re_add = emb.join(doomed, "vec_id").limit(2)
-    ivf_index_append(spark, hive, re_add)
-    ivf_index_append(spark, snap, re_add)
-    assert _ivf_posts(spark, hive) == _ivf_posts(spark, snap)
+    # id-reuse is legal again after apply
+    ivf_index_append(spark, snap, emb.join(doomed, "vec_id").limit(2))
+    live |= {v for v, _ in _ivf_posts(spark, snap)} & doomed_ids
+    assert len(live & doomed_ids) == 2
+    assert _ivf_posts(spark, snap) == rebuild(live)
 
 
 def test_snapshot_ivf_sinks_exactly_once_and_changed_cells_feed(
@@ -1158,8 +1121,7 @@ def test_snapshot_ivf_sinks_exactly_once_and_changed_cells_feed(
     )
     newv = emb.where(F.col("vec_id") % 3 == 0)
     path = str(tmp_path / "snap_sink")
-    persist_ivf_index(spark, base_dir, path, k=4, iters=2,
-                      layout="snapshot")
+    persist_ivf_index(spark, base_dir, path, k=4, iters=2)
     sink = IvfAppendSink(path)
     b0 = newv.where(F.col("vec_id") % 2 == 0)
     b1 = newv.where(F.col("vec_id") % 2 != 0)
@@ -1217,8 +1179,7 @@ def test_snapshot_compact_merges_additive_fragments(spark, sf_dir, tmp_path):
         os.path.join(base_dir, "embeddings.parquet"), index=False
     )
     path = str(tmp_path / "snap_frag")
-    persist_ivf_index(spark, base_dir, path, k=2, iters=2,
-                      layout="snapshot")
+    persist_ivf_index(spark, base_dir, path, k=2, iters=2)
     for i in (0, 2, 3):
         ivf_index_append(spark, path,
                          emb.where(F.col("vec_id") % 4 == i))
@@ -1253,8 +1214,7 @@ def test_snapshot_ivf_concurrent_writer_stress(spark, sf_dir, tmp_path):
     )
 
     path = str(tmp_path / "snap_stress")
-    persist_ivf_index(spark, sf_dir, path, k=4, iters=1,
-                      layout="snapshot")
+    persist_ivf_index(spark, sf_dir, path, k=4, iters=1)
     emb = _emb(spark, sf_dir)
     base_ids = {r["vec_id"] for r in emb.select("vec_id").collect()}
     store = SnapshotStore(path)
@@ -1330,9 +1290,9 @@ def test_snapshot_live_reader_survives_concurrent_churn(
     compacts and vacuums must (a) never hit a vanished file, (b)
     re-collect each pinned snapshot IDENTICALLY even after the table
     moved on, and (c) see the exact final state once the churn ends.
-    Under the hive layout the same interleaving dies mid-scan when a
-    swap rmtree's a partition between a reader's listing and its read
-    (the tablelock.py scope note); here vacuum(keep_last=3) guarantees
+    An in-place partition swap would die mid-scan in the same
+    interleaving, when it rmtree's a partition between a reader's
+    listing and its read; here vacuum(keep_last=3) guarantees
     any snapshot the reader pinned within the last two commits is
     still fully on disk."""
     import threading
@@ -1345,7 +1305,7 @@ def test_snapshot_live_reader_survives_concurrent_churn(
     base.toPandas().to_parquet(
         os.path.join(base_dir, "events.parquet"), index=False
     )
-    persist_cascade(spark, base_dir, path, layout="snapshot")
+    persist_cascade(spark, base_dir, path)
     store = SnapshotStore(path)
 
     batches = [ev.where(F.col("event_id") % 4 == i) for i in (1, 2, 3)]
@@ -1470,8 +1430,7 @@ def test_ledger_rebuild_allowed_after_crashed_init(spark, sf_dir, tmp_path):
     with open(os.path.join(path, "_meta.json"), "w") as fh:
         json.dump({"n_buckets": 16}, fh)
     SnapshotStore.create(path)  # crash before the init commit
-    persist_near_dup_ledger(spark, sf_dir, path, n_buckets=8,
-                            layout="snapshot")
+    persist_near_dup_ledger(spark, sf_dir, path, n_buckets=8)
     store = SnapshotStore(path)
     assert store.current_version() == 1
     with open(os.path.join(path, "_meta.json")) as fh:
@@ -1510,3 +1469,49 @@ def test_history_does_not_pin_manifests_in_cache(spark, tmp_path):
     rows = fresh.history()
     assert [r["version"] for r in rows] == list(range(6))
     assert fresh._manifest_cache == {}
+
+
+def _reject_cases():
+    from rolaguard_data_collectors_spark.llm import components as C
+    from rolaguard_data_collectors_spark.llm import kmeans as K
+    from rolaguard_data_collectors_spark.operators import cascade as CA
+
+    return {
+        "cascade_append": lambda sp, p, df: CA.cascade_append(sp, p, df),
+        "cascade_retract": lambda sp, p, df: CA.cascade_retract(sp, p, df),
+        "ledger_append": lambda sp, p, df: C.ledger_append(sp, p, df),
+        "ledger_retract": lambda sp, p, df: C.ledger_retract(sp, p, df),
+        "ivf_index_append": lambda sp, p, df: K.ivf_index_append(sp, p, df),
+        "ivf_index_delete": lambda sp, p, df: K.ivf_index_delete(sp, p, df),
+        "apply_ivf_tombstones":
+            lambda sp, p, df: K.apply_ivf_tombstones(sp, p),
+        "CascadeMaintenanceSink":
+            lambda sp, p, df: CA.CascadeMaintenanceSink(p)(df, 0),
+        "NearDupLedgerSink": lambda sp, p, df: C.NearDupLedgerSink(p)(df, 0),
+        "IvfAppendSink": lambda sp, p, df: K.IvfAppendSink(p)(df, 0),
+        "IvfDeleteSink": lambda sp, p, df: K.IvfDeleteSink(p)(df, 0),
+    }
+
+
+@pytest.mark.parametrize("entry", sorted(_reject_cases()))
+def test_maintenance_entry_points_reject_non_snapshot_root(spark, tmp_path,
+                                                           entry):
+    """Every maintenance entry point handed a path that is not a
+    snapshot table raises the one named error, pointing at the
+    builders — it never starts a new table tree there (neither in a
+    missing path nor in an existing empty directory)."""
+    from rolaguard_data_collectors_spark.snapshots import (
+        NotASnapshotRootError,
+    )
+
+    call = _reject_cases()[entry]
+    batch = spark.createDataFrame([], "doc_id long")
+    missing = str(tmp_path / "missing")
+    empty = str(tmp_path / "empty")
+    os.makedirs(empty)
+    for root in (missing, empty):
+        with pytest.raises(NotASnapshotRootError, match="persist_cascade"):
+            call(spark, root, batch)
+    assert not os.path.exists(missing)
+    assert os.listdir(empty) == []
+    assert issubclass(NotASnapshotRootError, ValueError)

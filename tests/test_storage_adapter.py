@@ -400,7 +400,7 @@ def test_full_epoch_through_adapter_no_metadata_rename(spark, sf_dir,
     ad = MemoryConditionalStore()
     storage.register_adapter(cpath, ad)
     try:
-        persist_cascade(spark, base_dir, cpath, layout="snapshot")
+        persist_cascade(spark, base_dir, cpath)
         cascade_append(spark, cpath, extra)
         store = SnapshotStore(cpath)
         assert store._store is ad

@@ -841,17 +841,16 @@ def test_streaming_interval_join_matches_batch_twin(
     assert got == want and len(want) > 0
 
 
-@pytest.mark.parametrize("layout", ["hive", "snapshot"])
 def test_cascade_maintenance_stream(spark, sf_dir, events_stream_feed,
-                                    tmp_path, layout):
+                                    tmp_path):
     """Round 9: the continuous-aggregate maintenance flow end to end —
     the events stream maintains the persisted minute/hour/day grain
     tables through foreachBatch(CascadeMaintenanceSink) across many
     micro-batches, and the final tables equal a full batch recompute
-    bit-exactly (decimal sums make merge generations exact). The
-    snapshot leg drives the version-commit publishing through a REAL
-    StreamingQuery (Spark-generated epoch ids, one manifest version
-    per micro-batch, epochs recorded in the manifests)."""
+    bit-exactly (decimal sums make merge generations exact). A REAL
+    StreamingQuery drives the version-commit publishing
+    (Spark-generated epoch ids, one manifest version per micro-batch,
+    epochs recorded in the manifests)."""
     from rolaguard_data_collectors_spark.operators.cascade import (
         cascade_grains,
         read_grain,
@@ -860,20 +859,18 @@ def test_cascade_maintenance_stream(spark, sf_dir, events_stream_feed,
     from rolaguard_data_collectors_spark.snapshots import SnapshotStore
 
     path = str(tmp_path / "casc_tables")
-    if layout == "snapshot":
-        SnapshotStore.create(path)  # table birth chooses the layout
+    SnapshotStore.create(path)  # table birth: an empty snapshot table
     q = start_cascade_maintenance(
         _events_stream(spark, events_stream_feed, batch_size=200),
         path,
         str(tmp_path / "casc_ckpt"),
     )
     _drain(q)
-    if layout == "snapshot":
-        store = SnapshotStore(path)
-        assert store.current_version() >= 2  # one commit per micro-batch
-        assert store.epoch_committed("append", 0)
-        ops = {h["op"] for h in store.history()}
-        assert ops <= {"create", "append"}, ops
+    store = SnapshotStore(path)
+    assert store.current_version() >= 2  # one commit per micro-batch
+    assert store.epoch_committed("append", 0)
+    ops = {h["op"] for h in store.history()}
+    assert ops <= {"create", "append"}, ops
     full = cascade_grains(spark, sf_dir)
     for g in ("minute", "hour", "day"):
         got = {

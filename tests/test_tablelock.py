@@ -1,13 +1,12 @@
 """Single-writer lease for maintained tables (tablelock.py) and its
 wiring into the append sinks + lake maintenance ops (round-10 verdict
 item #1): a sink epoch interleaved with a compaction must lose
-nothing, and the fence must catch a writer that bypasses the lease."""
+nothing, and retention must wait for a sink epoch's lease."""
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 import threading
 import time
 
@@ -132,45 +131,52 @@ def _ivf_fixture(spark, sf_dir, path):
     return emb
 
 
-def _postings_rows(spark, posts):
+def _postings_rows(spark, path):
+    from rolaguard_data_collectors_spark.llm.kmeans import _postings_frame
+
     return sorted(
         (r["vec_id"], r["cluster"], tuple(r["v"]))
-        for r in spark.read.parquet(posts).collect()
+        for r in _postings_frame(spark, path).collect()
     )
 
 
 def test_sink_epoch_interleaved_with_compaction_loses_nothing(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, tmp_path, monkeypatch
 ):
-    """THE round-9 verdict scenario: compaction stages a partition,
-    then a live IvfAppendSink tries to commit an epoch into it before
-    the swap. With the shared lease the sink BLOCKS until compaction's
-    swap finished; the final table holds the compacted rows AND the
-    sink epoch's rows — nothing the commit log calls durable is lost."""
-    from rolaguard_data_collectors_spark.llm.kmeans import IvfAppendSink, _emb
-    from rolaguard_data_collectors_spark.plans.scale import compact_partitions
+    """THE round-9 verdict scenario: compaction stages its rewrite,
+    then a live IvfAppendSink tries to commit an epoch before the
+    compaction commits. With the shared lease the sink BLOCKS until
+    compaction finished; the final table holds the compacted rows AND
+    the sink epoch's rows — nothing the epoch record calls durable is
+    lost."""
+    from rolaguard_data_collectors_spark.llm.kmeans import IvfAppendSink
+    from rolaguard_data_collectors_spark.snapshots import SnapshotStore
 
     path = str(tmp_path / "ivf")
     emb = _ivf_fixture(spark, sf_dir, path)
-    posts = path + "/postings"
-    before = _postings_rows(spark, posts)
+    before = _postings_rows(spark, path)
 
     staged = threading.Event()
     resume = threading.Event()
     compact_result: list = []
+    real_commit = SnapshotStore.commit_staged
+
+    def paused_commit(self, edir, op, *a, **k):
+        if op == "compact":  # stage done, commit pending: hold the lease
+            staged.set()
+            resume.wait(30)
+        return real_commit(self, edir, op, *a, **k)
+
+    monkeypatch.setattr(SnapshotStore, "commit_staged", paused_commit)
 
     def slow_compact():
         compact_result.append(
-            compact_partitions(
-                spark, posts, max_files=2, target_files=1,
-                lock_root=path,  # the root the sink locks
-                _after_stage=lambda: (staged.set(), resume.wait(30)),
-            )
+            SnapshotStore(path).compact(spark, max_files=2, target_files=1)
         )
 
     t = threading.Thread(target=slow_compact)
     t.start()
-    assert staged.wait(60), "compaction never reached the staged hook"
+    assert staged.wait(60), "compaction never reached its commit"
 
     sink = IvfAppendSink(path)
     batch = emb.limit(3).select(
@@ -185,8 +191,8 @@ def test_sink_epoch_interleaved_with_compaction_loses_nothing(
     s = threading.Thread(target=sink_epoch)
     s.start()
     time.sleep(0.7)
-    # the lease is held by compaction mid-stage: the epoch must be blocked
-    assert not sink_done, "sink committed inside compaction's stage/swap window"
+    # the lease is held by compaction mid-commit: the epoch must be blocked
+    assert not sink_done, "sink committed inside compaction's stage/commit"
     resume.set()
     t.join(120)
     s.join(120)
@@ -196,76 +202,29 @@ def test_sink_epoch_interleaved_with_compaction_loses_nothing(
     new_rows = sorted(
         (r["vec_id"], tuple(r["v"])) for r in batch.collect()
     )
-    after = _postings_rows(spark, posts)
+    after = _postings_rows(spark, path)
     assert [(v, x) for v, _, x in after if v >= 90_000_000] == new_rows
     assert [r for r in after if r[0] < 90_000_000] == before  # zero loss
-    assert not os.path.exists(os.path.join(posts, "_compact_tmp"))
-
-
-def test_compaction_fence_catches_lock_bypassing_writer(
-    spark, sf_dir, tmp_path
-):
-    """Defense-in-depth: a writer that ignores the lease and drops a
-    file into a live partition between stage-read and swap. The epoch
-    fence re-lists before the marker and restages the moved partition,
-    so the interloper's rows survive the swap."""
-    from rolaguard_data_collectors_spark.plans.scale import compact_partitions
-
-    path = str(tmp_path / "ivf")
-    _ivf_fixture(spark, sf_dir, path)
-    posts = path + "/postings"
-
-    # pick a partition compaction will rewrite
-    victim = next(
-        d for d in sorted(os.listdir(posts))
-        if d.startswith("cluster=") and sum(
-            1 for f in os.listdir(os.path.join(posts, d))
-            if f.startswith(("part-", "epoch"))
-        ) > 2
-    )
-    live = os.path.join(posts, victim)
-
-    # rogue row with the partition-local schema (vec_id, v)
-    rogue_dir = str(tmp_path / "rogue")
-    spark.read.parquet(live).limit(1).select(
-        F.lit(777_000_000).cast("long").alias("vec_id"), "v"
-    ).coalesce(1).write.parquet(rogue_dir)
-    rogue_part = next(
-        f for f in os.listdir(rogue_dir) if f.startswith("part-")
-    )
-
-    def bypasser():
-        shutil.copy(
-            os.path.join(rogue_dir, rogue_part),
-            os.path.join(live, "epoch999-" + rogue_part),
-        )
-
-    compacted = compact_partitions(
-        spark, posts, max_files=2, target_files=1,
-        lock_root=path, _after_stage=bypasser,
-    )
-    assert victim in compacted
-    got = _postings_rows(spark, posts)
-    assert any(v == 777_000_000 for v, _, _ in got), "fence lost the rogue row"
-    assert not os.path.exists(os.path.join(posts, "_compact_tmp"))
 
 
 def test_ivf_concurrent_append_delete_apply_stress(spark, sf_dir, tmp_path):
-    """Three writers hammer one index concurrently — append epochs,
-    routed deletes of base vectors, tombstone applies and a compaction
-    — every operation serialized only by the table lease. The final
-    index must equal exactly (base + all appends) minus the deletes,
-    with drained sidecars and no scratch left: order-independence is
-    what the single-writer contract buys."""
+    """Three writers hammer one index concurrently through the
+    STREAMING sinks — append epochs, delete epochs of base vectors,
+    tombstone applies and a compaction — every operation serialized
+    only by the table lease. The final index must equal exactly (base +
+    all appends) minus the deletes, with drained sidecars, every epoch
+    recorded once, and no scratch left: order-independence is what the
+    single-writer contract buys."""
     from rolaguard_data_collectors_spark.llm.kmeans import (
+        IvfAppendSink,
+        IvfDeleteSink,
         _emb,
+        _postings_frame,
         apply_ivf_tombstones,
-        ivf_index_append,
-        ivf_index_delete,
         persist_ivf_index,
         read_ivf_postings,
     )
-    from rolaguard_data_collectors_spark.plans.scale import compact_partitions
+    from rolaguard_data_collectors_spark.snapshots import SnapshotStore
 
     path = str(tmp_path / "ivf")
     persist_ivf_index(spark, sf_dir, path, k=4, iters=1)
@@ -286,15 +245,17 @@ def test_ivf_concurrent_append_delete_apply_stress(spark, sf_dir, tmp_path):
 
     def appender():
         try:
-            for b in append_batches:
-                ivf_index_append(spark, path, b)
+            sink = IvfAppendSink(path)
+            for epoch, b in enumerate(append_batches):
+                sink(b, epoch)
         except Exception as e:  # pragma: no cover - surfaced below
             errors.append(e)
 
     def deleter():
         try:
-            for b in delete_batches:
-                ivf_index_delete(spark, path, b)
+            sink = IvfDeleteSink(path)
+            for epoch, b in enumerate(delete_batches):
+                sink(b, epoch)
                 apply_ivf_tombstones(spark, path)
         except Exception as e:  # pragma: no cover
             errors.append(e)
@@ -302,8 +263,7 @@ def test_ivf_concurrent_append_delete_apply_stress(spark, sf_dir, tmp_path):
     def maintainer():
         try:
             apply_ivf_tombstones(spark, path)
-            compact_partitions(spark, path + "/postings", max_files=2,
-                               target_files=1, lock_root=path)
+            SnapshotStore(path).compact(spark, max_files=2, target_files=1)
         except Exception as e:  # pragma: no cover
             errors.append(e)
 
@@ -327,25 +287,29 @@ def test_ivf_concurrent_append_delete_apply_stress(spark, sf_dir, tmp_path):
     want = (base_ids | appended) - deleted
     got = {r["vec_id"] for r in read_ivf_postings(spark, path).collect()}
     assert got == want
-    raw = {r["vec_id"] for r in spark.read.parquet(path + "/postings").collect()}
-    assert raw == want  # physically merged too
-    assert not os.path.exists(os.path.join(path, "_compact_tmp"))
-    assert not os.path.exists(os.path.join(path, "postings", "_compact_tmp"))
-    assert not os.path.exists(os.path.join(path, "_tombstone_tmp"))
+    raw = [r["vec_id"] for r in _postings_frame(spark, path).collect()]
+    assert sorted(raw) == sorted(want)  # physically merged, no duplicates
+    store = SnapshotStore(path)
+    assert store.table_days("tombstones") == []
+    assert store.manifest()["epoch_high"] == {"append": 2, "delete": 1}
+    assert not any(d.startswith("_stage") for d in os.listdir(path))
+    assert not os.listdir(os.path.join(path, "_epochs"))
+    assert not os.listdir(os.path.join(path, "_epochs_delete"))
 
 
 def test_expire_holds_lease_against_sink(spark, tmp_path):
-    """expire_partitions must contend on the cascade table's lock, not
-    its grain subdirectory: while a CascadeMaintenanceSink epoch holds
-    the lease, retention blocks (LockHeldError at a short timeout)."""
+    """Retention contends on the cascade table's lease: while a
+    CascadeMaintenanceSink epoch holds it, SnapshotStore.expire blocks
+    (LockHeldError at a short timeout), and proceeds once it is free."""
     import datetime
 
     from rolaguard_data_collectors_spark.operators.cascade import (
         CascadeMaintenanceSink,
     )
-    from rolaguard_data_collectors_spark.plans.scale import expire_partitions
+    from rolaguard_data_collectors_spark.snapshots import SnapshotStore
 
     path = str(tmp_path / "casc")
+    store = SnapshotStore.create(path)
     sink = CascadeMaintenanceSink(path)
     t0 = datetime.datetime(2024, 3, 1, 12, 0, 0)
     sink(
@@ -358,14 +322,9 @@ def test_expire_holds_lease_against_sink(spark, tmp_path):
     holder.acquire()
     try:
         with pytest.raises(LockHeldError):
-            expire_partitions(
-                os.path.join(path, "day"), before="2099-01-01",
-                lock_root=path, lock_timeout=0.3,
-            )
+            store.expire(before="2099-01-01", lock_timeout=0.3)
     finally:
         holder.release()
     # and it proceeds once the lease is free
-    dropped = expire_partitions(
-        os.path.join(path, "day"), before="2099-01-01", lock_root=path
-    )
-    assert dropped == ["_d=2024-03-01"]
+    assert store.expire(before="2099-01-01") == ["2024-03-01"]
+    assert store.table_days("day") == []
