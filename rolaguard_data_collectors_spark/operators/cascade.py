@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import QuerySpec
-from ..snapshots import SnapshotStore, stage_epoch_once
+from ..snapshots import NULL_DAY, SnapshotStore, stage_epoch_once
 from ..tablelock import TableLock
 
 # One quantization of the input, shared by every grain and mirrored in
@@ -163,8 +163,8 @@ def maintained_cascade_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # partitions keeping their exact data dirs.
 
 # Partition column: day of window_start; NULL-timestamp buckets get an
-# explicit sentinel so they live in a normal readable partition.
-_NULL_DAY = "__null__"
+# explicit sentinel (NULL_DAY) so they live in a normal readable
+# partition.
 
 
 def _with_day(df: DataFrame) -> DataFrame:
@@ -172,7 +172,7 @@ def _with_day(df: DataFrame) -> DataFrame:
         "_d",
         F.coalesce(
             F.date_format(F.date_trunc("day", "window_start"), "yyyy-MM-dd"),
-            F.lit(_NULL_DAY),
+            F.lit(NULL_DAY),
         ),
     )
 

@@ -4,8 +4,27 @@ Local test/bench runs use ``local[N]`` (one JVM); the configs are
 chosen so the same code scales to a multi-executor cluster: AQE
 (runtime coalesce + skew-join), Arrow for every pandas-UDF boundary,
 UTC session timezone (oracle comparison — DuckDB timestamps are
-UTC-naive), shuffle partitions sized to cores locally (on a cluster
-AQE coalesces from a higher initial number).
+UTC-naive).
+
+Two shuffle widths:
+
+- Batch width: ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``
+  carries the core-sized width (``default_shuffle_partitions``). AQE is
+  on in both profiles, so every batch exchange starts from it and
+  coalesces down at runtime; so do the ``foreachBatch`` bodies of
+  stateless streams, where Spark keeps AQE on.
+- Streaming width: ``spark.sql.shuffle.partitions`` is ``1``. Spark
+  turns AQE off inside micro-batches (and in the ``foreachBatch`` body
+  of a stateful stream), so this value alone sizes those shuffles and
+  becomes a stateful query's state-store partition count, fixed in its
+  checkpoint. Every query the engine
+  starts is per collector with one source partition, so a wider state
+  buys no parallelism: at width N each trigger ran N reducer tasks, N
+  Python state workers and N state-store commits for one key. A
+  multi-key stream that needs a wider state sets
+  ``spark.sql.shuffle.partitions`` (``extra_conf`` or
+  ``spark.conf.set``) before its first start; an existing checkpoint
+  keeps the width it was created with.
 """
 
 from __future__ import annotations
@@ -14,7 +33,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Exchange width, decoupled from CPU fan-out (catalog.
+# Batch exchange width (AQE's initial partition number; see the module
+# docstring for the streaming width), decoupled from CPU fan-out (catalog.
 # compute_parallelism covers the latter): small aggregate queries at
 # sf0.1 lose ~0.1-0.3 s each to 32-task exchange scheduling that
 # 8-16 tasks avoid, while scan/UDF-bound stages are unaffected (their
@@ -110,7 +130,9 @@ def resolve_conf(
     n_shuffle = shuffle_partitions or default_shuffle_partitions()
 
     conf: dict[str, str] = {
-        "spark.sql.shuffle.partitions": str(n_shuffle),
+        "spark.sql.shuffle.partitions": "1",
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum":
+            str(n_shuffle),
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",

@@ -99,6 +99,9 @@ STAGE_PART_PREFIX = "_dp="
 _META = "_COMMIT_META"
 _DROPPED = "_DROPPED"
 _SCHEMAS = "_SCHEMAS.json"
+# Day key of NULL-timestamp rows in day-keyed tables (the cascade grains
+# partition them here so they stay readable).
+NULL_DAY = "__null__"
 
 
 class SnapshotError(RuntimeError):
@@ -766,7 +769,10 @@ class SnapshotStore:
         ('10' < '2'). Guarded below — every key under comparison and
         the bound itself must be ISO-day-shaped or this raises;
         bucket-keyed tables expire with ``keep=`` (explicit
-        allowlist)."""
+        allowlist). The one exception is ``NULL_DAY``, the day of
+        NULL-timestamp rows in day-keyed tables: it has no date, so
+        ``before=`` keeps it and does not raise on it (``keep=`` can
+        still drop it)."""
         if (keep is None) == (before is None):
             raise ValueError("expire needs exactly one of keep= or before=")
         with TableLock(self.root, owner="snapshot_expire",
@@ -782,6 +788,7 @@ class SnapshotStore:
             else:
                 import re
 
+                days.discard(NULL_DAY)  # dateless: never expired by date
                 bad = [d for d in {before, *days}
                        if not re.fullmatch(r"\d{4}-\d{2}-\d{2}", str(d))]
                 if bad:

@@ -12,10 +12,11 @@ parallelism (Orchestrator.py:246-306) and scales horizontally: a
 
 ``lorawan_live`` — driver-prefetch reader (SimpleDataSourceStreamReader)
 wrapping a non-replayable network transport (MQTT / TTN WS / TTN SSE via
-transports.py). Spark caches each prefetched batch until commit, giving
-at-least-once across restarts — strictly better than the reference's
-publisher, which silently drops while its channel is down
-(Publisher.py:113-114).
+transports.py). Spark's reader wrapper caches each prefetched batch in
+driver memory until commit; a batch that a restart finds planned but
+uncommitted cannot be re-read from the transport
+(``LiveReplayUnsupportedError``), so replayable delivery needs
+``lorawan_replay``.
 
 Every emitted row carries an explicit per-collector ``seq`` so the
 stateful layer can reconstruct arrival order inside unordered
@@ -264,11 +265,16 @@ class LorawanReplayDataSource(DataSource):
         return _BatchReader()
 
 
+class LiveReplayUnsupportedError(RuntimeError):
+    """A live transport was asked to re-read a non-empty offset range."""
+
+
 class LorawanLiveStreamReader(SimpleDataSourceStreamReader):
     """Driver-side prefetch over a live transport. The offset is a
-    monotonically increasing sequence number; Spark persists each
-    prefetched batch so a restarted query replays uncommitted data
-    (at-least-once, matching the reference's delivery guarantee)."""
+    monotonically increasing sequence number; Spark's wrapper serves
+    each planned batch from its in-memory prefetch cache, and only
+    falls back to ``readBetweenOffsets`` for a batch it holds no rows
+    for (see there)."""
 
     def __init__(self, options: dict):
         self.kind = options.get("transport", "fake")
@@ -293,6 +299,20 @@ class LorawanLiveStreamReader(SimpleDataSourceStreamReader):
             for i, m in enumerate(msgs)
         ]
         return iter(rows), {"seq": seq + len(rows)}
+
+    def readBetweenOffsets(self, start: dict, end: dict):
+        # Spark re-reads a batch it has no prefetched rows for: an empty
+        # batch (an idle first poll plans batch 0 as seq 0 -> 0, which
+        # the wrapper never caches), or a batch replayed after restart.
+        # The first is empty by definition; the second would need the
+        # transport to replay, which a live feed cannot.
+        if int(start.get("seq", 0)) == int(end.get("seq", 0)):
+            return iter(())
+        raise LiveReplayUnsupportedError(
+            f"lorawan_live cannot re-read messages {start} -> {end}: the "
+            f"{self.kind!r} transport does not replay; use lorawan_replay "
+            "for a replayable source"
+        )
 
     def commit(self, end: dict) -> None:
         pass

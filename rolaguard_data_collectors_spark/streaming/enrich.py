@@ -27,6 +27,16 @@ shuffles on collector id (state = one devices_map per collector — the
 reference's exact memory profile; per-collector processing is
 inherently sequential in the reference too); stage 2 shuffles on
 gateway with O(1) state per key.
+
+State width: the shuffle under each stage, and so its state-store
+partition count, is ``spark.sql.shuffle.partitions`` when the query
+first starts, fixed in its checkpoint from then on. The session sets it
+to 1 (``session.py``): the collector queries are per collector, so
+stage 1 holds one key and a wider state only adds a reducer task, a
+Python state worker and a state-store commit per partition to every
+trigger. A stream that feeds many keys into one query (several
+collectors, or many gateways through stage 2) widens its state by
+setting ``spark.sql.shuffle.partitions`` before its first start.
 """
 
 from __future__ import annotations

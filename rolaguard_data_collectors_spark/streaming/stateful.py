@@ -13,6 +13,14 @@ batch is restored by the sort. At 100 TB scale each operator is one
 hash shuffle on its state key; state per key is O(1) (a handful of
 scalars), so state-store size grows with key cardinality only.
 
+State width: Spark runs micro-batches without AQE, so that shuffle's
+width, and the operator's state-store partition count, is
+``spark.sql.shuffle.partitions`` at the query's first start, kept by its
+checkpoint. The engine's session sets it to 1, sized for its
+per-collector queries; an events stream with many users per query
+widens its state by setting ``spark.sql.shuffle.partitions`` (for
+example through ``get_spark(extra_conf=...)``) before its first start.
+
 Ops 34-36 emit in append mode (each input row resolves immediately);
 op 37 (running counters) and op 38 (change detection) emit in update
 mode. Op 37 carries the reference's 600 s verification timeout via

@@ -425,11 +425,10 @@ def test_cascade_sink_null_timestamp_partition(spark, tmp_path):
     the explicit __null__ day partition and merge across epochs like
     any other bucket."""
     from rolaguard_data_collectors_spark.operators.cascade import (
-        _NULL_DAY,
         CascadeMaintenanceSink,
         read_grain,
     )
-    from rolaguard_data_collectors_spark.snapshots import SnapshotStore
+    from rolaguard_data_collectors_spark.snapshots import NULL_DAY, SnapshotStore
 
     path = str(tmp_path / "casc_null")
     store = SnapshotStore.create(path)
@@ -438,7 +437,7 @@ def test_cascade_sink_null_timestamp_partition(spark, tmp_path):
     t = datetime.datetime(2023, 7, 1, 10, 0, 30)
     sink(spark.createDataFrame([(t, "click", 1.0), (None, "x", 2.0)], schema), 0)
     sink(spark.createDataFrame([(None, "x", 3.5), (None, None, 1.0)], schema), 1)
-    assert _NULL_DAY in store.table_days("day")
+    assert NULL_DAY in store.table_days("day")
     got = {
         (r["window_start"], r["event_type"]): (r["n_events"], float(r["_sv"]))
         for r in read_grain(spark, path, "day").collect()

@@ -53,11 +53,18 @@ def test_delete_reader_excludes_then_apply_drops(spark, sf_dir, tmp_path):
     emb = _build(spark, sf_dir, path)
     before = _rows(spark, path)
 
-    doomed = emb.where(F.col("vec_id") % 9 == 1).select("vec_id", "v")
+    # Doom ids from one cell only, so the other cells are untouched and
+    # the check below that apply leaves their dirs alone compares some.
+    cand = _postings_frame(spark, path).where(F.col("vec_id") % 9 == 1)
+    victim = cand.groupBy("cluster").count().orderBy(
+        F.desc("count"), "cluster").first()["cluster"]
+    doomed = emb.join(
+        cand.where(F.col("cluster") == victim).select("vec_id"), "vec_id"
+    ).select("vec_id", "v")
     doomed_ids = {r["vec_id"] for r in doomed.collect()}
     assert doomed_ids
     touched = ivf_index_delete(spark, path, doomed)
-    assert touched
+    assert touched == [victim]
 
     want = [r for r in before if r[0] not in doomed_ids]
     assert _rows(spark, path) == want  # reader anti-joins
@@ -75,6 +82,7 @@ def test_delete_reader_excludes_then_apply_drops(spark, sf_dir, tmp_path):
         c: rels for c, rels in store.manifest()["tables"]["postings"].items()
         if int(c) not in touched
     }
+    assert before_dirs  # the delete touched a strict subset of cells
     applied = apply_ivf_tombstones(spark, path)
     assert applied == touched
     assert _rows(spark, path, reader=False) == want  # physically gone

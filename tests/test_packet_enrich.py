@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from rolaguard_data_collectors_spark.sources import register_sources
 from rolaguard_data_collectors_spark.streaming.enrich import (
     attach_location_by_gateway,
@@ -19,6 +21,19 @@ from rolaguard_data_collectors_spark.streaming.normalize import (
 
 # UnconfirmedDataUp devAddr=017fc1c4 fCnt=17 (tests/test_streaming.py)
 DATA_UP_B64 = "QMTBfwEAEQBd6f1YJ+K7NmuNmy/JpHTFQKI="
+# A ChirpStack gateway uplink carrying that frame, and the application
+# message whose fCnt matches it.
+_GW_MSG = json.dumps(
+    {"phyPayload": DATA_UP_B64,
+     "rxInfo": {"rssi": -60.0, "loRaSNR": 7.0, "frequency": 868100000,
+                "mac": "aabbccddeeff0011"}}
+)
+_APP_MATCH = json.dumps(
+    {"fCnt": 17, "applicationName": "app-x", "deviceName": "dev-x",
+     "devEUI": "b827eb891cf50003",
+     "rxInfo": [{"name": "gw-east",
+                 "location": {"latitude": 1.5, "longitude": 2.5, "altitude": 9.0}}]}
+)
 
 
 def _stream_feed(spark, tmp_path, name, records, batch_size=2):
@@ -47,24 +62,13 @@ def _drain_to(spark, df, name):
 
 
 def test_dev_addr_merge_and_flush(spark, tmp_path):
-    gw_msg = json.dumps(
-        {"phyPayload": DATA_UP_B64,
-         "rxInfo": {"rssi": -60.0, "loRaSNR": 7.0, "frequency": 868100000,
-                    "mac": "aabbccddeeff0011"}}
-    )
-    app_match = json.dumps(
-        {"fCnt": 17, "applicationName": "app-x", "deviceName": "dev-x",
-         "devEUI": "b827eb891cf50003",
-         "rxInfo": [{"name": "gw-east",
-                     "location": {"latitude": 1.5, "longitude": 2.5, "altitude": 9.0}}]}
-    )
     join_msg = json.dumps({"devAddr": "017fc1c4", "devEUI": "b827eb891cf50003"})
     records = [
-        ("gateway/aabb/rx", gw_msg),                              # 0: unknown -> buffered
-        ("application/1/device/b827eb891cf50003/rx", app_match),  # 1: merges 0, upserts map
-        ("gateway/aabb/rx", gw_msg),                              # 2: known -> immediate
+        ("gateway/aabb/rx", _GW_MSG),                              # 0: unknown -> buffered
+        ("application/1/device/b827eb891cf50003/rx", _APP_MATCH),  # 1: merges 0, upserts map
+        ("gateway/aabb/rx", _GW_MSG),                              # 2: known -> immediate
         ("v1/join", join_msg),                                    # 3: map reset to eui-only
-        ("gateway/aabb/rx", gw_msg),                              # 4: known (eui-only) -> immediate
+        ("gateway/aabb/rx", _GW_MSG),                              # 4: known (eui-only) -> immediate
     ]
     raw = _stream_feed(spark, tmp_path, "feed_devaddr", records)
     rows = _drain_to(spark, enrich_per_collector(normalize_chirpstack(raw)), "enr_dev")
@@ -97,11 +101,6 @@ def test_unmatched_fcnt_flush_no_upsert(spark, tmp_path):
     """An app message whose fCnt does NOT match the buffered packet
     flushes the buffer unmerged, performs NO devices_map upsert, and is
     itself dropped (reference :415 merge guard; :477 save)."""
-    gw_msg = json.dumps(
-        {"phyPayload": DATA_UP_B64,
-         "rxInfo": {"rssi": -60.0, "loRaSNR": 7.0, "frequency": 868100000,
-                    "mac": "aabbccddeeff0011"}}
-    )
     app_nomatch = json.dumps(
         {"fCnt": 99, "applicationName": "app-x", "deviceName": "dev-x",
          "devEUI": "b827eb891cf50003",
@@ -110,9 +109,9 @@ def test_unmatched_fcnt_flush_no_upsert(spark, tmp_path):
     )
     app_up = json.dumps({"fCnt": 17, "devEUI": "b827eb891cf50003"})
     records = [
-        ("gateway/aabb/rx", gw_msg),                                # 0: buffered
+        ("gateway/aabb/rx", _GW_MSG),                                # 0: buffered
         ("application/1/device/b827eb891cf50003/rx", app_nomatch),  # 1: flush 0 unmerged
-        ("gateway/aabb/rx", gw_msg),                                # 2: STILL unknown -> buffered
+        ("gateway/aabb/rx", _GW_MSG),                                # 2: STILL unknown -> buffered
         ("application/1/device/b827eb891cf50003/up", app_up),       # 3: /up is NOT an app route
     ]
     raw = _stream_feed(spark, tmp_path, "feed_nomatch", records)
@@ -220,3 +219,94 @@ def test_location_attach_and_reset(spark, tmp_path):
     assert by_seq[2]["latitude"] == 44.5 and by_seq[2]["longitude"] == 11.3
     assert by_seq[3]["latitude"] is None  # attach-then-reset
     assert all(r["gateway"] == "a1b2" for r in rows)
+
+
+# --- state width ------------------------------------------------------------
+
+
+def _state_instances(q) -> set[int]:
+    return {
+        op.numStateStoreInstances
+        for p in q.recentProgress
+        for op in p.stateOperators
+    }
+
+
+@pytest.mark.parametrize("stage", ["enrich_per_collector", "attach_location_by_gateway"])
+def test_enrichment_state_is_one_partition_wide(spark, tmp_path, stage):
+    """Under the session's streaming width each per-collector enrichment
+    keeps its state in one state-store partition, not one per core."""
+    if stage == "enrich_per_collector":
+        raw = _stream_feed(spark, tmp_path, "feed_w1",
+                           [("gateway/aabb/rx", _GW_MSG)] * 3)
+        df = enrich_per_collector(normalize_chirpstack(raw))
+    else:
+        status = json.dumps({"status": {"location": {"latitude": 1.0}}})
+        raw = _stream_feed(spark, tmp_path, "feed_w1",
+                           [("eui-a1b2", f"gateway status {status}")] * 3)
+        df = attach_location_by_gateway(normalize_ttn_v2(raw))
+    q = df.writeStream.format("noop").start()
+    try:
+        q.processAllAvailable()
+        assert q.exception() is None
+        assert _state_instances(q) == {1}
+    finally:
+        q.stop()
+
+
+def test_wider_state_checkpoint_keeps_its_width_and_state(spark, tmp_path):
+    """A checkpoint created at state width 4 restarts at width 4 under
+    the one-partition default, and a dev_addr learned in epoch 0 still
+    enriches a packet in epoch 1."""
+    register_sources(spark)
+    d = tmp_path / "feed_restart"
+    d.mkdir()
+    feed = d / "collector_1.jsonl"
+
+    def append(records):
+        with open(feed, "a") as fh:
+            for topic, value in records:
+                fh.write(json.dumps({"topic": topic, "value": value,
+                                     "ts": 1700000000}) + "\n")
+
+    got: dict[int, list[dict]] = {}
+
+    def keep(df, epoch_id):
+        # sorted here: a Spark sort would run the state operator twice
+        # (range sampling), doubling its reported instances
+        got[epoch_id] = sorted((r.asDict() for r in df.collect()),
+                               key=lambda r: r["_seq"])
+
+    def run():
+        raw = (spark.readStream.format("lorawan_replay")
+               .option("path", str(d))
+               .option("cursorPath", str(tmp_path / "cursor.json"))
+               .load())
+        q = (enrich_per_collector(normalize_chirpstack(raw))
+             .writeStream.foreachBatch(keep)
+             .option("checkpointLocation", str(tmp_path / "ck"))
+             .start())
+        try:
+            q.processAllAvailable()
+            assert q.exception() is None
+            return _state_instances(q)
+        finally:
+            q.stop()
+
+    append([("gateway/aabb/rx", _GW_MSG),                              # buffered
+            ("application/1/device/b827eb891cf50003/rx", _APP_MATCH)])  # learns it
+    key = "spark.sql.shuffle.partitions"
+    default = spark.conf.get(key)
+    spark.conf.set(key, "4")
+    try:
+        assert run() == {4}
+    finally:
+        spark.conf.set(key, default)
+    assert [(r["_seq"], r["merged"]) for r in got[0]] == [(0, True)]
+
+    append([("gateway/aabb/rx", _GW_MSG)])  # known dev_addr -> enriched
+    assert run() == {4}
+    assert sorted(got) == [0, 1]
+    (row,) = got[1]
+    assert row["_seq"] == 2 and row["merged"] is False
+    assert row["dev_eui"] == "b827eb891cf50003" and row["app_name"] == "app-x"

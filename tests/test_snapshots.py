@@ -27,6 +27,8 @@ from rolaguard_data_collectors_spark.operators.cascade import (
     read_grain,
 )
 from rolaguard_data_collectors_spark.snapshots import (
+    NULL_DAY,
+    SnapshotError,
     SnapshotStore,
     SnapshotVacuumedError,
 )
@@ -1395,6 +1397,37 @@ def test_expire_before_still_works_on_day_keys(spark, tmp_path):
     )
     store.commit_staged(edir, op="init")
     assert store.expire(before="2024-02-01") == ["2024-01-01"]
+
+
+def test_expire_before_keeps_null_day_of_cascade_sink_table(spark, tmp_path):
+    """A cascade table holding NULL-timestamp events has the dateless
+    ``NULL_DAY`` partition next to its ISO days: ``before=`` expires
+    the days before the bound, keeps that partition and does not raise
+    on it; ``keep=`` can still drop it."""
+    import datetime
+
+    path = str(tmp_path / "casc_null_expire")
+    store = SnapshotStore.create(path)
+    schema = "ts timestamp, event_type string, value double"
+    rows = [(datetime.datetime(2024, 3, d, 12), "click", float(d))
+            for d in (1, 2, 3)] + [(None, "click", 9.0)]
+    CascadeMaintenanceSink(path)(spark.createDataFrame(rows, schema), 0)
+    days = ["2024-03-01", "2024-03-02", "2024-03-03", NULL_DAY]
+    for g in ("minute", "hour", "day"):
+        assert store.table_days(g) == days, g
+
+    assert store.expire(before="2024-03-02") == ["2024-03-01"]
+    for g in ("minute", "hour", "day"):
+        assert store.table_days(g) == days[1:], g
+    got = {r["window_start"] for r in read_grain(spark, path, "day").collect()}
+    assert None in got and len(got) == 3
+    # the bound itself must still be a day
+    with pytest.raises(SnapshotError, match="ISO day keys"):
+        store.expire(before=NULL_DAY)
+    assert store.expire(before="2025-01-01") == days[1:3]
+    assert store.table_days("day") == [NULL_DAY]
+    assert store.expire(keep=set()) == [NULL_DAY]
+    assert store.table_days("day") == []
 
 
 def test_create_or_resume_resumes_empty_v0_root(spark, sf_dir, tmp_path):

@@ -190,6 +190,60 @@ def test_live_replay_query_survives_torn_tail_line(spark, tmp_path):
         q.stop()
 
 
+def test_live_query_survives_idle_start(spark, tmp_path):
+    """A live query whose first poll is empty keeps running: Spark
+    plans an empty batch 0 (``seq`` 0 -> 0) that the prefetch cache
+    never holds and re-reads it through ``readBetweenOffsets`` (it used
+    to die with ``NOT_IMPLEMENTED``); the next line arrives in batch 1."""
+    import time
+
+    register_sources(spark)
+    path = tmp_path / "generic_mqtt_collector_1.jsonl"
+    open(path, "w").close()  # the collector starts quiet
+    batches: dict[int, list] = {}
+
+    def keep(df, epoch_id):
+        batches[epoch_id] = [(r.seq, r.value) for r in df.collect()]
+
+    q = (
+        spark.readStream.format("lorawan_live")
+        .option("transport", "replay")
+        .option("path", str(path))
+        .load()
+        .writeStream.foreachBatch(keep)
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        assert q.exception() is None
+        assert batches == {0: []}
+        with open(path, "a", encoding="utf-8") as fh:
+            fh.write('{"topic": "gateway/1/rx", "value": "{}", "ts": 1}\n')
+        deadline = time.time() + 60
+        while time.time() < deadline and len(batches) < 2:
+            q.processAllAvailable()
+            time.sleep(0.2)
+        assert q.isActive and q.exception() is None
+        assert batches == {0: [], 1: [(0, "{}")]}
+    finally:
+        q.stop()
+
+
+def test_live_reader_refuses_to_replay_a_non_empty_range():
+    """The live transport cannot re-read delivered messages, so a
+    non-empty ``readBetweenOffsets`` range raises a named error."""
+    from rolaguard_data_collectors_spark.sources.datasource import (
+        LiveReplayUnsupportedError,
+        LorawanLiveStreamReader,
+    )
+
+    reader = LorawanLiveStreamReader({"transport": "fake"})
+    assert list(reader.readBetweenOffsets({"seq": 5}, {"seq": 5})) == []
+    with pytest.raises(LiveReplayUnsupportedError, match="does not replay"):
+        reader.readBetweenOffsets({"seq": 0}, {"seq": 3})
+
+
 # --- normalize pipelines --------------------------------------------------
 
 # A real UnconfirmedDataUp frame (devAddr=017fc1c4, fCnt=17, fPort=93,
