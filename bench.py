@@ -8,8 +8,12 @@ Prints exactly ONE JSON line:
 Each query is forced to full materialization with a ``noop``-format
 write (all partitions computed, nothing collected to the driver, no
 filesystem cost) — the same action the driver's correctness pass pays
-for, minus the transfer. A warm-up query runs first so JVM/codegen
+for, minus the transfer. A warm-up runs first so JVM/codegen
 startup isn't billed to the first measured query.
+
+``warm_up`` and ``noop_wall`` are the repo's one timing harness:
+scripts and the cost tripwire in tests/test_plans.py import them
+rather than keeping their own copies.
 """
 
 from __future__ import annotations
@@ -34,50 +38,50 @@ def _sf_of(sf_dir: str) -> float:
     return -1.0
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+def noop_wall(df) -> float:
+    """Wall seconds of one ``noop``-format write of ``df``: every
+    partition computed, nothing collected, no filesystem cost. Building
+    ``df`` happens before the call, outside the clock."""
+    t0 = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0
 
-    from rolaguard_data_collectors_spark.registry import collect_all
-    from rolaguard_data_collectors_spark.session import get_spark
 
-    spark = get_spark(app_name="bench")
-    specs = collect_all()
-
-    # Ship the package to executors BEFORE the UDF warm-up — queries do
-    # this lazily via load_table, but the warm-up UDF runs first.
-    from rolaguard_data_collectors_spark.bootstrap import ensure_executor_pythonpath
-
-    ensure_executor_pythonpath(spark)
-
-    # Warm-up: JVM classloading, first codegen, and the Arrow Python
-    # runner (worker pool spin-up + package import), so fixed startup
-    # cost isn't billed to whichever query happens to run first.
-    spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).limit(
-        1000
-    ).write.format("noop").mode("overwrite").save()
+def warm_up(spark, sf_dir: str) -> None:
+    """Pay a session's one-time costs before anything is timed: JVM
+    classloading, first codegen, the Arrow Python runner (worker pool
+    spin-up + package import), and the shuffle + JSON paths, so fixed
+    startup cost isn't billed to whichever query happens to run first."""
     from pyspark.sql import functions as F
 
+    from rolaguard_data_collectors_spark.bootstrap import ensure_executor_pythonpath
+    from rolaguard_data_collectors_spark.catalog import compute_parallelism
     from rolaguard_data_collectors_spark.functions.lorawan_udfs import (
         decode_phypayload,
     )
 
+    # Ship the package to executors BEFORE the UDF warm-up — queries do
+    # this lazily via load_table, but the warm-up UDF runs first.
+    ensure_executor_pythonpath(spark)
+    noop_wall(spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).limit(1000))
     # Spin up one Python/Arrow worker per CORE (compute fan-out, not
     # the narrower exchange width — spread() repartitions UDF stages
     # to core count, so a conf-width warm-up would leave cold workers
     # to the first measured UDF query).
-    from rolaguard_data_collectors_spark.catalog import compute_parallelism
-
-    n_workers = compute_parallelism(spark)
-    spark.range(256).repartition(n_workers).select(
-        decode_phypayload(
-            F.lit("QMTBfwEAEQBd6f1YJ+K7NmuNmy/JpHTFQKI="), F.lit(None), F.lit(None)
+    noop_wall(
+        spark.range(256)
+        .repartition(compute_parallelism(spark))
+        .select(
+            decode_phypayload(
+                F.lit("QMTBfwEAEQBd6f1YJ+K7NmuNmy/JpHTFQKI="), F.lit(None), F.lit(None)
+            )
         )
-    ).write.format("noop").mode("overwrite").save()
+    )
     # Warm the shuffle + JSON codegen paths too (exchange machinery,
     # Jackson parser init, codegen compilation for from_json/to_json) —
     # otherwise the first measured query absorbs ~5-10 s of one-time
     # setup regardless of its own cost.
-    (
+    noop_wall(
         spark.range(100_000)
         .select(
             (F.col("id") % 7).alias("k"),
@@ -86,10 +90,18 @@ def main() -> None:
         .select("k", F.from_json("j", "a bigint").alias("s"))
         .groupBy("k")
         .agg(F.count("s.a"))
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
     )
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+    from rolaguard_data_collectors_spark.registry import collect_all
+    from rolaguard_data_collectors_spark.session import get_spark
+
+    spark = get_spark(app_name="bench")
+    specs = collect_all()
+    warm_up(spark, sf_dir)
 
     # Pipeline cold plan-compile (ADVICE r13): measured BEFORE the
     # per-query loop — the loop materializes the memoized staged-union
@@ -106,10 +118,9 @@ def main() -> None:
             staged_pipeline_union,
         )
 
-        cold = staged_pipeline_union(spark, sf_dir)
-        t0 = time.perf_counter()
-        cold.write.format("noop").mode("overwrite").save()
-        pipe_cold_build_sec = round(time.perf_counter() - t0, 2)
+        pipe_cold_build_sec = round(
+            noop_wall(staged_pipeline_union(spark, sf_dir)), 2
+        )
     except Exception as exc:
         print(f"bench: pipeline cold build skipped: {exc}", file=sys.stderr)
 
@@ -143,10 +154,8 @@ def main() -> None:
             if timings.get(name, 0) < 0:
                 continue  # failed on an earlier pass
             try:
-                df = spec.build(spark, sf_dir)  # fresh: re-stage checkpoints
-                t0 = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
-                took = time.perf_counter() - t0
+                # fresh build: re-stage checkpoints
+                took = noop_wall(spec.build(spark, sf_dir))
                 prev = timings.get(name)
                 timings[name] = took if prev is None else min(prev, took)
             except Exception as exc:  # a failing query must not hide the rest
@@ -236,12 +245,10 @@ def main() -> None:
         # slice materializations guarantee the 2-3-build warm ramp has
         # completed, so these N fresh builds sample steady state — the
         # number a capacity plan needs.
-        walls: list[float] = []
-        for _ in range(n_samples):
-            staged = staged_pipeline_union(spark, sf_dir)  # FRESH build
-            t0 = time.perf_counter()
-            staged.write.format("noop").mode("overwrite").save()
-            walls.append(time.perf_counter() - t0)
+        walls = [  # a FRESH build per sample
+            noop_wall(staged_pipeline_union(spark, sf_dir))
+            for _ in range(n_samples)
+        ]
         stage_build_sec = round(min(walls), 2)
         pipe_samples = [int(4 * n_events / w) for w in walls]
         pipe_rate_min = min(pipe_samples)

@@ -26,7 +26,6 @@ from ..portable_sql import hex_byte
 from ..registry import QuerySpec
 from .lorawan_udfs import (
     data_frame_roundtrip,
-    decode_phypayload,
     decode_phypayload_for,
     derive_session_keys,
     encode_data_frame_b64,
@@ -489,8 +488,8 @@ def lorawan_ja_crack(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def lorawan_crack_combined(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The bruteforce + ja_crack legs fused into ONE stage chain
-    (round 13; the per-leg breakdown in scripts/
-    security_suite_breakdown.py measured each standalone leg at
+    (round 13; a per-leg breakdown, SURVEY.md round-13 notes,
+    measured each standalone leg at
     ~0.5 s, of which ~0.45 s was candidate-relation build + stage
     scheduling floor, not crypto — two independent chains paid that
     floor twice). One shared candidate relation (structured keyspace
@@ -625,9 +624,9 @@ SELECT * FROM jw UNION ALL SELECT * FROM bf UNION ALL SELECT * FROM ja
 def security_suite_legs(
     spark: SparkSession, sf_dir: str
 ) -> dict[str, DataFrame]:
-    """The three suite legs as separate DataFrames — the per-leg wall
-    breakdown (scripts/security_suite_breakdown.py, VERDICT r12 item 2)
-    times each independently; lorawan_security_suite unions them."""
+    """The three suite legs as separate DataFrames, each timeable on
+    its own (the round-13 per-leg breakdown, VERDICT r12 item 2);
+    lorawan_security_suite unions them."""
     ev = _events(spark, sf_dir).filter(F.col("event_type") == "signup")
     ev = ev.select(
         "event_id",

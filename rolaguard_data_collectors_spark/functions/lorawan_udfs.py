@@ -43,45 +43,9 @@ PARSED_FRAME_SCHEMA = T.StructType(
 _FIELDS = [f.name for f in PARSED_FRAME_SCHEMA.fields]
 
 
-@F.pandas_udf(PARSED_FRAME_SCHEMA)
-def decode_phypayload(
-    data_b64: pd.Series, app_s_key: pd.Series, nwk_s_key: pd.Series
-) -> pd.DataFrame:
-    """printPHYPayload equivalent (op 41): base64 frame -> parsed
-    struct, optional FRMPayload decrypt when keys are provided.
-
-    Columnar batch build (dict of per-field lists, not list of row
-    dicts): this UDF sits on the hot path of every normalize pipeline,
-    and the row-oriented construction dominated its profile.
-
-    Per-batch memo on (frame, keys): parsing is pure, and real LoRaWAN
-    traffic repeats frames heavily (confirmed-uplink retransmissions,
-    periodic sensors, multi-gateway receptions of the same airtime
-    frame — the reference dedups those downstream, LoraServerIO
-    rx_info fan-out). Distinct frames cost one dict probe extra;
-    repeated frames skip the parse + crypto entirely."""
-    cols: dict[str, list] = {f: [] for f in _FIELDS}
-    appends = [cols[f].append for f in _FIELDS]
-    memo: dict[tuple, tuple] = {}
-    null_row = (None,) * len(_FIELDS)
-    for b64, ak, nk in zip(data_b64, app_s_key, nwk_s_key):
-        if b64 is None:
-            row = null_row
-        else:
-            k = (b64, ak, nk)
-            row = memo.get(k)
-            if row is None:
-                p = lc.parse_phypayload_b64(b64, ak or None, nk or None)
-                row = tuple(getattr(p, f) for f in _FIELDS)
-                memo[k] = row
-        for ap, v in zip(appends, row):
-            ap(v)
-    return pd.DataFrame(cols, columns=_FIELDS)
-
-
 def decode_phypayload_for(fields: tuple[str, ...] | None):
-    """Column-pruned decode variant: same parse + per-batch memo as
-    ``decode_phypayload`` but the UDF's return struct carries ONLY the
+    """Column-pruned decode variant: same body as ``decode_phypayload``
+    (see ``_decode_pruned``) but the UDF's return struct carries ONLY the
     requested fields. Catalyst's nested-schema pruning cannot reach
     inside a Python UDF — the full 18-field struct is built and
     Arrow-serialized per row even when the consumer projects two fields
@@ -103,13 +67,27 @@ def _decode_pruned(fields: tuple[str, ...]):
     if udf is None:
         schema = T.StructType([PARSED_FRAME_SCHEMA[f] for f in fields])
 
-        # Shadows the module-level name on purpose: the function name
-        # is the ArrowEvalPython label in .explain(), and plan tests
-        # (and humans) look for "decode_phypayload" there.
+        # The function name is the ArrowEvalPython label in .explain(),
+        # and plan tests (and humans) look for "decode_phypayload" there.
         @F.pandas_udf(schema)
-        def decode_phypayload(  # noqa: F811 — plan label, see above
+        def decode_phypayload(
             data_b64: pd.Series, app_s_key: pd.Series, nwk_s_key: pd.Series
         ) -> pd.DataFrame:
+            """printPHYPayload equivalent (op 41): base64 frame -> parsed
+            struct, optional FRMPayload decrypt when keys are provided.
+
+            Columnar batch build (dict of per-field lists, not list of
+            row dicts): this UDF sits on the hot path of every normalize
+            pipeline, and the row-oriented construction dominated its
+            profile.
+
+            Per-batch memo on (frame, keys): parsing is pure, and real
+            LoRaWAN traffic repeats frames heavily (confirmed-uplink
+            retransmissions, periodic sensors, multi-gateway receptions
+            of the same airtime frame — the reference dedups those
+            downstream, LoraServerIO rx_info fan-out). Distinct frames
+            cost one dict probe extra; repeated frames skip the parse +
+            crypto entirely."""
             cols: dict[str, list] = {f: [] for f in fields}
             appends = [cols[f].append for f in fields]
             memo: dict[tuple, tuple] = {}
@@ -133,6 +111,9 @@ def _decode_pruned(fields: tuple[str, ...]):
 
 
 _PRUNED_CACHE: dict[tuple, object] = {}
+
+# The full 18-field decode (op 41).
+decode_phypayload = _decode_pruned(tuple(_FIELDS))
 
 
 @F.pandas_udf(T.StringType())

@@ -4,8 +4,8 @@ LoraServerIOCollector.py:253-263: JSON decode fails on a gateway
 uplink -> ``gw.UplinkFrame.ParseFromString`` -> ``MessageToJson`` ->
 the same JSON field handling).
 
-The container has neither the spark-protobuf connector jar nor the
-google.protobuf Python package, so this implements the public protobuf
+pyspark does not bundle the spark-protobuf connector jar, and the
+google.protobuf Python package is not a dependency, so this implements the public protobuf
 wire encoding directly (varint / 64-bit / length-delimited / 32-bit —
 the complete set of live wire types) plus an explicit field map
 derived from the public chirpstack-api v3 ``gw.proto``. Both an

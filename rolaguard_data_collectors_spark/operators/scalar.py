@@ -5,8 +5,9 @@ Every operator the reference applies per-message in Python callbacks
 is re-expressed here as Catalyst column expressions over the
 stream-shaped ``events`` table (``ts``≈arrival time, ``event_type``≈
 topic route, ``props``≈raw JSON body), so the DuckDB oracle can verify
-identical column-level semantics. The streaming layer reuses these
-same expressions over readStream frames.
+identical column-level semantics. The streaming layer does not call
+them: ``streaming/normalize.py`` builds its own expressions over the
+raw collector messages.
 
 Reference citations (file:line) point into /root/reference.
 """

@@ -1,5 +1,5 @@
 """Control-plane sources & dimension access (SURVEY.md §2A ops 5, 6,
-9-10, 15).
+9-10).
 
 - ``load_collector_configs``: op 5 — the reference fetches collector
   configs from a REST endpoint at startup (Orchestrator.py:309-329);
@@ -13,20 +13,15 @@
   (db/DataCollector.py:40-60 find_one / find_one_by_ip_port_and
   _dctype_id / count) as DataFrame expressions over a dimension frame,
   JDBC-backed when a URL is configured (op 9's read side).
-- ``from_protobuf_uplink``: op 15 — the ChirpStack protobuf fallback
-  (LoraServerIOCollector.py:253-263 ``gw.UplinkFrame``). Spark's
-  ``from_protobuf`` needs a compiled descriptor set; protoc isn't in
-  this container, so the function is gated: with a descriptor file it
-  returns the parsed column, without one it raises with instructions.
-  The JSON representation of the same frames (MessageToJson output,
-  which the reference also handles) is fully supported by
-  ``normalize_chirpstack``.
+
+Op 15, the ChirpStack protobuf fallback, is not here: raw
+``gw.UplinkFrame`` bodies are decoded by the pure-Python wire codec
+(``pb_uplink_to_json``) inside ``normalize_chirpstack``.
 """
 
 from __future__ import annotations
 
 import json
-import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -113,56 +108,3 @@ def dim_find_collector_by_ip_port_and_type(
 def dim_count(dim: DataFrame) -> int:
     """``Organization.count()`` (db/Organization.py:22-24)."""
     return dim.count()
-
-
-# --- op 15: protobuf decode fallback --------------------------------------
-
-
-def from_protobuf_uplink(
-    data_col: Column, descriptor_path: str | None = None
-) -> Column:
-    """gw.UplinkFrame protobuf decode (LoraServerIOCollector.py:253-263)
-    via pyspark.sql.protobuf.
-
-    The compiled FileDescriptorSet is self-hosted: when no
-    ``descriptor_path`` is given, ``functions.gw_descriptor`` serializes
-    gw.desc with the repo's own wire codec (descriptor.proto is itself
-    protobuf, so no protoc needed). The spark-protobuf connector is a
-    separate jar not bundled with pyspark; when it is absent the call
-    raises with the generated descriptor path so the caller can add the
-    jar (--packages org.apache.spark:spark-protobuf_2.13:<ver>). Raw
-    frames are meanwhile handled by the pure-Python wire codec
-    (pb_uplink_to_json inside normalize_chirpstack) and
-    MessageToJson-shaped frames by the JSON path.
-    """
-    import tempfile
-
-    from pyspark.sql import SparkSession
-
-    if descriptor_path is None:
-        from ..functions.gw_descriptor import write_descriptor
-
-        descriptor_path = write_descriptor(
-            os.path.join(tempfile.gettempdir(), "gw.desc")
-        )
-    spark = SparkSession.getActiveSession()
-    connector_ok = False
-    if spark is not None:
-        try:
-            spark._jvm.java.lang.Class.forName(  # noqa: SLF001
-                "org.apache.spark.sql.protobuf.ProtobufDataToCatalyst"
-            )
-            connector_ok = True
-        except Exception:
-            connector_ok = False
-    if not connector_ok:
-        raise NotImplementedError(
-            "spark-protobuf connector jar not on the classpath; the "
-            f"compiled descriptor is ready at {descriptor_path} — add "
-            "org.apache.spark:spark-protobuf_2.13 and call again. Raw "
-            "frames are handled by the pure-Python wire codec "
-            "(pb_uplink_to_json in normalize_chirpstack) meanwhile"
-        )
-    from pyspark.sql.protobuf.functions import from_protobuf
-
-    return from_protobuf(data_col, "gw.UplinkFrame", descFilePath=descriptor_path)

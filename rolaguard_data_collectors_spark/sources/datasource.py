@@ -59,7 +59,12 @@ def _collector_files(path: str) -> list[str]:
     return [path]
 
 
-def _collector_id_of(fpath: str) -> int:
+def _collector_id_of(fpath: str, option: str | None = None) -> int:
+    """The ``dataCollectorId`` option when given (the control-plane
+    config id ``CollectorManager`` passes), else the ``<id>`` of a
+    ``*_<id>.jsonl`` capture name."""
+    if option is not None:
+        return int(option)
     stem = os.path.splitext(os.path.basename(fpath))[0]
     try:
         return int(stem.rsplit("_", 1)[-1])
@@ -104,6 +109,7 @@ class LorawanReplayStreamReader(DataSourceStreamReader):
             raise ValueError("lorawan_replay requires option 'path'")
         self.batch_size = int(options.get("batchSize", 10_000))
         self.org_id = int(options.get("organizationId", 0))
+        self.collector_id = options.get("dataCollectorId")
         self.files = _collector_files(self.path)
         self._totals = {f: _count_lines(f) for f in self.files}
         # Rate-limit cursor. latestOffset() gets no start offset from
@@ -184,7 +190,11 @@ class LorawanReplayStreamReader(DataSourceStreamReader):
         for f in self.files:
             s, e = start.get(f, 0), end.get(f, 0)
             if e > s:
-                parts.append(_ReplaySlice(f, s, e, _collector_id_of(f), self.org_id))
+                parts.append(
+                    _ReplaySlice(
+                        f, s, e, _collector_id_of(f, self.collector_id), self.org_id
+                    )
+                )
         # An empty micro-batch still needs >=1 partition in some Spark
         # versions; returning [] is accepted by 4.x.
         return parts
@@ -226,7 +236,10 @@ class LorawanReplayStreamReader(DataSourceStreamReader):
 
 
 class LorawanReplayDataSource(DataSource):
-    """spark.readStream.format("lorawan_replay").option("path", dir)"""
+    """spark.readStream.format("lorawan_replay").option("path", dir)
+
+    Rows carry the ``dataCollectorId`` option as their collector id
+    when it is set, else the ``<id>`` of their ``*_<id>.jsonl`` file."""
 
     @classmethod
     def name(cls) -> str:
@@ -251,7 +264,7 @@ class LorawanReplayDataSource(DataSource):
                         f,
                         0,
                         1 << 62,
-                        _collector_id_of(f),
+                        _collector_id_of(f, options.get("dataCollectorId")),
                         int(options.get("organizationId", 0)),
                     )
                     for f in _collector_files(options["path"])

@@ -29,7 +29,7 @@ from ..functions.lorawan_sql import (
     decode_fields_from_hex,
     decoded_frame_hex,
 )
-from ..functions.lorawan_udfs import decode_phypayload, decode_phypayload_for
+from ..functions.lorawan_udfs import decode_phypayload_for
 from ..schemas import (
     CHIRPSTACK_APPLICATION_SCHEMA,
     CHIRPSTACK_GATEWAY_SCHEMA,

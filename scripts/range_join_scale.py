@@ -6,10 +6,11 @@ slice from gen_sf1's machinery:
 
     python scripts/gen_sf1.py testdata_sf10 100 events
 
-For each available point: warm min-of-N noop wall, output rows, the
-DuckDB IEJoin oracle wall (skippable via SPARK_GRAFT_NO_ORACLE=1 when
-the single-node side exits the feasible regime), and hash-exact parity
-through the driver comparator. Prints one JSON block; numbers land in
+The session is first warmed with bench.warm_up over the sf0.1 point.
+For each available point: warm min-of-N noop wall (bench.noop_wall),
+output rows, the DuckDB IEJoin oracle wall (skippable via
+SPARK_GRAFT_NO_ORACLE=1 when the single-node side exits the feasible
+regime), and hash-exact parity through the driver comparator. Prints one JSON block; numbers land in
 SURVEY.md §6 with the growth exponent.
 
 Run on an idle host:  python scripts/range_join_scale.py
@@ -37,9 +38,7 @@ POINTS = [
 
 def main() -> None:
     runs = int(os.environ.get("SPARK_GRAFT_SCALE_RUNS", "3"))
-    from rolaguard_data_collectors_spark.bootstrap import (
-        ensure_executor_pythonpath,
-    )
+    from bench import noop_wall, warm_up
     from rolaguard_data_collectors_spark.operators.rangejoin import (
         RANGE_JOIN_ERROR_WINDOWS_ORACLE,
         range_join_error_windows,
@@ -50,20 +49,15 @@ def main() -> None:
     from rolaguard_data_collectors_spark.session import get_spark
 
     spark = get_spark(app_name="range_join_scale")
-    ensure_executor_pythonpath(spark)
+    warm_up(spark, POINTS[0][1])
 
     out: dict[str, dict] = {}
     for name, sf_dir, sf in POINTS:
         if not os.path.exists(os.path.join(sf_dir, "events.parquet")):
             continue
         df = range_join_error_windows(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()  # warm
-        best = None
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            took = time.perf_counter() - t0
-            best = took if best is None else min(best, took)
+        noop_wall(df)  # warm this plan's codegen
+        best = min(noop_wall(df) for _ in range(runs))
         rows = df.count()
         rec: dict = {"spark_sec": round(best, 2), "rows": rows, "sf": sf}
         if not os.environ.get("SPARK_GRAFT_NO_ORACLE"):

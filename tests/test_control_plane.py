@@ -1,11 +1,9 @@
-"""Control-plane sources (ops 5, 6, 10, 15): config loading, control
-event parsing + dispatch, dimension lookups, protobuf gating."""
+"""Control-plane sources (ops 5, 6, 10): config loading, control
+event parsing + dispatch, dimension lookups."""
 
 from __future__ import annotations
 
 import json
-
-import pytest
 
 from pyspark.sql import functions as F
 
@@ -15,7 +13,6 @@ from rolaguard_data_collectors_spark.sources.control import (
     dim_count,
     dim_find_collector_by_ip_port_and_type,
     dim_find_one,
-    from_protobuf_uplink,
     load_collector_configs,
 )
 from rolaguard_data_collectors_spark.streaming.orchestrator import CollectorManager
@@ -92,6 +89,42 @@ def test_control_event_dispatch_drives_manager(spark, tmp_path):
     ]
 
 
+def test_replay_collector_id_comes_from_config(spark, tmp_path):
+    """A config's id is stamped on every envelope even when its capture
+    is not named ``*_<id>.jsonl``: ``CollectorManager`` passes it as
+    ``dataCollectorId``, and both replay readers honour it."""
+    feed = tmp_path / "pktfeed"
+    feed.mkdir()
+    body = {"phyPayload": DATA_UP_B64, "rxInfo": {"rssi": -60.0, "mac": "aabbccddeeff0011"}}
+    with open(feed / "feed.jsonl", "w") as fh:
+        for i in range(3):
+            fh.write(json.dumps({"topic": "gateway/aabb/rx", "value": json.dumps(body),
+                                 "ts": 1700000000 + i}) + "\n")
+    event = {"type": "CREATED", "data": _config(5, "chirpstack_collector", str(feed)),
+             "message": None}
+    raw = spark.createDataFrame([(json.dumps(event),)], "value string")
+    out = tmp_path / "out"
+    out.mkdir()
+    mgr = CollectorManager(spark, str(out))
+    mgr.handle_event_rows(control_event_stream(raw).collect())
+    mgr.process_all()
+    mgr.stop_all()
+    with open(out / "queue_5.jsonl") as fh:
+        envelopes = [json.loads(line) for line in fh]
+    assert len(envelopes) == 3
+    for env in envelopes:
+        assert env["packet"]["data_collector_id"] == 5
+        assert [m["data_collector_id"] for m in env["messages"]] == [5]
+
+    batch = (
+        spark.read.format("lorawan_replay")
+        .option("path", str(feed))
+        .option("dataCollectorId", "5")
+        .load()
+    )
+    assert {r["data_collector_id"] for r in batch.collect()} == {5}
+
+
 def test_control_event_dispatch_survives_malformed_sequences(spark, tmp_path):
     """Round-8 fuzz of the EP2 dispatch: unknown-id ENABLED/DISABLED
     (out-of-order control traffic), DELETED-then-ENABLED, a config-less
@@ -150,7 +183,3 @@ def test_control_event_dispatch_survives_malformed_sequences(spark, tmp_path):
     assert mgr.status_events[-1].status == "ERROR"
     mgr.stop_all()
 
-
-def test_protobuf_gate(spark):
-    with pytest.raises(NotImplementedError, match="descriptor"):
-        from_protobuf_uplink(F.col("x"))

@@ -72,66 +72,6 @@ def test_duration_field3_skipped_and_json_safe():
     assert pbc.decode_uplink_frame(base)["rxInfo"]["timestamp"] == 0
 
 
-def test_gw_descriptor_set_structure():
-    """gw.desc built by gw_descriptor must be a structurally valid
-    FileDescriptorSet: parse it back with the wire parser and check
-    package, message names, and every field's (number, type)."""
-    from rolaguard_data_collectors_spark.functions import gw_descriptor as gd
-
-    fds = pbc.parse_message(gd.build_descriptor_set())
-    assert list(fds) == [1]  # FileDescriptorSet.file
-    fdp = pbc.parse_message(fds[1][0])
-    assert fdp[1][0] == b"gw.proto" and fdp[2][0] == b"gw"
-    assert fdp[12][0] == b"proto3"
-    messages = {}
-    for m in fdp[4]:
-        md = pbc.parse_message(m)
-        fields = {}
-        for f in md.get(2, []):
-            fd = pbc.parse_message(f)
-            fields[fd[1][0].decode()] = (fd[3][0], fd[5][0])
-        messages[md[1][0].decode()] = fields
-    assert set(messages) == {
-        "UplinkFrame", "UplinkTXInfo", "LoRaModulationInfo", "UplinkRXInfo"
-    }
-    assert messages["UplinkFrame"]["phy_payload"] == (1, gd.TYPE_BYTES)
-    assert messages["UplinkFrame"]["rx_info"] == (3, gd.TYPE_MESSAGE)
-    assert messages["UplinkRXInfo"]["rssi"] == (5, gd.TYPE_INT32)
-    assert messages["UplinkRXInfo"]["lora_snr"] == (6, gd.TYPE_DOUBLE)
-    assert messages["UplinkRXInfo"]["crc_status"] == (17, gd.TYPE_UINT32)
-    assert messages["LoRaModulationInfo"]["code_rate"] == (3, gd.TYPE_STRING)
-
-
-def test_from_protobuf_uplink_descriptor_autogen(spark):
-    """With no descriptor given, from_protobuf_uplink self-generates
-    gw.desc. If the spark-protobuf jar is present the column must
-    decode the golden frame identically to the pure-Python codec;
-    without the jar it must raise pointing at the generated
-    descriptor."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from rolaguard_data_collectors_spark.sources.control import from_protobuf_uplink
-
-    phy = base64.b64decode(DATA_UP_B64)
-    raw = pbc.encode_uplink_frame(
-        phy_payload=phy, gateway_id=bytes.fromhex("aabbccddeeff0011"),
-        rssi=-61, lora_snr=6.5, frequency=868300000, spreading_factor=9,
-    )
-    try:
-        col = from_protobuf_uplink(F.col("raw"))
-    except NotImplementedError as e:
-        assert "gw.desc" in str(e)  # descriptor generated, jar absent
-        import os
-        assert os.path.exists(str(e).split("ready at ")[1].split(" —")[0])
-        return
-    df = spark.createDataFrame([(bytearray(raw),)], "raw binary").select(
-        col.alias("u")
-    )
-    row = df.select("u.phy_payload", "u.rx_info.rssi").collect()[0]
-    assert bytes(row[0]) == phy and row[1] == -61
-
-
 def test_normalize_chirpstack_protobuf_fallback(spark):
     from tests.test_streaming import _raw_df
     from rolaguard_data_collectors_spark.streaming.normalize import (
