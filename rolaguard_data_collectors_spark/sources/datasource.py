@@ -90,24 +90,55 @@ class _ReplaySlice(InputPartition):
         self.org_id = org_id
 
 
-class LorawanReplayStreamReader(DataSourceStreamReader):
-    """Offset = {file path: lines consumed}. latestOffset advances each
-    file by at most ``batchSize`` lines per micro-batch (rate limiting,
-    like Kafka's maxOffsetsPerTrigger).
+def _read_slice(partition: _ReplaySlice):
+    """Rows of lines [start, end) of one capture. Runs on an executor:
+    stream the file, skip to the slice."""
+    with open(partition.fpath, encoding="utf-8") as fh:
+        idx = 0
+        for line in fh:
+            line = line.strip()
+            if not line:
+                continue
+            if idx >= partition.end:
+                break
+            if idx >= partition.start:
+                # A torn/garbage capture line (writer crash mid-append)
+                # degrades to a topic-less row while offsets stay
+                # line-accurate.
+                m = parse_capture_line(line)
+                yield (
+                    idx,
+                    m.ts,
+                    m.topic,
+                    m.value,
+                    partition.collector_id,
+                    partition.org_id,
+                )
+            idx += 1
 
-    ``batchSize`` caps EVERY trigger, ``Trigger.AvailableNow``
-    included: PySpark 4.1's Python stream reader has no admission
-    control, so an availableNow run takes one ``latestOffset()`` — at
-    most ``batchSize`` lines per file — as its end and stops there. A
-    caller that must drain a larger backlog restarts the query on its
-    checkpoint until every file is covered (each restart resumes where
-    the last one committed), or sets ``batchSize`` above the backlog."""
+
+class LorawanReplayStreamReader(DataSourceStreamReader):
+    """Offset = {file path: lines consumed}. By default latestOffset
+    announces every line each file holds, so one trigger reads the
+    whole backlog and a ``Trigger.AvailableNow`` run drains it (Spark's
+    file and Kafka sources likewise put no cap on a trigger unless
+    ``maxFilesPerTrigger`` or ``maxOffsetsPerTrigger`` is set).
+
+    ``batchSize`` is the opt-in rate limit: each trigger advances each
+    file by at most that many lines. It caps EVERY trigger,
+    ``Trigger.AvailableNow`` included: PySpark 4.1's Python stream
+    reader has no admission control, so an availableNow run takes one
+    ``latestOffset()`` as its end and stops after that one batch. A
+    caller that sets ``batchSize`` and must drain a larger backlog
+    restarts the query on its checkpoint (with ``cursorPath``, each
+    restart resumes where the last one announced)."""
 
     def __init__(self, options: dict):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("lorawan_replay requires option 'path'")
-        self.batch_size = int(options.get("batchSize", 10_000))
+        cap = options.get("batchSize")
+        self.batch_size = None if cap is None else int(cap)
         self.org_id = int(options.get("organizationId", 0))
         self.collector_id = options.get("dataCollectorId")
         self.files = _collector_files(self.path)
@@ -157,12 +188,15 @@ class LorawanReplayStreamReader(DataSourceStreamReader):
         return {f: 0 for f in self.files}
 
     def latestOffset(self) -> dict:
-        # Called on the driver once per micro-batch: advance each
-        # collector by at most batch_size records, never backward.
-        nxt = {
-            f: min(self._totals[f], self._last.get(f, 0) + self.batch_size)
-            for f in self.files
-        }
+        # Called on the driver once per micro-batch: announce every
+        # line, or advance each collector by at most batch_size records.
+        if self.batch_size is None:
+            nxt = dict(self._totals)
+        else:
+            nxt = {
+                f: min(self._totals[f], self._last.get(f, 0) + self.batch_size)
+                for f in self.files
+            }
         self._last = nxt
         # Persist the cursor at ANNOUNCE time, not just in commit():
         # MicroBatchExecution only calls source.commit() when it purges
@@ -200,29 +234,7 @@ class LorawanReplayStreamReader(DataSourceStreamReader):
         return parts
 
     def read(self, partition: _ReplaySlice):
-        # Runs on an executor: stream the file, skip to the slice.
-        with open(partition.fpath, encoding="utf-8") as fh:
-            idx = 0
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                if idx >= partition.end:
-                    break
-                if idx >= partition.start:
-                    # A torn/garbage capture line (writer crash
-                    # mid-append) degrades to a topic-less row while
-                    # offsets stay line-accurate.
-                    m = parse_capture_line(line)
-                    yield (
-                        idx,
-                        m.ts,
-                        m.topic,
-                        m.value,
-                        partition.collector_id,
-                        partition.org_id,
-                    )
-                idx += 1
+        return _read_slice(partition)
 
     def commit(self, end: dict) -> None:
         # Confirmed positions (Spark calls this only when the offset
@@ -271,9 +283,7 @@ class LorawanReplayDataSource(DataSource):
                 ]
 
             def read(self, partition):
-                return LorawanReplayStreamReader(
-                    {"path": partition.fpath}
-                ).read(partition)
+                return _read_slice(partition)
 
         return _BatchReader()
 

@@ -110,7 +110,9 @@ class CollectorManager:
         )
         if cfg.source_format == "lorawan_replay" and "cursorPath" not in cfg.source_options:
             # Restart-safe rate-limit cursor, co-located with the sink
-            # checkpoint for this collector.
+            # checkpoint for this collector. It matters only when
+            # ``batchSize`` is set: uncapped, every trigger announces
+            # the whole capture.
             reader = reader.option(
                 "cursorPath", f"{self.out_dir}/cursor_{cfg.id}.json"
             )

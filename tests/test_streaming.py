@@ -74,6 +74,10 @@ def test_replay_source_multibatch(spark, tmp_path):
     )
     q = df.writeStream.format("memory").queryName("replay_t").outputMode("append").start()
     _drain(q)
+    # the opt-in cap holds on every trigger: at most 5 lines per file
+    rows = [p["numInputRows"] for p in q.recentProgress]
+    assert max(rows) <= 10, rows
+    assert sum(n > 0 for n in rows) >= 5, rows
     got = {
         (r["data_collector_id"], r["n"], r["mn"], r["mx"])
         for r in spark.sql(
@@ -82,6 +86,34 @@ def test_replay_source_multibatch(spark, tmp_path):
         ).collect()
     }
     assert got == {(1, 23, 0, 22), (2, 23, 0, 22)}
+
+
+def test_replay_available_now_drains_backlog_in_one_run(spark, tmp_path):
+    """With no ``batchSize`` an availableNow run reads every available
+    line: one query run commits a 12 000-line capture in one
+    micro-batch."""
+    register_sources(spark)
+    path = tmp_path / "collector_3.jsonl"
+    line = json.dumps({"topic": "gateway/g3/rx", "value": "{}", "ts": 1700000000})
+    path.write_text((line + "\n") * 12_000)
+    ck = tmp_path / "ck"
+    q = (
+        spark.readStream.format("lorawan_replay")
+        .option("path", str(path))
+        .load()
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(ck))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    assert q.exception() is None
+    rows = [p["numInputRows"] for p in q.recentProgress if p["numInputRows"]]
+    assert rows == [12_000]
+    for log in ("offsets", "commits"):
+        assert [n for n in os.listdir(ck / log) if n.isdigit()] == ["0"], log
+    offset = json.loads((ck / "offsets" / "0").read_text().splitlines()[-1])
+    assert offset == {str(path): 12_000}
 
 
 def test_live_source_fake_transport(spark):
