@@ -131,14 +131,20 @@ class LorawanReplayStreamReader(DataSourceStreamReader):
     ``latestOffset()`` as its end and stops after that one batch. A
     caller that sets ``batchSize`` and must drain a larger backlog
     restarts the query on its checkpoint (with ``cursorPath``, each
-    restart resumes where the last one announced)."""
+    restart resumes where the last one announced).
+
+    Uncapped, a collector's whole backlog is one micro-batch, and the
+    stateful enrich stage (``enrich_per_collector``) holds a
+    collector's rows of a batch in one Python worker, so that worker's
+    memory grows with the backlog (about 1.3 KB per line). A large
+    backlog that goes through stateful enrichment should set
+    ``batchSize``."""
 
     def __init__(self, options: dict):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("lorawan_replay requires option 'path'")
-        cap = options.get("batchSize")
-        self.batch_size = None if cap is None else int(cap)
+        self.batch_size = int(options.get("batchSize", 1 << 62))
         self.org_id = int(options.get("organizationId", 0))
         self.collector_id = options.get("dataCollectorId")
         self.files = _collector_files(self.path)
@@ -188,15 +194,12 @@ class LorawanReplayStreamReader(DataSourceStreamReader):
         return {f: 0 for f in self.files}
 
     def latestOffset(self) -> dict:
-        # Called on the driver once per micro-batch: announce every
-        # line, or advance each collector by at most batch_size records.
-        if self.batch_size is None:
-            nxt = dict(self._totals)
-        else:
-            nxt = {
-                f: min(self._totals[f], self._last.get(f, 0) + self.batch_size)
-                for f in self.files
-            }
+        # Called on the driver once per micro-batch: advance each
+        # collector by at most batch_size records, never backward.
+        nxt = {
+            f: min(self._totals[f], self._last.get(f, 0) + self.batch_size)
+            for f in self.files
+        }
         self._last = nxt
         # Persist the cursor at ANNOUNCE time, not just in commit():
         # MicroBatchExecution only calls source.commit() when it purges
