@@ -12,17 +12,24 @@ LLM-data-pipeline operators the driver contract requires.
 
 Layout:
     session     SparkSession factory tuned for local[N] and cluster.
-    catalog     testdata parquet tables -> named temp views.
+    catalog     testdata parquet tables -> DataFrames (timestamp
+                normalization, spread()).
     schemas     canonical packet schema + raw-source schemas (F1-F6).
-    operators/  scalar transforms, packet pipelines, relational and
-                stateful batch-shadow query library.
-    functions/  LoRaWAN frame codec + crypto as pandas UDFs.
-    sources/    PySpark Python DataSource streaming readers
-                (MQTT / TTN-v2 WebSocket / TTN-v3 SSE shapes).
-    sinks/      envelope serialization + foreachBatch sinks.
-    streaming/  stateful streaming ops (device map, prev-packet
-                correlation, location propagation, verify gate).
-    llm/        dedup, similarity search, text analysis, multimodal.
+    registry    QuerySpec inventory behind __spark_entry__.py.
+    operators/  scalar chains, relational, stateful batch shadows,
+                cascade rollups and range joins.
+    functions/  LoRaWAN frame codec + crypto as pandas UDFs and
+                Catalyst expressions; protobuf uplink fallback.
+    sources/    PySpark Python DataSource streaming readers and their
+                transports (MQTT / TTN-v2 WebSocket / TTN-v3 SSE,
+                capture replay), control-plane config reads.
+    streaming/  normalize (per-source parse pipelines), enrich and
+                stateful (device map, prev-packet correlation,
+                location propagation, verify gate), sink (envelope
+                serialization + exactly-once queue sink), orchestrator
+                (one query per collector).
+    llm/        dedup, similarity search, text analysis, multimodal,
+                curation.
 """
 
 __version__ = "0.1.0"

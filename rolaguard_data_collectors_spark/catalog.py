@@ -27,11 +27,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to always broadcast, even at 100 TB
-# scale the dims stay tiny relative to facts (TPC-H star schema).
-BROADCAST_DIMS = ("region", "nation", "supplier", "part", "customer")
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Timestamp storage portability. Depending on how the parquet was
 # written, a timestamp column arrives as one of three Spark types:
@@ -208,18 +203,3 @@ def spread(df: DataFrame, width: int | None = None) -> DataFrame:
     # always >= 0 by construction (partition_id << 33 + row index),
     # so the predicate keeps every row.
     return df.repartition(n).where(F.monotonically_increasing_id() >= 0)
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every testdata table as a temp view; return the frames.
-
-    Views keep the plans declarative (spark.sql over them composes with
-    DataFrame ops), and parquet scans stay lazy — nothing is read until
-    an action, so registering all ten is free.
-    """
-    frames: dict[str, DataFrame] = {}
-    for name in TABLES:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        frames[name] = df
-    return frames

@@ -532,7 +532,7 @@ def parse_phypayload(
             if nwk_s_key is not None:
                 # MIC validated in-parse: the B0 CMAC reuses the same
                 # cached key context, so this folds what was a second
-                # full UDF pass (validate_mic) into the decode
+                # full MIC-validation pass into the decode
                 out.mic_ok = (
                     mic_data(nwk_s_key, dev_addr_le, out.f_count, uplink, raw[:-4])
                     == raw[-4:]
@@ -702,8 +702,8 @@ def mic_cmac_input(raw: bytes) -> tuple[bytes, bytes] | None:
 
 def mic_cmac_input_b64(data_b64: str) -> tuple[bytes, bytes] | None:
     """mic_cmac_input over a (possibly unpadded) base64 wire string;
-    None for undecodable input — the shared prep step of the
-    validate_mic UDF's frame memo and the brute-force frame sample."""
+    None for undecodable input — the prep step of the brute-force
+    frame sample."""
     import base64
 
     try:

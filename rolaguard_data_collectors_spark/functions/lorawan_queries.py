@@ -208,7 +208,7 @@ def lorawan_join_workflow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # app_key in the app_s_key slot: for JoinRequest frames the decode
     # UDF uses it as the AppKey to validate the MIC in-parse (no
-    # second validate_mic pass)
+    # second MIC pass)
     parsed = framed.withColumn(
         "p",
         decode_phypayload_for(("m_type", "join_eui", "dev_eui", "dev_nonce", "mic_ok"))(

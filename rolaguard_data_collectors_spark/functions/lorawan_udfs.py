@@ -43,18 +43,15 @@ PARSED_FRAME_SCHEMA = T.StructType(
 _FIELDS = [f.name for f in PARSED_FRAME_SCHEMA.fields]
 
 
-def decode_phypayload_for(fields: tuple[str, ...] | None):
+def decode_phypayload_for(fields: tuple[str, ...]):
     """Column-pruned decode variant: same body as ``decode_phypayload``
     (see ``_decode_pruned``) but the UDF's return struct carries ONLY the
     requested fields. Catalyst's nested-schema pruning cannot reach
     inside a Python UDF — the full 18-field struct is built and
     Arrow-serialized per row even when the consumer projects two fields
     — so the pruning happens here, at UDF-construction time (measured
-    ~2x on the UDF stage for a 2-field projection at sf0.1). ``None``
-    returns the full-schema UDF; field order follows
-    ``PARSED_FRAME_SCHEMA`` regardless of request order."""
-    if fields is None:
-        return decode_phypayload
+    ~2x on the UDF stage for a 2-field projection at sf0.1). Field
+    order follows ``PARSED_FRAME_SCHEMA`` regardless of request order."""
     want = set(fields)
     unknown = want - set(_FIELDS)
     if unknown:
@@ -144,18 +141,9 @@ def encode_data_frame_b64(
     return pd.Series(out)
 
 
-MAC_ROUNDTRIP_SCHEMA = T.StructType(
-    [
-        T.StructField("fopts_hex", T.StringType()),
-        T.StructField("fopts_roundtrip_ok", T.BooleanType()),
-    ]
-)
-
-
 def _mac_roundtrip_cell(js: str | None, uplink: bool):
-    """(fopts_hex, roundtrip_ok) for one decoded f_opts JSON value —
-    shared by the standalone mac_commands_roundtrip UDF and the fused
-    data_frame_roundtrip kernel."""
+    """(fopts_hex, roundtrip_ok) for one decoded f_opts JSON value, as
+    the fused data_frame_roundtrip kernel checks it."""
     import json as _json
 
     if js is None:
@@ -166,20 +154,6 @@ def _mac_roundtrip_cell(js: str | None, uplink: bool):
         return raw.hex(), lc.parse_mac_commands(raw, uplink) == cmds
     except (ValueError, KeyError):
         return None, False
-
-
-@F.pandas_udf(MAC_ROUNDTRIP_SCHEMA)
-def mac_commands_roundtrip(f_opts_json: pd.Series, uplink: pd.Series) -> pd.DataFrame:
-    """op 47 proof kernel: marshal the JSON MAC-command list (the
-    decode struct's ``f_opts``) back to fOpts bytes, re-parse, and
-    assert the command list survives — marshal/parse are inverses on
-    the wire domain."""
-    hexes, ok = [], []
-    for js, up in zip(f_opts_json, uplink):
-        h, o = _mac_roundtrip_cell(js, bool(up))
-        hexes.append(h)
-        ok.append(o)
-    return pd.DataFrame({"fopts_hex": hexes, "fopts_roundtrip_ok": ok})
 
 
 DATA_ROUNDTRIP_SCHEMA = T.StructType(
@@ -390,50 +364,6 @@ def join_workflow_kernel(
     return pd.DataFrame(cols, columns=_JW_FIELDS)
 
 
-@F.pandas_udf(T.BooleanType())
-def validate_mic(data_b64: pd.Series, key_hex: pd.Series) -> pd.Series:
-    """generateValidMIC / testAppKeys kernel (ops 45-46): does this key
-    authenticate this frame?
-
-    Rows are grouped by candidate key inside the Arrow batch and
-    validated via the stage-vectorized aes_cmac_batch (one ECB call
-    per block stage per key instead of per frame) — the keyspace
-    sweep ships thousands of frames per key through each batch, which
-    is exactly the batch shape the kernel exploits (~7x on the MIC
-    inputs; lorawan_codec.aes_cmac_batch)."""
-    out = [False] * len(data_b64)
-    by_key: dict[str, tuple[list[int], list[bytes], list[bytes]]] = {}
-    # Frame memo: a keyspace sweep repeats each frame once per
-    # candidate key, so the b64 decode AND the key-independent CMAC
-    # input (B0 block + trailer split) are built O(distinct frames),
-    # not O(rows).
-    frame_memo: dict[str, tuple[bytes, bytes] | None] = {}
-    for i, (b64, kh) in enumerate(zip(data_b64, key_hex)):
-        if b64 in frame_memo:
-            built = frame_memo[b64]
-        else:
-            built = frame_memo[b64] = lc.mic_cmac_input_b64(b64)
-        if built is None:
-            continue
-        slot = by_key.setdefault(kh, ([], [], []))
-        slot[0].append(i)
-        slot[1].append(built[0])
-        slot[2].append(built[1])
-    for kh, (idxs, inputs, trailers) in by_key.items():
-        # Only a malformed candidate key hex maps to "no match"; kernel
-        # failures (e.g. a broken executor env) must propagate — mapping
-        # them to False would make a production sweep silently report
-        # zero survivors.
-        try:
-            key = bytes.fromhex(kh)
-        except (ValueError, TypeError):
-            continue
-        macs = lc.aes_cmac_batch(key, inputs)
-        for i, mac, tr in zip(idxs, macs, trailers):
-            out[i] = mac[:4] == tr
-    return pd.Series(out)
-
-
 def make_crack_udf(spark, sample: list[tuple]):
     """Key-sweep kernel for op 46 over a BROADCAST frame sample: the
     UDF receives only candidate keys (one Arrow row per key) and
@@ -467,9 +397,9 @@ def make_crack_udf(spark, sample: list[tuple]):
         inputs = [r[2] for r in rows]
         out = []
         for kh in key_hex:
-            # Malformed candidate hex = no match (as in validate_mic);
-            # kernel failures must propagate — a sweep that maps them
-            # to "no survivors" would silently report nothing cracked.
+            # Malformed candidate hex = no match; kernel failures must
+            # propagate — a sweep that maps them to "no survivors" would
+            # silently report nothing cracked.
             try:
                 key = bytes.fromhex(kh)
             except (ValueError, TypeError):
@@ -528,10 +458,9 @@ def make_ja_crack_udf(spark, sample: list[tuple]):
         key_rows: list[int] = []
         out: list[list] = [[] for _ in range(len(key_hex))]
         for pos, kh in enumerate(key_hex):
-            # Malformed candidate hex = no match (validate_mic
-            # convention); kernel failures must propagate — mapping
-            # them to "no survivors" would silently report nothing
-            # cracked.
+            # Malformed candidate hex = no match; kernel failures
+            # must propagate — mapping them to "no survivors" would
+            # silently report nothing cracked.
             try:
                 key = bytes.fromhex(kh)
             except (ValueError, TypeError):

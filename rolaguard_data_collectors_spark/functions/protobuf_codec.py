@@ -92,10 +92,6 @@ def parse_message(buf: bytes) -> dict[int, list]:
     return fields
 
 
-def _zigzag_decode(v: int) -> int:
-    return (v >> 1) ^ -(v & 1)
-
-
 def _int32(v: int) -> int:
     """varint holding a negative int32/int64 is 2^64-complemented."""
     return v - (1 << 64) if v >= (1 << 63) else v

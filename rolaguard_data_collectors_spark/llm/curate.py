@@ -422,7 +422,6 @@ def _pii_oracle_sql() -> str:
 
 CHUNK_CHARS = 256
 CHUNK_OVERLAP = 64
-_CHUNK_STRIDE = CHUNK_CHARS - CHUNK_OVERLAP
 
 
 def chunk_documents(spark: SparkSession, sf_dir: str,

@@ -39,9 +39,8 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- exact dedup ---------------------------------------------------------
 
 
-def dedup_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact duplicate groups by content hash; keeper = min doc_id
-    (deterministic survivor, unlike dropDuplicates' arbitrary row).
+def dedup_exact_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The deduplicated corpus: first doc_id per content hash.
 
     Plain load, not the spread() loader: md5+groupBy aggregates
     immediately and the agg exchange already redistributes (measured
@@ -52,33 +51,9 @@ def dedup_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         docs.select("doc_id", F.md5("text").alias("content_hash"))
         .groupBy("content_hash")
-        .agg(F.count("*").alias("n_copies"), F.min("doc_id").alias("keeper_doc_id"))
-        .filter(F.col("n_copies") > 1)
-    )
-
-
-DEDUP_EXACT_GROUPS_ORACLE = """
-SELECT md5(text) AS content_hash, count(*) AS n_copies, min(doc_id) AS keeper_doc_id
-FROM documents GROUP BY 1 HAVING count(*) > 1
-"""
-
-
-def dedup_exact_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The deduplicated corpus: first doc_id per content hash (plain
-    load — see dedup_exact_groups)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.select("doc_id", F.md5("text").alias("content_hash"))
-        .groupBy("content_hash")
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id", "content_hash")
     )
-
-
-DEDUP_EXACT_SURVIVORS_ORACLE = """
-SELECT min(doc_id) AS doc_id, md5(text) AS content_hash
-FROM documents GROUP BY md5(text)
-"""
 
 
 # Per-session memo of the history-half bloom: in steady state the
@@ -122,7 +97,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
       survivor (min doc_id per content hash) with its group size;
       ``n_copies > 1`` rows are the duplicate groups. One md5 hash
       shuffle with map-side partial aggregation (plain load — see
-      dedup_exact_groups).
+      dedup_exact_survivors).
     - ``leg='incremental_novel'``: the steady-state path — an ingest
       batch (odd doc_ids) deduplicated AGAINST an already-accepted
       history (even doc_ids) through the distributed Bloom prefilter +
@@ -332,13 +307,6 @@ NGRAM_JACCARD_ORACLE = None  # assigned after _minhash_sig_sql is defined
 # --- MinHash signatures + LSH bands -------------------------------------
 
 
-def _minhash_aggs():
-    return [
-        F.min(F.expr(minhash_term("tok", a, b))).alias(f"mh{i}")
-        for i, (a, b) in enumerate(MINHASH_PARAMS)
-    ]
-
-
 def _staged_token_hashes(spark: SparkSession, sf_dir: str,
                          docs: DataFrame | None = None) -> DataFrame:
     """(doc_id, _th) — the barrier-staged hashed distinct-token array
@@ -406,13 +374,10 @@ SELECT doc_id, {mins} FROM toks GROUP BY doc_id
 """
 
 
-MINHASH_SIGNATURES_ORACLE = _minhash_sig_sql()
-
-
 def _band_assignments(sig: DataFrame) -> DataFrame:
     """(band, bucket, doc_id) LSH band assignment rows from a MinHash
     signature frame: 4 bands x 2 rows, band key = md5 of the band's
-    concatenated values. Shared by lsh_band_buckets (occupancy) and
+    concatenated values. Shared by minhash_lsh_buckets (occupancy) and
     ngram_jaccard_dedup (candidate generation).
 
     One explode over an inline array of (band, bucket) structs — NOT a
@@ -433,20 +398,6 @@ def _band_assignments(sig: DataFrame) -> DataFrame:
     ).select(F.col("_e.band").alias("band"), F.col("_e.bucket").alias("bucket"), "doc_id")
 
 
-def lsh_band_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH banding over the MinHash signature: 4 bands x 2 rows; the
-    band key is md5 of the concatenated band values. Output: bucket
-    occupancy per band (docs sharing a bucket are near-dup candidates).
-    The bucket join — not an all-pairs comparison — is what survives
-    100 TB."""
-    all_bands = _band_assignments(minhash_signatures(spark, sf_dir))
-    return (
-        all_bands.groupBy("band", "bucket")
-        .agg(F.count("*").alias("n_docs"), F.min("doc_id").alias("min_doc_id"))
-        .filter(F.col("n_docs") > 1)
-    )
-
-
 def minhash_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Signature + banding + occupancy in ONE oracle-checked output
     (registry consolidation, round 4 — frees a driver slot without
@@ -454,9 +405,8 @@ def minhash_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     8-perm MinHash signature, its band's md5 bucket key, and the
     bucket's occupancy. Proves the signature values (explicit mh
     columns), the banding (bucket keys), and the candidate criterion
-    (n_docs) that ``lsh_band_buckets``/``minhash_signatures`` proved
-    separately. Same plan skeleton: one explode + one groupBy for the
-    signature, inline-array band explode, one window for occupancy.
+    (n_docs) in one frame. Plan skeleton: one explode + one groupBy for
+    the signature, inline-array band explode, one window for occupancy.
 
     Round 5 adds FUZZY decontamination on the same rows: with the
     held-out benchmark slice of ``llm/text.py`` (doc_id % BENCH_MOD),
@@ -524,20 +474,6 @@ FROM bands b JOIN sig s USING (doc_id)
 MINHASH_LSH_BUCKETS_ORACLE = _minhash_lsh_sql()
 
 
-def _lsh_band_sql() -> str:
-    bands_sql = "\nUNION ALL\n".join(
-        f"SELECT {band} AS band, md5(concat_ws('_', {band}, mh{2 * band}, mh{2 * band + 1})) AS bucket, doc_id FROM sig"
-        for band in range(BANDS)
-    )
-    return f"""
-WITH sig AS ({_minhash_sig_sql()}),
-bands AS ({bands_sql})
-SELECT band, bucket, count(*) AS n_docs, min(doc_id) AS min_doc_id
-FROM bands GROUP BY band, bucket HAVING count(*) > 1
-"""
-
-
-LSH_BAND_BUCKETS_ORACLE = _lsh_band_sql()
 NGRAM_JACCARD_ORACLE = _ngram_jaccard_sql()
 
 
@@ -726,35 +662,6 @@ SELECT doc_id, {packs} AS simhash FROM s
 
 
 SIMHASH_ORACLE = _simhash_sql()
-
-
-def _simhash_dedup_sql(max_hamming: int = 3) -> str:
-    bands = max_hamming + 1
-    width = 32 // bands
-    mask = (1 << width) - 1
-    band_sel = "\nUNION ALL\n".join(
-        f"SELECT doc_id, {b} AS band, (simhash >> {b * width}) & {mask} AS bucket FROM fp"
-        for b in range(bands)
-    )
-    return f"""
-WITH fp AS ({SIMHASH_ORACLE}),
-bands AS ({band_sel}),
-reps AS (SELECT band, bucket, min(doc_id) AS rep FROM bands GROUP BY band, bucket),
-cand AS (
-  SELECT b.doc_id, min(r.rep) AS rep_id
-  FROM bands b JOIN reps r ON b.band = r.band AND b.bucket = r.bucket
-  WHERE b.doc_id != r.rep GROUP BY b.doc_id
-)
-SELECT c.doc_id, c.rep_id,
-       CAST(bit_count(xor(fa.simhash, fb.simhash)) AS INTEGER) AS hamming
-FROM cand c
-JOIN fp fa ON fa.doc_id = c.doc_id
-JOIN fp fb ON fb.doc_id = c.rep_id
-WHERE bit_count(xor(fa.simhash, fb.simhash)) <= {max_hamming}
-"""
-
-
-SIMHASH_DEDUP_ORACLE = _simhash_dedup_sql()
 
 
 def _simhash_profile_sql(max_hamming: int = 3) -> str:

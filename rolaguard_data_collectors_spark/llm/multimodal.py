@@ -27,10 +27,6 @@ from pyspark.sql import functions as F
 from ..catalog import load_table, spread
 from ..registry import QuerySpec
 
-# Codec-library formats (JPEG/MP3/H.264) still need PIL/ffmpeg; the
-# container-native formats in llm/codecs.py decode for real.
-DECODE_AVAILABLE = False
-
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spread(load_table(spark, sf_dir, "documents"))
@@ -65,17 +61,6 @@ def multimodal_binary_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("meta.width").alias("width"),
         F.col("meta.height").alias("height"),
     )
-
-
-MULTIMODAL_BINARY_STATS_ORACLE = """
-SELECT doc_id,
-       CAST(octet_length(encode(text)) AS INTEGER) AS n_bytes,
-       sha256(text) AS sha256,
-       'image/png' AS mime,
-       CAST(n_chars % 640 + 1 AS INTEGER) AS width,
-       CAST(n_chars % 480 + 1 AS INTEGER) AS height
-FROM documents
-"""
 
 
 def _round6(x: float) -> float:
@@ -245,7 +230,7 @@ def multimodal_decode_features_flat(spark: SparkSession, sf_dir: str) -> DataFra
     builder above stays the composable API.
 
     Also carries the golden-resize columns: a 1-row golden PPM runs
-    through the REAL resize kernel (multimodal_resize's mapInPandas
+    through the REAL resize kernel (make_resize_kernel's mapInPandas
     plan) and the md5/shape of the output broadcast-joins onto every
     row — the resize/resample op's driver-checked proof (_golden_media
     explains the trust chain).
@@ -423,19 +408,6 @@ def make_resize_kernel(out_w: int = 32, out_h: int = 32, out_rate: int = 8000):
     return kernel
 
 
-def multimodal_resize(spark: SparkSession, sf_dir: str,
-                      out_w: int = 32, out_h: int = 32,
-                      out_rate: int = 8000) -> DataFrame:
-    """The brief's resize/resample op over the media table. The
-    testdata payloads are text bytes (decoder='raw' passthrough); the
-    real image/audio paths are pinned by tests/test_multimodal.py on
-    synthesized BMP/PPM/WAV payloads through this same plan."""
-    media = media_table(spark, sf_dir)
-    return media.select("doc_id", "payload").mapInPandas(
-        make_resize_kernel(out_w, out_h, out_rate), schema=RESIZE_SCHEMA
-    )
-
-
 def multimodal_frame_sample_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame/chunk sampling of a binary payload: every 32nd byte-offset
     chunk of 16 bytes (video frame-sampling shape) via JVM-side
@@ -468,27 +440,6 @@ def multimodal_frame_sample_sorted(spark: SparkSession, sf_dir: str) -> DataFram
             ).alias("chunks_digest"),
         )
     )
-
-
-# BYTE semantics throughout (round-7 fuzz find): the Spark side
-# profiles the utf-8 payload BYTES, so the oracle must slice/measure
-# encode(text) — char-based substr/length silently diverge on any
-# multi-byte character.
-MULTIMODAL_FRAME_SAMPLE_ORACLE = """
-WITH chunks AS (
-  -- DuckDB has no BLOB substring: hex the whole payload once and
-  -- slice CHARACTERS (2 hex chars per byte -> byte offset i*32 maps
-  -- to hex offset i*64, 16 bytes to 32 hex chars)
-  SELECT doc_id,
-         lower(substr(hx_all, i * 64 + 1, 32)) AS hx
-  FROM (SELECT doc_id, hex(encode(text)) AS hx_all,
-               unnest(generate_series(0, CAST(greatest(octet_length(encode(text)) - 16, 0) // 32 AS BIGINT))) AS i
-        FROM documents)
-)
-SELECT doc_id, count(*) AS n_chunks,
-       md5(string_agg(hx, '' ORDER BY hx)) AS chunks_digest
-FROM chunks GROUP BY doc_id
-"""
 
 
 def multimodal_binary_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -556,13 +507,6 @@ def image_phash_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
             hh.append(None)
             dec.append("raw")
         yield pd.DataFrame({"doc_id": ids, "decoder": dec, "dhash": hh})
-
-
-def image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    media = media_table(spark, sf_dir)
-    return media.select("doc_id", "payload").mapInPandas(
-        image_phash_kernel, schema=PHASH_SCHEMA
-    )
 
 
 def media_phash_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

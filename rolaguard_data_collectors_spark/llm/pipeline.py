@@ -40,9 +40,10 @@ from .text import STOPWORDS, _docs, _round6, _sql_round6
 
 
 def quality_keep(text_col: str = "text"):
-    """The quality_scores keep-gate (llm/text.py) as a reusable boolean
-    Column over a raw text column — same expression, so the composed
-    pipeline and the standalone registry query can never diverge."""
+    """The C4-style quality keep-gate as a reusable boolean Column over
+    a raw text column — the same expression as ``text_profile``'s
+    ``keep`` (llm/text.py), so the composed pipeline and the registry
+    query can never diverge."""
     toks = F.split(F.col(text_col), " ")
     n_toks = F.size(toks)
     stop_hits = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))

@@ -229,30 +229,6 @@ LIMIT {TOP_K}
 """
 
 
-def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vector stats: L2 norm, min/max component, dimensionality —
-    the sanity profile a pipeline runs before indexing."""
-    emb = _emb(spark, sf_dir)
-    return emb.select(
-        "vec_id",
-        F.round(_norm("embedding"), 6).alias("l2_norm"),
-        F.round(F.array_min(F.col("embedding")).cast("double"), 6).alias("min_dim"),
-        F.round(F.array_max(F.col("embedding")).cast("double"), 6).alias("max_dim"),
-        F.size("embedding").alias("dims"),
-    )
-
-
-EMBEDDING_NORMS_ORACLE = """
-SELECT vec_id,
-       round(sqrt(list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE) * x),
-                              (x, y) -> x + y)), 6) AS l2_norm,
-       round(CAST(list_min(embedding) AS DOUBLE), 6) AS min_dim,
-       round(CAST(list_max(embedding) AS DOUBLE), 6) AS max_dim,
-       CAST(len(embedding) AS INTEGER) AS dims
-FROM embeddings
-"""
-
-
 def label_centroid_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF training step: per-label centroid (posexplode + mean per
     dimension), then each vector's dot with its own centroid. Two

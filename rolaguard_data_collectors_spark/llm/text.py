@@ -49,57 +49,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spread(load_table(spark, sf_dir, "documents"))
 
 
-# --- token counting ------------------------------------------------------
-
-
-def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs(spark, sf_dir).select(
-        "doc_id",
-        F.size(F.split(F.col("text"), " ")).alias("ws_tokens"),
-        F.size(F.expr(f"regexp_extract_all(text, '{BPE_ISH}', 0)")).alias("bpe_tokens"),
-        F.length("text").alias("n_bytes"),
-    )
-
-
-TOKEN_COUNTS_ORACLE = f"""
-SELECT doc_id,
-       CAST(len(string_split(text, ' ')) AS INTEGER) AS ws_tokens,
-       CAST(len(regexp_extract_all(text, '{BPE_ISH}')) AS INTEGER) AS bpe_tokens,
-       CAST(length(text) AS INTEGER) AS n_bytes
-FROM documents
-"""
-
-
 # --- quality scoring -----------------------------------------------------
-
-
-def quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Length / mean-word-length / stopword-ratio quality signals with
-    a composite keep/drop gate — the standard C4-style heuristic filter
-    family, all as column arithmetic."""
-    docs = _docs(spark, sf_dir)
-    toks = F.split(F.col("text"), " ")
-    n_toks = F.size(toks)
-    stop_hits = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
-    mean_wlen = (F.length("text") - (n_toks - 1)) / n_toks
-    score = (
-        F.when(n_toks < 5, 0.0)
-        .otherwise(
-            _round6(
-                0.5 * F.least(n_toks / 100.0, F.lit(1.0))
-                + 0.3 * (stop_hits / n_toks)
-                + 0.2 * F.least(mean_wlen / 10.0, F.lit(1.0))
-            )
-        )
-    )
-    return docs.select(
-        "doc_id",
-        n_toks.alias("n_tokens"),
-        stop_hits.alias("stopword_hits"),
-        F.round(mean_wlen, 6).alias("mean_word_len"),
-        score.alias("quality_score"),
-        (score >= 0.2).alias("keep"),
-    )
 
 
 _STOP_IN = ", ".join(f"'{s}'" for s in STOPWORDS)
@@ -108,73 +58,6 @@ _SCORE_TERMS_SQL = (
     " + 0.3 * (stopword_hits / CAST(n_tokens AS DOUBLE))"
     " + 0.2 * least(((length(text) - (n_tokens - 1)) / n_tokens) / 10.0, 1.0)"
 )
-QUALITY_SCORES_ORACLE = f"""
-WITH t AS (
-  SELECT doc_id, text,
-         len(string_split(text, ' ')) AS n_tokens,
-         len(list_filter(string_split(text, ' '), x -> x IN ({_STOP_IN}))) AS stopword_hits
-  FROM documents
-), s AS (
-  SELECT doc_id, n_tokens, stopword_hits,
-         (length(text) - (n_tokens - 1)) / n_tokens AS mean_wlen,
-         CASE WHEN n_tokens < 5 THEN 0.0 ELSE
-           {_sql_round6(_SCORE_TERMS_SQL)}
-         END AS quality_score
-  FROM t
-)
-SELECT doc_id,
-       CAST(n_tokens AS INTEGER) AS n_tokens,
-       CAST(stopword_hits AS INTEGER) AS stopword_hits,
-       round(mean_wlen, 6) AS mean_word_len,
-       quality_score,
-       quality_score >= 0.2 AS keep
-FROM s
-"""
-
-
-# --- language identification (n-gram/stopword heuristic) -----------------
-
-
-def language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic lexical language heuristic: English stopword
-    density plus marker character n-grams. (The corpus is synthetic so
-    the labels are what they are — the operator is the deterministic
-    scoring pipeline, which is what runs at scale.)"""
-    docs = _docs(spark, sf_dir)
-    toks = F.split(F.col("text"), " ")
-    n_toks = F.size(toks)
-    stop_ratio = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS))) / n_toks
-    th_grams = F.size(F.expr("regexp_extract_all(text, 'th', 0)"))
-    pred = (
-        F.when(stop_ratio > 0.08, "en")
-        .when(th_grams > 5, "en_weak")
-        .otherwise("und")
-    )
-    return docs.select(
-        "doc_id",
-        F.col("lang").alias("lang_label"),
-        F.round(stop_ratio, 6).alias("stopword_ratio"),
-        th_grams.alias("th_bigrams"),
-        pred.alias("lang_pred"),
-    )
-
-
-LANGUAGE_ID_ORACLE = f"""
-WITH t AS (
-  SELECT doc_id, lang,
-         len(list_filter(string_split(text, ' '), x -> x IN ({_STOP_IN})))
-           / CAST(len(string_split(text, ' ')) AS DOUBLE) AS stop_ratio,
-         len(regexp_extract_all(text, 'th')) AS th_grams
-  FROM documents
-)
-SELECT doc_id, lang AS lang_label,
-       round(stop_ratio, 6) AS stopword_ratio,
-       CAST(th_grams AS INTEGER) AS th_bigrams,
-       CASE WHEN stop_ratio > 0.08 THEN 'en'
-            WHEN th_grams > 5 THEN 'en_weak'
-            ELSE 'und' END AS lang_pred
-FROM t
-"""
 
 
 # --- document fingerprinting (shingle sketch) ----------------------------
@@ -216,36 +99,6 @@ def _fingerprint_cols(harr) -> dict:
         "fp_max": F.array_max(harr),
         "n_shingles": F.size(F.array_distinct(harr)).cast("bigint"),
     }
-
-
-def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DataFrame form of ``_fingerprint_cols`` (kept for tests and
-    composition; `text_profile` inlines the columns instead of
-    joining)."""
-    staged = _arrays_barrier(
-        _docs(spark, sf_dir), ["doc_id"], {"_sh": F.expr(_SHINGLE_HASHES_EXPR)}
-    )
-    cols = _fingerprint_cols(F.col("_sh"))
-    return staged.select(
-        "doc_id",
-        cols["fp_min"].alias("fp_min"),
-        cols["fp_max"].alias("fp_max"),
-        cols["n_shingles"].alias("n_shingles"),
-    )
-
-
-DOC_FINGERPRINTS_ORACLE = f"""
-WITH pos AS (
-  SELECT doc_id, text,
-         unnest(generate_series(1, greatest(length(text) - 4, 1))) AS i
-  FROM documents
-), sh AS (
-  SELECT doc_id, {hex32("substr(text, i, 5)")} AS h FROM pos
-)
-SELECT doc_id, min(h) AS fp_min, max(h) AS fp_max,
-       count(DISTINCT h) AS n_shingles
-FROM sh GROUP BY doc_id
-"""
 
 
 # --- TF-IDF top terms (SURVEY.md §2B text analysis) -----------------------

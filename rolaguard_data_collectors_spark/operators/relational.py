@@ -272,41 +272,7 @@ GROUP BY n_name, r_name
 """
 
 
-# --- semi / anti joins ---------------------------------------------------
-
-
-def join_semi_customers_with_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXISTS: customers holding at least one URGENT order (left_semi —
-    probes push the build side; no row multiplication)."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
-    return cust.join(orders, cust.c_custkey == orders.o_custkey, "left_semi").select(
-        "c_custkey", "c_name", "c_mktsegment"
-    )
-
-
-JOIN_SEMI_ORACLE = """
-SELECT c_custkey, c_name, c_mktsegment
-FROM customer
-WHERE EXISTS (SELECT 1 FROM orders
-              WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-"""
-
-
-def join_anti_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NOT EXISTS via left_anti."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    return cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti").select(
-        "c_custkey", "c_name", F.round("c_acctbal", 2).alias("acctbal")
-    )
-
-
-JOIN_ANTI_ORACLE = """
-SELECT c_custkey, c_name, round(c_acctbal, 2) AS acctbal
-FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-"""
+# --- outer / semi / anti joins -------------------------------------------
 
 
 def join_left_outer_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -385,13 +351,6 @@ def rollup_returnflag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROLLUP_ORACLE = f"""
-SELECT l_returnflag, l_linestatus, count(*) AS n,
-       {_micro_sum_sql('l_quantity')} AS sum_qty
-FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-"""
-
-
 def cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders")
     base = _exact_base(orders, ["o_orderstatus", "o_orderpriority"],
@@ -401,13 +360,6 @@ def cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("base_n").alias("n"),
              _dollars(F.sum("p_m")).alias("total"))
     )
-
-
-CUBE_ORACLE = f"""
-SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-       {_micro_sum_sql('o_totalprice')} AS total
-FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
-"""
 
 
 def grouping_sets_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -420,80 +372,6 @@ def grouping_sets_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), (l_returnflag, l_linestatus))
         """
     )
-
-
-GROUPING_SETS_ORACLE = """
-SELECT l_returnflag, l_linestatus, count(*) AS n
-FROM lineitem
-GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), (l_returnflag, l_linestatus))
-"""
-
-
-# --- window functions ----------------------------------------------------
-
-
-def window_topk_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 orders per customer — the canonical Window + row_number
-    pattern; partition-local sort, no global shuffle beyond the
-    partitionBy hash."""
-    orders = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-    return (
-        orders.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("o_custkey", "o_orderkey", F.round("o_totalprice", 2).alias("totalprice"), "rn")
-    )
-
-
-WINDOW_TOPK_ORACLE = """
-SELECT o_custkey, o_orderkey, round(o_totalprice, 2) AS totalprice, rn
-FROM (SELECT *, CAST(row_number() OVER (PARTITION BY o_custkey
-                    ORDER BY o_totalprice DESC, o_orderkey ASC) AS INTEGER) AS rn
-      FROM orders)
-WHERE rn <= 3
-"""
-
-
-def window_lag_price_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    return orders.select(
-        "o_custkey",
-        "o_orderkey",
-        F.round(F.col("o_totalprice") - F.lag("o_totalprice").over(w), 2).alias("price_delta"),
-    )
-
-
-WINDOW_LAG_ORACLE = """
-SELECT o_custkey, o_orderkey,
-       round(o_totalprice - lag(o_totalprice) OVER (PARTITION BY o_custkey
-             ORDER BY o_orderdate, o_orderkey), 2) AS price_delta
-FROM orders
-"""
-
-
-def window_running_supplier_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    w = (
-        Window.partitionBy("l_suppkey")
-        .orderBy("l_shipdate", "l_orderkey", "l_linenumber")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return li.select(
-        "l_suppkey",
-        "l_orderkey",
-        "l_linenumber",
-        F.round(F.sum("l_quantity").over(w), 2).alias("running_qty"),
-    )
-
-
-WINDOW_RUNNING_ORACLE = """
-SELECT l_suppkey, l_orderkey, l_linenumber,
-       round(sum(l_quantity) OVER (PARTITION BY l_suppkey
-             ORDER BY l_shipdate, l_orderkey, l_linenumber
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS running_qty
-FROM lineitem
-"""
 
 
 # --- sort / top-k --------------------------------------------------------
@@ -599,13 +477,6 @@ def distinct_counts(
     )
 
 
-DISTINCT_COUNTS_ORACLE = """
-SELECT l_returnflag, count(DISTINCT l_partkey) AS n_parts,
-       count(DISTINCT l_suppkey) AS n_supps, count(*) AS n_rows
-FROM lineitem GROUP BY l_returnflag
-"""
-
-
 # --- pivot ---------------------------------------------------------------
 
 
@@ -619,75 +490,6 @@ def pivot_linestatus(
         .pivot("l_linestatus", ["O", "F"])
         .agg(F.round(F.sum("l_quantity"), 2))
     )
-
-
-PIVOT_ORACLE = """
-SELECT l_returnflag,
-       round(sum(CASE WHEN l_linestatus = 'O' THEN l_quantity END), 2) AS "O",
-       round(sum(CASE WHEN l_linestatus = 'F' THEN l_quantity END), 2) AS "F"
-FROM lineitem GROUP BY l_returnflag
-"""
-
-
-# --- scalar function showcase -------------------------------------------
-
-
-def scalar_function_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """String/math/date builtin surface over part+orders (all JVM-side
-    Catalyst expressions, whole-stage codegen'd)."""
-    part = _t(spark, sf_dir, "part")
-    return part.select(
-        "p_partkey",
-        F.upper("p_name").alias("name_upper"),
-        F.length("p_name").alias("name_len"),
-        F.substring("p_type", 1, 5).alias("type_head"),
-        F.concat_ws("|", "p_brand", "p_type").alias("brand_type"),
-        F.trim(F.lit("  x  ")).alias("trimmed"),
-        (F.col("p_size") % 5).alias("size_mod"),
-        F.abs(F.col("p_size") - 25).alias("size_dist"),
-        F.round(F.col("p_retailprice") * 1.1, 2).alias("price_up"),
-        F.greatest("p_size", F.lit(10)).alias("size_floor10"),
-        F.coalesce(F.nullif("p_brand", F.lit("Brand#1")), F.lit("other")).alias("brand_or_other"),
-    )
-
-
-SCALAR_SHOWCASE_ORACLE = """
-SELECT p_partkey,
-       upper(p_name) AS name_upper,
-       CAST(length(p_name) AS INTEGER) AS name_len,
-       substr(p_type, 1, 5) AS type_head,
-       concat_ws('|', p_brand, p_type) AS brand_type,
-       trim('  x  ') AS trimmed,
-       p_size % 5 AS size_mod,
-       abs(p_size - 25) AS size_dist,
-       round(p_retailprice * 1.1, 2) AS price_up,
-       greatest(p_size, 10) AS size_floor10,
-       coalesce(nullif(p_brand, 'Brand#1'), 'other') AS brand_or_other
-FROM part
-"""
-
-
-def date_function_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    return orders.select(
-        "o_orderkey",
-        F.year("o_orderdate").alias("y"),
-        F.month("o_orderdate").alias("m"),
-        F.dayofmonth("o_orderdate").alias("d"),
-        F.date_trunc("month", F.col("o_orderdate")).alias("month_start"),
-        (F.col("o_orderdate") + F.expr("INTERVAL 30 DAYS")).alias("plus30"),
-    )
-
-
-DATE_SHOWCASE_ORACLE = """
-SELECT o_orderkey,
-       CAST(year(o_orderdate) AS INTEGER) AS y,
-       CAST(month(o_orderdate) AS INTEGER) AS m,
-       CAST(day(o_orderdate) AS INTEGER) AS d,
-       CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month_start,
-       o_orderdate + INTERVAL 30 DAY AS plus30
-FROM orders
-"""
 
 
 # --- exact percentiles ---------------------------------------------------
@@ -1239,9 +1041,8 @@ FROM lineitem GROUP BY l_returnflag
 def function_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String/math/date builtin surface in one projection over orders
     (all JVM-side Catalyst expressions, whole-stage codegen'd).
-    Supersedes the separate part-table string demo + orders date demo;
-    part-specific expressions keep their unit coverage via
-    scalar_function_showcase in tests."""
+    Supersedes the separate part-table string demo + orders date
+    demo."""
     orders = _t(spark, sf_dir, "orders")
     return orders.select(
         "o_orderkey",

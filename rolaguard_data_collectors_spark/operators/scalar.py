@@ -142,246 +142,6 @@ GROUP BY 1, 2
 """
 
 
-# --- op 11: JSON deserialize --------------------------------------------
-
-
-def json_parse_props(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """from_json of the raw message body (GenericMqttCollector.py:120)."""
-    ev = _events(spark, sf_dir)
-    return ev.select(
-        "event_id",
-        F.from_json("props", EVENT_PROPS_SCHEMA).getField("k").alias("k"),
-    )
-
-
-JSON_PARSE_PROPS_ORACLE = """
-SELECT event_id, CAST(json_extract_string(props, '$.k') AS INTEGER) AS k
-FROM events
-"""
-
-
-# --- op 12: base64 pad + decode gate ------------------------------------
-
-
-def base64_pad_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pad base64 to a multiple of 4 then decode
-    (GenericMqttCollector.py:127-130). The unpadded input is
-    synthesized by stripping '=' from an encode of the doc text head;
-    Spark's MIME-chunked base64 output is un-chunked with translate()
-    to match RFC-4648 (what DuckDB and the reference's Python emit).
-    """
-    docs = _documents(spark, sf_dir)
-    b64 = F.translate(F.base64(F.substring("text", 1, 48).cast("binary")), "\r\n", "")
-    unpadded = F.regexp_replace(b64, "=+$", "")
-    repadded = F.concat(
-        unpadded, F.expr("repeat('=', (4 - length(regexp_replace(translate(base64(cast(substring(text, 1, 48) AS binary)), '\\r\\n', ''), '=+$', '')) % 4) % 4)")
-    )
-    return docs.select(
-        "doc_id",
-        unpadded.alias("unpadded"),
-        F.unbase64(repadded).cast("string").alias("decoded"),
-    )
-
-
-BASE64_PAD_DECODE_ORACLE = """
-WITH b AS (
-  SELECT doc_id, regexp_replace(base64(encode(substr(text, 1, 48))), '=+$', '') AS unpadded
-  FROM documents
-)
-SELECT doc_id, unpadded,
-       decode(from_base64(unpadded || repeat('=', (4 - length(unpadded) % 4) % 4))) AS decoded
-FROM b
-"""
-
-
-# --- ops 19 + 21: regex extract from topic + topic router ----------------
-
-
-def regex_topic_route(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Topic synthesis + regex routing/extraction.
-
-    Shadow of the ChirpStack topic router
-    (LoraServerIOCollector.py:171-184, :254-256) and the devEUI
-    topic extract (GenericMqttCollector.py:188-195) including the
-    '-'-strip.
-    """
-    ev = _events(spark, sf_dir)
-    topic = F.format_string("lora/dev-%d/%s", F.col("user_id"),
-                            F.when(F.col("event_type") == "signup", "joined").otherwise("up"))
-    ev = ev.select("event_id", topic.alias("topic"))
-    return ev.select(
-        "event_id",
-        "topic",
-        F.regexp_replace(F.regexp_extract("topic", "lora/(.*)/", 1), "-", "").alias("dev_eui"),
-        F.when(F.col("topic").rlike("/up$"), "data")
-        .when(F.col("topic").rlike("/joined$"), "join")
-        .otherwise("other")
-        .alias("route"),
-    )
-
-
-REGEX_TOPIC_ROUTE_ORACLE = """
-WITH t AS (
-  SELECT event_id,
-         printf('lora/dev-%d/%s', user_id,
-                CASE WHEN event_type = 'signup' THEN 'joined' ELSE 'up' END) AS topic
-  FROM events
-)
-SELECT event_id, topic,
-       replace(regexp_extract(topic, 'lora/(.*)/', 1), '-', '') AS dev_eui,
-       CASE WHEN regexp_matches(topic, '/up$') THEN 'data'
-            WHEN regexp_matches(topic, '/joined$') THEN 'join'
-            ELSE 'other' END AS route
-FROM t
-"""
-
-
-# --- op 20: data-rate parse ("SF7BW125" -> JSON) -------------------------
-
-
-def datarate_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """'SF(.*)BW(.*)' -> {"spread_factor","bandwidth"} JSON string
-    (GenericMqttCollector.py:197-205). Spark to_json(struct(..)) and
-    DuckDB to_json(struct_pack(..)) agree byte-for-byte when no field
-    is null (probe P12)."""
-    ev = _events(spark, sf_dir)
-    datr = F.format_string("SF%dBW%d", (F.col("user_id") % 6 + 7).cast("int"),
-                           F.when(F.col("event_id") % 2 == 0, 125).otherwise(250))
-    ev = ev.select("event_id", datr.alias("datr"))
-    return ev.select(
-        "event_id",
-        "datr",
-        F.to_json(
-            F.struct(
-                F.regexp_extract("datr", "SF(.*)BW(.*)", 1).alias("spread_factor"),
-                F.regexp_extract("datr", "SF(.*)BW(.*)", 2).alias("bandwidth"),
-            )
-        ).alias("datr_json"),
-    )
-
-
-DATARATE_PARSE_ORACLE = """
-WITH t AS (
-  SELECT event_id,
-         printf('SF%dBW%d', user_id % 6 + 7,
-                CASE WHEN event_id % 2 = 0 THEN 125 ELSE 250 END) AS datr
-  FROM events
-)
-SELECT event_id, datr,
-       to_json(struct_pack(
-           spread_factor := regexp_extract(datr, 'SF(.*)BW(.*)', 1),
-           bandwidth := regexp_extract(datr, 'SF(.*)BW(.*)', 2))) AS datr_json
-FROM t
-"""
-
-
-# --- op 24: unit conversions --------------------------------------------
-
-
-def unit_conversions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hz->MHz divide (LoraServerIOCollector.py:334,354), ISO ts ->
-    epoch seconds/us (TTNCollector.py:232, TTNv3Collector.py:269-270),
-    CRC enum -> int (LoraServerIOCollector.py:523-531)."""
-    ev = _events(spark, sf_dir)
-    # floor() before the cast: Spark's double->long cast truncates while
-    # DuckDB's rounds, so make the semantics explicit and identical.
-    freq_hz = F.floor(F.col("value") * 10000000).cast("long")
-    return ev.select(
-        "event_id",
-        F.round(freq_hz / 1000000.0, 6).alias("freq_mhz"),
-        F.unix_micros("ts").alias("epoch_us"),
-        (F.unix_micros("ts") / F.lit(1000000)).cast("long").alias("epoch_s"),
-        F.when(F.col("event_type") == "error", -1)
-        .when(F.col("event_type") == "click", 1)
-        .otherwise(0)
-        .alias("crc_stat"),
-    )
-
-
-UNIT_CONVERSIONS_ORACLE = """
-SELECT event_id,
-       round(CAST(floor(value * 10000000) AS BIGINT) / 1000000.0, 6) AS freq_mhz,
-       epoch_us(ts) AS epoch_us,
-       CAST(epoch_us(ts) // 1000000 AS BIGINT) AS epoch_s,
-       CASE WHEN event_type = 'error' THEN -1
-            WHEN event_type = 'click' THEN 1
-            ELSE 0 END AS crc_stat
-FROM events
-"""
-
-
-# --- op 25: base64 -> hex ------------------------------------------------
-
-
-def base64_to_hex(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """b64decode(gatewayID).hex() (LoraServerIOCollector.py:324)."""
-    docs = _documents(spark, sf_dir)
-    gw_b64 = F.translate(F.base64(F.col("source").cast("binary")), "\r\n", "")
-    return docs.select(
-        "doc_id",
-        gw_b64.alias("gateway_b64"),
-        F.lower(F.hex(F.unbase64(gw_b64))).alias("gateway_hex"),
-    )
-
-
-BASE64_TO_HEX_ORACLE = """
-WITH t AS (SELECT doc_id, base64(encode(source)) AS gateway_b64 FROM documents)
-SELECT doc_id, gateway_b64, lower(hex(from_base64(gateway_b64))) AS gateway_hex
-FROM t
-"""
-
-
-# --- op 26: string truncation -------------------------------------------
-
-
-def string_truncation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raw message capped before persist (TTNCollector.py:218 caps at
-    4096; shadow caps at 64 so the truncation is exercised)."""
-    docs = _documents(spark, sf_dir)
-    return docs.select(
-        "doc_id",
-        F.substring("text", 1, 64).alias("message"),
-        F.length(F.substring("text", 1, 64)).alias("message_len"),
-    )
-
-
-STRING_TRUNCATION_ORACLE = """
-SELECT doc_id, substr(text, 1, 64) AS message, CAST(length(substr(text, 1, 64)) AS INTEGER) AS message_len
-FROM documents
-"""
-
-
-# --- op 27: constant/derived stamps -------------------------------------
-
-
-def constant_stamps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Config constants + 'eui-' strip (TTNCollector.py:252-253).
-    The reference stamps date=now(); the deterministic shadow stamps
-    the event time instead (nondeterministic now() can't be
-    oracle-checked)."""
-    ev = _events(spark, sf_dir)
-    gw = F.format_string("eui-%08x", F.col("user_id"))
-    return ev.select(
-        "event_id",
-        F.lit(7).cast("long").alias("data_collector_id"),
-        F.lit(1).cast("long").alias("organization_id"),
-        gw.alias("gateway_raw"),
-        F.regexp_replace(gw, "^eui-", "").alias("gateway"),
-        F.col("ts").alias("date"),
-    )
-
-
-CONSTANT_STAMPS_ORACLE = """
-SELECT event_id,
-       CAST(7 AS BIGINT) AS data_collector_id,
-       CAST(1 AS BIGINT) AS organization_id,
-       printf('eui-%08x', user_id) AS gateway_raw,
-       regexp_replace(printf('eui-%08x', user_id), '^eui-', '') AS gateway,
-       ts AS date
-FROM events
-"""
-
-
 # --- op 28 + sink shape: envelope JSON serialization ---------------------
 
 
@@ -447,168 +207,12 @@ FROM events
 """
 
 
-# --- ops 29-31: filters / guards ----------------------------------------
-
-
-def filter_guards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heartbeat drop len<=1 (TTNCollector.py:164-166), missing-field
-    drop (GenericMqttCollector.py:122-125), size guard <= 300
-    (LoraServerIOCollector.py:312-315) — composed over documents.
-    Catalyst pushes all three into the parquet scan."""
-    docs = _documents(spark, sf_dir)
-    return (
-        docs.filter(
-            (F.length("text") > 1)
-            & F.col("text").isNotNull()
-            & (F.col("n_chars") <= 300)
-        )
-        .groupBy("lang")
-        .agg(F.count("*").alias("n_kept"), F.sum("n_chars").alias("total_chars"))
-    )
-
-
-FILTER_GUARDS_ORACLE = """
-SELECT lang, count(*) AS n_kept, CAST(sum(n_chars) AS BIGINT) AS total_chars
-FROM documents
-WHERE length(text) > 1 AND text IS NOT NULL AND n_chars <= 300
-GROUP BY lang
-"""
-
-
-# --- op 32: parse-error routing -----------------------------------------
-
-
-def parse_error_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unparseable payload -> error column, row still persisted
-    (PhyParser.py:10-12, GenericMqttCollector.py:174-176). Corruption
-    is synthesized deterministically (every 7th message truncated);
-    Spark's from_json yields null fields on malformed input, DuckDB
-    guards with json_valid."""
-    ev = _events(spark, sf_dir)
-    raw = F.when(F.col("event_id") % 7 == 0, F.substring("props", 1, 3)).otherwise(
-        F.col("props")
-    )
-    ev = ev.select("event_id", raw.alias("raw"))
-    parsed = F.from_json("raw", EVENT_PROPS_SCHEMA).getField("k")
-    return ev.select(
-        "event_id",
-        parsed.alias("k"),
-        F.when(parsed.isNull(), "Unmarshal error: invalid payload").alias("error"),
-    )
-
-
-PARSE_ERROR_ROUTING_ORACLE = """
-WITH t AS (
-  SELECT event_id,
-         CASE WHEN event_id % 7 = 0 THEN substr(props, 1, 3) ELSE props END AS raw
-  FROM events
-)
-SELECT event_id,
-       CASE WHEN json_valid(raw) THEN CAST(json_extract_string(raw, '$.k') AS INTEGER) END AS k,
-       CASE WHEN NOT json_valid(raw) OR json_extract_string(raw, '$.k') IS NULL
-            THEN 'Unmarshal error: invalid payload' END AS error
-FROM t
-"""
-
-
-# --- op 14/22/23: per-mType field projection + router --------------------
-
-
-def mtype_field_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-mType switch selecting different field sets
-    (PhyParser.py:21-71): JoinRequest carries dev_nonce, Data frames
-    carry dev_addr/f_count, others null — one when/otherwise chain,
-    exactly how the engine projects per-type columns."""
-    ev = _events(spark, sf_dir)
-    m_type = _mtype_col()
-    is_join = F.col("event_type") == "signup"
-    is_data = F.col("event_type").isin("click", "view", "purchase")
-    return ev.select(
-        "event_id",
-        m_type.alias("m_type"),
-        F.when(is_join, F.format_string("%016x", F.col("user_id"))).alias("dev_eui"),
-        F.when(is_join, (F.col("event_id") % 65536).cast("int")).alias("dev_nonce"),
-        F.when(is_data, F.format_string("%08x", F.col("user_id"))).alias("dev_addr"),
-        F.when(is_data, F.col("event_id") % 1024).alias("f_count"),
-        F.when(is_data, F.col("event_id") % 2 == 0).alias("adr"),
-    )
-
-
-MTYPE_FIELD_PROJECTION_ORACLE = f"""
-SELECT event_id,
-       {_mtype_case_sql()} AS m_type,
-       CASE WHEN event_type = 'signup' THEN printf('%016x', user_id) END AS dev_eui,
-       CASE WHEN event_type = 'signup' THEN CAST(event_id % 65536 AS INTEGER) END AS dev_nonce,
-       CASE WHEN event_type IN ('click', 'view', 'purchase') THEN printf('%08x', user_id) END AS dev_addr,
-       CASE WHEN event_type IN ('click', 'view', 'purchase') THEN event_id % 1024 END AS f_count,
-       CASE WHEN event_type IN ('click', 'view', 'purchase') THEN event_id % 2 = 0 END AS adr
-FROM events
-"""
-
-
-# --- ops 16-18: radio-metadata projection through from_json --------------
-
-
-def radio_metadata_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nested raw JSON -> flat radio columns. The raw ChirpStack-shaped
-    message (FIXTURES.md F3) is synthesized with to_json, then parsed
-    back with from_json and projected: rxInfo.loRaSNR -> lsnr, nested
-    dataRate -> datr fields, Hz -> MHz divide
-    (LoraServerIOCollector.py:321-360). Exercises the real plan shape:
-    from_json -> nested field access -> arithmetic."""
-    ev = _events(spark, sf_dir)
-    raw = F.to_json(
-        F.struct(
-            F.struct(
-                (F.col("user_id") % 8).cast("int").alias("channel"),
-                F.round("value", 2).alias("loRaSNR"),
-                (F.round("value", 2) * -1).alias("rssi"),
-                ((F.col("event_id") % 9 + 1) * 100000000).alias("frequency"),
-                F.struct(
-                    F.lit("LORA").alias("modulation"),
-                    (F.col("user_id") % 6 + 7).cast("int").alias("spreadFactor"),
-                ).alias("dataRate"),
-            ).alias("rxInfo")
-        )
-    )
-    ev = ev.select("event_id", raw.alias("raw"))
-    schema = (
-        "rxInfo struct<channel:int, loRaSNR:double, rssi:double, "
-        "frequency:bigint, dataRate:struct<modulation:string, spreadFactor:int>>"
-    )
-    parsed = F.from_json("raw", schema)
-    return ev.select(
-        "event_id",
-        parsed.getField("rxInfo").getField("channel").alias("chan"),
-        parsed.getField("rxInfo").getField("loRaSNR").alias("lsnr"),
-        parsed.getField("rxInfo").getField("rssi").alias("rssi"),
-        F.round(parsed.getField("rxInfo").getField("frequency") / 1000000.0, 6).alias("freq_mhz"),
-        parsed.getField("rxInfo").getField("dataRate").getField("modulation").alias("modu"),
-        parsed.getField("rxInfo").getField("dataRate").getField("spreadFactor").alias("spread_factor"),
-    )
-
-
-RADIO_METADATA_PROJECTION_ORACLE = """
-SELECT event_id,
-       CAST(user_id % 8 AS INTEGER) AS chan,
-       round(value, 2) AS lsnr,
-       round(value, 2) * -1 AS rssi,
-       round((event_id % 9 + 1) * 100000000 / 1000000.0, 6) AS freq_mhz,
-       'LORA' AS modu,
-       CAST(user_id % 6 + 7 AS INTEGER) AS spread_factor
-FROM events
-"""
-
-
-# --- compound chains (registry consolidation, round 2) -------------------
+# --- compound chains: ops 11-33 ------------------------------------------
 #
 # The driver's correctness gate checks a bounded window of registry
-# entries, so the 13 fine-grained scalar shadows above are registered
-# as three compound chains that project every component's columns in
-# one pass (same expressions, same oracles, unioned column-wise).
-# The component builders stay exported: the streaming layer and unit
-# tests use them individually, and the compound builders are thin
-# column-level compositions of them.
+# entries, so the fine-grained scalar ops are registered as three
+# compound chains that project every component's columns in one pass,
+# each column under its op number.
 
 
 def scalar_decode_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -616,8 +220,7 @@ def scalar_decode_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from_json parse (op 11), regex topic route + devEUI extract (ops
     19/21), datarate parse (op 20), per-mType field projection (ops
     14/22/23), nested radio-metadata projection (ops 16-18), and
-    parse-error routing (op 32). One narrow scan -> one select; every
-    column keeps the exact expression of its standalone shadow.
+    parse-error routing (op 32). One narrow scan -> one select.
     Scale: single stage, whole-stage codegen, no shuffle.
 
     NULL user_id rows are dropped, mirroring the reference's identity
@@ -742,8 +345,8 @@ FROM t
 def scalar_envelope_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ops 24, 27, 28 as ONE wide projection over events: unit/enum
     conversions, constant/derived stamps, and the
-    packet_writter_message envelope serialization. Same expressions as
-    the standalone shadows; one narrow no-shuffle stage. NULL user_id
+    packet_writter_message envelope serialization in one narrow
+    no-shuffle stage. NULL user_id
     rows dropped — same identity-guard policy and printf-NULL
     rationale as scalar_decode_chain."""
     ev = _events(spark, sf_dir).where(F.col("user_id").isNotNull())

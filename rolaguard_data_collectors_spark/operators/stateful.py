@@ -357,13 +357,6 @@ def tumbling_window_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TUMBLING_ORACLE = """
-SELECT date_trunc('hour', ts) AS window_start, event_type,
-       count(*) AS n, round(sum(value), 2) AS total_value
-FROM events GROUP BY 1, 2
-"""
-
-
 def sliding_window_2h_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding 2h window every 1h: each event lands in 2 hourly slots
     (explode of the slot offsets — the same expansion Spark's window()
@@ -376,14 +369,6 @@ def sliding_window_2h_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy(win_start.alias("window_start"))
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
     )
-
-
-SLIDING_ORACLE = """
-SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) - slot * INTERVAL 1 HOUR AS window_start,
-       count(*) AS n, round(sum(value), 2) AS total_value
-FROM events, (VALUES (0), (1)) AS slots(slot)
-GROUP BY 1
-"""
 
 
 def time_windows(spark: SparkSession, sf_dir: str) -> DataFrame:

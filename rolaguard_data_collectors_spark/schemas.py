@@ -65,23 +65,6 @@ PACKET_SCHEMA = T.StructType(
 
 PACKET_COLUMNS = [f.name for f in PACKET_SCHEMA.fields]
 
-# Envelope shipped to the packet queue (reference BaseCollector.py:55-56,
-# PacketPersistence.py:35): {'packet': ..., 'messages': [...], 'ts': epoch}.
-ENVELOPE_MESSAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("topic", T.StringType()),
-        T.StructField("message", T.StringType()),  # capped at 4096 chars
-        T.StructField("data_collector_id", T.LongType()),
-    ]
-)
-
-ENVELOPE_SCHEMA = T.StructType(
-    [
-        T.StructField("packet", PACKET_SCHEMA),
-        T.StructField("messages", T.ArrayType(ENVELOPE_MESSAGE_SCHEMA)),
-        T.StructField("ts", T.LongType()),
-    ]
-)
 
 # --- F2: generic packet-forwarder MQTT JSON (GenericMqttCollector.py:119-151)
 MQTT_FORWARDER_SCHEMA = T.StructType(

@@ -74,14 +74,6 @@ def control_event_stream(raw: DataFrame, value_col: str = "value") -> DataFrame:
 # --- op 10: dimension lookups (db/*.py find_one / count) ------------------
 
 
-def read_dimension_jdbc(
-    spark: SparkSession, url: str, table: str, properties: dict | None = None
-) -> DataFrame:
-    """Ops 9/10 read side: `spark.read.jdbc` over a control table
-    (requires the JDBC driver jar on the classpath)."""
-    return spark.read.jdbc(url, table, properties=properties or {})
-
-
 def dim_find_one(dim: DataFrame, *predicates: Column) -> DataFrame:
     """ORM ``query.filter(...).first()`` (db/DataCollector.py:44-51):
     conjunctive filter + limit(1). Catalyst pushes the predicates into

@@ -148,7 +148,6 @@ class LorawanReplayStreamReader(DataSourceStreamReader):
         self.org_id = int(options.get("organizationId", 0))
         self.collector_id = options.get("dataCollectorId")
         self.files = _collector_files(self.path)
-        self._totals = {f: _count_lines(f) for f in self.files}
         # Rate-limit cursor. latestOffset() gets no start offset from
         # Spark, so a restarted reader would otherwise begin at 0 and
         # hand the engine an offset BEHIND the checkpoint — Spark logs
@@ -195,9 +194,11 @@ class LorawanReplayStreamReader(DataSourceStreamReader):
 
     def latestOffset(self) -> dict:
         # Called on the driver once per micro-batch: advance each
-        # collector by at most batch_size records, never backward.
+        # collector by at most batch_size records, never backward. The
+        # files are counted here, not once at construction, so lines
+        # appended to a capture while the query runs are read too.
         nxt = {
-            f: min(self._totals[f], self._last.get(f, 0) + self.batch_size)
+            f: min(_count_lines(f), self._last.get(f, 0) + self.batch_size)
             for f in self.files
         }
         self._last = nxt

@@ -46,10 +46,8 @@ class RawMessage:
 def put_evict_oldest(q: "queue.Queue[RawMessage]", record: RawMessage) -> int:
     """Enqueue with oldest-first backpressure: when the bounded queue
     is full, evict heads until the NEWEST message lands, returning how
-    many were dropped (the callback-thread half of every live
-    transport's callback->queue->poll path; tested directly because
-    provoking a 100k-deep overflow through a real broker is not a unit
-    test)."""
+    many were dropped (the callback-thread half of every network
+    transport's callback->queue->poll path, see QueuedTransport)."""
     dropped = 0
     while True:
         try:
@@ -74,6 +72,32 @@ class Transport:
 
     def close(self) -> None:  # pragma: no cover - interface
         raise NotImplementedError
+
+
+class QueuedTransport(Transport):
+    """Base of the network transports: their client thread hands each
+    message to ``_enqueue`` and ``poll`` drains the bounded queue. A
+    full queue evicts its oldest message so the newest lands, and
+    counts the loss in ``dropped_messages`` — a client callback never
+    blocks and never raises on overflow."""
+
+    queue_maxsize = 100_000
+
+    def __init__(self) -> None:
+        self._queue: queue.Queue[RawMessage] = queue.Queue(maxsize=self.queue_maxsize)
+        self.dropped_messages = 0  # backpressure evictions, observable
+
+    def _enqueue(self, record: RawMessage) -> None:
+        self.dropped_messages += put_evict_oldest(self._queue, record)
+
+    def poll(self, max_records: int) -> list[RawMessage]:
+        out = []
+        for _ in range(max_records):
+            try:
+                out.append(self._queue.get_nowait())
+            except queue.Empty:
+                break
+        return out
 
 
 def parse_capture_line(line: str) -> RawMessage:
@@ -212,10 +236,10 @@ class MqttConfig:
     reconnect_max_s: int = 60
 
 
-class MqttTransport(Transport):
+class MqttTransport(QueuedTransport):
     """paho-mqtt subscriber (ops 1-2). The broker callback thread
-    pushes into a bounded queue; ``poll`` drains it — the queue is the
-    same decoupling the reference got from paho's network thread
+    pushes into the bounded queue; ``poll`` drains it — the queue is
+    the same decoupling the reference got from paho's network thread
     (GenericMqttCollector.py:90 loop_start)."""
 
     def __init__(self, config: MqttConfig):
@@ -230,11 +254,10 @@ class MqttTransport(Transport):
             # paho is preferred when importable (TLS, QoS 2, auto-
             # reconnect); the shim refuses ssl=True loudly.
             from .._vendor import mqttshim as mqtt
+        super().__init__()
         self._mqtt = mqtt
         self.config = config
-        self._queue: queue.Queue[RawMessage] = queue.Queue(maxsize=100_000)
         self._client = None
-        self.dropped_messages = 0  # backpressure evictions, observable
 
     def connect(self) -> None:
         import time
@@ -248,14 +271,13 @@ class MqttTransport(Transport):
         client.reconnect_delay_set(c.reconnect_min_s, c.reconnect_max_s)
 
         def on_message(_client, _userdata, msg):
-            record = RawMessage(
-                topic=msg.topic,
-                value=msg.payload.decode("utf-8", errors="replace"),
-                ts=int(time.time()),
+            self._enqueue(
+                RawMessage(
+                    topic=msg.topic,
+                    value=msg.payload.decode("utf-8", errors="replace"),
+                    ts=int(time.time()),
+                )
             )
-            # oldest-first backpressure, loss observable (the counter
-            # is surfaced by poll()'s caller via transport stats)
-            self.dropped_messages += put_evict_oldest(self._queue, record)
 
         client.on_message = on_message
         client.connect(c.host, c.port)
@@ -263,15 +285,6 @@ class MqttTransport(Transport):
             client.subscribe(t, qos=c.qos)
         client.loop_start()
         self._client = client
-
-    def poll(self, max_records: int) -> list[RawMessage]:
-        out = []
-        for _ in range(max_records):
-            try:
-                out.append(self._queue.get_nowait())
-            except queue.Empty:
-                break
-        return out
 
     def close(self) -> None:
         if self._client is not None:
@@ -400,7 +413,7 @@ class TTNv2Session:
                     return
 
 
-class TTNv2WebSocketTransport(Transport):
+class TTNv2WebSocketTransport(QueuedTransport):
     """TTN v2 console WebSocket (op 3): login -> access token -> wss
     subscribe per gateway -> background token refresh
     (TTNCollector.py:88-123, 287-355); keepalive 'h' frames are
@@ -425,9 +438,9 @@ class TTNv2WebSocketTransport(Transport):
             # importable (wss:// TLS, deflate); the shim refuses
             # wss:// loudly.
             from .._vendor import wsshim as websocket
+        super().__init__()
         self._websocket = websocket
         self.config = config
-        self._queue: queue.Queue[RawMessage] = queue.Queue(maxsize=100_000)
         self._ws = None
         self._ws_thread: threading.Thread | None = None
         self._refresh_thread: threading.Thread | None = None
@@ -445,9 +458,7 @@ class TTNv2WebSocketTransport(Transport):
         data = self.session.fetch_access_token()
 
         def on_message(_ws, msg):
-            self._queue.put_nowait(
-                RawMessage(topic="", value=msg, ts=int(time.time()))
-            )
+            self._enqueue(RawMessage(topic="", value=msg, ts=int(time.time())))
 
         def on_open(ws):
             for gw in self.config.gateway_ids:  # :298-299
@@ -475,15 +486,6 @@ class TTNv2WebSocketTransport(Transport):
         )
         self._refresh_thread.start()
 
-    def poll(self, max_records: int) -> list[RawMessage]:
-        out = []
-        for _ in range(max_records):
-            try:
-                out.append(self._queue.get_nowait())
-            except queue.Empty:
-                break
-        return out
-
     def close(self) -> None:
         self._closed = True
         if self._ws is not None:
@@ -501,7 +503,7 @@ class TTNv3Config:
     reconnect_every_s: int = 1800  # STREAM_TIMEOUT, TTNv3Collector.py:14
 
 
-class TTNv3SseTransport(Transport):
+class TTNv3SseTransport(QueuedTransport):
     """TTN v3 events SSE stream (op 4): streaming POST to
     /api/v3/events, chunks split on blank lines, forced reconnect
     every 30 min (TTNv3Collector.py:76-161)."""
@@ -514,9 +516,9 @@ class TTNv3SseTransport(Transport):
                 "TTNv3SseTransport requires requests; use ReplayTransport "
                 "with captured SSE events where it is unavailable"
             ) from exc
+        super().__init__()
         self._requests = __import__("requests")
         self.config = config
-        self._queue: queue.Queue[RawMessage] = queue.Queue(maxsize=100_000)
         self._stop = threading.Event()
         self._thread: threading.Thread | None = None
 
@@ -549,7 +551,7 @@ class TTNv3SseTransport(Transport):
                         while "\n\n" in buf:
                             event, buf = buf.split("\n\n", 1)
                             if event.strip():
-                                self._queue.put(
+                                self._enqueue(
                                     RawMessage("", event.strip(), int(time.time()))
                                 )
                 except Exception:
@@ -557,15 +559,6 @@ class TTNv3SseTransport(Transport):
 
         self._thread = threading.Thread(target=run, daemon=True)
         self._thread.start()
-
-    def poll(self, max_records: int) -> list[RawMessage]:
-        out = []
-        for _ in range(max_records):
-            try:
-                out.append(self._queue.get_nowait())
-            except queue.Empty:
-                break
-        return out
 
     def close(self) -> None:
         self._stop.set()

@@ -83,7 +83,7 @@ def _with_passthrough(raw: DataFrame) -> DataFrame:
     )
 
 
-def _decoded(data_col: Column, fields: tuple[str, ...] | None = None):
+def _decoded(data_col: Column, fields: tuple[str, ...]):
     """LoRaWAN PHY decode (op 13) without session keys. ``fields``
     prunes the UDF's output struct to what the caller consumes —
     manual nested-schema pruning, since Catalyst can't prune inside a
@@ -103,7 +103,7 @@ def _decoded(data_col: Column, fields: tuple[str, ...] | None = None):
 # full-row shuffles cost more than the ~20us/frame crypto they save.
 
 
-def _attach_parsed(df: DataFrame, fields: tuple[str, ...] | None = None) -> DataFrame:
+def _attach_parsed(df: DataFrame, fields: tuple[str, ...]) -> DataFrame:
     """Attach the decode struct ``_p`` for the ``data`` column. Null
     ``data`` (off-route rows) yields a null struct."""
     # No-key pruned decode -> pure Catalyst expressions (optimization
@@ -116,7 +116,7 @@ def _attach_parsed(df: DataFrame, fields: tuple[str, ...] | None = None) -> Data
     # crossings cost 0.48 s of the 1.20 s staged-union
     # materialization, all Arrow serialization (an all-NULL-input
     # crossing measured the same 1.0 s).
-    if fields is not None and set(fields) <= EXPR_SAFE_FIELDS:
+    if set(fields) <= EXPR_SAFE_FIELDS:
         # The decoded-frame hex is staged as its OWN column first:
         # SimplifyExtractValueOps flattens the _p struct into its
         # consumers (one copy per field), but CollapseProject keeps a
@@ -152,21 +152,18 @@ def _explode_parsed(
     replaces a parse field's expression (source-specific coalesces /
     status-route retags) while keeping the single-select shape.
 
-    ``parse_fields`` (None = all) prunes BOTH the UDF's output struct
-    and the emitted parse columns to the requested set (plus any
-    override keys, whose expressions may reference their ``_p`` field)
-    — un-emitted packet columns become typed nulls in ``_finish``.
+    ``parse_fields`` (None = all of ``_PARSE_FIELDS``) prunes BOTH the
+    UDF's output struct and the emitted parse columns to the requested
+    set (plus any override keys, whose expressions may reference their
+    ``_p`` field) — un-emitted packet columns become typed nulls in
+    ``_finish``. The decode never builds a field that is not emitted.
     Callers that consume a narrow projection (the registered pipeline
     queries) pass their field set; everything else keeps the full
     frame."""
     ov = overrides or {}
-    if parse_fields is None:
-        emit = _PARSE_FIELDS
-        df = _attach_parsed(df)
-    else:
-        want = set(parse_fields) | set(ov)
-        emit = [f for f in _PARSE_FIELDS if f in want]
-        df = _attach_parsed(df, fields=tuple(emit))
+    want = set(_PARSE_FIELDS if parse_fields is None else parse_fields) | set(ov)
+    emit = [f for f in _PARSE_FIELDS if f in want]
+    df = _attach_parsed(df, tuple(emit))
     taken = set(_PARSE_FIELDS) | {"_p"}
     out = [F.col(c) for c in df.columns if c not in taken]
     for f in emit:

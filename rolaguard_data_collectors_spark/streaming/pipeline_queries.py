@@ -34,8 +34,6 @@ from .normalize import (
 # Golden UnconfirmedDataUp frame (nwk_s_key 2b7e...4f3c, payload
 # "hello lorawan"): constants verified in tests/test_lorawan_codec.py.
 GOLDEN_B64 = "QMTBfwEAEQBd6f1YJ+K7NmuNmy/JpHTFQKI="
-GOLDEN = {"m_type": "UnconfirmedDataUp", "dev_addr": "017fc1c4",
-          "f_count": 17, "f_port": 93, "mic": "74c540a2"}
 
 # The parse fields the golden projection consumes — the pipelines
 # prune the decode UDF's output struct to exactly these.

@@ -116,6 +116,42 @@ def test_replay_available_now_drains_backlog_in_one_run(spark, tmp_path):
     assert offset == {str(path): 12_000}
 
 
+def test_replay_running_query_reads_appended_lines(spark, tmp_path):
+    """Lines appended to a capture while its query runs are read by a
+    later trigger: the offsets follow the file, not its length at
+    start."""
+    register_sources(spark)
+    path = tmp_path / "collector_4.jsonl"
+
+    def lines(lo, hi):
+        return "".join(
+            json.dumps({"topic": "gateway/g4/rx", "value": "{}", "ts": 1700000000 + i})
+            + "\n"
+            for i in range(lo, hi)
+        )
+
+    path.write_text(lines(0, 10))
+    q = (
+        spark.readStream.format("lorawan_replay")
+        .option("path", str(path))
+        .load()
+        .writeStream.format("memory")
+        .queryName("replay_grow_t")
+        .trigger(processingTime="200 milliseconds")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        assert spark.table("replay_grow_t").count() == 10
+        with open(path, "a") as fh:
+            fh.write(lines(10, 15))
+        q.processAllAvailable()
+        got = sorted(r["seq"] for r in spark.table("replay_grow_t").collect())
+    finally:
+        q.stop()
+    assert got == list(range(15))
+
+
 def test_live_source_fake_transport(spark):
     register_sources(spark)
     df = (

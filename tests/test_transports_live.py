@@ -46,10 +46,16 @@ class _SseHandler(BaseHTTPRequestHandler):
     seen: list[dict] = []
     events_per_conn = 3
     conns = 0
+    # Streams past this many connections stay silent until ``release``.
+    max_conns: int | None = None
+    release = threading.Event()
 
     def do_POST(self):  # noqa: N802 (stdlib naming)
         cls = type(self)
         cls.conns += 1
+        if cls.max_conns is not None and cls.conns > cls.max_conns:
+            cls.release.wait(10)
+            return
         body = json.loads(
             self.rfile.read(int(self.headers["Content-Length"]))
         )
@@ -450,30 +456,33 @@ class _MiniWsConsole:
         self.http.shutdown()
 
 
+def _ttn_v2_transport(console: _MiniWsConsole):
+    from rolaguard_data_collectors_spark.sources.transports import (
+        TTNv2Config,
+        TTNv2WebSocketTransport,
+    )
+
+    base = f"http://127.0.0.1:{console.http.server_port}"
+    return TTNv2WebSocketTransport(TTNv2Config(
+        account_login_url=f"{base}/api/v2/users/login",
+        login_url=f"{base}/login",
+        access_token_url=f"{base}/refresh",
+        ws_url=(f"ws://127.0.0.1:{console.ws_port}"
+                "/api/events/644/lta0xryg/websocket?version=v2.6.11"),
+        gateway_ids=("gw-a", "gw-b"),
+        user="u", password="p",
+    ))
+
+
 def test_ttn_v2_ws_transport_live_socket():
     """The full TTN v2 WebSocket leg, no websocket-client in the
     container: login + token over local HTTP, RFC 6455 handshake over
     a local TCP socket via the vendored client, on_open gateway/token
     subscriptions observed ON THE WIRE, server-pushed frames landing
     in poll(), clean close."""
-    from rolaguard_data_collectors_spark.sources.transports import (
-        TTNv2Config,
-        TTNv2WebSocketTransport,
-    )
-
     console = _MiniWsConsole()
     try:
-        base = f"http://127.0.0.1:{console.http.server_port}"
-        cfg = TTNv2Config(
-            account_login_url=f"{base}/api/v2/users/login",
-            login_url=f"{base}/login",
-            access_token_url=f"{base}/refresh",
-            ws_url=(f"ws://127.0.0.1:{console.ws_port}"
-                    "/api/events/644/lta0xryg/websocket?version=v2.6.11"),
-            gateway_ids=("gw-a", "gw-b"),
-            user="u", password="p",
-        )
-        t = TTNv2WebSocketTransport(cfg)
+        t = _ttn_v2_transport(console)
         t.connect()
         assert console._ready.wait(5), "no ws handshake"
         assert console.handshake_path == (
@@ -495,6 +504,82 @@ def test_ttn_v2_ws_transport_live_socket():
         t.close()
     finally:
         console.close()
+
+
+# --- overflow: the three network transports share one policy ---------------
+#
+# A full queue evicts its oldest message so the newest lands, and counts
+# each eviction in ``dropped_messages``; the client thread never blocks
+# or raises. Pinned through each transport's real socket leg with a
+# two-message queue.
+
+
+@pytest.fixture()
+def two_slot_queue(monkeypatch):
+    from rolaguard_data_collectors_spark.sources.transports import QueuedTransport
+
+    monkeypatch.setattr(QueuedTransport, "queue_maxsize", 2)
+
+
+def _wait_dropped(transport, n: int, timeout_s: float = 5.0) -> int:
+    deadline = time.monotonic() + timeout_s
+    while transport.dropped_messages < n and time.monotonic() < deadline:
+        time.sleep(0.02)
+    return transport.dropped_messages
+
+
+def test_mqtt_transport_overflow_evicts_oldest(two_slot_queue):
+    from rolaguard_data_collectors_spark.sources.transports import (
+        MqttConfig,
+        MqttTransport,
+    )
+
+    broker = _MiniBroker()
+    try:
+        t = MqttTransport(MqttConfig(host="127.0.0.1", port=broker.port))
+        t.connect()
+        deadline = time.monotonic() + 5
+        while not broker.subs and time.monotonic() < deadline:
+            time.sleep(0.02)
+        for i in range(5):
+            broker.publish("gateway/aa01/rx", str(i).encode())
+        assert _wait_dropped(t, 3) == 3
+        assert [r.value for r in t.poll(10)] == ["3", "4"]
+        t.close()
+    finally:
+        broker.close()
+
+
+def test_ttn_v2_ws_transport_overflow_evicts_oldest(two_slot_queue):
+    console = _MiniWsConsole()
+    try:
+        t = _ttn_v2_transport(console)
+        t.connect()
+        assert console._ready.wait(5), "no ws handshake"
+        for i in range(5):
+            console.push(str(i))
+        assert _wait_dropped(t, 3) == 3
+        assert [r.value for r in t.poll(10)] == ["3", "4"]
+        t.close()
+    finally:
+        console.close()
+
+
+def test_ttn_v3_sse_transport_overflow_evicts_oldest(
+    two_slot_queue, sse_server, monkeypatch
+):
+    monkeypatch.setattr(_SseHandler, "events_per_conn", 5)
+    monkeypatch.setattr(_SseHandler, "max_conns", 1)
+    monkeypatch.setattr(_SseHandler, "release", threading.Event())
+    tr = TTNv3SseTransport(TTNv3Config(base_url=sse_server, gateway_ids=("gw-a",)))
+    tr.connect()
+    try:
+        assert _wait_dropped(tr, 3) == 3
+        seqs = [json.loads(m.value)["result"]["seq"] for m in tr.poll(10)]
+        assert seqs == [3, 4]
+    finally:
+        tr.close()
+        _SseHandler.release.set()
 
 
 def test_mqtt_client_refused_connack_closes_socket():
