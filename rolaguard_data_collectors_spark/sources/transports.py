@@ -27,11 +27,10 @@ no network.
 from __future__ import annotations
 
 import json
-import os
 import queue
 import random
 import threading
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass

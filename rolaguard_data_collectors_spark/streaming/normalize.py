@@ -35,7 +35,6 @@ from ..schemas import (
     CHIRPSTACK_GATEWAY_SCHEMA,
     CHIRPSTACK_JOIN_SCHEMA,
     MQTT_FORWARDER_SCHEMA,
-    PACKET_COLUMNS,
     PACKET_SCHEMA,
     TTN_V2_PAYLOAD_SCHEMA,
     TTN_V2_STATUS_SCHEMA,
