@@ -72,13 +72,23 @@ def _collector_id_of(fpath: str, option: str | None = None) -> int:
         return abs(hash(stem)) % (1 << 31)
 
 
-def _count_lines(fpath: str) -> int:
-    n = 0
+def _scan_lines(fpath: str, pos: int, n: int) -> tuple[int, int]:
+    """Advance a (byte position, line count) scan of a capture over the
+    newline-terminated, non-blank lines written past ``pos``. A last
+    line whose newline has not arrived is left for a later scan, as
+    ``ReplayTransport`` holds a fragment until its newline arrives. A
+    file now shorter than ``pos`` was truncated or replaced: rescan it
+    from the start."""
     with open(fpath, "rb") as fh:
+        if os.fstat(fh.fileno()).st_size < pos:
+            pos, n = 0, 0
+        fh.seek(pos)
+        line = b""
         for line in fh:
             if line.strip():
                 n += 1
-    return n
+        tail = b"" if line.endswith(b"\n") else line
+        return fh.tell() - len(tail), n - bool(tail.strip())
 
 
 class _ReplaySlice(InputPartition):
@@ -92,11 +102,12 @@ class _ReplaySlice(InputPartition):
 
 def _read_slice(partition: _ReplaySlice):
     """Rows of lines [start, end) of one capture. Runs on an executor:
-    stream the file, skip to the slice."""
-    with open(partition.fpath, encoding="utf-8") as fh:
+    stream the file, skip to the slice. Lines split on ``\\n`` only and
+    count as ``_scan_lines`` counts them."""
+    with open(partition.fpath, "rb") as fh:
         idx = 0
-        for line in fh:
-            line = line.strip()
+        for raw in fh:
+            line = raw.decode("utf-8", errors="replace").strip()
             if not line:
                 continue
             if idx >= partition.end:
@@ -119,9 +130,10 @@ def _read_slice(partition: _ReplaySlice):
 
 class LorawanReplayStreamReader(DataSourceStreamReader):
     """Offset = {file path: lines consumed}. By default latestOffset
-    announces every line each file holds, so one trigger reads the
-    whole backlog and a ``Trigger.AvailableNow`` run drains it (Spark's
-    file and Kafka sources likewise put no cap on a trigger unless
+    announces every complete (newline-terminated) line each file
+    holds, so one trigger reads the whole backlog and a
+    ``Trigger.AvailableNow`` run drains it (Spark's file and Kafka
+    sources likewise put no cap on a trigger unless
     ``maxFilesPerTrigger`` or ``maxOffsetsPerTrigger`` is set).
 
     ``batchSize`` is the opt-in rate limit: each trigger advances each
@@ -161,6 +173,9 @@ class LorawanReplayStreamReader(DataSourceStreamReader):
         # (tests, one-shot backfills) can omit it.
         self._cursor_path = options.get("cursorPath")
         self._last = {f: 0 for f in self.files}
+        # (byte position, complete lines) per file: each latestOffset()
+        # reads only what was appended since the last one.
+        self._scan = {f: (0, 0) for f in self.files}
         if self._cursor_path and os.path.exists(self._cursor_path):
             # A torn cursor write (crash mid-dump) must not brick the
             # restart: treat it as absent. Worst case the reader
@@ -194,13 +209,15 @@ class LorawanReplayStreamReader(DataSourceStreamReader):
 
     def latestOffset(self) -> dict:
         # Called on the driver once per micro-batch: advance each
-        # collector by at most batch_size records, never backward. The
-        # files are counted here, not once at construction, so lines
-        # appended to a capture while the query runs are read too.
-        nxt = {
-            f: min(_count_lines(f), self._last.get(f, 0) + self.batch_size)
-            for f in self.files
-        }
+        # collector by at most batch_size complete lines, never
+        # backward. The scan resumes where the last call stopped, so
+        # lines appended while the query runs are read, and an idle
+        # trigger reads no capture bytes.
+        nxt = {}
+        for f in self.files:
+            self._scan[f] = _scan_lines(f, *self._scan[f])
+            last = self._last.get(f, 0)
+            nxt[f] = max(last, min(self._scan[f][1], last + self.batch_size))
         self._last = nxt
         # Persist the cursor at ANNOUNCE time, not just in commit():
         # MicroBatchExecution only calls source.commit() when it purges

@@ -152,6 +152,63 @@ def test_replay_running_query_reads_appended_lines(spark, tmp_path):
     assert got == list(range(15))
 
 
+def test_replay_running_query_waits_for_a_half_written_line(spark, tmp_path):
+    """A trigger that lands while the writer is mid-line reads only the
+    lines before it; the line is read whole once its newline arrives,
+    with no garbage row for the fragment."""
+    register_sources(spark)
+    path = tmp_path / "collector_6.jsonl"
+
+    def line(i):
+        return json.dumps({"topic": "gateway/g6/rx", "value": "{}", "ts": 1700000000 + i})
+
+    path.write_text("".join(line(i) + "\n" for i in range(10)))
+    q = (
+        spark.readStream.format("lorawan_replay")
+        .option("path", str(path))
+        .load()
+        .writeStream.format("memory")
+        .queryName("replay_torn_t")
+        .trigger(processingTime="200 milliseconds")
+        .start()
+    )
+    whole = line(10)
+    try:
+        q.processAllAvailable()
+        with open(path, "a") as fh:
+            fh.write(whole[:20])
+        q.processAllAvailable()  # returns after a trigger saw the fragment
+        assert spark.table("replay_torn_t").count() == 10
+        with open(path, "a") as fh:
+            fh.write(whole[20:] + "\n")
+        q.processAllAvailable()
+        rows = spark.table("replay_torn_t").collect()
+    finally:
+        q.stop()
+    assert sorted(r["seq"] for r in rows) == list(range(11))
+    assert {r["topic"] for r in rows} == {"gateway/g6/rx"}
+
+
+def test_replay_reader_never_announces_below_its_cursor(tmp_path):
+    """A cursor ahead of the capture (a truncated or replaced file) holds
+    the announced offset; it moves on once the file passes it."""
+    from rolaguard_data_collectors_spark.sources.datasource import (
+        LorawanReplayStreamReader,
+    )
+
+    path = tmp_path / "collector_8.jsonl"
+    cursor = tmp_path / "cursor_8.json"
+    path.write_text('{"topic": "t", "value": "{}"}\n' * 10)
+    cursor.write_text(json.dumps({str(path): 20}))
+    reader = LorawanReplayStreamReader({"path": str(path), "cursorPath": str(cursor)})
+    assert reader.latestOffset() == {str(path): 20}
+    path.write_text('{"topic": "t", "value": "{}"}\n' * 4)
+    assert reader.latestOffset() == {str(path): 20}
+    path.write_text('{"topic": "t", "value": "{}"}\n' * 25)
+    assert reader.latestOffset() == {str(path): 25}
+    assert json.loads(cursor.read_text()) == {str(path): 25}
+
+
 def test_live_source_fake_transport(spark):
     register_sources(spark)
     df = (
