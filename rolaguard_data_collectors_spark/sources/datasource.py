@@ -103,12 +103,12 @@ class _ReplaySlice(InputPartition):
 def _read_slice(partition: _ReplaySlice):
     """Rows of lines [start, end) of one capture. Runs on an executor:
     stream the file, skip to the slice. Lines split on ``\\n`` only and
-    count as ``_scan_lines`` counts them."""
+    a blank line is one ``bytes.strip`` empties, as ``_scan_lines``
+    counts them."""
     with open(partition.fpath, "rb") as fh:
         idx = 0
         for raw in fh:
-            line = raw.decode("utf-8", errors="replace").strip()
-            if not line:
+            if not raw.strip():
                 continue
             if idx >= partition.end:
                 break
@@ -116,7 +116,7 @@ def _read_slice(partition: _ReplaySlice):
                 # A torn/garbage capture line (writer crash mid-append)
                 # degrades to a topic-less row while offsets stay
                 # line-accurate.
-                m = parse_capture_line(line)
+                m = parse_capture_line(raw.decode("utf-8", errors="replace").strip())
                 yield (
                     idx,
                     m.ts,

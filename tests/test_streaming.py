@@ -209,6 +209,28 @@ def test_replay_reader_never_announces_below_its_cursor(tmp_path):
     assert json.loads(cursor.read_text()) == {str(path): 25}
 
 
+def test_replay_scan_and_slice_agree_on_blank_lines(tmp_path):
+    """The driver's line count and the executor's slice read skip the
+    same blank lines, so every announced index names one real row: a
+    line of only non-ASCII whitespace (NBSP) is a line, CR-LF and
+    whitespace-only ASCII lines are blank."""
+    from rolaguard_data_collectors_spark.sources.datasource import (
+        LorawanReplayStreamReader,
+        _read_slice,
+        _ReplaySlice,
+    )
+
+    path = tmp_path / "collector_9.jsonl"
+    rec = b'{"topic": "t", "value": "{}"}'
+    path.write_bytes(rec + b"\r\n" + b" \t\r\n" + " \n".encode() + rec + b"\n" + rec)
+    reader = LorawanReplayStreamReader({"path": str(path)})
+    end = reader.latestOffset()[str(path)]
+    rows = list(_read_slice(_ReplaySlice(str(path), 0, end, 9, 0)))
+    assert end == 3
+    assert [r[0] for r in rows] == [0, 1, 2]
+    assert [r[2] for r in rows] == ["t", None, "t"]
+
+
 def test_live_source_fake_transport(spark):
     register_sources(spark)
     df = (
